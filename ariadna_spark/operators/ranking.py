@@ -111,16 +111,7 @@ def _clause_scores(
         return None
     n_docs = reader.stats["N"]
     avgdl = reader.stats["avgdl"]
-    rid = F.explode(
-        F.sequence(
-            (F.col("first_doc_id") / range_size).cast("long"),
-            (F.col("last_doc_id") / range_size).cast("long"),
-        )
-    ).alias("rid")
-    ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-    tomb = reader._tomb_ranged(range_size)
-    if tomb is not None:
-        ranged = ranged.unionByName(tomb, allowMissingColumns=True)
+    ranged = reader._ranged(blocks, range_size)
     if rid_filter is not None:
         ranged = ranged.filter(F.col("rid").isin([int(r) for r in rid_filter]))
 

@@ -51,18 +51,16 @@ STRIDE = 1024  # doc_ids per pruning stride inside a range
 WAND_OUT_SCHEMA = "doc_id long, score double"
 
 
-def _idf_map(tdf, n_docs: int) -> dict[str, float]:
-    """BM25 idf per term off the (term, df) block rows. df is clamped to
-    the live doc count N: per-term df stays overcounted for tombstoned
-    docs until compaction (the documented Lucene deleted-docs drift), and
-    after a large delete_by_query df can exceed N — which would flip idf
-    negative and zero every block-max upper bound, pruning ALL results.
-    min(df, N) keeps idf positive and is bit-identical to the unclamped
-    form whenever there is no drift (df <= N)."""
-    return {
-        t: float(np.log(1.0 + (n_docs - min(int(d), n_docs) + 0.5) / (min(int(d), n_docs) + 0.5)))
-        for t, d in zip(tdf["term"], tdf["df"])
-    }
+def _idf(df: int, n_docs: int) -> float:
+    """BM25 idf with df clamped to the live doc count N: per-term df stays
+    overcounted for tombstoned docs until compaction (the documented
+    Lucene deleted-docs drift), and after a large delete_by_query df can
+    exceed N — which would flip idf negative and zero every block-max
+    upper bound, pruning ALL results. min(df, N) keeps idf positive and
+    is bit-identical to the unclamped form whenever there is no drift
+    (df <= N)."""
+    d = min(df, n_docs)
+    return float(np.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)))
 
 
 def _score_block(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.ndarray:
@@ -82,19 +80,23 @@ def _bmw_range_topk(
     stride: int,
     after: tuple[float, int] | None = None,
     stride_mask: np.ndarray | None = None,
+    keep=None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Stride-level block-max WAND over ONE doc_id range, restricted to the
-    posting-block rows indexed by `sub` (the shared core of wand_kernel and
-    multiquery_kernel — the batch path reuses it per query over a SHARED
-    decode cache, so a stop-word block is decoded once for the whole batch
-    while every query still gets its own block-max pruning, ADVICE r3).
+    posting-block rows indexed by `sub` — the one scoring loop of every
+    non-positional kernel (wand, bool, multiquery, multifield), reached
+    through _RangeBlocks.topk. The batch path reuses it per query over a
+    SHARED decode cache, so a stop-word block is decoded once for the
+    whole batch while every query still gets its own block-max pruning.
 
-    `decode(i)` returns the (ids, scores) of global row i, masked to this
-    range and tombstone-filtered; callers memoize it. Strides are visited
-    in descending metadata upper-bound order and the loop stops as soon as
-    UB < the current k-th score (strict <, preserving doc_id tie-break
-    rank-identity). Returns (doc_ids, scores) sorted by (-score, doc_id),
-    at most k entries.
+    `row_term` is the accumulation key per row (the term, or "field|term"
+    for BM25F): a stride's upper bound sums, per key, the max block bound
+    overlapping it. `decode(i)` returns the (ids, scores) of global row i,
+    masked to this range, tombstone- and filter-masked; callers memoize
+    it. Strides are visited in descending upper-bound order and the loop
+    stops as soon as UB < the current k-th score (strict <, preserving
+    doc_id tie-break rank-identity). Returns (doc_ids, scores) sorted by
+    (-score, doc_id), at most k entries.
 
     `after=(score, doc_id)` is the search_after cursor (ES deep-pagination
     semantics): only docs strictly AFTER the cursor in (score desc, doc_id
@@ -107,6 +109,13 @@ def _bmw_range_topk(
     `stride_mask` (bool, n_strides) zeroes the upper bound of strides a
     caller has proven empty of eligible docs (e.g. no filter-allowed doc
     falls inside) — they are never visited, so their blocks never decode.
+
+    `keep(st_lo, st_hi, src, uniq, inv)` is an optional per-stride
+    candidate predicate (bool_kernel's clause counts and must_not
+    exclusion): `uniq` are the stride's candidate doc ids, `inv` maps each
+    decoded posting to its uniq slot and `src` gives the posting's row.
+    It returns a bool mask over `uniq`; rejected docs never reach the heap,
+    so theta only ever reflects qualifying docs and pruning stays sound.
     """
     n_strides = (range_size + stride - 1) // stride
     sub_fd, sub_ld = fd[sub], ld[sub]
@@ -142,6 +151,7 @@ def _bmw_range_topk(
         st_lo, st_hi = lo + si * stride, lo + (si + 1) * stride
         cand_ids: list[np.ndarray] = []
         cand_sc: list[np.ndarray] = []
+        cand_src: list[np.ndarray] = []
         overlap = np.flatnonzero((sub_fd < st_hi) & (sub_ld >= st_lo))
         for j in overlap:
             ids, sc = decode(int(sub[j]))
@@ -149,6 +159,8 @@ def _bmw_range_topk(
             if m.any():
                 cand_ids.append(ids[m])
                 cand_sc.append(sc[m])
+                if keep is not None:
+                    cand_src.append(np.full(int(m.sum()), sub[j]))
         if not cand_ids:
             continue
         all_ids = np.concatenate(cand_ids)
@@ -156,12 +168,15 @@ def _bmw_range_topk(
         uniq, inv = np.unique(all_ids, return_inverse=True)
         sums = np.zeros(uniq.shape, dtype=np.float64)
         np.add.at(sums, inv, all_sc)
+        if keep is not None:
+            ok = keep(st_lo, st_hi, np.concatenate(cand_src), uniq, inv)
+            uniq, sums = uniq[ok], sums[ok]
         if after is not None:
             a_s, a_d = after
-            keep = (sums < a_s) | ((sums == a_s) & (uniq > a_d))
-            uniq, sums = uniq[keep], sums[keep]
-            if uniq.size == 0:
-                continue
+            ok = (sums < a_s) | ((sums == a_s) & (uniq > a_d))
+            uniq, sums = uniq[ok], sums[ok]
+        if uniq.size == 0:
+            continue
         heap, theta = _merge_stride_topk(heap, uniq, sums, k)
 
     pairs = sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))
@@ -174,13 +189,18 @@ def _bmw_range_topk(
 _EMPTY_TOPK = {"doc_id": "int64", "score": "float64"}
 
 
+def _topk_frame(doc_ids, scores) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": doc_ids, "score": scores}).astype(_EMPTY_TOPK)
+
+
 def _split_pseudo_rows(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray | None, dict]:
     """Strip the two pseudo-row families that ride the rid shuffle and
     return (block_rows, allow, dead). `allow` (sorted int64 ids, or None
     when no filter context) comes from is_filt rows — the ES bool-filter
-    allow-list; `dead` maps build id -> dead doc_ids from is_tomb rows —
-    the per-segment overwrite tombstones. Shared by every kernel that
-    consumes the ranged union (wand_kernel, bool_kernel)."""
+    allow-list; `dead` maps (field, build id) -> dead doc_ids from is_tomb
+    rows — the per-segment overwrite tombstones. Single-field stores carry
+    no `field` column; their tombstones key as field 0. Called only by
+    _RangeBlocks, the setup every range kernel starts from."""
     allow: np.ndarray | None = None
     if "is_filt" in pdf.columns:
         fm = pdf["is_filt"].to_numpy().astype(bool)
@@ -188,41 +208,122 @@ def _split_pseudo_rows(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray | No
         pdf = pdf[~fm].reset_index(drop=True)
     dead: dict = {}
     if not pdf.empty and "is_tomb" in pdf.columns:
-        tm = pdf["is_tomb"].to_numpy()
+        tm = pdf["is_tomb"].to_numpy().astype(bool)
         if tm.any():
             trows = pdf[tm]
+            if "field" not in trows.columns:
+                trows = trows.assign(field=0)
             dead = {
-                b: g["first_doc_id"].to_numpy().astype(np.int64)
-                for b, g in trows.groupby("bid")
+                (int(f), b): g["first_doc_id"].to_numpy().astype(np.int64)
+                for (f, b), g in trows.groupby(["field", "bid"])
             }
             pdf = pdf[~tm].reset_index(drop=True)
     return pdf, allow, dead
 
 
-def _make_decoder(pdf, idf_by_term, row_term, lo, hi, dead, row_bid, allow, avgdl):
-    """Lazy per-block decode closure: ids masked to [lo, hi), dead
-    versions and filter-context exclusions applied, scores precomputed.
-    Memoized — a block decodes at most once per kernel invocation; the
-    memo dict doubles as the decode counter for prune_stats."""
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+class _RangeBlocks:
+    """The per-range setup every WAND-family kernel starts from: one rid
+    group of the ranged union (see IndexReader._ranged) split into block
+    rows, the filter allow-list and the dead versions, plus the idf per
+    accumulation key, the block-max bounds and a memoized decoder.
 
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in decoded:
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, idf_by_term[row_term[i]], avgdl)
-            m = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get(row_bid[i])
-                if dd is not None and dd.size:
-                    m &= ~np.isin(ids, dd)  # overwritten versions never score
-            if allow is not None:
-                m &= np.isin(ids, allow)  # filter context: allowed docs only
-            decoded[i] = (ids[m], sc[m])
-        return decoded[i]
+    `fields` maps field index -> (N, avgdl, boost): single-field kernels
+    pass {0: (N, avgdl, 1.0)}, BM25F one entry per field, its rows tagged
+    by a `field` column. Every field keeps its OWN statistics (the Lucene
+    per-field model). The accumulation key is the term for one field and
+    "field|term" otherwise: the same term in two fields contributes twice
+    to a doc's combined score, so a stride bound must sum per pair. idf
+    is per key, with df clamped to the field's N (_idf). A block's bound
+    is boost x idf x its stored idf-free tfnorm max x `scale` (1.0 for a
+    single-build index; for merge-on-read, max(1, avgdl_global /
+    avgdl_segment) keeps the stored per-build max a valid upper bound
+    under the global avgdl). `empty` is set when the range holds no
+    block or the filter context allows no doc."""
 
-    return decode, decoded
+    def __init__(self, pdf: pd.DataFrame, fields: dict, range_size: int):
+        rid = int(pdf["rid"].iloc[0])
+        self.lo, self.hi = rid * range_size, (rid + 1) * range_size
+        self.range_size = range_size
+        self.fields = fields
+        # Pseudo-rows ride the same rid shuffle as the blocks (never a
+        # driver-held set): is_filt rows carry the ES filter-context
+        # allow-list, is_tomb rows the per-segment overwrite tombstones.
+        self.pdf, self.allow, self.dead = _split_pseudo_rows(pdf)
+        self.decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self.empty = self.pdf.empty or (self.allow is not None and self.allow.size == 0)
+        if self.empty:
+            return
+        pdf = self.pdf
+        self.row_term = pdf["term"].to_numpy()
+        if "field" in pdf.columns:
+            self.row_field = pdf["field"].to_numpy().astype(np.int64)
+        else:
+            self.row_field = np.zeros(len(pdf), dtype=np.int64)
+        self.row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
+        self.fd = pdf["first_doc_id"].to_numpy()
+        self.ld = pdf["last_doc_id"].to_numpy()
+        if len(fields) == 1:
+            self.key = self.row_term
+        else:
+            self.key = np.char.add(
+                np.char.add(self.row_field.astype("U20"), "|"), self.row_term.astype("U")
+            )
+        df = pdf["df"].to_numpy()
+        keys, first = np.unique(self.key, return_index=True)
+        self.idf = {
+            kk: _idf(int(df[i]), fields[int(self.row_field[i])][0])
+            for kk, i in zip(keys.tolist(), first)
+        }
+        self.row_idf = pd.Series(self.key).map(self.idf).to_numpy()
+        boost = np.asarray([fields[f][2] for f in range(len(fields))])[self.row_field]
+        scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
+        self.bms = pdf["block_max_tfnorm"].to_numpy() * self.row_idf * scale * boost
+
+    def live(self, i: int, ids: np.ndarray) -> np.ndarray:
+        """Mask of block row i's ids inside this range whose version in
+        the row's build is not dead (overwritten versions never match)."""
+        m = (ids >= self.lo) & (ids < self.hi)
+        if self.dead and self.row_bid is not None:
+            dd = self.dead.get((int(self.row_field[i]), self.row_bid[i]))
+            if dd is not None and dd.size:
+                m &= ~np.isin(ids, dd)
+        return m
+
+    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, scores) of block row i: live ids only, filter-context
+        exclusions applied, scores BM25 under the row's field statistics.
+        Memoized — a block decodes at most once per kernel invocation; the
+        memo dict doubles as the decode counter for prune_stats."""
+        hit = self.decoded.get(i)
+        if hit is None:
+            _, avgdl, boost = self.fields[int(self.row_field[i])]
+            ids = delta_decode_ids(self.pdf["doc_ids_varint"].iloc[i])
+            tfs = varint_decode(self.pdf["tfs_varint"].iloc[i]).astype(np.float64)
+            dls = varint_decode(self.pdf["dls_varint"].iloc[i]).astype(np.float64)
+            sc = _score_block(tfs, dls, self.row_idf[i], avgdl) * boost
+            m = self.live(i, ids)
+            if self.allow is not None:
+                m &= np.isin(ids, self.allow)  # filter context: allowed docs only
+            hit = self.decoded[i] = (ids[m], sc[m])
+        return hit
+
+    def topk(self, sub, k, stride, after=None, stride_mask=None, keep=None):
+        """_bmw_range_topk over block rows `sub`. Strides holding no
+        filter-allowed doc can never produce a candidate: their bound is
+        zeroed so they are never visited (blocks never decode)."""
+        if self.allow is not None:
+            allowed = np.zeros((self.range_size + stride - 1) // stride, dtype=bool)
+            allowed[np.unique((self.allow - self.lo) // stride)] = True
+            stride_mask = allowed if stride_mask is None else stride_mask & allowed
+        return _bmw_range_topk(
+            sub, self.key, self.fd, self.ld, self.bms, self.decode, k, self.lo,
+            self.range_size, stride, after=after, stride_mask=stride_mask, keep=keep,
+        )
+
+    def report(self, prune_stats: dict | None) -> None:
+        if prune_stats is not None:
+            prune_stats["n_blocks_total"] = len(self.pdf)
+            prune_stats["n_blocks_decoded"] = len(self.decoded)
 
 
 def _merge_stride_topk(heap, uniq, sums, k):
@@ -260,61 +361,21 @@ def wand_kernel(
     Vectorized: per-stride upper bounds come from block metadata only;
     blocks are decoded lazily, at most once, and only when their stride is
     actually visited. Each block row carries the GLOBAL df of its term (a
-    broadcast join against the merged terms tables), so idf is derived
-    here — no driver-side stats round-trip per query.
+    window sum over the pruned block rows), so idf is derived here — no
+    driver-side stats round-trip per query.
     """
-    rid = int(pdf["rid"].iloc[0])
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY_TOPK)
-    # Pseudo-rows ride the same rid shuffle as the blocks (never a
-    # driver-held set): is_filt rows carry the ES filter-context
-    # allow-list, is_tomb rows the per-segment overwrite tombstones.
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if (allow is not None and allow.size == 0) or pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    # block max score = idf(term) * stored idf-free tfnorm max, scaled by
-    # the per-segment bound correction (1.0 for a single-build index; for
-    # merge-on-read, max(1, avgdl_global/avgdl_segment) keeps the stored
-    # per-build tfnorm max a valid upper bound under the global avgdl)
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-    bms = pdf["block_max_tfnorm"].to_numpy() * pdf["term"].map(idf_by_term).to_numpy() * scale
-    row_term = pdf["term"].to_numpy()
-    decode, decoded = _make_decoder(
-        pdf, idf_by_term, row_term, lo, hi, dead, row_bid, allow, avgdl
-    )
+    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
+    return _wand_topk(rng, k, stride, prune_stats, after)
 
-    stride_mask = None
-    if allow is not None:
-        # strides holding no allowed doc can never produce a candidate:
-        # zero their bound so they are never visited (blocks never decode)
-        n_strides = (range_size + stride - 1) // stride
-        stride_mask = np.zeros(n_strides, dtype=bool)
-        stride_mask[np.unique((allow - lo) // stride)] = True
-    d_out, s_out = _bmw_range_topk(
-        np.arange(len(pdf)),
-        row_term,
-        fd,
-        ld,
-        bms,
-        decode,
-        k,
-        lo,
-        range_size,
-        stride,
-        after=after,
-        stride_mask=stride_mask,
-    )
-    if prune_stats is not None:
-        prune_stats["n_blocks_total"] = len(pdf)
-        prune_stats["n_blocks_decoded"] = len(decoded)
-    return pd.DataFrame({"doc_id": d_out, "score": s_out}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+
+def _wand_topk(rng: _RangeBlocks, k, stride, prune_stats, after=None) -> pd.DataFrame:
+    """Block-max WAND over every block row of the range (wand_kernel and
+    multifield_kernel differ only in their field statistics)."""
+    if rng.empty:
+        return _topk_frame([], [])
+    d_out, s_out = rng.topk(np.arange(len(rng.pdf)), k, stride, after=after)
+    rng.report(prune_stats)
+    return _topk_frame(d_out, s_out)
 
 
 def bool_kernel(
@@ -341,149 +402,59 @@ def bool_kernel(
     doc (a doc's posting for each must term lives in a block spanning its
     id), so its bound is zeroed and its blocks never decode — the
     dominant win for selective conjunctions. must_not blocks never
-    contribute to bounds; they decode only in strides actually visited.
+    contribute to bounds; they decode only in visited strides that hold
+    a candidate. Both rules run inside the shared _bmw_range_topk loop:
+    coverage as its stride_mask, the clause counts and must_not exclusion
+    as its per-stride `keep` predicate.
 
     Clause term sets must be disjoint (asserted in bool_topk)."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY_TOPK)
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if (allow is not None and allow.size == 0) or pdf.empty:
-        return empty
-    must_s, should_s, not_s = set(must_terms), set(should_terms), set(not_terms)
-    present = set(pdf["term"])
+    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
+    must_s, not_s = set(must_terms), set(not_terms)
     # a must term with no block in this range -> nothing here qualifies
     # (and if the term is absent from the whole index, EVERY range hits
     # this branch — the globally correct empty result)
-    if must_s - present:
-        return empty
-
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else np.ones(len(pdf))
-    row_term = pdf["term"].to_numpy()
-    is_not = np.asarray([t in not_s for t in row_term])
-    is_must = np.asarray([t in must_s for t in row_term])
-    bms = (
-        pdf["block_max_tfnorm"].to_numpy()
-        * pdf["term"].map(idf_by_term).to_numpy()
-        * scale
-    )
-
-    decode, decoded = _make_decoder(
-        pdf, idf_by_term, row_term, lo, hi, dead, row_bid, allow, avgdl
-    )
-
+    if rng.empty or must_s - set(rng.row_term):
+        return _topk_frame([], [])
+    row_term, fd, ld, lo = rng.row_term, rng.fd, rng.ld, rng.lo
+    is_not = np.asarray([t in not_s for t in row_term], dtype=bool)
+    is_must = np.asarray([t in must_s for t in row_term], dtype=bool)
     n_strides = (range_size + stride - 1) // stride
     s_lo = np.maximum((fd - lo) // stride, 0).astype(np.int64)
     s_hi = np.minimum((ld - lo) // stride, n_strides - 1).astype(np.int64)
-    # upper bound: scoring (must+should) terms only, max-per-term summed
-    ub = np.zeros(n_strides, dtype=np.float64)
-    for t in dict.fromkeys(row_term[~is_not]):
-        term_ub = np.zeros(n_strides, dtype=np.float64)
-        for j in np.flatnonzero((row_term == t) & ~is_not):
-            a, b_ = int(s_lo[j]), int(s_hi[j])
-            if b_ < 0 or a >= n_strides:
-                continue
-            seg = term_ub[a : b_ + 1]
-            np.maximum(seg, bms[j], out=seg)
-        ub += term_ub
-    # conjunctive coverage: zero strides missing any must term's blocks
+    # conjunctive coverage: strides missing any must term's blocks
+    covered = np.ones(n_strides, dtype=bool)
     for t in must_s:
         cov = np.zeros(n_strides, dtype=bool)
         for j in np.flatnonzero(row_term == t):
-            a, b_ = int(s_lo[j]), int(s_hi[j])
-            if b_ < 0 or a >= n_strides:
-                continue
-            cov[a : b_ + 1] = True
-        ub[~cov] = 0.0
-    if allow is not None:
-        amask = np.zeros(n_strides, dtype=bool)
-        amask[np.unique((allow - lo) // stride)] = True
-        ub[~amask] = 0.0
+            if s_hi[j] >= 0 and s_lo[j] < n_strides:
+                cov[s_lo[j] : s_hi[j] + 1] = True
+        covered &= cov
+    not_rows = np.flatnonzero(is_not)
 
-    n_must = len(must_s)
-    order = np.argsort(-ub, kind="stable")
-    heap: list[tuple[float, int]] = []
-    theta = 0.0
-    for si in order:
-        if ub[si] <= 0.0:
-            break
-        if len(heap) >= k and ub[si] < theta:
-            break
-        st_lo, st_hi = lo + si * stride, lo + (si + 1) * stride
-        overlap = np.flatnonzero((fd < st_hi) & (ld >= st_lo))
-        sc_ids, sc_sc, sc_must, sc_should = [], [], [], []
-        ex_ids = []
-        for j in overlap:
-            ids, sc = decode(int(j))
-            m = (ids >= st_lo) & (ids < st_hi)
-            if not m.any():
-                continue
-            if is_not[j]:
-                ex_ids.append(ids[m])
-            else:
-                sc_ids.append(ids[m])
-                sc_sc.append(sc[m])
-                sc_must.append(np.full(int(m.sum()), is_must[j]))
-                sc_should.append(np.full(int(m.sum()), not is_must[j]))
-        if not sc_ids:
-            continue
-        all_ids = np.concatenate(sc_ids)
-        all_sc = np.concatenate(sc_sc)
-        all_must = np.concatenate(sc_must).astype(np.int64)
-        all_should = np.concatenate(sc_should).astype(np.int64)
-        uniq, inv = np.unique(all_ids, return_inverse=True)
-        sums = np.zeros(uniq.shape, dtype=np.float64)
-        np.add.at(sums, inv, all_sc)
-        mcnt = np.zeros(uniq.shape, dtype=np.int64)
-        np.add.at(mcnt, inv, all_must)  # one posting per (term, doc)
-        scnt = np.zeros(uniq.shape, dtype=np.int64)
-        np.add.at(scnt, inv, all_should)
-        keep = (mcnt == n_must) & (scnt >= msm)
-        if ex_ids:
-            keep &= ~np.isin(uniq, np.concatenate(ex_ids))
-        uniq, sums = uniq[keep], sums[keep]
-        if uniq.size == 0:
-            continue
-        if after is not None:
-            # search_after cut on exact scores (same sound placement as
-            # _bmw_range_topk: a stride bound says nothing about which
-            # side of the cursor its docs land on)
-            a_s, a_d = after
-            keep_a = (sums < a_s) | ((sums == a_s) & (uniq > a_d))
-            uniq, sums = uniq[keep_a], sums[keep_a]
-            if uniq.size == 0:
-                continue
-        heap, theta = _merge_stride_topk(heap, uniq, sums, k)
+    def keep(st_lo, st_hi, src, uniq, inv):
+        # one posting per (term, doc): posting counts are term counts
+        must = is_must[src]
+        ok = (np.bincount(inv[must], minlength=uniq.size) == len(must_s)) & (
+            np.bincount(inv[~must], minlength=uniq.size) >= msm
+        )
+        for j in not_rows[(fd[not_rows] < st_hi) & (ld[not_rows] >= st_lo)]:
+            ok &= ~np.isin(uniq, rng.decode(int(j))[0])
+        return ok
 
-    if prune_stats is not None:
-        prune_stats["n_blocks_total"] = len(pdf)
-        prune_stats["n_blocks_decoded"] = len(decoded)
-    pairs = sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))
-    if not pairs:
-        return empty
-    d_out, s_out = zip(*pairs)
-    return pd.DataFrame(
-        {"doc_id": np.asarray(d_out, dtype=np.int64), "score": np.asarray(s_out)}
-    ).astype({"doc_id": "int64", "score": "float64"})
+    d_out, s_out = rng.topk(
+        np.flatnonzero(~is_not), k, stride, after=after, stride_mask=covered, keep=keep
+    )
+    rng.report(prune_stats)
+    return _topk_frame(d_out, s_out)
 
 
 def _two_pass_positions(
-    pdf: pd.DataFrame,
+    rng: _RangeBlocks,
     uniq_terms: list[str],
-    row_term: np.ndarray,
-    lo: int,
-    hi: int,
-    dead: dict,
-    row_bid,
     or_terms: list[str] | None = None,
-    allow: np.ndarray | None = None,
 ) -> tuple[dict | None, np.ndarray | None]:
     """Shared two-pass decode for the positional kernels (VERDICT r3 #5).
+    Only the range's live ids (rng.live) in its filter allow-list count.
 
     PASS 1 decodes ONLY doc_ids (+tf lengths) per block and intersects the
     terms' posting lists into the candidate doc set — the positions stream
@@ -503,9 +474,12 @@ def _two_pass_positions(
     ones alongside the required terms.
 
     Returns (per_term, cand_docs) with per_term[t] = (ids, tfs, dls,
-    occ_doc, occ_pos) restricted to candidates, or (None, None) when any
-    required term is absent, no or_term is present, or the intersection
-    is empty."""
+    occ_doc, occ_pos) restricted to candidates, or (None, None) when the
+    range is empty, any required term is absent, no or_term is present,
+    or the intersection is empty."""
+    if rng.empty:
+        return None, None
+    pdf, row_term, allow = rng.pdf, rng.row_term, rng.allow
     term_rows: dict[str, np.ndarray] = {}
     raw: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     cand_docs = None
@@ -515,11 +489,7 @@ def _two_pass_positions(
         for i in rows:
             ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
             tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.int64)
-            msk = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get(row_bid[i])
-                if dd is not None and dd.size:
-                    msk &= ~np.isin(ids, dd)
+            msk = rng.live(i, ids)
             raw[i] = (ids, tfs, msk)
             parts.append(ids[msk])
         return np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
@@ -602,6 +572,57 @@ def _two_pass_positions(
     return per_term, cand_docs
 
 
+def _and(cand: np.ndarray | None, keys: np.ndarray) -> np.ndarray:
+    return keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
+
+
+def _slot_keys(per_term: dict, t: str, off: int, lo: int) -> np.ndarray:
+    """Candidate phrase starts of term t at phrase slot `off`, as packed
+    (doc, start) keys: {(doc, p - off) : p in positions(t, doc)}. The
+    RANGE-LOCAL doc offset (doc - lo < range_size <= 2^31) goes in the
+    high bits, so the packing never wraps no matter how large global
+    doc_ids get."""
+    _, _, _, docs_r, pos_r = per_term[t]
+    ok = pos_r >= off
+    return np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off))
+
+
+def _phrase_starts(per_term: dict, ordered: list[str], lo: int) -> np.ndarray | None:
+    """Intersection over the phrase slots of their packed start keys
+    (None when there is no slot; stops early once empty). A duplicate
+    term reuses the same position set at different offsets, so "a b
+    a"-style phrases are handled for free."""
+    cand = None
+    for off, t in enumerate(ordered):
+        cand = _and(cand, _slot_keys(per_term, t, off, lo))
+        if cand.size == 0:
+            break
+    return cand
+
+
+def _term_bm25(rng: _RangeBlocks, per_term: dict, t: str, docs: np.ndarray):
+    """(ids, BM25 scores) of term t's candidate postings in `docs`."""
+    ids, tfs, dls, _, _ = per_term[t]
+    sel = np.isin(ids, docs)
+    sc = _score_block(tfs[sel].astype(np.float64), dls[sel], rng.idf[t], rng.fields[0][1])
+    return ids[sel], sc
+
+
+def _distinct_bm25(rng: _RangeBlocks, per_term: dict, terms, matched: np.ndarray) -> np.ndarray:
+    """The positional family's rank: per matched doc (sorted), the summed
+    BM25 of the query's DISTINCT terms."""
+    acc = np.zeros(matched.shape, dtype=np.float64)
+    for t in terms:
+        ids, sc = _term_bm25(rng, per_term, t, matched)
+        np.add.at(acc, np.searchsorted(matched, ids), sc)
+    return acc
+
+
+def _local_topk(matched: np.ndarray, acc: np.ndarray, k: int) -> pd.DataFrame:
+    order = np.lexsort((matched, -acc))[:k]
+    return _topk_frame(matched[order], acc[order])
+
+
 def phrase_kernel(
     pdf: pd.DataFrame,
     terms_ordered: list[str],
@@ -616,53 +637,22 @@ def phrase_kernel(
     mapping indexes positions by default).
 
     Candidate starts are the intersection over phrase slots i of
-    {(doc, p - i) : p in positions(term_i, doc)} — a duplicate term in the
-    phrase reuses the same position set at different offsets, so
-    "a b a"-style phrases are handled for free. Matched docs score as the
-    sum of their DISTINCT phrase terms' BM25 (rank semantics documented in
-    phrase_topk; the DuckDB oracle mirrors it exactly). All set ops are
-    vectorized (np.intersect1d on packed (doc << 32 | start) keys).
+    {(doc, p - i) : p in positions(term_i, doc)} (_phrase_starts).
+    Matched docs score as the sum of their DISTINCT phrase terms' BM25
+    (rank semantics documented in phrase_topk; the DuckDB oracle mirrors
+    it exactly). All set ops are vectorized (np.intersect1d on packed
+    (doc << 32 | start) keys).
     """
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
+    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     uniq_terms = sorted(set(terms_ordered))
-    row_term = pdf["term"].to_numpy()
-    per_term, cand_docs = _two_pass_positions(
-        pdf, uniq_terms, row_term, lo, hi, dead, row_bid, allow=allow
-    )
+    per_term, _ = _two_pass_positions(rng, uniq_terms)
     if per_term is None:
-        return empty
-    cand = None
-    for off, t in enumerate(terms_ordered):
-        _, _, _, docs_r, pos_r = per_term[t]
-        ok = pos_r >= off
-        # pack (doc, candidate start) into ONE int64: the RANGE-LOCAL doc
-        # offset (doc - lo < range_size <= 2^31) goes in the high bits, so
-        # the packing never wraps no matter how large global doc_ids get
-        keys = np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off))
-        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
-        if cand.size == 0:
-            return empty
-    matched = np.unique(cand >> np.int64(32)) + lo
-    acc = np.zeros(matched.shape, dtype=np.float64)
-    for t in uniq_terms:
-        ids, tfs, dls, _, _ = per_term[t]
-        sel = np.isin(ids, matched)
-        s = _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[t], avgdl)
-        np.add.at(acc, np.searchsorted(matched, ids[sel]), s)
-    order = np.lexsort((matched, -acc))[:k]
-    return pd.DataFrame({"doc_id": matched[order], "score": acc[order]}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+        return _topk_frame([], [])
+    cand = _phrase_starts(per_term, terms_ordered, rng.lo)
+    if cand.size == 0:
+        return _topk_frame([], [])
+    matched = np.unique(cand >> np.int64(32)) + rng.lo
+    return _local_topk(matched, _distinct_bm25(rng, per_term, uniq_terms, matched), k)
 
 
 def phrase_prefix_kernel(
@@ -683,64 +673,33 @@ def phrase_prefix_kernel(
     expansion's BM25 (the per-doc max over expansions that actually
     complete the phrase there) — deterministic and replayed exactly by
     the DuckDB oracle."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY_TOPK)
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
+    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     uniq_fixed = sorted(set(fixed_ordered))
-    row_term = pdf["term"].to_numpy()
-    per_term, cand_docs = _two_pass_positions(
-        pdf, uniq_fixed, row_term, lo, hi, dead, row_bid,
-        or_terms=sorted(set(exp_terms)), allow=allow,
-    )
+    uniq_exp = sorted(set(exp_terms))
+    per_term, _ = _two_pass_positions(rng, uniq_fixed, or_terms=uniq_exp)
     if per_term is None:
-        return empty
-    cand = None
-    for off, t in enumerate(fixed_ordered):
-        _, _, _, docs_r, pos_r = per_term[t]
-        ok = pos_r >= off
-        keys = np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off))
-        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
-        if cand.size == 0:
-            return empty
+        return _topk_frame([], [])
+    cand = _phrase_starts(per_term, fixed_ordered, rng.lo)
+    if cand is not None and cand.size == 0:
+        return _topk_frame([], [])
     off_last = len(fixed_ordered)
     matched_per_e: list[tuple[str, np.ndarray]] = []
-    for e in sorted(set(exp_terms)):
+    for e in uniq_exp:
         if e not in per_term:
             continue
-        _, _, _, docs_r, pos_r = per_term[e]
-        ok = pos_r >= off_last
-        keys_e = np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off_last))
-        me_keys = (
-            keys_e if cand is None else np.intersect1d(cand, keys_e, assume_unique=True)
-        )
+        me_keys = _and(cand, _slot_keys(per_term, e, off_last, rng.lo))
         if me_keys.size:
-            matched_per_e.append((e, np.unique(me_keys >> np.int64(32)) + lo))
+            matched_per_e.append((e, np.unique(me_keys >> np.int64(32)) + rng.lo))
     if not matched_per_e:
-        return empty
+        return _topk_frame([], [])
     matched = np.unique(np.concatenate([me for _, me in matched_per_e]))
-    acc = np.zeros(matched.shape, dtype=np.float64)
-    for t in uniq_fixed:
-        ids, tfs, dls, _, _ = per_term[t]
-        sel = np.isin(ids, matched)
-        s = _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[t], avgdl)
-        np.add.at(acc, np.searchsorted(matched, ids[sel]), s)
+    acc = _distinct_bm25(rng, per_term, uniq_fixed, matched)
     best = np.full(matched.shape, -np.inf)
     for e, me in matched_per_e:
-        ids, tfs, dls, _, _ = per_term[e]
-        sel = np.isin(ids, me)
-        s = _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[e], avgdl)
-        np.maximum.at(best, np.searchsorted(matched, ids[sel]), s)
+        ids, sc = _term_bm25(rng, per_term, e, me)
+        np.maximum.at(best, np.searchsorted(matched, ids), sc)
     acc += best  # every matched doc completed the phrase with >= 1 expansion
-    order = np.lexsort((matched, -acc))[:k]
-    return pd.DataFrame({"doc_id": matched[order], "score": acc[order]}).astype(
-        _EMPTY_TOPK
-    )
+    return _local_topk(matched, acc, k)
 
 
 def _min_cover_mask(
@@ -790,31 +749,18 @@ def near_kernel(
     whose analyzed token stream contains ALL query terms within a WINDOW
     of `window` consecutive positions (any order) — proximity search, the
     unordered cousin of match_phrase. Candidate docs are the intersection
-    of the terms' posting lists; the window test is the classic minimal-
-    cover two-pointer sweep over each candidate's merged occurrence
-    stream (O(occurrences), only for docs already known to contain every
-    term). Matched docs score as the summed BM25 of the distinct query
-    terms (same rank semantics as phrase_topk; the DuckDB oracle mirrors
-    the window test with list slices)."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
+    of the terms' posting lists; the window test is the vectorized
+    minimal-cover sweep (_min_cover_mask) over each candidate's merged
+    occurrence stream (O(occurrences), only for docs already known to
+    contain every term). Matched docs score as the summed BM25 of the
+    distinct query terms (same rank semantics as phrase_topk; the DuckDB
+    oracle mirrors the window test with list slices)."""
+    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     uniq_terms = sorted(set(terms))
     m = len(uniq_terms)
-    row_term = pdf["term"].to_numpy()
-    per_term, cand = _two_pass_positions(
-        pdf, uniq_terms, row_term, lo, hi, dead, row_bid, allow=allow
-    )
+    per_term, cand = _two_pass_positions(rng, uniq_terms)
     if per_term is None:
-        return empty
+        return _topk_frame([], [])
     d_all = np.concatenate([per_term[t][3] for t in uniq_terms])
     p_all = np.concatenate([per_term[t][4] for t in uniq_terms])
     g_all = np.concatenate(
@@ -828,18 +774,9 @@ def near_kernel(
     ends = np.concatenate((starts[1:], [n]))
     doc_ok = _min_cover_mask(p, g, m, window, starts, ends)
     if not doc_ok.any():
-        return empty
+        return _topk_frame([], [])
     matched = d[starts[doc_ok]]
-    acc = np.zeros(matched.shape, dtype=np.float64)
-    for t in uniq_terms:
-        ids, tfs, dls, _, _ = per_term[t]
-        s_ = np.isin(ids, matched)
-        sc = _score_block(tfs[s_].astype(np.float64), dls[s_], idf_by_term[t], avgdl)
-        np.add.at(acc, np.searchsorted(matched, ids[s_]), sc)
-    order = np.lexsort((matched, -acc))[:k]
-    return pd.DataFrame({"doc_id": matched[order], "score": acc[order]}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+    return _local_topk(matched, _distinct_bm25(rng, per_term, uniq_terms, matched), k)
 
 
 def multiquery_kernel(
@@ -870,46 +807,10 @@ def multiquery_kernel(
     empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
         {"query_id": "int64", "doc_id": "int64", "score": "float64"}
     )
-    rid = int(pdf["rid"].iloc[0])
-    dead: dict = {}
-    if "is_tomb" in pdf.columns:
-        tm = pdf["is_tomb"].to_numpy()
-        if tm.any():
-            trows = pdf[tm]
-            dead = {
-                b: g["first_doc_id"].to_numpy().astype(np.int64)
-                for b, g in trows.groupby("bid")
-            }
-            pdf = pdf[~tm].reset_index(drop=True)
-    if pdf.empty:
+    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
+    if rng.empty:
         return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-    bms = pdf["block_max_tfnorm"].to_numpy() * pdf["term"].map(idf_by_term).to_numpy() * scale
-    row_term = pdf["term"].to_numpy()
-
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}  # SHARED across queries
-
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in decoded:
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, idf_by_term[row_term[i]], avgdl)
-            m = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get(row_bid[i])
-                if dd is not None and dd.size:
-                    m &= ~np.isin(ids, dd)
-            decoded[i] = (ids[m], sc[m])
-        return decoded[i]
-
-    term_rows = {t: np.flatnonzero(row_term == t) for t in np.unique(row_term)}
+    term_rows = {t: np.flatnonzero(rng.key == t) for t in np.unique(rng.key)}
     frames = []
     for qid, terms in per_q.items():
         idxs = [term_rows[t] for t in terms if t in term_rows]
@@ -918,9 +819,7 @@ def multiquery_kernel(
         # ascending row order: candidate concatenation order then matches
         # the single-query kernel exactly (bit-identical scores)
         sub = np.sort(np.concatenate(idxs))
-        d_out, s_out = _bmw_range_topk(
-            sub, row_term, fd, ld, bms, decode, k_by_q[qid], lo, range_size, stride
-        )
+        d_out, s_out = rng.topk(sub, k_by_q[qid], stride)
         if d_out.size:
             frames.append(
                 pd.DataFrame({"query_id": qid, "doc_id": d_out, "score": s_out})
@@ -1069,20 +968,73 @@ class IndexReader:
             )
         return self.spark.read.schema(TOMB_SCHEMA).parquet(*dirs)
 
-    def _tomb_ranged(self, range_size: int) -> DataFrame | None:
-        """Tombstones as pseudo-block rows keyed by the same rid partition
-        as the posting blocks — the dead sets travel in the SAME shuffle,
-        fully distributed (never a driver-held set)."""
-        t = self._tombstones_df()
-        if t is None:
-            return None
-        return t.select(
-            F.col("dead_build").alias("bid"),
-            F.col("doc_id").alias("first_doc_id"),
-            F.col("doc_id").alias("last_doc_id"),
-            (F.col("doc_id") / range_size).cast("long").alias("rid"),
-            F.lit(True).alias("is_tomb"),
-        )
+    def _ranged(self, blocks: DataFrame, range_size: int, flt=None) -> DataFrame:
+        """The range plan every WAND-family verb shares: posting blocks
+        keyed by doc_id range (`rid`), plus two pseudo-row families keyed
+        by the same rid, so they travel in the SAME shuffle, fully
+        distributed (never a driver-held set):
+
+        - is_tomb rows: the per-segment overwrite tombstones (dead
+          versions), present whenever the live set records any;
+        - is_filt rows: the ES bool-filter allow-list, only when `flt` (a
+          Catalyst predicate over docmap columns) is set. The predicate
+          pushes into the docmap parquet scan and only SURVIVING doc ids
+          travel. docmap() is tombstone-masked, so an overwritten doc's
+          live version filters on its CURRENT attributes.
+
+        A block overlapping several ranges is replicated to each; the
+        kernel masks decoded ids to its own range (_RangeBlocks), so no
+        doc is counted twice."""
+        rid = F.explode(
+            F.sequence(
+                (F.col("first_doc_id") / range_size).cast("long"),
+                (F.col("last_doc_id") / range_size).cast("long"),
+            )
+        ).alias("rid")
+        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
+        tomb = self._tombstones_df()
+        if tomb is not None:
+            ranged = ranged.unionByName(
+                tomb.select(
+                    F.col("dead_build").alias("bid"),
+                    F.col("doc_id").alias("first_doc_id"),
+                    F.col("doc_id").alias("last_doc_id"),
+                    (F.col("doc_id") / range_size).cast("long").alias("rid"),
+                    F.lit(True).alias("is_tomb"),
+                ),
+                allowMissingColumns=True,
+            )
+        if flt is not None:
+            ranged = ranged.withColumn("is_filt", F.lit(False)).unionByName(
+                self.docmap()
+                .filter(flt)
+                .select(
+                    F.col("doc_id").alias("first_doc_id"),
+                    (F.col("doc_id") / range_size).cast("long").alias("rid"),
+                    F.lit(False).alias("is_tomb"),
+                    F.lit(True).alias("is_filt"),
+                ),
+                allowMissingColumns=True,
+            )
+        return ranged
+
+    def _take(self, ranged: DataFrame, kernel, k: int, with_docmap: bool = False) -> DataFrame:
+        """Per-range kernel over the ranged union, then the global
+        TakeOrdered merge of the tiny per-range heaps by (score desc,
+        doc_id asc); `with_docmap` joins the k winners' (repo, path)."""
+        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
+        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        if with_docmap:
+            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+        return out
+
+    def _require_positions(self, verb: str) -> None:
+        if not all(st.get("positions") for st in self.build_stats):
+            raise ValueError(
+                f"{verb} query requires every live segment built with_positions=True"
+            )
 
     def docmap(self) -> DataFrame:
         from ..sources.segments import BID_PATTERN, SegmentStore, docmap_dirs
@@ -1211,17 +1163,11 @@ class IndexReader:
     def idf_for_terms(self, terms: list[str]) -> dict[str, float]:
         """Driver-side idf lookup (kept for diagnostics/tests; the query
         path no longer calls this — df rides along with the blocks)."""
-        import numpy as np
-
         n_docs = self.stats["N"]
         dfs = self._df_for_terms(terms)
         if dfs is None:
             return {}
-        rows = dfs.collect()
-        return _idf_map(
-            {"term": [r["term"] for r in rows], "df": [int(r["df"]) for r in rows]},
-            n_docs,
-        )
+        return {r["term"]: _idf(int(r["df"]), n_docs) for r in dfs.collect()}
 
     def _prefix_terms_df(self, prefix: str, max_terms: int = 256) -> DataFrame | None:
         """Edge-ngram prefix expansion AS A PLAN: ngram-bucket read with a
@@ -2186,26 +2132,14 @@ class IndexReader:
         Scale shape: the predicate pushes down into the docmap parquet
         scan; only the SURVIVING doc ids enter the query, as allow-list
         pseudo-rows riding the SAME rid shuffle as the posting blocks
-        (the tombstone pattern — never a driver-held set). Inside the
-        kernel the allow set masks candidates before scoring, strides
-        holding no allowed doc are never visited, and block-max pruning
-        stays sound: the threshold only ever reflects filtered survivors,
-        and stride bounds remain valid upper bounds for any subset.
-        docmap() is tombstone-masked, so an overwritten doc's live version
-        filters on its CURRENT attributes; dead versions are additionally
-        masked per-build as in every decode path.
-
-        (r6: the allow-list plumbing moved into _topk_terms/_with_filter
-        so every expansion path — topk, prefix, fuzzy, phrase, near,
-        phrase_prefix — shares it; this method is the stable named API.)"""
-        return self._topk_terms(
-            sorted(set(tokenize_py(query))),
-            k,
-            flt=flt,
-            range_size=range_size,
-            with_docmap=with_docmap,
-            after=after,
-        )
+        (the tombstone pattern — never a driver-held set; see _ranged).
+        Inside the kernel the allow set masks candidates before scoring,
+        strides holding no allowed doc are never visited, and block-max
+        pruning stays sound: the threshold only ever reflects filtered
+        survivors, and stride bounds remain valid upper bounds for any
+        subset. Dead versions are additionally masked per-build as in
+        every decode path."""
+        return self.topk(query, k, range_size, with_docmap, after, flt=flt)
 
     def bool_topk(
         self,
@@ -2247,28 +2181,6 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-        if flt is not None:
-            ranged = ranged.withColumn("is_filt", F.lit(False)).unionByName(
-                self.docmap()
-                .filter(flt)
-                .select(
-                    F.col("doc_id").alias("first_doc_id"),
-                    (F.col("doc_id") / range_size).cast("long").alias("rid"),
-                    F.lit(False).alias("is_tomb"),
-                    F.lit(True).alias("is_filt"),
-                ),
-                allowMissingColumns=True,
-            )
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return bool_kernel(
@@ -2276,13 +2188,7 @@ class IndexReader:
                 after=after,
             )
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
 
     def phrase_topk(
         self,
@@ -2307,38 +2213,17 @@ class IndexReader:
             return self._topk_terms(
                 terms, k, range_size=range_size, with_docmap=with_docmap, flt=flt
             )
-        if not all(st.get("positions") for st in self.build_stats):
-            raise ValueError(
-                "phrase query requires every live segment built with_positions=True"
-            )
+        self._require_positions("phrase")
         blocks = self._blocks_for_terms(sorted(set(terms)), with_positions=True)
         if blocks is None:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        ranged = self._with_filter(ranged, flt, range_size)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return phrase_kernel(pdf, terms, n_docs, avgdl, k, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
 
     def phrase_prefix_topk(
         self,
@@ -2366,11 +2251,7 @@ class IndexReader:
         empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
         if not terms:
             return empty
-        if not all(st.get("positions") for st in self.build_stats):
-            raise ValueError(
-                "phrase_prefix query requires every live segment built "
-                "with_positions=True"
-            )
+        self._require_positions("phrase_prefix")
         fixed, last = terms[:-1], terms[-1]
         exp = [r["term"] for r in self.suggest_terms(last, size=max_expansions).collect()]
         if not exp:
@@ -2382,29 +2263,11 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        ranged = self._with_filter(ranged, flt, range_size)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return phrase_prefix_kernel(pdf, fixed, exp, n_docs, avgdl, k, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
 
     def near_topk(
         self,
@@ -2428,38 +2291,17 @@ class IndexReader:
             return self._topk_terms(
                 terms, k, range_size=range_size, with_docmap=with_docmap, flt=flt
             )
-        if not all(st.get("positions") for st in self.build_stats):
-            raise ValueError(
-                "proximity query requires every live segment built with_positions=True"
-            )
+        self._require_positions("proximity")
         blocks = self._blocks_for_terms(terms, with_positions=True)
         if blocks is None:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        ranged = self._with_filter(ranged, flt, range_size)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return near_kernel(pdf, terms, window, n_docs, avgdl, k, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
 
     def topk_many(
         self,
@@ -2478,8 +2320,6 @@ class IndexReader:
         latency at small scale) amortizes across the set — this is the
         shape a production batch scorer uses.
         """
-        import pandas as pd  # noqa: F811
-
         per_q = {qid: sorted(set(tokenize_py(q))) for qid, q, k in queries}
         k_by_q = {qid: k for qid, _, k in queries}
         all_terms = sorted({t for ts in per_q.values() for t in ts})
@@ -2494,21 +2334,10 @@ class IndexReader:
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
 
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return multiquery_kernel(pdf, per_q, k_by_q, n_docs, avgdl, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(
+        local = self._ranged(blocks, range_size).groupBy("rid").applyInPandas(
             kernel, "query_id long, doc_id long, score double"
         )
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2533,43 +2362,12 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return wand_kernel(pdf, n_docs, avgdl, range_size, range_size)
 
-        return ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-
-    def _filter_rows(self, flt, range_size: int) -> DataFrame:
-        """ES bool-filter allow-list as pseudo-rows riding the SAME rid
-        shuffle as the posting blocks (the tombstone pattern — never a
-        driver-held set): the docmap predicate pushes into the parquet
-        scan and only SURVIVING doc ids travel."""
-        return (
-            self.docmap()
-            .filter(flt)
-            .select(
-                F.col("doc_id").alias("first_doc_id"),
-                (F.col("doc_id") / range_size).cast("long").alias("rid"),
-                F.lit(False).alias("is_tomb"),
-                F.lit(True).alias("is_filt"),
-            )
-        )
-
-    def _with_filter(self, ranged: DataFrame, flt, range_size: int) -> DataFrame:
-        if flt is None:
-            return ranged
-        return ranged.withColumn("is_filt", F.lit(False)).unionByName(
-            self._filter_rows(flt, range_size), allowMissingColumns=True
+        return self._ranged(blocks, range_size).groupBy("rid").applyInPandas(
+            kernel, WAND_OUT_SCHEMA
         )
 
     def _topk_terms(
@@ -2590,30 +2388,10 @@ class IndexReader:
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
 
-        # A block overlapping multiple ranges is replicated to each; the
-        # kernel masks decoded ids to its own range, so no double counting.
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-        ranged = self._with_filter(ranged, flt, range_size)
-
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return wand_kernel(pdf, n_docs, avgdl, k, range_size, after=after)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
 
 
 def multifield_kernel(
@@ -2634,87 +2412,12 @@ def multifield_kernel(
     block-max tfnorm — a valid bound on the combined score because a doc
     scores each field independently — so the existing _bmw_range_topk
     loop prunes soundly over the combined bound with (field|term) as the
-    accumulation key. Survivor blocks decode lazily with their field's
-    avgdl and boost applied at score time; docs never double-count
-    because doc_id ranges align across fields (one shared doc_id space).
+    accumulation key (_RangeBlocks). Survivor blocks decode lazily with
+    their field's avgdl and boost applied at score time; docs never
+    double-count because doc_id ranges align across fields (one shared
+    doc_id space).
     """
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    dead: dict = {}
-    if "is_tomb" in pdf.columns:
-        tm = pdf["is_tomb"].to_numpy()
-        if tm.any():
-            trows = pdf[tm]
-            dead = {
-                (int(f), b): g["first_doc_id"].to_numpy().astype(np.int64)
-                for (f, b), g in trows.groupby(["field", "bid"])
-            }
-            pdf = pdf[~tm].reset_index(drop=True)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    row_field = pdf["field"].to_numpy().astype(np.int64)
-    row_term = pdf["term"].to_numpy()
-    # idf per (field, term): df is field-local (window-summed over that
-    # field's pruned blocks), N is the field's corpus size
-    ft = pdf[["field", "term", "df"]].drop_duplicates(["field", "term"])
-    # df clamped to the field's N — same deleted-docs-drift guard as
-    # _idf_map (a negative idf would zero the combined BM25F bound)
-    idf_by_ft = {
-        (int(f), t): float(
-            np.log(
-                1.0
-                + (metas[int(f)][0] - min(int(d), metas[int(f)][0]) + 0.5)
-                / (min(int(d), metas[int(f)][0]) + 0.5)
-            )
-        )
-        for f, t, d in zip(ft["field"], ft["term"], ft["df"])
-    }
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-    idfs = np.asarray(
-        [idf_by_ft[(int(f), t)] for f, t in zip(row_field, row_term)],
-        dtype=np.float64,
-    )
-    boosts = np.asarray([metas[int(f)][2] for f in row_field], dtype=np.float64)
-    bms = pdf["block_max_tfnorm"].to_numpy() * idfs * scale * boosts
-    # composite accumulation key: the same term in two fields contributes
-    # twice to a doc's combined score, so the UB must sum per (field,term)
-    comp = np.char.add(
-        np.char.add(row_field.astype("U20"), "|"), row_term.astype("U")
-    )
-
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in decoded:
-            f = int(row_field[i])
-            _, avgdl_f, boost_f = metas[f]
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, idfs[i], avgdl_f) * boost_f
-            m = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get((f, row_bid[i]))
-                if dd is not None and dd.size:
-                    m &= ~np.isin(ids, dd)
-            decoded[i] = (ids[m], sc[m])
-        return decoded[i]
-
-    d_out, s_out = _bmw_range_topk(
-        np.arange(len(pdf)), comp, fd, ld, bms, decode, k, lo, range_size, stride
-    )
-    if prune_stats is not None:
-        prune_stats["n_blocks_total"] = len(pdf)
-        prune_stats["n_blocks_decoded"] = len(decoded)
-    return pd.DataFrame({"doc_id": d_out, "score": s_out}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+    return _wand_topk(_RangeBlocks(pdf, metas, range_size), k, stride, prune_stats)
 
 
 def multifield_topk(
@@ -2723,7 +2426,6 @@ def multifield_topk(
     k: int = 10,
     range_size: int = RANGE_SIZE_DEFAULT,
     pruned: bool = True,
-    stride: int = STRIDE,
 ) -> DataFrame:
     """E8 multi-field search THROUGH the index: one physical index per
     field (the Lucene per-field inverted-index model — each field has its
@@ -2780,18 +2482,8 @@ def multifield_topk(
         blocks = reader._blocks_for_terms(terms)
         if blocks is None:
             continue
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = reader._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
         parts.append(
-            ranged.withColumn(
+            reader._ranged(blocks, range_size).withColumn(
                 "field", F.explode(F.array(*[F.lit(fi) for fi in fis]))
             )
         )
@@ -2802,10 +2494,9 @@ def multifield_topk(
         ranged = ranged.unionByName(p, allowMissingColumns=True)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multifield_kernel(pdf, metas, k, range_size, stride)
+        return multifield_kernel(pdf, metas, k, range_size)
 
-    local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return fields[0][0]._take(ranged, kernel, k)
 
 
 def multifield_topk_single(
@@ -2814,7 +2505,6 @@ def multifield_topk_single(
     query: str,
     k: int = 10,
     range_size: int = RANGE_SIZE_DEFAULT,
-    stride: int = STRIDE,
 ) -> DataFrame:
     """BM25F over a SINGLE multifield store (build_multifield_index) —
     rank/score-identical to multifield_topk over one store per field, but
@@ -2874,24 +2564,16 @@ def multifield_topk_single(
         F.col("term").contains(sep),
         F.expr(f"substring(term, instr(term, '{sep}') + 1)"),
     ).otherwise(F.col("term"))
-    rid = F.explode(
-        F.sequence(
-            (F.col("first_doc_id") / range_size).cast("long"),
-            (F.col("last_doc_id") / range_size).cast("long"),
-        )
-    ).alias("rid")
     ranged = (
-        blocks.select("*", rid)
-        .withColumn("is_tomb", F.lit(False))
+        reader._ranged(blocks, range_size)
         .withColumn("field", fidx)
         .withColumn("term", bare)
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multifield_kernel(pdf, metas, k, range_size, stride)
+        return multifield_kernel(pdf, metas, k, range_size)
 
-    local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return reader._take(ranged, kernel, k)
 
 
 register_by_value(__name__)

@@ -652,7 +652,9 @@ def _build_from_tf(
     # cluster while the posting shuffle's tail drains (guide §2.6 — actions
     # are only sequential because driver code calls them sequentially).
     # Each phase keeps its idempotent marker guard, so resume semantics are
-    # unchanged; exceptions are re-raised after every phase settles.
+    # unchanged; exceptions are re-raised after every phase settles. One
+    # failure re-raises unchanged; several raise together as an
+    # ExceptionGroup, so no phase's error is hidden behind another's.
     from concurrent.futures import ThreadPoolExecutor
 
     try:
@@ -662,15 +664,19 @@ def _build_from_tf(
                 pool.submit(f)
                 for f in (_phase_postings, _phase_terms, _phase_ngrams, _phase_docmap)
             ]
-            errs = []
-            for fut in futs:
+            errs: dict[int, Exception] = {}
+            for fut in [scalars_fut, *futs]:
                 try:
                     fut.result()
                 except Exception as e:  # noqa: BLE001 — re-raised below
-                    errs.append(e)
-            n_docs, avgdl, total_tokens = scalars_fut.result()
+                    # keyed by identity: a phase blocked on the scalars
+                    # future re-raises that same exception object
+                    errs.setdefault(id(e), e)
+            if len(errs) == 1:
+                raise next(iter(errs.values()))
             if errs:
-                raise errs[0]
+                raise ExceptionGroup(f"{len(errs)} build phases failed", list(errs.values()))
+            n_docs, avgdl, total_tokens = scalars_fut.result()
     finally:
         dfreq.unpersist()
 

@@ -145,6 +145,30 @@ def test_resume_after_injected_failure(spark, docs, tmp_path):
     assert [(r["doc_id"], r["score"]) for r in r1] == [(r["doc_id"], r["score"]) for r in r2]
 
 
+@pytest.mark.parametrize(
+    "broken",
+    [("edge_ngrams_expr", "key_bucket_expr"), ("corpus_scalars_full", "edge_ngrams_expr")],
+)
+def test_build_reports_every_failed_phase(spark, docs, tmp_path, monkeypatch, broken):
+    """Two build phases fail at once: both errors surface together in one
+    ExceptionGroup, not just the first. A failed scalars phase counts
+    once, although the phases waiting on its result re-raise it."""
+    from ariadna_spark.sources import segments
+
+    def breaker(name):
+        def boom(*a, **kw):
+            raise RuntimeError(f"{name} broke")
+
+        return boom
+
+    for name in broken:
+        monkeypatch.setattr(segments, name, breaker(name))
+    with pytest.raises(ExceptionGroup) as ei:
+        build_index(spark, docs.limit(40), str(tmp_path / "x"), build_id="f1", n_buckets=2)
+    assert sorted(str(e) for e in ei.value.exceptions) == sorted(f"{n} broke" for n in broken)
+    assert SegmentStore(str(tmp_path / "x")).live_build() is None
+
+
 def test_publish_swap_and_gc(spark, docs, tmp_path):
     out = str(tmp_path / "seg")
     build_index(spark, docs.limit(50), out, build_id="old", n_buckets=2)

@@ -176,6 +176,50 @@ def test_query_job_count_constant_in_segments(spark, docs, tmp_path):
     assert j1 <= 3, f"warm top-k now costs {j1} jobs"
 
 
+@pytest.fixture(scope="module")
+def tomb_index_dir(spark, docs, tmp_path_factory):
+    """A two-segment store whose second segment overwrites every 7th doc,
+    so the live set records tombstones."""
+    from ariadna_spark.sources.segments import append_segment
+
+    out = str(tmp_path_factory.mktemp("plans_tomb"))
+    build_index(spark, docs, out, build_id="base", n_buckets=4)
+    upd = docs.filter(F.col("doc_id") % 7 == 0).withColumn(
+        "content", F.concat(F.col("content"), F.lit(" revised"))
+    )
+    append_segment(spark, upd, out, build_id="upd", n_buckets=4)
+    return out
+
+
+RANGE_VERBS = {
+    "topk": lambda r, f: r.topk("merge join", 10, flt=f),
+    "bool_topk": lambda r, f: r.bool_topk(must="merge", should="join", must_not="window", flt=f),
+    "phrase_topk": lambda r, f: r.phrase_topk("merge join", 10, flt=f),
+    "phrase_prefix_topk": lambda r, f: r.phrase_prefix_topk("merge jo", 10, flt=f),
+    "near_topk": lambda r, f: r.near_topk("merge join", window=4, k=10, flt=f),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(RANGE_VERBS))
+def test_range_verbs_share_one_plan_shape(spark, tomb_index_dir, verb):
+    """Every range verb compiles to the same shape: the posting blocks,
+    the tombstone rows and the filter allow-list rows cross ONE rid
+    exchange into ONE per-range kernel, and the global cut is a
+    TakeOrdered merge at the root — never a second shuffle or a sort."""
+    reader = IndexReader(spark, tomb_index_dir)
+    assert reader.has_tombstones
+    plan = physical_plan(RANGE_VERBS[verb](reader, F.col("lang") == "en"))
+    lines = plan.splitlines()
+    assert "TakeOrderedAndProject" in lines[1], plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("Exchange hashpartitioning(rid") == 1, plan
+    kernel = next(i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln)
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning(rid" in ln)
+    assert kernel < exchange, plan
+    assert all("Sort [rid" in ln for ln in lines[kernel + 1 : exchange]), plan
+    assert "is_tomb" in lines[kernel] and "is_filt" in lines[kernel], plan
+
+
 def test_topk_many_100_query_batch(spark, index_dir):
     """VERDICT r2 #3 done-criterion at batch scale: 100 queries sharing
     Zipf-head terms through topk_many in ONE pass — job count must stay

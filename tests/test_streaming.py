@@ -120,6 +120,24 @@ def test_overwrite_masks_old_version(spark, overwrite_corpus, tmp_path):
     assert reader.scores(["oldtoken"]).count() == 0
     assert [r["doc_id"] for r in reader.scores(["newtoken"]).collect()] == [0]
 
+    # every other range verb masks the dead version too: a query only the
+    # dead version of doc 0 satisfies finds nothing, the live one finds it
+    def ids(df):
+        return sorted(r["doc_id"] for r in df.collect())
+
+    assert ids(reader.bool_topk(must="oldtoken")) == []
+    assert ids(reader.bool_topk(must="newtoken alpha")) == [0]
+    # must_not: the dead version's token excludes nothing, the live one's does
+    assert ids(reader.bool_topk(should="shared", must_not="oldtoken")) == [0, 1, 2]
+    assert ids(reader.bool_topk(should="shared", must_not="newtoken")) == [1, 2]
+    assert ids(reader.near_topk("oldtoken alpha", window=4)) == []
+    assert ids(reader.near_topk("newtoken alpha", window=4)) == [0]
+    assert ids(reader.phrase_prefix_topk("join old")) == []
+    assert ids(reader.phrase_prefix_topk("join new")) == [0]
+    py = F.col("lang") == "python"
+    assert ids(reader.topk("oldtoken", 5, flt=py)) == []
+    assert ids(reader.topk("newtoken", 5, flt=py)) == [0]
+
 
 def test_mget_masks_dead_versions(spark, overwrite_corpus, tmp_path):
     """ES _mget over a store with an overwritten doc: the asked id comes
