@@ -50,8 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# docmap attributes a filter/sort may reference (the serve.py allowlist
-# plus doc_len; never arbitrary expressions from the wire)
+# docmap attributes a filter/sort may reference (also the allowlist of
+# serve.py's GET filter params; never arbitrary expressions from the wire)
 FILTERABLE = ("repo", "path", "commit", "lang", "doc_len")
 
 
@@ -77,6 +77,12 @@ def _as_text(spec, what: str) -> str:
     raise DslError(f"{what}: expected text or {{query|value: text}}, got {spec!r}")
 
 
+def _filterable(col) -> str:
+    if col not in FILTERABLE:
+        raise DslError(f"unfilterable column {col!r} (allowed: {FILTERABLE})")
+    return col
+
+
 def compile_filter(clauses) -> Column | None:
     """bool.filter (non-scoring context) -> one conjunctive Catalyst
     predicate over allowlisted docmap columns."""
@@ -89,13 +95,10 @@ def compile_filter(clauses) -> Column | None:
         kind, spec = _one_entry(c, "filter clause")
         if kind == "term":
             col, val = _one_entry(spec, "term filter")
-            if col not in FILTERABLE:
-                raise DslError(f"unfilterable column {col!r} (allowed: {FILTERABLE})")
-            cond = F.col(col) == val
+            cond = F.col(_filterable(col)) == val
         elif kind == "range":
             col, bounds = _one_entry(spec, "range filter")
-            if col not in FILTERABLE:
-                raise DslError(f"unfilterable column {col!r} (allowed: {FILTERABLE})")
+            _filterable(col)
             cond = F.lit(True)
             ops = {"gt": "__gt__", "gte": "__ge__", "lt": "__lt__", "lte": "__le__"}
             if not isinstance(bounds, dict) or not set(bounds) & set(ops):
@@ -106,8 +109,8 @@ def compile_filter(clauses) -> Column | None:
                 cond = cond & getattr(F.col(col), ops[op])(v)
         elif kind == "terms":
             col, vals = _one_entry(spec, "terms filter")
-            if col not in FILTERABLE and col != "doc_id":
-                raise DslError(f"unfilterable column {col!r} (allowed: {FILTERABLE})")
+            if col != "doc_id":
+                _filterable(col)
             if not isinstance(vals, list) or not vals:
                 raise DslError("terms filter needs a non-empty value array")
             cond = F.col(col).isin(vals)
@@ -117,10 +120,7 @@ def compile_filter(clauses) -> Column | None:
                 raise DslError("ids filter needs {values: [int, ...]}")
             cond = F.col("doc_id").isin(vals)
         elif kind == "exists":
-            col = (spec or {}).get("field")
-            if col not in FILTERABLE:
-                raise DslError(f"unfilterable column {col!r} (allowed: {FILTERABLE})")
-            cond = F.col(col).isNotNull()
+            cond = F.col(_filterable((spec or {}).get("field"))).isNotNull()
         else:
             raise DslError(
                 f"unsupported filter clause {kind!r} (term, terms, range, ids, exists)"
@@ -139,6 +139,57 @@ def _field_or_primary(reader, field: str, what: str) -> None:
             f"({prim!r}) supports this verb; use multi_match for "
             f"secondary-field scoring"
         )
+
+
+def _leaf_text(reader, spec, what: str) -> str:
+    """A leaf clause body on the primary field -> its text. `spec` is
+    {field: text} or {field: {query|value: text}}."""
+    field, mspec = _one_entry(spec, what)
+    _field_or_primary(reader, field, what)
+    return _as_text(mspec, what)
+
+
+def _match_clause(reader, clause, what: str) -> str:
+    """A clause that must be a primary-field match -> its text."""
+    kind, spec = _one_entry(clause, what)
+    if kind != "match":
+        raise DslError(f"{what} supports match clauses, got {kind!r}")
+    return _leaf_text(reader, spec, f"{what} match")
+
+
+def _one_must_match(reader, query, what: str) -> tuple[str, Column | None]:
+    """match, or bool with filter + exactly ONE must match -> (text, flt).
+    The sort and collapse verbs take their candidates as an OR over one
+    match's analyzed terms, so N must clauses (an AND of matches) are
+    rejected rather than silently widened."""
+    kind, spec = _one_entry(query or {}, "query")
+    if kind == "match":
+        return _leaf_text(reader, spec, f"{what} match"), None
+    if kind != "bool":
+        raise DslError(f"{what} composes with match/bool queries, not {kind!r}")
+    spec = dict(spec)
+    flt = compile_filter(spec.pop("filter", None))
+    musts = spec.pop("must", [])
+    if isinstance(musts, dict):
+        musts = [musts]
+    if spec or len(musts) != 1:
+        raise DslError(
+            f"{what} bool supports exactly one must match + filter, "
+            f"got must={len(musts)} extra={sorted(spec)}"
+        )
+    return _match_clause(reader, musts[0], f"{what} bool.must"), flt
+
+
+# relevance-ranked leaf verbs over the primary field: query kind ->
+# (reader, text, k, search_after cursor) -> DataFrame
+_LEAF_VERBS = {
+    "match": lambda r, text, k, after: r.topk(text, k, after=after),
+    "match_phrase": lambda r, text, k, _: r.phrase_topk(text, k),
+    "match_phrase_prefix": lambda r, text, k, _: r.phrase_prefix_topk(text, k),
+    "prefix": lambda r, text, k, _: r.prefix_topk(text, k),
+    "wildcard": lambda r, text, k, _: r.wildcard_topk(text, k),
+    "regexp": lambda r, text, k, _: r.regexp_topk(text, k),
+}
 
 
 def _parse_boosted(fields: list) -> list[tuple[str, float]]:
@@ -257,8 +308,7 @@ def compile_query_string(
                 raise DslError("+/- before a quoted phrase is unsupported")
         if ":" in tok:
             col, _, val = tok.partition(":")
-            if col not in FILTERABLE:
-                raise DslError(f"unfilterable column {col!r} (allowed: {FILTERABLE})")
+            _filterable(col)
             if neg or req:
                 raise DslError("field filters take no +/- (non-scoring context)")
             filters.append({"term": {col: int(val) if col == "doc_len" else val}})
@@ -315,6 +365,13 @@ def compile_query_string(
     return reader.topk(m_text, k, after=after)
 
 
+def _agg_field(aspec, ak: str, allowed: tuple) -> str:
+    f = aspec.get("field") if isinstance(aspec, dict) else None
+    if f not in allowed:
+        raise DslError(f"{ak} agg supports field {'|'.join(allowed)}, got {aspec!r}")
+    return f
+
+
 def compile_aggs(reader, body: dict) -> DataFrame:
     """ES `aggs` body (the aggregation half of `_search`) -> one engine
     DataFrame of (agg, bucket, n_docs, metric) rows, `agg` = the caller's
@@ -330,14 +387,7 @@ def compile_aggs(reader, body: dict) -> DataFrame:
 
     if int(body.get("size", 0)) != 0:
         raise DslError("aggs bodies must set size: 0 (hits+aggs unsupported)")
-    q = body.get("query") or {"match_all": {}}
-    kind, spec = _one_entry(q, "query")
-    if kind != "match":
-        raise DslError(f"aggs compose with a match query, not {kind!r}")
-    field, mspec = _one_entry(spec, "match")
-    _field_or_primary(reader, field, "match")
-    text = _as_text(mspec, "match")
-
+    text = _match_clause(reader, body.get("query") or {"match_all": {}}, "aggs query")
     aggs = body["aggs"]
     if not isinstance(aggs, dict) or not aggs:
         raise DslError("aggs must be a non-empty object")
@@ -347,9 +397,7 @@ def compile_aggs(reader, body: dict) -> DataFrame:
     if len(aggs) == 1:
         (aname, aspec_outer), = aggs.items()
         if isinstance(aspec_outer, dict) and set(aspec_outer) == {"terms", "aggs"}:
-            tfield = (aspec_outer["terms"] or {}).get("field")
-            if tfield not in ("lang", "repo"):
-                raise DslError(f"terms agg supports lang/repo, got {tfield!r}")
+            tfield = _agg_field(aspec_outer["terms"], "terms", ("lang", "repo"))
             hname, hspec_outer = _one_entry(aspec_outer["aggs"], "sub-agg")
             hk, hspec = _one_entry(hspec_outer, f"sub-agg {hname!r}")
             if hk != "top_hits":
@@ -363,21 +411,14 @@ def compile_aggs(reader, body: dict) -> DataFrame:
     suite_names: dict[str, str] = {}  # engine agg kind -> caller's name
     terms_aggs: list[tuple[str, str]] = []
 
-    def _doc_len_only(aspec, ak):
-        if not isinstance(aspec, dict) or aspec.get("field") != "doc_len":
-            raise DslError(f"{ak} agg supports field 'doc_len', got {aspec!r}")
-
     for name, aspec_outer in aggs.items():
         ak, aspec = _one_entry(aspec_outer, f"agg {name!r}")
-        if ak in suite_names or (ak == "terms" and not isinstance(aspec, dict)):
-            raise DslError(f"duplicate {ak!r} agg" if ak in suite_names else f"bad terms agg {aspec!r}")
+        if ak in suite_names:
+            raise DslError(f"duplicate {ak!r} agg")
         if ak == "terms":
-            f = aspec.get("field")
-            if f not in ("lang", "repo"):
-                raise DslError(f"terms agg supports lang/repo, got {f!r}")
-            terms_aggs.append((name, f))
+            terms_aggs.append((name, _agg_field(aspec, ak, ("lang", "repo"))))
         elif ak == "range":
-            _doc_len_only(aspec, ak)
+            _agg_field(aspec, ak, ("doc_len",))
             rs = []
             for r in aspec.get("ranges", []):
                 key = r.get("key") or f"{r.get('from', '*')}-{r.get('to', '*')}"
@@ -386,14 +427,13 @@ def compile_aggs(reader, body: dict) -> DataFrame:
                 raise DslError("range agg needs non-empty ranges")
             ranges, suite_names["range"] = rs, name
         elif ak == "histogram":
-            _doc_len_only(aspec, ak)
+            _agg_field(aspec, ak, ("doc_len",))
             interval, suite_names["histogram"] = int(aspec.get("interval", 25)), name
         elif ak == "stats":
-            _doc_len_only(aspec, ak)
+            _agg_field(aspec, ak, ("doc_len",))
             suite_names["stats"] = name
         elif ak == "cardinality":
-            if not isinstance(aspec, dict) or aspec.get("field") != "lang":
-                raise DslError(f"cardinality agg supports field 'lang', got {aspec!r}")
+            _agg_field(aspec, ak, ("lang",))
             suite_names["cardinality"] = name
         else:
             raise DslError(
@@ -490,22 +530,12 @@ def compile_search(
         if not isinstance(rc, dict) or "query" not in rc:
             raise DslError("rescore needs {query: {rescore_query, ...}, window_size}")
         rq = rc["query"]
-        qk, qspec = _one_entry((rq or {}).get("rescore_query") or {}, "rescore_query")
-        if qk != "match":
-            raise DslError(f"rescore_query supports match, got {qk!r}")
-        f2, m2 = _one_entry(qspec, "match")
-        _field_or_primary(reader, f2, "rescore match")
-        pk, pspec = _one_entry(body.get("query") or {}, "query")
-        if pk != "match":
-            raise DslError(f"rescore composes with a match primary, not {pk!r}")
-        f1, m1 = _one_entry(pspec, "match")
-        _field_or_primary(reader, f1, "rescore primary match")
         from .operators.ranking import rescore_topk
 
         return rescore_topk(
             reader,
-            _as_text(m1, "match"),
-            _as_text(m2, "match"),
+            _match_clause(reader, body.get("query") or {}, "rescore primary"),
+            _match_clause(reader, (rq or {}).get("rescore_query") or {}, "rescore_query"),
             window_size=int(rc.get("window_size", 50)),
             query_weight=float(rq.get("query_weight", 1.0)),
             rescore_query_weight=float(rq.get("rescore_query_weight", 1.0)),
@@ -517,26 +547,10 @@ def compile_search(
         cf = (body["collapse"] or {}).get("field")
         if cf not in FILTERABLE:
             raise DslError(f"collapse.field must be a docmap column, got {cf!r}")
-        kind, spec = _one_entry(body.get("query") or {}, "query")
-        flt = None
-        if kind == "bool":
-            spec = dict(spec)
-            flt = compile_filter(spec.pop("filter", None))
-            musts = spec.pop("must", [])
-            if isinstance(musts, dict):
-                musts = [musts]
-            if spec or len(musts) != 1:
-                raise DslError("collapse bool supports exactly one must match + filter")
-            kind, spec = _one_entry(musts[0], "must clause")
-        if kind != "match":
-            raise DslError(f"collapse composes with match queries, not {kind!r}")
-        field, mspec = _one_entry(spec, "match")
-        _field_or_primary(reader, field, "collapse match")
+        text, flt = _one_must_match(reader, body.get("query"), "collapse")
         from .operators.ranking import collapse_topk
 
-        return collapse_topk(
-            reader, _as_text(mspec, "match"), cf, int(body.get("size", 10)), flt=flt
-        )
+        return collapse_topk(reader, text, cf, int(body.get("size", 10)), flt=flt)
     if "from" in body:
         raise DslError("from+size deep paging is unsupported; use search_after")
     if "aggs" in body:
@@ -546,13 +560,10 @@ def compile_search(
     if "highlight" in body:
         if body.get("sort") or body.get("search_after"):
             raise DslError("highlight composes with relevance-ranked queries only")
-        hl = body["highlight"]
-        if not isinstance(hl, dict) or list(hl.get("fields", {})) != [
-            reader.primary_field or "content"
-        ]:
+        hl, prim = body["highlight"], reader.primary_field or "content"
+        if not isinstance(hl, dict) or list(hl.get("fields", {})) != [prim]:
             raise DslError(
-                "highlight.fields must name exactly the primary field "
-                f"({reader.primary_field or 'content'!r})"
+                f"highlight.fields must name exactly the primary field ({prim!r})"
             )
         if docs is None:
             raise DslError("highlight needs the source corpus (docs=)")
@@ -561,15 +572,10 @@ def compile_search(
             raise DslError(
                 f"highlight composes with match/match_phrase queries, not {kind!r}"
             )
-        field, mspec = _one_entry(spec, kind)
-        _field_or_primary(reader, field, f"highlight {kind}")
+        text = _leaf_text(reader, spec, f"highlight {kind}")
         if kind == "match_phrase":
-            return reader.highlight_phrase_topk(
-                docs, _as_text(mspec, kind), int(body.get("size", 10))
-            )
-        return reader.highlight_topk(
-            docs, _as_text(mspec, "match"), int(body.get("size", 10))
-        )
+            return reader.highlight_phrase_topk(docs, text, int(body.get("size", 10)))
+        return reader.highlight_topk(docs, text, int(body.get("size", 10)))
     k = int(body.get("size", 10))
     q = body.get("query") or {"match_all": {}}
     kind, spec = _one_entry(q, "query")
@@ -592,30 +598,7 @@ def compile_search(
             raise DslError("exactly one sort key supported (doc_id tiebreak implied)")
         col, order = _one_entry(sort[0], "sort")
         asc = (order.get("order", "asc") if isinstance(order, dict) else order) != "desc"
-        if kind == "bool":
-            spec = dict(spec)
-            flt = compile_filter(spec.pop("filter", None))
-            musts = spec.pop("must", [])
-            if isinstance(musts, dict):
-                musts = [musts]
-            # sorted_topk's candidate set is an OR over the query's
-            # analyzed terms — exactly ONE match clause keeps ES
-            # semantics (N must clauses would need an AND of matches)
-            if spec or len(musts) != 1:
-                raise DslError(
-                    "sorted bool supports exactly one must match + filter, "
-                    f"got must={len(musts)} extra={sorted(spec)}"
-                )
-            mk, mspec = _one_entry(musts[0], "must clause")
-            if mk != "match":
-                raise DslError(f"sorted bool.must supports match, got {mk!r}")
-            _, inner = _one_entry(mspec, "match")
-            text = _as_text(inner, "match")
-        elif kind == "match":
-            _, mspec = _one_entry(spec, "match")
-            text, flt = _as_text(mspec, "match"), None
-        else:
-            raise DslError(f"sort composes with match/bool queries, not {kind!r}")
+        text, flt = _one_must_match(reader, q, "sort")
         return reader.sorted_topk(text, sort_col=col, asc=asc, k=k, after=after, flt=flt)
 
     # past the sort block: only match/bool relevance cursors remain —
@@ -623,27 +606,17 @@ def compile_search(
     # API built on it) loop on page 1 forever
     if after is not None and kind not in ("match", "bool", "simple_query_string"):
         raise DslError(f"search_after unsupported for {kind!r} queries")
-    if kind == "match":
-        field, mspec = _one_entry(spec, "match")
-        _field_or_primary(reader, field, "match")
-        return reader.topk(_as_text(mspec, "match"), k, after=after)
-    if kind == "match_phrase":
-        field, mspec = _one_entry(spec, "match_phrase")
-        _field_or_primary(reader, field, "match_phrase")
-        return reader.phrase_topk(_as_text(mspec, "match_phrase"), k)
-    if kind == "match_phrase_prefix":
-        field, mspec = _one_entry(spec, "match_phrase_prefix")
-        _field_or_primary(reader, field, "match_phrase_prefix")
-        return reader.phrase_prefix_topk(_as_text(mspec, "match_phrase_prefix"), k)
-    if kind == "prefix":
-        field, mspec = _one_entry(spec, "prefix")
-        _field_or_primary(reader, field, "prefix")
-        return reader.prefix_topk(_as_text(mspec, "prefix"), k)
+    if kind in _LEAF_VERBS:
+        text = _leaf_text(reader, spec, kind)
+        try:
+            return _LEAF_VERBS[kind](reader, text, k, after)
+        except ValueError as e:  # anchor/selectivity scope -> 400 shape
+            raise DslError(str(e))
     if kind == "fuzzy":
-        field, mspec = _one_entry(spec, "fuzzy")
-        _field_or_primary(reader, field, "fuzzy")
+        text = _leaf_text(reader, spec, "fuzzy")
+        (mspec,) = spec.values()
         dist = int(mspec.get("fuzziness", 1)) if isinstance(mspec, dict) else 1
-        return reader.fuzzy_topk(_as_text(mspec, "fuzzy"), k, max_dist=dist)
+        return reader.fuzzy_topk(text, k, max_dist=dist)
     if kind == "multi_match":
         if not isinstance(spec, dict) or "query" not in spec or "fields" not in spec:
             raise DslError("multi_match needs {query, fields}")
@@ -673,15 +646,7 @@ def compile_search(
             cs = spec.pop(key, [])
             if isinstance(cs, dict):
                 cs = [cs]
-            parts = []
-            for c in cs:
-                ck, cspec = _one_entry(c, f"{key} clause")
-                if ck != "match":
-                    raise DslError(f"bool.{key} supports match clauses, got {ck!r}")
-                field, mspec = _one_entry(cspec, "match")
-                _field_or_primary(reader, field, f"bool.{key} match")
-                parts.append(_as_text(mspec, "match"))
-            return " ".join(parts)
+            return " ".join(_match_clause(reader, c, f"bool.{key}") for c in cs)
 
         must, should, must_not = texts("must"), texts("should"), texts("must_not")
         if spec:
@@ -709,51 +674,21 @@ def compile_search(
     if kind == "dis_max":
         if not isinstance(spec, dict) or not isinstance(spec.get("queries"), list):
             raise DslError("dis_max needs {queries: [...]}")
-        texts = []
-        for c in spec["queries"]:
-            ck, cspec = _one_entry(c, "dis_max clause")
-            if ck != "match":
-                raise DslError(f"dis_max clauses support match, got {ck!r}")
-            field, mspec = _one_entry(cspec, "match")
-            _field_or_primary(reader, field, "dis_max match")
-            texts.append(_as_text(mspec, "match"))
+        texts = [_match_clause(reader, c, "dis_max clause") for c in spec["queries"]]
         if not texts:
             raise DslError("dis_max needs >= 1 clause")
         from .operators.ranking import dis_max_topk
 
         return dis_max_topk(reader, texts, float(spec.get("tie_breaker", 0.0)), k)
-    if kind == "wildcard":
-        field, mspec = _one_entry(spec, "wildcard")
-        _field_or_primary(reader, field, "wildcard")
-        try:
-            return reader.wildcard_topk(_as_text(mspec, "wildcard"), k)
-        except ValueError as e:  # anchor/selectivity scope -> 400 shape
-            raise DslError(str(e))
-    if kind == "regexp":
-        field, mspec = _one_entry(spec, "regexp")
-        _field_or_primary(reader, field, "regexp")
-        try:
-            return reader.regexp_topk(_as_text(mspec, "regexp"), k)
-        except ValueError as e:  # selectivity cap -> 400 shape
-            raise DslError(str(e))
     if kind == "boosting":
         if not isinstance(spec, dict) or not {"positive", "negative"} <= set(spec):
             raise DslError("boosting needs {positive, negative[, negative_boost]}")
-
-        def _match_text(q, what):
-            ck, cspec = _one_entry(q, what)
-            if ck != "match":
-                raise DslError(f"boosting.{what} supports match, got {ck!r}")
-            field, mspec = _one_entry(cspec, "match")
-            _field_or_primary(reader, field, f"boosting {what}")
-            return _as_text(mspec, "match")
-
         from .operators.ranking import boosting_topk
 
         return boosting_topk(
             reader,
-            _match_text(spec["positive"], "positive"),
-            _match_text(spec["negative"], "negative"),
+            _match_clause(reader, spec["positive"], "boosting.positive"),
+            _match_clause(reader, spec["negative"], "boosting.negative"),
             float(spec.get("negative_boost", 0.5)),
             k,
         )
@@ -766,17 +701,13 @@ def compile_search(
                 "function_score supports field_value_factor over a docmap "
                 f"column (allowed: {FILTERABLE})"
             )
-        qk, qspec = _one_entry(spec["query"], "function_score.query")
-        if qk != "match":
-            raise DslError(f"function_score composes with match, got {qk!r}")
-        field, mspec = _one_entry(qspec, "match")
-        _field_or_primary(reader, field, "function_score match")
+        text = _match_clause(reader, spec["query"], "function_score.query")
         from .operators.ranking import function_score_topk
 
         try:
             return function_score_topk(
                 reader,
-                _as_text(mspec, "match"),
+                text,
                 field=fvf["field"],
                 factor=float(fvf.get("factor", 1.0)),
                 modifier=str(fvf.get("modifier", "none")),

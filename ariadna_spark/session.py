@@ -6,8 +6,13 @@ shuffle partitions sized to parallelism rather than the 200 default.
 from __future__ import annotations
 
 import os
+import threading
+import warnings
 
 from pyspark.sql import SparkSession
+
+# guards the once-per-session warm-up marker (check-then-set)
+_warm_lock = threading.Lock()
 
 
 def _local_dir() -> str:
@@ -27,7 +32,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
     and import numpy/pandas/pyarrow NOW, overlapped (FAIR scheduler) with
     whatever the driver does next — measured ~2.5s of first-Python-job
     wall time at local[32] that otherwise lands inside the first real
-    kernel stage. Failures are irrelevant (the real job warms lazily)."""
+    kernel stage. A failure only costs that overlap (the real job warms
+    lazily), so it is reported as a warning, not raised."""
 
     def _k(batches):
         import numpy  # noqa: F401
@@ -50,25 +56,46 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .mode("overwrite")
             .save()
         )
-    except Exception:  # noqa: BLE001 — warm-up is best-effort by design
-        pass
+    except Exception as e:  # noqa: BLE001 — warm-up is best-effort by design
+        warnings.warn(f"python worker warm-up failed: {e!r}", RuntimeWarning)
 
 
-def ensure_workers_warm(spark: SparkSession) -> None:
+def ensure_workers_warm(spark: SparkSession) -> threading.Thread | None:
     """Start the worker warm-up ONCE per session, from a daemon thread.
 
     Called at session creation (so the fork+import cost overlaps the
     driver-side setup that follows — data loading, plan building) and
     again defensively at index-build entry for sessions constructed
-    elsewhere; the marker makes the second call free."""
-    if getattr(spark, "_ariadna_workers_warmed", False):
-        return
-    spark._ariadna_workers_warmed = True
-    import threading
+    elsewhere; the marker makes the second call free. Returns the
+    started thread, or None when the session was already warmed."""
+    with _warm_lock:
+        if getattr(spark, "_ariadna_workers_warmed", False):
+            return None
+        spark._ariadna_workers_warmed = True
+    t = threading.Thread(target=_warm_python_workers, args=(spark,), daemon=True)
+    t.start()
+    return t
 
-    threading.Thread(
-        target=_warm_python_workers, args=(spark,), daemon=True
-    ).start()
+
+def default_codecs(cores: int) -> tuple[str, str]:
+    """(parquet codec, shuffle/io codec) for a `cores`-slot session.
+
+    A bandwidth-for-CPU trade, bought only when per-core bandwidth is the
+    scarce resource. Measured in interleaved A/B builds at 1M docs:
+    parquet snappy 341/317s vs zstd 219/221s (artifacts 1082 MB -> 761 MB)
+    and shuffle lz4 286/300s vs zstd 255/230s at local[32], where 32
+    tasks contend for the memory bus — but at local[2] (CPU-bound,
+    bandwidth idle) zstd builds are ~15% SLOWER (217/248 vs 257/278 at
+    300k docs). So the default scales with parallelism: heavy codecs from
+    8 cores up (the cluster-executor regime, where NIC/disk/memory-bus
+    contention is the norm), light ones below. ARIADNA_PARQUET_CODEC /
+    ARIADNA_IO_CODEC override each for A/B; an empty value counts as
+    unset."""
+    heavy = cores >= 8
+    return (
+        os.environ.get("ARIADNA_PARQUET_CODEC") or ("zstd" if heavy else "snappy"),
+        os.environ.get("ARIADNA_IO_CODEC") or ("zstd" if heavy else "lz4"),
+    )
 
 
 def get_spark(
@@ -97,6 +124,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             _repo_root + (os.pathsep + _pp if _pp else "")
         )
+    parquet_codec, io_codec = default_codecs(cores)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -126,27 +154,9 @@ def get_spark(
         # threads); tmpfs restores flat behavior. On a real cluster this is
         # the executors' local NVMe, which is per-node and scales with N.
         .config("spark.local.dir", _local_dir())
-        # Compression codecs: a bandwidth-for-CPU trade, bought only when
-        # per-core bandwidth is the scarce resource (guide §2.3 "measure
-        # both", §6). Measured on this box, interleaved A/B at 1M docs:
-        # parquet snappy 341/317s vs zstd 219/221s (artifacts 1082 MB ->
-        # 761 MB) and shuffle lz4 286/300s vs zstd 255/230s at local[32],
-        # where 32 tasks contend for the memory bus — but at the pinned
-        # local[2] ladder rung (CPU-bound, bandwidth idle) zstd builds are
-        # ~15% SLOWER (217/248 vs 257/278 at 300k docs). So the default
-        # scales with parallelism: heavy codecs from 8 cores up (the
-        # cluster-executor regime, where NIC/disk/memory-bus contention is
-        # the norm), light ones below. Env-overridable for A/B.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get(
-                "ARIADNA_PARQUET_CODEC", "zstd" if cores >= 8 else "snappy"
-            ),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("ARIADNA_IO_CODEC", "zstd" if cores >= 8 else "lz4"),
-        )
+        # compression codecs scale with parallelism (default_codecs)
+        .config("spark.sql.parquet.compression.codec", parquet_codec)
+        .config("spark.io.compression.codec", io_codec)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

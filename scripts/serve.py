@@ -20,6 +20,7 @@ Config (A8): --config YAML + ARIADNA_* env overrides, flags win.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
@@ -28,6 +29,42 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _filter_expr(filters: dict[str, str] | None):
+    """{col: value} -> conjunctive `term` filter clauses compiled by
+    query_dsl over its one allowlist (None passes through)."""
+    if not filters:
+        return None
+    from ariadna_spark.query_dsl import compile_filter
+
+    return compile_filter(
+        [{"term": {c: int(v) if c == "doc_len" else v}} for c, v in filters.items()]
+    )
+
+
+def _hits(rows: list[dict]) -> dict:
+    """Row dicts -> the ES hits envelope: doc_id/score become _id/_score,
+    every other column rides under `fields`."""
+    hits = []
+    for r in rows:
+        src = {c: v for c, v in r.items() if c not in ("doc_id", "score")}
+        h = {"_id": r.get("doc_id"), "_score": r.get("score")}
+        if src:
+            h["fields"] = src
+        hits.append(h)
+    return {"hits": {"total": {"value": len(hits), "relation": "eq"}, "hits": hits}}
+
+
+def _per_query(ids: list[int], rows: list[dict], qid: str, cols: tuple) -> list[dict]:
+    """Batch rows -> one {"id", "hits"} entry per query id, in request
+    order, each hit list in rank order."""
+    by_q: dict[int, list] = {i: [] for i in ids}
+    for r in rows:
+        by_q[r[qid]].append({"rank": r["rank"], **{c: r[c] for c in cols}})
+    return [
+        {"id": i, "hits": sorted(h, key=lambda x: x["rank"])} for i, h in by_q.items()
+    ]
 
 
 class SearchService:
@@ -53,8 +90,10 @@ class SearchService:
         self._lock = threading.Lock()
         # open scroll contexts: scroll_id -> cursor state (body, last
         # search_after, done flag, ttl). Purged lazily on every scroll
-        # call; hard-capped so a client can't grow driver memory.
+        # call; hard-capped so a client can't grow driver memory. Handler
+        # threads share it, so every access holds _scroll_lock.
         self._scrolls: dict[str, dict] = {}
+        self._scroll_lock = threading.Lock()
         self._docs = None
         if docs_dir:
             from ariadna_spark.corpus import load_docs
@@ -74,24 +113,19 @@ class SearchService:
             else:
                 self._ann = ivf_index_read(spark, ann_dir)  # flat ivf_index_write
 
-    # docmap attributes a filter clause may constrain (ES bool-filter
-    # terms over doc metadata); an allowlist, never raw expressions
-    FILTERABLE = ("repo", "path", "commit", "lang")
+    def run(self, plan) -> list[dict]:
+        """Build and collect one plan under the serving lock -> row dicts.
+        `plan` is a zero-argument callable returning a DataFrame; it runs
+        under the lock too, because some verbs run driver-side jobs (df
+        windows, vocabulary expansion) while planning."""
+        with self._lock:
+            return [r.asDict() for r in plan().collect()]
 
-    def _filter_expr(self, filters: dict[str, str] | None):
-        """{col: value} -> conjunctive Catalyst equality predicate over
-        allowlisted docmap columns (None passes through)."""
-        if not filters:
-            return None
-        from pyspark.sql import functions as F
-
-        bad = set(filters) - set(self.FILTERABLE)
-        if bad:
-            raise ValueError(f"unfilterable column(s): {sorted(bad)}")
-        flt = F.lit(True)
-        for c, v in filters.items():
-            flt = flt & (F.col(c) == v)
-        return flt
+    def _need_docs(self):
+        """The source corpus (--docs), for endpoints that re-read content."""
+        if self._docs is None:
+            raise ValueError("no docs configured (--docs)")
+        return self._docs
 
     def search(
         self, q: str, k: int = 10, mode: str = "match", docmap: bool = False,
@@ -100,74 +134,20 @@ class SearchService:
     ) -> list[dict]:
         """`after=(score, doc_id)` = ES search_after cursor (match mode).
         `filters={col: value}` = ES bool-filter terms over docmap
-        attributes (match mode); conjunctive equality only. Cursor and
+        attributes (every mode); conjunctive equality only. Cursor and
         filters compose — a filtered page 2 stays a pruned top-k job."""
-        flt = self._filter_expr(filters)
-        with self._lock:
-            if mode == "near":
-                rows = self.reader.near_topk(
-                    q, window=window, k=k, with_docmap=docmap, flt=flt
-                ).collect()
-            elif mode == "fuzzy":
-                rows = self.reader.fuzzy_topk(
-                    q, k, max_dist=window, with_docmap=docmap, flt=flt
-                ).collect()
-            elif mode == "match":
-                rows = self.reader.topk(
-                    q, k, with_docmap=docmap, after=after, flt=flt
-                ).collect()
-            else:
-                fn = {
-                    "prefix": self.reader.prefix_topk,
-                    "phrase": self.reader.phrase_topk,
-                    "phrase_prefix": self.reader.phrase_prefix_topk,
-                }[mode]
-                rows = fn(q, k, with_docmap=docmap, flt=flt).collect()
-        return [r.asDict() for r in rows]
-
-    def bool_search(
-        self, must: str = "", should: str = "", must_not: str = "",
-        msm: int = 0, k: int = 10, docmap: bool = False,
-        filters: dict[str, str] | None = None,
-        after: tuple[float, int] | None = None,
-    ) -> list[dict]:
-        """GET /api/bool: the composed ES bool query (must/should/
-        must_not + minimum_should_match + non-scoring filter terms),
-        with search_after cursor pagination — the cut runs in-kernel,
-        so page N of a bool query stays one pruned job."""
-        flt = self._filter_expr(filters)
-        with self._lock:
-            rows = self.reader.bool_topk(
-                must, should, must_not, flt=flt, msm=msm, k=k,
-                with_docmap=docmap, after=after,
-            ).collect()
-        return [r.asDict() for r in rows]
-
-    def highlight(self, q: str, k: int = 10, window: int = 5) -> list[dict]:
-        """Snippeted search (the ES highlight surface): pruned top-k, then
-        an O(k) pushed IN-list fetch re-reads only the winners to cut the
-        deterministic +-window snippet. Needs --docs (the corpus)."""
-        if self._docs is None:
-            raise ValueError("no docs configured (--docs)")
-        with self._lock:
-            rows = self.reader.highlight_topk(
-                self._docs, q, k, window=window
-            ).collect()
-        return [r.asDict() for r in rows]
-
-    def reverse(self, lat: float, lon: float, k: int = 2) -> list[dict]:
-        """Reverse geocode: exact haversine k-NN over the cell-partitioned
-        geo store (the /api/reverse/:lat/:lon route the reference declares,
-        /root/reference/osm/osm.go:182; its handler is a stub — the top-2
-        client contract is public/static/js/map.js:54-71). Each ring probe
-        partition-prunes to the probed cell directories."""
-        if self._geo is None:
-            raise ValueError("no geo index configured (--geo-index)")
-        from ariadna_spark.operators.geo import geo_knn
-
-        with self._lock:
-            rows = geo_knn(self._geo, lat, lon, k=k, cell_deg=self._geo_cell).collect()
-        return [r.asDict() for r in rows]
+        flt = _filter_expr(filters)
+        r = self.reader
+        kw = {"with_docmap": docmap, "flt": flt}
+        verbs = {
+            "match": lambda: r.topk(q, k, after=after, **kw),
+            "near": lambda: r.near_topk(q, window=window, k=k, **kw),
+            "fuzzy": lambda: r.fuzzy_topk(q, k, max_dist=window, **kw),
+            "prefix": lambda: r.prefix_topk(q, k, **kw),
+            "phrase": lambda: r.phrase_topk(q, k, **kw),
+            "phrase_prefix": lambda: r.phrase_prefix_topk(q, k, **kw),
+        }
+        return self.run(verbs[mode])
 
     def grep(self, pattern: str, limit: int = 100) -> dict:
         """Index-accelerated grep (GET /api/grep?q=<pattern>, VERDICT r4
@@ -177,13 +157,12 @@ class SearchService:
         that gate. Literal-free / Zipf-head patterns fall back to the
         full scan; rows are identical either way. Response reports
         `prefilter_used` so a caller can see which shape ran."""
-        if self._docs is None:
-            raise ValueError("no docs configured (--docs)")
+        docs = self._need_docs()
         from ariadna_spark.operators.text import regex_search_indexed
         from ariadna_spark.plans import physical_plan
 
         with self._lock:
-            df = regex_search_indexed(self._docs, pattern, self.reader)
+            df = regex_search_indexed(docs, pattern, self.reader)
             prefilter_used = "LeftSemi" in physical_plan(df)
             rows = df.orderBy("doc_id").limit(limit).collect()
         return {
@@ -192,73 +171,23 @@ class SearchService:
             "matches": [r.asDict() for r in rows],
         }
 
-    def suggest(self, prefix: str, k: int = 10) -> list[dict]:
-        """GET /api/suggest?prefix=: ES completion suggester — vocabulary
-        terms completing the analyzed prefix ranked by df, off the
-        partition-pruned edge-ngram buckets (terms-scan fallback for
-        prefixes outside the indexed gram lengths)."""
-        with self._lock:
-            rows = self.reader.suggest_terms(prefix, size=k).collect()
-        return [r.asDict() for r in rows]
-
-    def didyoumean(self, q: str, k: int = 5, dist: int = 2) -> list[dict]:
-        """GET /api/didyoumean?q=: ES term suggester — vocabulary terms
-        within Levenshtein `dist` sharing the first character, ranked
-        (distance, df desc, term)."""
-        with self._lock:
-            rows = self.reader.suggest_corrections(q, size=k, max_dist=dist).collect()
-        return [r.asDict() for r in rows]
-
-    def analyze(self, text: str) -> dict:
-        """GET /api/analyze?text=: the ES `_analyze` dev surface — the
-        exact token stream the index and every query path use (driver
-        local; the same tokenize_py impl the kernels pickle)."""
-        from ariadna_spark.analyze import tokenize_py
-
-        toks = tokenize_py(text)
-        return {"tokens": [{"token": t, "position": i} for i, t in enumerate(toks)]}
-
-    def explain(self, doc_id: int, q: str) -> list[dict]:
-        """GET /api/explain?doc=<id>&q=<query>: the ES `_explain` surface
-        — per-term BM25 breakdown (tf, doc_len, df, idf, tf_norm, score)
-        of one (query, doc) pair, decoding only the blocks covering the
-        doc id."""
-        with self._lock:
-            rows = self.reader.explain_score(doc_id, q).collect()
-        return [r.asDict() for r in rows]
-
-    def more_like_this(self, doc_id: int, k: int = 10) -> list[dict]:
-        """GET /api/mlt?doc=<id>: docs similar to a source doc (ES MLT —
-        tf x idf term selection off the terms table, disjunctive WAND,
-        source excluded). Needs --docs."""
-        if self._docs is None:
-            raise ValueError("no docs configured (--docs)")
-        with self._lock:
-            rows = self.reader.more_like_this(self._docs, doc_id, k).collect()
-        return [r.asDict() for r in rows]
-
     def facets(self, q: str, by: str = "lang") -> list[dict]:
         """GET /api/facets?q=&by=: per-bucket match counts for an OR
         query, straight off the pruned posting blocks (content never
         read). Needs --docs for the bucket column."""
-        if self._docs is None:
-            raise ValueError("no docs configured (--docs)")
+        docs = self._need_docs()
         from pyspark.sql import functions as F
 
         from ariadna_spark.analyze import tokenize_py
 
         terms = sorted(set(tokenize_py(q)))
-        with self._lock:
-            cands = self.reader.candidate_doc_ids(terms)
-            rows = (
-                self._docs.select("doc_id", by)
-                .join(cands, "doc_id", "left_semi")
-                .groupBy(by)
-                .agg(F.count(F.lit(1)).alias("n_docs"))
-                .orderBy(by)
-                .collect()
-            )
-        return [r.asDict() for r in rows]
+        return self.run(
+            lambda: docs.select("doc_id", by)
+            .join(self.reader.candidate_doc_ids(terms), "doc_id", "left_semi")
+            .groupBy(by)
+            .agg(F.count(F.lit(1)).alias("n_docs"))
+            .orderBy(by)
+        )
 
     def sorted_search(
         self, q: str, by: str = "path", order: str = "asc", k: int = 10,
@@ -266,17 +195,16 @@ class SearchService:
     ) -> list[dict]:
         """GET /api/sorted: ES sort-by-field + search_after on the field
         sort key (TakeOrdered plan — no full sort, no over-fetch)."""
-        flt = self._filter_expr(filters)
-        with self._lock:
-            rows = self.reader.sorted_topk(
+        flt = _filter_expr(filters)
+        return self.run(
+            lambda: self.reader.sorted_topk(
                 q, by, asc=(order != "desc"), k=k, after=after, flt=flt
-            ).collect()
-        return [r.asDict() for r in rows]
+            )
+        )
 
     def count(self, q: str) -> int:
         """GET /api/count?q=: exact OR-match doc count (ES `_count`)."""
-        with self._lock:
-            return int(self.reader.match_count(q).collect()[0]["n_docs"])
+        return int(self.run(lambda: self.reader.match_count(q))[0]["n_docs"])
 
     def es_search(self, body: dict) -> dict:
         """POST /api/_search: the ES request-body dialect the reference
@@ -290,11 +218,7 @@ class SearchService:
         semantics."""
         from ariadna_spark.query_dsl import compile_search
 
-        with self._lock:
-            rows = [
-                r.asDict()
-                for r in compile_search(self.reader, body, docs=self._docs).collect()
-            ]
+        rows = self.run(lambda: compile_search(self.reader, body, docs=self._docs))
         if "suggest" in body:
             (sname,) = body["suggest"].keys()
             return {"suggest": {sname: rows}}
@@ -308,30 +232,15 @@ class SearchService:
                     per.setdefault(r["bucket"], []).append(
                         {"_id": r["doc_id"], "_score": r["score"], "rank": r["rank"]}
                     )
-                return {
-                    "aggregations": {
-                        aname: {
-                            "buckets": [
-                                {"key": k, "hits": hs} for k, hs in sorted(per.items())
-                            ]
-                        }
-                    }
-                }
+                hit_buckets = [{"key": b, "hits": hs} for b, hs in sorted(per.items())]
+                return {"aggregations": {aname: {"buckets": hit_buckets}}}
             buckets: dict = {}
             for r in rows:
-                b = buckets.setdefault(r["agg"], [])
-                b.append(
+                buckets.setdefault(r["agg"], []).append(
                     {"key": r["bucket"], "doc_count": r["n_docs"], "metric": r["metric"]}
                 )
             return {"aggregations": {a: {"buckets": bs} for a, bs in buckets.items()}}
-        hits = []
-        for r in rows:
-            src = {c: v for c, v in r.items() if c not in ("doc_id", "score")}
-            h = {"_id": r.get("doc_id"), "_score": r.get("score")}
-            if src:
-                h["fields"] = src
-            hits.append(h)
-        return {"hits": {"total": {"value": len(hits), "relation": "eq"}, "hits": hits}}
+        return _hits(rows)
 
     _SCROLL_MAX = 64  # open contexts cap (driver-memory guard)
 
@@ -345,6 +254,7 @@ class SearchService:
         return int(m.group(1)) * (60 if m.group(2) == "m" else 1)
 
     def _purge_scrolls(self) -> None:
+        """Drop expired contexts (the caller holds _scroll_lock)."""
         import time
 
         now = time.monotonic()
@@ -361,23 +271,14 @@ class SearchService:
         b = dict(body)
         if after is not None:
             b["search_after"] = after
-        with self._lock:
-            rows = [r.asDict() for r in compile_search(self.reader, b).collect()]
+        rows = self.run(lambda: compile_search(self.reader, b))
         if body.get("sort"):
             sort = body["sort"] if isinstance(body["sort"], list) else [body["sort"]]
             col = next(iter(sort[0]))
         else:
             col = "score"
         new_after = [rows[-1][col], rows[-1]["doc_id"]] if rows else after
-        hits = []
-        for r in rows:
-            src = {c: v for c, v in r.items() if c not in ("doc_id", "score")}
-            h = {"_id": r.get("doc_id"), "_score": r.get("score")}
-            if src:
-                h["fields"] = src
-            hits.append(h)
-        env = {"hits": {"total": {"value": len(hits), "relation": "eq"}, "hits": hits}}
-        return env, new_after, len(rows) < int(body.get("size", 10))
+        return _hits(rows), new_after, len(rows) < int(body.get("size", 10))
 
     def es_scroll_open(self, body: dict, keep: str = "1m") -> dict:
         """POST /api/_search?scroll=<keep>: first page + a scroll_id
@@ -402,18 +303,26 @@ class SearchService:
                 f"sorted query, got {kind!r}"
             )
         ttl = self._parse_keep(keep)
-        self._purge_scrolls()
-        if len(self._scrolls) >= self._SCROLL_MAX:
-            raise ValueError("too many open scroll contexts")
-        env, after, done = self._scroll_page(body, None)
         sid = uuid.uuid4().hex
-        self._scrolls[sid] = {
-            "body": body,
-            "after": after,
-            "done": done,
-            "ttl": ttl,
-            "exp": time.monotonic() + ttl,
-        }
+        # reserve the slot before the first page's Spark job, so concurrent
+        # opens cannot all pass the cap check; it never expires while the
+        # page runs
+        with self._scroll_lock:
+            self._purge_scrolls()
+            if len(self._scrolls) >= self._SCROLL_MAX:
+                raise ValueError("too many open scroll contexts")
+            ctx = self._scrolls[sid] = {
+                "body": body, "after": None, "done": False, "ttl": ttl,
+                "exp": float("inf"),
+            }
+        try:
+            env, after, done = self._scroll_page(body, None)
+        except BaseException:
+            with self._scroll_lock:
+                self._scrolls.pop(sid, None)
+            raise
+        with self._scroll_lock:
+            ctx.update(after=after, done=done, exp=time.monotonic() + ttl)
         env["_scroll_id"] = sid
         return env
 
@@ -423,16 +332,17 @@ class SearchService:
         import time
 
         sid = body.get("scroll_id")
-        self._purge_scrolls()
-        ctx = self._scrolls.get(sid)
+        with self._scroll_lock:
+            self._purge_scrolls()
+            ctx = self._scrolls.get(sid)
         if ctx is None:
             raise ValueError("unknown or expired scroll_id")
         if ctx["done"]:
-            env = {"hits": {"total": {"value": 0, "relation": "eq"}, "hits": []}}
+            env, after, done = _hits([]), ctx["after"], True
         else:
             env, after, done = self._scroll_page(ctx["body"], ctx["after"])
-            ctx["after"], ctx["done"] = after, done
-        ctx["exp"] = time.monotonic() + ctx["ttl"]
+        with self._scroll_lock:
+            ctx.update(after=after, done=done, exp=time.monotonic() + ctx["ttl"])
         env["_scroll_id"] = sid
         return env
 
@@ -441,7 +351,8 @@ class SearchService:
         ids = body.get("scroll_id")
         if isinstance(ids, str):
             ids = [ids]
-        n = sum(1 for s in ids or [] if self._scrolls.pop(s, None) is not None)
+        with self._scroll_lock:
+            n = sum(1 for s in ids or [] if self._scrolls.pop(s, None) is not None)
         return {"succeeded": True, "num_freed": n}
 
     def es_mget(self, body: dict) -> dict:
@@ -453,27 +364,13 @@ class SearchService:
             isinstance(i, int) for i in ids
         ):
             raise ValueError("_mget needs a non-empty integer ids array")
-        with self._lock:
-            rows = self.reader.mget(ids).collect()
+        rows = self.run(lambda: self.reader.mget(ids))
+        cols = ("repo", "path", "commit", "lang", "doc_len", "content_sha")
         return {
             "docs": [
-                {
-                    "_id": r["doc_id"],
-                    "found": bool(r["found"]),
-                    **(
-                        {
-                            "fields": {
-                                c: r[c]
-                                for c in (
-                                    "repo", "path", "commit", "lang",
-                                    "doc_len", "content_sha",
-                                )
-                            }
-                        }
-                        if r["found"]
-                        else {}
-                    ),
-                }
+                {"_id": r["doc_id"], "found": True, "fields": {c: r[c] for c in cols}}
+                if r["found"]
+                else {"_id": r["doc_id"], "found": False}
                 for r in rows
             ]
         }
@@ -505,16 +402,7 @@ class SearchService:
                 raise DslError(f"invalid NDJSON body line: {e}")
         with self._lock:
             results = msearch(self.reader, bodies, docs=self._docs)
-        return {
-            "responses": [
-                {"hits": {"total": {"value": len(rs), "relation": "eq"},
-                          "hits": [{"_id": r.pop("doc_id", None),
-                                    "_score": r.pop("score", None),
-                                    **({"fields": r} if r else {})}
-                                   for r in rs]}}
-                for rs in results
-            ]
-        }
+        return {"responses": [_hits(rs) for rs in results]}
 
     def es_validate(self, body: dict) -> dict:
         """POST /api/_validate: ES `_validate/query` — compile the request
@@ -550,55 +438,27 @@ class SearchService:
             qid = int(r["id"])
             pairs.append((qid, str(r["query"])))
             for it in r.get("ratings") or []:
-                rating_rows.append((qid, int(it[0]), float(it[1])))
+                try:
+                    doc_id, rating = it
+                    rating_rows.append((qid, int(doc_id), float(rating)))
+                except (TypeError, ValueError):
+                    raise ValueError(
+                        f"each rating must be a [doc_id, rating] pair, got {it!r}"
+                    )
         from ariadna_spark.operators.ranking import rank_eval
 
-        with self._lock:
-            ratings = self.spark.createDataFrame(
-                rating_rows or [(int(-1), int(-1), 0.0)],
-                "query_id long, doc_id long, rating double",
+        rows = self.run(
+            lambda: rank_eval(
+                self.reader,
+                pairs,
+                self.spark.createDataFrame(
+                    rating_rows or [(int(-1), int(-1), 0.0)],
+                    "query_id long, doc_id long, rating double",
+                ),
+                k=k,
             )
-            rows = rank_eval(self.reader, pairs, ratings, k=k).collect()
-        return {"details": [r.asDict() for r in rows], "k": k}
-
-    def multifield(self, q: str, fields: list[tuple[str, float]], k: int = 10) -> list[dict]:
-        """GET /api/multifield?q=...&fields=content:1,path:2 — BM25F over
-        the store's per-field terms (requires a build_multifield_index
-        store; every other endpoint already serves its primary field)."""
-        from ariadna_spark.operators.wand import multifield_topk_single
-
-        with self._lock:
-            rows = multifield_topk_single(self.reader, fields, q, k).collect()
-        return [r.asDict() for r in rows]
-
-    def term_vectors(self, doc_id: int) -> list[dict]:
-        """GET /api/termvectors?doc=: one doc's (term, tf, df, positions)
-        — the ES `_termvectors` surface. Needs --docs (re-analysis)."""
-        if self._docs is None:
-            raise ValueError("no docs configured (--docs)")
-        with self._lock:
-            rows = self.reader.term_vectors(self._docs, doc_id).collect()
-        return [r.asDict() for r in rows]
-
-    def aggs(self, q: str, interval: int = 25) -> list[dict]:
-        """GET /api/aggs?q=&interval=: the non-terms agg suite (range /
-        histogram / stats / cardinality) over an OR match — one pruned
-        candidate pass, one GROUPING SETS shuffle, content never read."""
-        with self._lock:
-            rows = self.reader.match_aggs(q, interval=interval).collect()
-        return [r.asDict() for r in rows]
-
-    def significant(self, q: str, size: int = 10, min_doc_count: int = 3) -> list[dict]:
-        """GET /api/significant?q=: ES significant_terms agg (JLH) over
-        the OR-match foreground. Needs --docs (foreground re-analysis;
-        background df comes from the index's terms metadata)."""
-        if self._docs is None:
-            raise ValueError("no docs configured (--docs)")
-        with self._lock:
-            rows = self.reader.significant_terms(
-                self._docs, q, size=size, min_doc_count=min_doc_count
-            ).collect()
-        return [r.asDict() for r in rows]
+        )
+        return {"details": rows, "k": k}
 
     def percolate_body(self, body: dict) -> dict:
         """POST /api/percolate: the ES percolator, stateless form — both
@@ -634,12 +494,9 @@ class SearchService:
         qdf = self.spark.createDataFrame(
             qrows, "query_id long, terms array<string>, msm int"
         )
-        with self._lock:
-            pairs = percolate(ddf, qdf).orderBy("doc_id", "query_id").collect()
+        # percolate yields exactly (doc_id, query_id) rows
         return {
-            "matches": [
-                {"doc_id": r["doc_id"], "query_id": r["query_id"]} for r in pairs
-            ]
+            "matches": self.run(lambda: percolate(ddf, qdf).orderBy("doc_id", "query_id"))
         }
 
     def hybrid(
@@ -665,7 +522,8 @@ class SearchService:
             [(0, [float(x) for x in v])], "qid long, qv array<double>"
         )
         indexed, centroids = self._ann
-        with self._lock:
+
+        def plan():
             lex = (
                 self.reader.topk(q, window)
                 .withColumn(
@@ -677,8 +535,9 @@ class SearchService:
             den = ivf_topk_many(
                 indexed, centroids, qdf, k=window, n_probe=n_probe, prune=True
             ).select(F.col("vec_id").alias("doc_id"), "rank")
-            rows = rrf_fuse([lex, den], k=k).collect()
-        return [{"doc_id": r["doc_id"], "rrf_score": r["rrf_score"]} for r in rows]
+            return rrf_fuse([lex, den], k=k)
+
+        return self.run(plan)  # rrf_fuse yields exactly (doc_id, rrf_score)
 
     def search_batch(self, queries: list[dict]) -> list[dict]:
         """The production enrichment entry point (VERDICT r3 #8): the
@@ -691,17 +550,10 @@ class SearchService:
             if not isinstance(q, dict) or not q.get("q"):
                 raise ValueError(f"queries[{i}]: missing q")
             trip.append((int(q.get("id", i)), str(q["q"]), int(q.get("k", 10))))
-        with self._lock:
-            rows = self.reader.topk_many(trip).collect()
-        by_q: dict[int, list] = {int(qid): [] for qid, _, _ in trip}
-        for r in rows:
-            by_q[r["query_id"]].append(
-                {"rank": r["rank"], "doc_id": r["doc_id"], "score": r["score"]}
-            )
-        return [
-            {"id": qid, "hits": sorted(h, key=lambda x: x["rank"])}
-            for qid, h in by_q.items()
-        ]
+        rows = self.run(lambda: self.reader.topk_many(trip))
+        return _per_query(
+            [int(qid) for qid, _, _ in trip], rows, "query_id", ("doc_id", "score")
+        )
 
     def ann_batch(self, queries: list[dict], k: int = 10, n_probe: int = 4) -> list[dict]:
         """Batch ANN over the configured IVF store: one equi-join per
@@ -718,19 +570,10 @@ class SearchService:
             rows_in.append((int(q.get("id", i)), [float(x) for x in q["v"]]))
         qdf = self.spark.createDataFrame(rows_in, "qid long, qv array<double>")
         indexed, centroids = self._ann
-        with self._lock:
-            rows = ivf_topk_many(
-                indexed, centroids, qdf, k=k, n_probe=n_probe, prune=True
-            ).collect()
-        by_q: dict[int, list] = {qid: [] for qid, _ in rows_in}
-        for r in rows:
-            by_q[r["qid"]].append(
-                {"rank": r["rank"], "vec_id": r["vec_id"], "cos": r["cos"]}
-            )
-        return [
-            {"id": qid, "hits": sorted(h, key=lambda x: x["rank"])}
-            for qid, h in by_q.items()
-        ]
+        rows = self.run(
+            lambda: ivf_topk_many(indexed, centroids, qdf, k=k, n_probe=n_probe, prune=True)
+        )
+        return _per_query([qid for qid, _ in rows_in], rows, "qid", ("vec_id", "cos"))
 
     def stats(self) -> dict:
         return {
@@ -740,11 +583,314 @@ class SearchService:
         }
 
 
-def make_handler(service: SearchService, public_dir: str | None = None):
-    def _parse_filters(qs: dict) -> dict[str, str] | None:
-        """?lang=fr&repo=... -> {col: value} over the service allowlist."""
-        return {c: qs[c][0] for c in service.FILTERABLE if qs.get(c)} or None
+class _Request:
+    """One request's inputs: the URL path, the query string behind typed
+    accessors, and the raw body (parsed as JSON on first use)."""
 
+    def __init__(self, url, raw: bytes | None = None):
+        self.path = url.path
+        self.qs = parse_qs(url.query)
+        self.raw = raw
+
+    def get(self, name: str, default=None, cast=str):
+        """Optional param: its first value through `cast`, else `default`."""
+        v = self.qs.get(name)
+        return cast(v[0]) if v else default
+
+    def need(self, *names: str) -> str:
+        """Required param: the first of `names` present; missing -> 400."""
+        for n in names:
+            if self.qs.get(n):
+                return self.qs[n][0]
+        raise ValueError(f"missing {names[0]}")
+
+    def flag(self, name: str) -> bool:
+        return self.get(name, "0") in ("1", "true")
+
+    def after(self, cast=float) -> tuple | None:
+        """?after=<value>,<doc_id> — the search_after cursor: deep
+        pagination where page N is a normal pruned top-k job, never a
+        from+size over-fetch."""
+        raw = self.get("after")
+        if raw is None:
+            return None
+        v, _, d = raw.rpartition(",")
+        return (cast(v), int(d))
+
+    def filters(self) -> dict[str, str] | None:
+        """?lang=fr&repo=... -> {col: value}: ES bool-filter terms over
+        the docmap columns query_dsl allowlists for `_search` bodies."""
+        from ariadna_spark.query_dsl import FILTERABLE
+
+        return {c: self.qs[c][0] for c in FILTERABLE if self.qs.get(c)} or None
+
+    @functools.cached_property
+    def body(self):
+        try:
+            return json.loads(self.raw)
+        except json.JSONDecodeError:
+            raise ValueError("invalid JSON body")
+
+
+def _score_cursor(rows: list[dict]) -> str:
+    """The last hit as the `?after=` cursor of the next page."""
+    return f"{rows[-1]['score']!r},{rows[-1]['doc_id']}"
+
+
+def _search_route(mode: str):
+    """GET /api/<mode>: one search mode; `w` is the proximity window for
+    near and the max edit distance for fuzzy."""
+
+    def route(svc, a):
+        q, k = a.need("q"), a.get("k", 10, int)
+        rows = svc.search(
+            q, k, mode=mode, docmap=a.flag("docmap"),
+            window=a.get("w", 8 if mode == "near" else 1, int),
+            after=a.after(), filters=a.filters(),
+        )
+        resp = {"query": q, "k": k, "hits": rows}
+        if rows and mode == "match":
+            resp["next_after"] = _score_cursor(rows)
+        return resp
+
+    return route
+
+
+def _reverse(svc, a):
+    """GET /api/reverse/:lat/:lon (or ?lat=&lon=): reverse geocode —
+    exact haversine k-NN over the cell-partitioned geo store, each ring
+    probe partition-pruned to the probed cell directories."""
+    parts = [p for p in a.path.split("/") if p][2:]
+    if len(parts) == 2:
+        lat, lon = float(parts[0]), float(parts[1])
+    elif "lat" in a.qs and "lon" in a.qs:
+        lat, lon = float(a.qs["lat"][0]), float(a.qs["lon"][0])
+    else:
+        raise ValueError("missing lat/lon")
+    k = a.get("k", 2, int)
+    if svc._geo is None:
+        raise ValueError("no geo index configured (--geo-index)")
+    from ariadna_spark.operators.geo import geo_knn
+
+    rows = svc.run(lambda: geo_knn(svc._geo, lat, lon, k=k, cell_deg=svc._geo_cell))
+    return {"lat": lat, "lon": lon, "hits": rows}
+
+
+def _bool(svc, a):
+    """GET /api/bool: the composed ES bool query (must/should/not + msm +
+    filter terms) with a search_after cursor — the cut runs in-kernel, so
+    page N of a bool query stays one pruned job."""
+    must, should, must_not = a.get("must", ""), a.get("should", ""), a.get("not", "")
+    if not (must or should):
+        raise ValueError("missing must/should")
+    k, msm, docmap = a.get("k", 10, int), a.get("msm", 0, int), a.flag("docmap")
+    flt, after = _filter_expr(a.filters()), a.after()
+    rows = svc.run(
+        lambda: svc.reader.bool_topk(
+            must, should, must_not, flt=flt, msm=msm, k=k,
+            with_docmap=docmap, after=after,
+        )
+    )
+    resp = {"must": must, "should": should, "must_not": must_not,
+            "msm": msm, "k": k, "hits": rows}
+    if rows:
+        resp["next_after"] = _score_cursor(rows)
+    return resp
+
+
+def _highlight(svc, a):
+    """GET /api/highlight: pruned top-k, then an O(k) IN-list re-read of
+    the winners cuts the +-w snippet (needs --docs)."""
+    q, k, w = a.need("q"), a.get("k", 10, int), a.get("w", 5, int)
+    docs = svc._need_docs()
+    rows = svc.run(lambda: svc.reader.highlight_topk(docs, q, k, window=w))
+    return {"query": q, "k": k, "hits": rows}
+
+
+def _explain(svc, a):
+    """GET /api/explain?doc=&q=: the ES `_explain` per-term BM25
+    breakdown of one (query, doc) pair, decoding only the blocks that
+    cover the doc id."""
+    doc, q = int(a.need("doc")), a.need("q")
+    rows = svc.run(lambda: svc.reader.explain_score(doc, q))
+    return {"doc": doc, "query": q, "terms": rows, "score": sum(r["score"] for r in rows)}
+
+
+def _mlt(svc, a):
+    """GET /api/mlt?doc=: ES more-like-this — tf x idf term selection off
+    the terms table, disjunctive WAND, source excluded (needs --docs)."""
+    doc, k = int(a.need("doc")), a.get("k", 10, int)
+    docs = svc._need_docs()
+    rows = svc.run(lambda: svc.reader.more_like_this(docs, doc, k))
+    return {"doc": doc, "k": k, "hits": rows}
+
+
+def _count(svc, a):
+    q = a.need("q")
+    return {"query": q, "count": svc.count(q)}
+
+
+def _multifield(svc, a):
+    """GET /api/multifield?q=&fields=content:1,path:2: BM25F over the
+    per-field terms of a build_multifield_index store."""
+    q, k = a.need("q"), a.get("k", 10, int)
+    try:
+        fields = [
+            (name, float(boost))
+            for name, boost in (
+                p.split(":", 1) for p in a.get("fields", "content:1.0").split(",") if p
+            )
+        ]
+    except ValueError:
+        raise ValueError("fields must be name:boost[,name:boost...]")
+    from ariadna_spark.operators.wand import multifield_topk_single
+
+    rows = svc.run(lambda: multifield_topk_single(svc.reader, fields, q, k))
+    return {"query": q, "fields": fields, "k": k, "hits": rows}
+
+
+def _termvectors(svc, a):
+    """GET /api/termvectors?doc=: one doc's (term, tf, df, positions) —
+    the ES `_termvectors` surface (needs --docs for the re-analysis)."""
+    doc = int(a.need("doc"))
+    docs = svc._need_docs()
+    return {"doc_id": doc, "terms": svc.run(lambda: svc.reader.term_vectors(docs, doc))}
+
+
+def _sorted(svc, a):
+    """GET /api/sorted: field-sorted hits paged by a cursor on the sort key."""
+    q, by, order = a.need("q"), a.get("by", "path"), a.get("order", "asc")
+    rows = svc.sorted_search(
+        q, by=by, order=order, k=a.get("k", 10, int),
+        after=a.after(int if by == "doc_len" else str), filters=a.filters(),
+    )
+    resp = {"query": q, "by": by, "order": order, "hits": rows}
+    if rows:
+        resp["next_after"] = f"{rows[-1][by]},{rows[-1]['doc_id']}"
+    return resp
+
+
+def _aggs(svc, a):
+    """GET /api/aggs?q=&interval=: range / histogram / stats /
+    cardinality over an OR match — one pruned candidate pass, one
+    GROUPING SETS shuffle, content never read."""
+    q, interval = a.need("q"), a.get("interval", 25, int)
+    return {"query": q, "aggs": svc.run(lambda: svc.reader.match_aggs(q, interval=interval))}
+
+
+def _significant(svc, a):
+    """GET /api/significant?q=: ES significant_terms (JLH) over the
+    OR-match foreground (needs --docs for the foreground re-analysis)."""
+    q, size, mdc = a.need("q"), a.get("size", 10, int), a.get("min_doc_count", 3, int)
+    docs = svc._need_docs()
+    rows = svc.run(
+        lambda: svc.reader.significant_terms(docs, q, size=size, min_doc_count=mdc)
+    )
+    return {"query": q, "terms": rows}
+
+
+def _facets(svc, a):
+    q, by = a.need("q"), a.get("by", "lang")
+    if by not in ("lang", "repo"):
+        raise ValueError("by must be lang|repo")
+    return {"query": q, "by": by, "buckets": svc.facets(q, by=by)}
+
+
+def _suggest(svc, a):
+    """GET /api/suggest?prefix=: ES completion suggester — vocabulary
+    terms completing the analyzed prefix, ranked by df."""
+    p, k = a.need("prefix", "q"), a.get("k", 10, int)
+    return {"prefix": p, "suggestions": svc.run(lambda: svc.reader.suggest_terms(p, size=k))}
+
+
+def _didyoumean(svc, a):
+    """GET /api/didyoumean?q=: ES term suggester — vocabulary terms
+    within Levenshtein `dist`, ranked (distance, df desc, term)."""
+    q, k, dist = a.need("q"), a.get("k", 5, int), a.get("dist", 2, int)
+    rows = svc.run(lambda: svc.reader.suggest_corrections(q, size=k, max_dist=dist))
+    return {"q": q, "suggestions": rows}
+
+
+def _analyze(svc, a):
+    """GET /api/analyze?text=: the ES `_analyze` dev surface — the exact
+    token stream the index and every query path use (driver-local)."""
+    from ariadna_spark.analyze import tokenize_py
+
+    toks = tokenize_py(a.need("text", "q"))
+    return {"tokens": [{"token": t, "position": i} for i, t in enumerate(toks)]}
+
+
+GET_ROUTES = {
+    "/api/search": _search_route("match"),
+    **{
+        f"/api/{mode}": _search_route(mode)
+        for mode in ("prefix", "phrase", "phrase_prefix", "near", "fuzzy")
+    },
+    "/api/reverse": _reverse,
+    "/api/bool": _bool,
+    "/api/highlight": _highlight,
+    "/api/explain": _explain,
+    "/api/mlt": _mlt,
+    "/api/count": _count,
+    "/api/multifield": _multifield,
+    "/api/termvectors": _termvectors,
+    "/api/sorted": _sorted,
+    "/api/aggs": _aggs,
+    "/api/significant": _significant,
+    "/api/facets": _facets,
+    "/api/grep": lambda svc, a: svc.grep(a.need("q"), limit=a.get("limit", 100, int)),
+    "/api/suggest": _suggest,
+    "/api/didyoumean": _didyoumean,
+    "/api/analyze": _analyze,
+    "/api/stats": lambda svc, a: svc.stats(),
+}
+
+
+def _search_post(svc, a):
+    """POST /api/_search; `?scroll=<keep>` opens a scroll context."""
+    keep = a.get("scroll")
+    return svc.es_scroll_open(a.body, keep) if keep else svc.es_search(a.body)
+
+
+def _hybrid(svc, a):
+    q, v = a.body.get("q"), a.body.get("v")
+    if not q or not isinstance(v, list) or not v:
+        raise ValueError("missing q or v")
+    hits = svc.hybrid(
+        str(q), v, k=int(a.body.get("k", 10)),
+        window=int(a.body.get("window", 20)), n_probe=int(a.body.get("n_probe", 4)),
+    )
+    return {"query": q, "hits": hits}
+
+
+def _queries(a) -> list:
+    queries = a.body.get("queries")
+    if not isinstance(queries, list) or not queries:
+        raise ValueError("missing queries")
+    return queries
+
+
+POST_ROUTES = {
+    "/api/_search": _search_post,
+    "/api/_search/scroll": lambda svc, a: svc.es_scroll_next(a.body),
+    "/api/_msearch": lambda svc, a: svc.es_msearch(a.raw),
+    "/api/_mget": lambda svc, a: svc.es_mget(a.body),
+    "/api/_rank_eval": lambda svc, a: svc.es_rank_eval(a.body),
+    "/api/_validate": lambda svc, a: svc.es_validate(a.body),
+    "/api/percolate": lambda svc, a: svc.percolate_body(a.body),
+    "/api/hybrid": _hybrid,
+    "/api/search:batch": lambda svc, a: {"results": svc.search_batch(_queries(a))},
+    "/api/ann:batch": lambda svc, a: {
+        "results": svc.ann_batch(
+            _queries(a), k=int(a.body.get("k", 10)), n_probe=int(a.body.get("n_probe", 4))
+        )
+    },
+}
+
+DELETE_ROUTES = {"/api/_search/scroll": lambda svc, a: svc.es_scroll_clear(a.body)}
+
+
+def make_handler(service: SearchService, public_dir: str | None = None):
     class Handler(BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
             pass
@@ -784,316 +930,37 @@ def make_handler(service: SearchService, public_dir: str | None = None):
             self.end_headers()
             self.wfile.write(body)
 
-        def do_GET(self):
+        def _route(self, routes: dict, with_body: bool = False) -> None:
+            """Look the path up in `routes` and answer its JSON; malformed
+            params or bodies (ValueError) are 400, any other failure a 500
+            — the server keeps serving either way."""
             u = urlparse(self.path)
-            qs = parse_qs(u.query)
+            # /api/reverse/:lat/:lon carries its params in the path
+            path = "/api/reverse" if u.path.startswith("/api/reverse") else u.path
             try:
-                if u.path in (
-                    "/api/search", "/api/prefix", "/api/phrase",
-                    "/api/phrase_prefix", "/api/near", "/api/fuzzy",
-                ):
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    k = int((qs.get("k") or ["10"])[0])
-                    docmap = (qs.get("docmap") or ["0"])[0] in ("1", "true")
-                    mode = {
-                        "/api/search": "match",
-                        "/api/prefix": "prefix",
-                        "/api/phrase": "phrase",
-                        "/api/phrase_prefix": "phrase_prefix",
-                        "/api/near": "near",
-                        "/api/fuzzy": "fuzzy",
-                    }[u.path]
-                    # w = proximity window for /api/near, max edit
-                    # distance for /api/fuzzy
-                    window = int((qs.get("w") or ["8" if mode == "near" else "1"])[0])
-                    # ?after=<score>,<doc_id> — search_after cursor
-                    # (match mode): deep pagination, page N is a normal
-                    # pruned top-k job, never a from+size over-fetch
-                    after = None
-                    if qs.get("after"):
-                        s, _, d = qs["after"][0].partition(",")
-                        after = (float(s), int(d))
-                    # ?lang=fr&repo=... — ES bool-filter terms over
-                    # docmap attributes (match mode, allowlisted)
-                    filters = _parse_filters(qs)
-                    rows = service.search(
-                        q, k, mode=mode, docmap=docmap, window=window,
-                        after=after, filters=filters,
-                    )
-                    resp = {"query": q, "k": k, "hits": rows}
-                    if rows and mode == "match":
-                        # cursor for the NEXT page (echo-back protocol)
-                        last = rows[-1]
-                        resp["next_after"] = f"{last['score']!r},{last['doc_id']}"
-                    return self._json(200, resp)
-                if u.path.startswith("/api/reverse"):
-                    # reference route style /api/reverse/:lat/:lon
-                    # (osm.go:182); ?lat=&lon= also accepted
-                    parts = [p for p in u.path.split("/") if p][2:]
-                    if len(parts) == 2:
-                        lat, lon = float(parts[0]), float(parts[1])
-                    elif "lat" in qs and "lon" in qs:
-                        lat, lon = float(qs["lat"][0]), float(qs["lon"][0])
-                    else:
-                        return self._json(400, {"error": "missing lat/lon"})
-                    k = int((qs.get("k") or ["2"])[0])
-                    rows = service.reverse(lat, lon, k=k)
-                    return self._json(200, {"lat": lat, "lon": lon, "hits": rows})
-                if u.path == "/api/bool":
-                    must = (qs.get("must") or [""])[0]
-                    should = (qs.get("should") or [""])[0]
-                    must_not = (qs.get("not") or [""])[0]
-                    if not (must or should):
-                        return self._json(400, {"error": "missing must/should"})
-                    k = int((qs.get("k") or ["10"])[0])
-                    msm = int((qs.get("msm") or ["0"])[0])
-                    docmap = (qs.get("docmap") or ["0"])[0] in ("1", "true")
-                    filters = _parse_filters(qs)
-                    after = None
-                    if qs.get("after"):
-                        s, _, d = qs["after"][0].partition(",")
-                        after = (float(s), int(d))
-                    rows = service.bool_search(
-                        must, should, must_not, msm=msm, k=k, docmap=docmap,
-                        filters=filters, after=after,
-                    )
-                    resp = {"must": must, "should": should, "must_not": must_not,
-                            "msm": msm, "k": k, "hits": rows}
-                    if rows:
-                        last = rows[-1]
-                        resp["next_after"] = f"{last['score']!r},{last['doc_id']}"
-                    return self._json(200, resp)
-                if u.path == "/api/highlight":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    k = int((qs.get("k") or ["10"])[0])
-                    w = int((qs.get("w") or ["5"])[0])
-                    rows = service.highlight(q, k, window=w)
-                    return self._json(200, {"query": q, "k": k, "hits": rows})
-                if u.path == "/api/explain":
-                    doc = (qs.get("doc") or [""])[0]
-                    q = (qs.get("q") or [""])[0]
-                    if not doc or not q:
-                        return self._json(400, {"error": "missing doc/q"})
-                    rows = service.explain(int(doc), q)
-                    return self._json(
-                        200,
-                        {
-                            "doc": int(doc),
-                            "query": q,
-                            "terms": rows,
-                            "score": sum(r["score"] for r in rows),
-                        },
-                    )
-                if u.path == "/api/mlt":
-                    doc = (qs.get("doc") or [""])[0]
-                    if not doc:
-                        return self._json(400, {"error": "missing doc"})
-                    k = int((qs.get("k") or ["10"])[0])
-                    rows = service.more_like_this(int(doc), k)
-                    return self._json(200, {"doc": int(doc), "k": k, "hits": rows})
-                if u.path == "/api/count":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    return self._json(200, {"query": q, "count": service.count(q)})
-                if u.path == "/api/multifield":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    k = int((qs.get("k") or ["10"])[0])
-                    spec = (qs.get("fields") or ["content:1.0"])[0]
-                    try:
-                        fields = [
-                            (p.split(":", 1)[0], float(p.split(":", 1)[1]))
-                            for p in spec.split(",")
-                            if p
-                        ]
-                    except (IndexError, ValueError):
-                        return self._json(
-                            400, {"error": "fields must be name:boost[,name:boost...]"}
-                        )
-                    rows = service.multifield(q, fields, k)
-                    return self._json(
-                        200, {"query": q, "fields": fields, "k": k, "hits": rows}
-                    )
-                if u.path == "/api/termvectors":
-                    doc = (qs.get("doc") or [""])[0]
-                    if not doc:
-                        return self._json(400, {"error": "missing doc"})
-                    rows = service.term_vectors(int(doc))
-                    return self._json(200, {"doc_id": int(doc), "terms": rows})
-                if u.path == "/api/sorted":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    by = (qs.get("by") or ["path"])[0]
-                    order = (qs.get("order") or ["asc"])[0]
-                    k = int((qs.get("k") or ["10"])[0])
-                    after = None
-                    if qs.get("after"):
-                        v, _, d = qs["after"][0].rpartition(",")
-                        after = (int(v) if by == "doc_len" else v, int(d))
-                    filters = _parse_filters(qs)
-                    rows = service.sorted_search(
-                        q, by=by, order=order, k=k, after=after, filters=filters
-                    )
-                    resp = {"query": q, "by": by, "order": order, "hits": rows}
-                    if rows:
-                        resp["next_after"] = f"{rows[-1][by]},{rows[-1]['doc_id']}"
-                    return self._json(200, resp)
-                if u.path == "/api/aggs":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    interval = int((qs.get("interval") or ["25"])[0])
-                    rows = service.aggs(q, interval=interval)
-                    return self._json(200, {"query": q, "aggs": rows})
-                if u.path == "/api/significant":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    size = int((qs.get("size") or ["10"])[0])
-                    mdc = int((qs.get("min_doc_count") or ["3"])[0])
-                    rows = service.significant(q, size=size, min_doc_count=mdc)
-                    return self._json(200, {"query": q, "terms": rows})
-                if u.path == "/api/facets":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    by = (qs.get("by") or ["lang"])[0]
-                    if by not in ("lang", "repo"):
-                        return self._json(400, {"error": "by must be lang|repo"})
-                    rows = service.facets(q, by=by)
-                    return self._json(200, {"query": q, "by": by, "buckets": rows})
-                if u.path == "/api/grep":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    limit = int((qs.get("limit") or ["100"])[0])
-                    return self._json(200, service.grep(q, limit=limit))
-                if u.path == "/api/suggest":
-                    p = (qs.get("prefix") or qs.get("q") or [""])[0]
-                    if not p:
-                        return self._json(400, {"error": "missing prefix"})
-                    k = int((qs.get("k") or ["10"])[0])
-                    return self._json(
-                        200, {"prefix": p, "suggestions": service.suggest(p, k=k)}
-                    )
-                if u.path == "/api/didyoumean":
-                    q = (qs.get("q") or [""])[0]
-                    if not q:
-                        return self._json(400, {"error": "missing q"})
-                    k = int((qs.get("k") or ["5"])[0])
-                    dist = int((qs.get("dist") or ["2"])[0])
-                    return self._json(
-                        200,
-                        {"q": q, "suggestions": service.didyoumean(q, k=k, dist=dist)},
-                    )
-                if u.path == "/api/analyze":
-                    text = (qs.get("text") or qs.get("q") or [""])[0]
-                    if not text:
-                        return self._json(400, {"error": "missing text"})
-                    return self._json(200, service.analyze(text))
-                if u.path == "/api/stats":
-                    return self._json(200, service.stats())
-                if public_dir and not u.path.startswith("/api/"):
-                    return self._static(u.path)
-                return self._json(404, {"error": "unknown endpoint"})
-            except ValueError as e:  # malformed params -> client error
+                raw = None
+                if with_body:
+                    ln = int(self.headers.get("Content-Length") or 0)
+                    raw = self.rfile.read(ln) or b"{}"
+                route = routes.get(path)
+                if route is None:
+                    if public_dir and not with_body and not path.startswith("/api/"):
+                        return self._static(path)
+                    return self._json(404, {"error": "unknown endpoint"})
+                return self._json(200, route(service, _Request(u, raw)))
+            except ValueError as e:  # malformed params/body -> client error
                 return self._json(400, {"error": str(e)})
             except Exception as e:  # surface errors as JSON, keep serving
                 return self._json(500, {"error": str(e)})
 
+        def do_GET(self):
+            self._route(GET_ROUTES)
+
         def do_POST(self):
-            u = urlparse(self.path)
-            try:
-                ln = int(self.headers.get("Content-Length") or 0)
-                raw = self.rfile.read(ln) or b"{}"
-                if u.path == "/api/_msearch":
-                    return self._json(200, service.es_msearch(raw))
-                try:
-                    body = json.loads(raw)
-                except json.JSONDecodeError:
-                    return self._json(400, {"error": "invalid JSON body"})
-                if u.path == "/api/_search":
-                    qs = parse_qs(u.query)
-                    if qs.get("scroll"):
-                        return self._json(
-                            200, service.es_scroll_open(body, qs["scroll"][0])
-                        )
-                    return self._json(200, service.es_search(body))
-                if u.path == "/api/_search/scroll":
-                    return self._json(200, service.es_scroll_next(body))
-                if u.path == "/api/_mget":
-                    return self._json(200, service.es_mget(body))
-                if u.path == "/api/_rank_eval":
-                    return self._json(200, service.es_rank_eval(body))
-                if u.path == "/api/_validate":
-                    return self._json(200, service.es_validate(body))
-                if u.path == "/api/percolate":
-                    return self._json(200, service.percolate_body(body))
-                if u.path == "/api/hybrid":
-                    q, v = body.get("q"), body.get("v")
-                    if not q or not isinstance(v, list) or not v:
-                        return self._json(400, {"error": "missing q or v"})
-                    return self._json(
-                        200,
-                        {
-                            "query": q,
-                            "hits": service.hybrid(
-                                str(q),
-                                v,
-                                k=int(body.get("k", 10)),
-                                window=int(body.get("window", 20)),
-                                n_probe=int(body.get("n_probe", 4)),
-                            ),
-                        },
-                    )
-                if u.path == "/api/search:batch":
-                    queries = body.get("queries")
-                    if not isinstance(queries, list) or not queries:
-                        return self._json(400, {"error": "missing queries"})
-                    return self._json(200, {"results": service.search_batch(queries)})
-                if u.path == "/api/ann:batch":
-                    queries = body.get("queries")
-                    if not isinstance(queries, list) or not queries:
-                        return self._json(400, {"error": "missing queries"})
-                    return self._json(
-                        200,
-                        {
-                            "results": service.ann_batch(
-                                queries,
-                                k=int(body.get("k", 10)),
-                                n_probe=int(body.get("n_probe", 4)),
-                            )
-                        },
-                    )
-                return self._json(404, {"error": "unknown endpoint"})
-            except ValueError as e:  # malformed entries -> client error
-                return self._json(400, {"error": str(e)})
-            except Exception as e:
-                return self._json(500, {"error": str(e)})
+            self._route(POST_ROUTES, with_body=True)
 
         def do_DELETE(self):
-            u = urlparse(self.path)
-            try:
-                ln = int(self.headers.get("Content-Length") or 0)
-                raw = self.rfile.read(ln) or b"{}"
-                try:
-                    body = json.loads(raw)
-                except json.JSONDecodeError:
-                    return self._json(400, {"error": "invalid JSON body"})
-                if u.path == "/api/_search/scroll":
-                    return self._json(200, service.es_scroll_clear(body))
-                return self._json(404, {"error": "unknown endpoint"})
-            except ValueError as e:
-                return self._json(400, {"error": str(e)})
-            except Exception as e:
-                return self._json(500, {"error": str(e)})
+            self._route(DELETE_ROUTES, with_body=True)
 
     return Handler
 

@@ -878,3 +878,99 @@ def test_validate_and_suggest_body_endpoints(service):
         assert hits and all("term" in h and "df" in h for h in hits)
     finally:
         httpd.shutdown()
+
+
+@pytest.fixture(scope="module")
+def http_port(service):
+    from serve import serve as mk_server
+
+    httpd = mk_server(service, port=0)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    yield httpd.server_address[1]
+    httpd.shutdown()
+
+
+def _post(port, path, body):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}{path}",
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    with urllib.request.urlopen(req) as r:
+        return r.status, json.loads(r.read())
+
+
+# every GET endpoint that takes a required parameter, requested without it
+_REQUIRED_PARAM_PATHS = [
+    "/api/search", "/api/prefix", "/api/phrase", "/api/phrase_prefix",
+    "/api/near", "/api/fuzzy", "/api/reverse", "/api/bool", "/api/highlight",
+    "/api/explain", "/api/mlt", "/api/count", "/api/multifield",
+    "/api/termvectors", "/api/sorted", "/api/aggs", "/api/significant",
+    "/api/facets", "/api/grep", "/api/suggest", "/api/didyoumean",
+    "/api/analyze",
+]
+
+
+def test_required_param_table_covers_get_routes():
+    from serve import GET_ROUTES
+
+    assert set(GET_ROUTES) == set(_REQUIRED_PARAM_PATHS) | {"/api/stats"}
+
+
+@pytest.mark.parametrize("path", _REQUIRED_PARAM_PATHS)
+def test_get_route_missing_required_param_is_400(http_port, path):
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        urllib.request.urlopen(f"http://127.0.0.1:{http_port}{path}?k=3")
+    assert exc.value.code == 400
+    assert json.loads(exc.value.read())["error"].startswith("missing")
+
+
+def test_doc_len_get_filter(service, http_port):
+    """?doc_len= is a filter term like the other allow-listed columns:
+    hits are exactly the unfiltered matches of that length."""
+    base = f"http://127.0.0.1:{http_port}/api/search?q=merge+join&k=500"
+    with urllib.request.urlopen(base) as r:
+        unfiltered = json.loads(r.read())["hits"]
+    lens = {r["doc_id"]: r["doc_len"] for r in service.reader.docmap().collect()}
+    n = lens[unfiltered[0]["doc_id"]]
+    with urllib.request.urlopen(f"{base}&doc_len={n}&docmap=1") as r:
+        hits = json.loads(r.read())["hits"]
+    assert hits and all(lens[h["doc_id"]] == n for h in hits)
+    assert {h["doc_id"] for h in hits} == {
+        h["doc_id"] for h in unfiltered if lens[h["doc_id"]] == n
+    }
+
+
+def test_scroll_open_cap_holds_under_concurrent_opens(service, http_port, monkeypatch):
+    """Three scroll opens released together against a cap of 2: the slot
+    is reserved before the first page's Spark job, so exactly one is
+    refused and exactly two contexts stay open."""
+    monkeypatch.setattr(service, "_SCROLL_MAX", 2)
+    monkeypatch.setattr(service, "_scrolls", {})
+    body = {"query": {"match": {"content": "merge join"}}, "size": 3}
+    gate, codes = threading.Barrier(3, timeout=60), []
+
+    def open_one():
+        gate.wait()
+        try:
+            codes.append(_post(http_port, "/api/_search?scroll=1m", body)[0])
+        except urllib.error.HTTPError as e:
+            codes.append(e.code)
+
+    threads = [threading.Thread(target=open_one) for _ in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert sorted(codes) == [200, 200, 400]
+    assert len(service._scrolls) == 2
+
+
+@pytest.mark.parametrize("ratings", [[5], [[3]], [[1, 2, 3]], [None]])
+def test_rank_eval_malformed_ratings_are_400(http_port, ratings):
+    body = {"requests": [{"id": 1, "query": "merge join", "ratings": ratings}]}
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        _post(http_port, "/api/_rank_eval", body)
+    assert exc.value.code == 400
+    assert "[doc_id, rating]" in json.loads(exc.value.read())["error"]

@@ -90,24 +90,15 @@ def test_worker_warmup_once_per_session(spark, monkeypatch):
     session: the second call must see the marker and spawn nothing (the
     warm-up moved to session creation in r7 — a per-build re-fire would
     waste a job per micro-batch under streaming ingestion)."""
-    import threading
-
     from ariadna_spark import session as S
 
-    # ensure_workers_warm does `import threading` inside the function, so
-    # patching the module-level Thread intercepts its spawn
-    spawned = []
-
-    class _FakeThread:
-        def __init__(self, *a, **kw):
-            spawned.append(1)
-
-        def start(self):
-            pass
-
-    monkeypatch.setattr(threading, "Thread", _FakeThread)
+    # count runs of the warm-up job itself rather than intercepting every
+    # thread the process creates
+    ran = []
+    monkeypatch.setattr(S, "_warm_python_workers", ran.append)
     monkeypatch.setattr(spark, "_ariadna_workers_warmed", False, raising=False)
-    S.ensure_workers_warm(spark)
-    S.ensure_workers_warm(spark)
-    assert spawned == [1]
+    t = S.ensure_workers_warm(spark)
+    assert S.ensure_workers_warm(spark) is None
+    t.join(timeout=10)
+    assert ran == [spark]
     assert spark._ariadna_workers_warmed is True
