@@ -14,6 +14,7 @@ the UDF self-contained either way; --py-files remains the production path
 from __future__ import annotations
 
 import sys
+import warnings
 
 
 def register_by_value(module_name: str) -> None:
@@ -24,7 +25,11 @@ def register_by_value(module_name: str) -> None:
         from pyspark import cloudpickle
 
         cloudpickle.register_pickle_by_value(mod)
-    except Exception:
+    except Exception as e:  # noqa: BLE001 — the fallback below is by design
         # vendored cloudpickle too old / unavailable: fall back to requiring
-        # --py-files (production behavior), nothing to do here
-        pass
+        # --py-files (production behavior), but say so
+        warnings.warn(
+            f"cannot pickle {module_name} by value ({e!r}); Python workers "
+            "will need the package on their path (--py-files)",
+            RuntimeWarning,
+        )

@@ -8,10 +8,10 @@ an edge-ngram autocomplete analyzer in its published design
 the street-prefix dictionary rewrite (/root/reference/osm/utils.go:42-59).
 
 Our analyzer generalizes that to source code. **One canonical spec**, four
-steps, chosen so the exact same token stream is expressible in three
-engines (Spark native expressions, vectorized pandas, DuckDB SQL) — the
-symmetric-analyzer discipline ES uses (same analyzer at index and query
-time), and the property the driver's DuckDB oracle comparison depends on:
+steps, chosen so the exact same token stream is expressible in each engine
+the system runs on — the symmetric-analyzer discipline ES uses (same
+analyzer at index and query time), and the property the driver's DuckDB
+oracle comparison depends on:
 
     1. replace every non-ASCII char with a space        [^\\x00-\\x7F]
     2. camelCase boundary split:  ([a-z0-9])([A-Z])   -> "$1 $2"
@@ -20,22 +20,34 @@ time), and the property the driver's DuckDB oracle comparison depends on:
     4. lowercase, then extract maximal [a-z0-9]+ runs (snake_case and all
        punctuation split for free)
 
+Each engine has exactly one implementation, and only this module spells
+out the regex sequence:
+
+* Arrow (``tokenize_arrow``, RE2 over contiguous buffers): the mapInArrow
+  kernels — the index build's tf kernel (stats.py) and the chunk, pair and
+  repetition kernels (operators/text.py) — and, through ``tokenize_py``,
+  driver-side query analysis.
+* Catalyst (``tokenize_expr``, Java regex): every DataFrame operator and
+  declared query that needs a token-array column.
+* DuckDB (``duckdb_tokenize_sql``, RE2): the oracle SQL texts and the
+  benchmark's reference scorer.
+
 Edge n-grams (min 2, max 8) provide the prefix-search fallback mirroring
 ariadna's intended edge-ngram analyzer.
 
-All three implementations are golden-tested against each other in
+The three implementations are golden-tested against each other in
 tests/test_analyze.py.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Canonical regex pieces (ASCII-only by construction; identical semantics in
-# Java regex, Python re, and DuckDB's RE2).
+# Java regex and RE2, the engine behind both pyarrow.compute and DuckDB).
 NON_ASCII = "[^\\x00-\\x7F]"
 CAMEL_1 = "([a-z0-9])([A-Z])"
 CAMEL_2 = "([A-Z]+)([A-Z][a-z])"
@@ -52,7 +64,7 @@ NGRAM_MAX = 8
 def tokenize_expr(col: Column | str) -> Column:
     """tokens(content) as a pure Catalyst expression -> array<string>."""
     c = F.col(col) if isinstance(col, str) else col
-    c = F.coalesce(c, F.lit(""))  # null content -> [] (parity with UDF/SQL)
+    c = F.coalesce(c, F.lit(""))  # null content -> [] (parity with Arrow/SQL)
     c = F.regexp_replace(c, NON_ASCII, " ")
     c = F.regexp_replace(c, CAMEL_1, "$1 $2")
     c = F.regexp_replace(c, CAMEL_2, "$1 $2")
@@ -62,27 +74,27 @@ def tokenize_expr(col: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# 2) Vectorized pandas UDF (Arrow batches): the production path pinned by
-#    BASELINE.json input_hint ("vectorized pandas/Arrow UDFs, no per-row
-#    Python"). Every op below is a vectorized pandas.Series.str call.
+# 2) Arrow kernel core (RE2 via pyarrow.compute): the one Python-side
+#    implementation, shared by every mapInArrow kernel and by tokenize_py.
 # ---------------------------------------------------------------------------
-def _tokenize_series(s: pd.Series) -> pd.Series:
-    t = s.fillna("")
-    t = t.str.replace(NON_ASCII, " ", regex=True)
-    t = t.str.replace(CAMEL_1, r"\1 \2", regex=True)
-    t = t.str.replace(CAMEL_2, r"\1 \2", regex=True)
-    t = t.str.lower()
-    return t.str.findall("[a-z0-9]+")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(s: pd.Series) -> pd.Series:
-    return _tokenize_series(s)
+def tokenize_arrow(content: pa.Array) -> tuple[pa.Array, pa.Array]:
+    """(tokens, parents) for a string array: ``tokens`` is every row's
+    token stream concatenated in row order, ``parents[i]`` the row index
+    of ``tokens[i]``. Null rows yield no tokens."""
+    c = pc.replace_substring_regex(content, NON_ASCII, " ")
+    c = pc.replace_substring_regex(c, CAMEL_1, r"\1 \2")
+    c = pc.replace_substring_regex(c, CAMEL_2, r"\1 \2")
+    c = pc.utf8_lower(c)
+    toks = pc.split_pattern_regex(c, TOKEN_SPLIT)
+    flat = pc.list_flatten(toks)
+    parents = pc.list_parent_indices(toks)
+    keep = pc.not_equal(flat, "")
+    return flat.filter(keep), parents.filter(keep)
 
 
 def tokenize_py(text: str) -> list[str]:
-    """Single-string reference implementation (tests / query-time driver)."""
-    return _tokenize_series(pd.Series([text])).iloc[0]
+    """Single-string form of tokenize_arrow (query-time driver, tests)."""
+    return tokenize_arrow(pa.array([text], type=pa.string()))[0].to_pylist()
 
 
 # ---------------------------------------------------------------------------
@@ -123,7 +135,7 @@ def edge_ngrams_py(token: str, lo: int = NGRAM_MIN, hi: int = NGRAM_MAX) -> list
     return [token[:n] for n in range(lo, min(hi, len(token)) + 1)]
 
 
-# UDFs in this module must survive pickling to workers that don't have the
+# Functions in this module must survive pickling to workers that don't have the
 # repo on sys.path (see _pickle.py).
 from ._pickle import register_by_value as _rbv  # noqa: E402
 

@@ -1,7 +1,9 @@
 """Text-analysis operators for training-data pipelines: language ID
 (stopword-overlap heuristic), quality scoring, token counting, and
 document fingerprinting. All JVM-side Catalyst expressions over the
-analyzer's token arrays — no UDFs in these paths.
+analyzer's token arrays (tokenize_expr) — no UDFs in these paths. The
+chunking, collocation and repetition operators instead run one
+mapInArrow kernel each over the analyzer's Arrow core (tokenize_arrow).
 """
 
 from __future__ import annotations
@@ -10,14 +12,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..analyze import (
-    CAMEL_1,
-    CAMEL_2,
-    NON_ASCII,
-    TOKEN_SPLIT,
-    tokenize_expr,
-    tokenize_udf,
-)
+from ..analyze import tokenize_arrow, tokenize_expr
 
 # Tiny per-language marker lexicons (heuristic language ID — the classic
 # stopword-profile method; real pipelines would plug fastText here, same
@@ -35,7 +30,7 @@ STOPWORDS = ["the", "a", "of", "and", "if", "import"]
 def language_id(docs: DataFrame, content_col: str = "content") -> DataFrame:
     """(doc_id, lang_pred, lang_score). Score = fraction of tokens that are
     markers of the winning language; ties broken by language name."""
-    toks = tokenize_udf(F.col(content_col))
+    toks = tokenize_expr(content_col)
     d = docs.select("doc_id", toks.alias("toks")).withColumn("nt", F.size("toks"))
     scores = []
     for lang, markers in sorted(LANG_MARKERS.items()):
@@ -126,8 +121,8 @@ def pii_scrub(docs: DataFrame, content_col: str = "content") -> DataFrame:
 
 def _chunk_arrow_kernel(batches, chunk_size: int, stride: int):
     """Tokenize + window + join inside ONE pure-Arrow kernel (RE2 regex
-    over contiguous buffers — the same analyzer sequence as the tf build
-    kernel in stats.py, asserted token-identical to tokenize_py). Chunk
+    over contiguous buffers — tokenize_arrow, the same analyzer core as
+    the tf build kernel in stats.py). Chunk
     windows overlap, which an Arrow ListArray cannot express over shared
     values, so the windows' flat indices are gathered (take) into a
     replicated token buffer (~(1 + overlap/stride)x tokens) and joined
@@ -135,28 +130,19 @@ def _chunk_arrow_kernel(batches, chunk_size: int, stride: int):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    # analyzer regex constants come from module globals (imported at the
-    # top), NOT an in-function relative import: by-value pickling ships
-    # globals with the function, while a runtime `from ..analyze import`
-    # needs ariadna_spark importable on the worker — the exact cwd trap
-    # the verify-from-/tmp recipe exists to catch
+    # tokenize_arrow comes from a module global (imported at the top), NOT
+    # an in-function relative import: by-value pickling ships globals with
+    # the function, while a runtime `from ..analyze import` needs
+    # ariadna_spark importable on the worker — the exact cwd trap the
+    # verify-from-/tmp recipe exists to catch
     pa.set_cpu_count(1)
     for rb in batches:
         if rb.num_rows == 0:
             continue
         tbl = pa.Table.from_batches([rb])
         doc_ids = tbl["doc_id"].combine_chunks().to_numpy(zero_copy_only=False)
-        c = tbl["content"].combine_chunks()
-        c = pc.replace_substring_regex(c, NON_ASCII, " ")
-        c = pc.replace_substring_regex(c, CAMEL_1, r"\1 \2")
-        c = pc.replace_substring_regex(c, CAMEL_2, r"\1 \2")
-        c = pc.utf8_lower(c)
-        toks = pc.split_pattern_regex(c, TOKEN_SPLIT)
-        flat = pc.list_flatten(toks)
-        parents = pc.list_parent_indices(toks).to_numpy(zero_copy_only=False)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        parents = parents[keep.to_numpy(zero_copy_only=False)]
+        flat, parents = tokenize_arrow(tbl["content"].combine_chunks())
+        parents = parents.to_numpy(zero_copy_only=False)
         n_tok = np.bincount(parents, minlength=rb.num_rows)  # tokens per doc
         nz = np.flatnonzero(n_tok)
         if nz.size == 0:
@@ -200,40 +186,19 @@ def chunk_documents(
     chunk_size: int = 128,
     overlap: int = 16,
     content_col: str = "content",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Sliding-window token chunking (context-length preprocessing for a
     trainer): (doc_id, chunk_id, n_tokens, chunk_text) with windows of
     `chunk_size` analyzer tokens advancing by chunk_size - overlap.
-    Map-side with no shuffle in both shapes; rows identical.
-
-    use_arrow=True (r5): one mapInArrow kernel — RE2 tokenize over
+    Map-side with no shuffle: one mapInArrow kernel — RE2 tokenize over
     contiguous buffers + vectorized window gather + binary_join, the same
-    anti-bandwidth design as the tf build kernel. use_arrow=False keeps
-    the pure-Catalyst shape (tokenize_expr + sequence + posexplode +
-    slice + concat_ws), the equivalence reference."""
+    anti-bandwidth design as the tf build kernel."""
     if not 0 <= overlap < chunk_size:
         raise ValueError("need 0 <= overlap < chunk_size")
     stride = chunk_size - overlap
-    if use_arrow:
-        return docs.select("doc_id", F.col(content_col).alias("content")).mapInArrow(
-            lambda it: _chunk_arrow_kernel(it, chunk_size, stride),
-            "doc_id long, chunk_id int, n_tokens int, chunk_text string",
-        )
-    toks = tokenize_expr(content_col)
-    d = (
-        docs.select("doc_id", toks.alias("toks"))
-        .withColumn("n", F.size("toks"))
-        .filter(F.col("n") > 0)
-    )
-    starts = F.sequence(F.lit(0), F.greatest(F.col("n") - 1, F.lit(0)), F.lit(stride))
-    d = d.select("doc_id", "toks", F.posexplode(starts).alias("chunk_id", "start"))
-    chunk = F.slice(F.col("toks"), F.col("start") + 1, chunk_size)
-    return d.select(
-        "doc_id",
-        F.col("chunk_id").cast("int").alias("chunk_id"),
-        F.size(chunk).cast("int").alias("n_tokens"),
-        F.concat_ws(" ", chunk).alias("chunk_text"),
+    return docs.select("doc_id", F.col(content_col).alias("content")).mapInArrow(
+        lambda it: _chunk_arrow_kernel(it, chunk_size, stride),
+        "doc_id long, chunk_id int, n_tokens int, chunk_text string",
     )
 
 
@@ -267,19 +232,8 @@ def _pair_arrow_kernel(batches):
         if rb.num_rows == 0:
             continue
         tbl = pa.Table.from_batches([rb])
-        c = tbl["content"].combine_chunks()
-        c = pc.replace_substring_regex(c, NON_ASCII, " ")
-        c = pc.replace_substring_regex(c, CAMEL_1, r"\1 \2")
-        c = pc.replace_substring_regex(c, CAMEL_2, r"\1 \2")
-        c = pc.utf8_lower(c)
-        toks = pc.split_pattern_regex(c, TOKEN_SPLIT)
-        flat = pc.list_flatten(toks)
-        parents = pc.list_parent_indices(toks).to_numpy(zero_copy_only=False)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        if isinstance(flat, pa.ChunkedArray):
-            flat = flat.combine_chunks()
-        parents = parents[keep.to_numpy(zero_copy_only=False)]
+        flat, parents = tokenize_arrow(tbl["content"].combine_chunks())
+        parents = parents.to_numpy(zero_copy_only=False)
         n = len(flat)
         if n == 0:
             continue
@@ -384,19 +338,8 @@ def _rep_arrow_kernel(batches, ns: tuple[int, ...]):
             continue
         tbl = pa.Table.from_batches([rb])
         doc_ids = tbl["doc_id"].combine_chunks().to_numpy(zero_copy_only=False)
-        c = tbl["content"].combine_chunks()
-        c = pc.replace_substring_regex(c, NON_ASCII, " ")
-        c = pc.replace_substring_regex(c, CAMEL_1, r"\1 \2")
-        c = pc.replace_substring_regex(c, CAMEL_2, r"\1 \2")
-        c = pc.utf8_lower(c)
-        toks = pc.split_pattern_regex(c, TOKEN_SPLIT)
-        flat = pc.list_flatten(toks)
-        parents = pc.list_parent_indices(toks).to_numpy(zero_copy_only=False)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        if isinstance(flat, pa.ChunkedArray):
-            flat = flat.combine_chunks()
-        parents = parents[keep.to_numpy(zero_copy_only=False)]
+        flat, parents = tokenize_arrow(tbl["content"].combine_chunks())
+        parents = parents.to_numpy(zero_copy_only=False)
         n_rows = rb.num_rows
         n_tok = np.bincount(parents, minlength=n_rows).astype(np.int64)
         nz = np.flatnonzero(n_tok)

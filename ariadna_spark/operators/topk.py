@@ -56,13 +56,13 @@ def bm25_topk_from_stats(
     return scored
 
 
-def bm25_topk(docs: DataFrame, query: str, k: int = 10, use_udf: bool = True) -> DataFrame:
+def bm25_topk(docs: DataFrame, query: str, k: int = 10) -> DataFrame:
     """End-to-end: docs -> analyzed query -> top-k (doc_id, score).
 
     Computes stats on the fly — fine for tests/oracles; the indexed path
     reads precomputed segments instead.
     """
-    tf = term_freqs(docs, use_udf=use_udf)
+    tf = term_freqs(docs)
     tf.persist()
     dl = doc_lengths(tf)
     dfreq = doc_freqs(tf)

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import B, K1
 from .._pickle import register_by_value
-from ..analyze import tokenize_py
+from ..analyze import NGRAM_MAX, NGRAM_MIN, tokenize_expr, tokenize_py
 from ..functions.varint import delta_decode_ids, positions_decode, varint_decode
 
 RANGE_SIZE_DEFAULT = 8192  # doc_ids per WAND partition at test scale
@@ -1176,9 +1176,7 @@ class IndexReader:
         to TakeOrderedAndProject, so only max_terms rows ever reach the
         driver (an unbounded 2-char prefix over a 100x code vocabulary
         stays executor-side)."""
-        from ..analyze import NGRAM_MAX, NGRAM_MIN, tokenize_py as _tok
-
-        norm = _tok(prefix)
+        norm = tokenize_py(prefix)
         if not norm:
             return None
         ng = norm[0][:NGRAM_MAX]
@@ -1262,8 +1260,6 @@ class IndexReader:
         raises loudly (an unselective pattern would silently become a
         corpus scan — the caller should use regex_search for that
         shape)."""
-        from ..analyze import tokenize_py as _tok
-
         core = pattern.strip("*")
         stars = len(pattern) - len(core)
         if not core or "*" in core or stars != pattern.count("*") or stars == 0:
@@ -1271,7 +1267,7 @@ class IndexReader:
                 f"wildcard pattern {pattern!r}: edge anchors only "
                 "(core*, *core, *core*), non-empty core"
             )
-        toks = _tok(core)
+        toks = tokenize_py(core)
         if len(toks) != 1:
             raise ValueError(f"wildcard core must analyze to one token, got {toks}")
         core = toks[0]
@@ -1450,10 +1446,8 @@ class IndexReader:
         across live segments and the cap compiles to TakeOrdered — only
         `size` rows reach the driver. Like every vocabulary read, df
         counts tombstoned docs until compaction (documented drift)."""
-        from ..analyze import NGRAM_MAX, NGRAM_MIN, tokenize_py as _tok
-
         empty = self.spark.createDataFrame([], "term string, df long")
-        norm = _tok(prefix)
+        norm = tokenize_py(prefix)
         if not norm:
             return empty
         p = norm[0]
@@ -1533,8 +1527,6 @@ class IndexReader:
         token index; term-order tie-break is irrelevant since positions
         are distinct), plus that matched term. Returns
         (doc_id, score, first_term, snippet)."""
-        from ..analyze import tokenize_expr
-
         terms = sorted(set(tokenize_py(query)))
         top = self._topk_terms(terms, k, **kw).collect()  # O(k) rows
         if not top:
@@ -1588,8 +1580,6 @@ class IndexReader:
         re-read contract as highlight_topk (winner ids are a pushed
         IN-list; non-winners never touch the content scan). Returns
         (doc_id, score, matched, snippet)."""
-        from ..analyze import tokenize_expr
-
         seq = tokenize_py(phrase)
         if not seq:
             return self.spark.createDataFrame(
@@ -2050,8 +2040,6 @@ class IndexReader:
         corpus pass, no postings decode beyond the query's own blocks.
         The (fg vocab x terms-table) equi-join shuffles vocabulary-sized
         data only."""
-        from ..analyze import tokenize_expr
-
         terms = sorted(set(tokenize_py(query)))
         out_schema = "term string, fg_df long, bg_df long, score_r double"
         if not terms:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 import os as _os
 import tempfile as _tempfile
 
-from .analyze import duckdb_tokenize_sql, edge_ngrams_expr, tokenize_py
+from .analyze import duckdb_tokenize_sql, edge_ngrams_expr, tokenize_expr, tokenize_py
 
 
 def _gate_tmp(prefix: str) -> str:
@@ -76,7 +76,7 @@ dfreq AS (
 
 def _docs_tf(spark: SparkSession, sf_dir: str):
     docs = load_docs(spark, sf_dir)
-    tf = term_freqs(docs, use_udf=True)
+    tf = term_freqs(docs)
     return docs, tf
 
 
@@ -88,7 +88,7 @@ def _tf_capped(spark: SparkSession, sf_dir: str, cap: int):
     this the whole corpus is tokenized to keep a few hundred docs
     (guide §4.1/§6: opaque functions defeat pushdown; do it by hand)."""
     docs = load_docs(spark, sf_dir).filter(F.col("doc_id") < cap)
-    return term_freqs(docs, use_udf=True)
+    return term_freqs(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -360,10 +360,8 @@ def q_minhash_shingles(spark, sf_dir) -> DataFrame:
     JVM-side from the analyzer's token array; hash family is the same
     portable sha256(i || '|' || shingle)."""
     docs = load_docs(spark, sf_dir)
-    from .analyze import tokenize_udf
-
     toks = docs.filter(F.col("doc_id") < _SHINGLE_CAP).select(
-        "doc_id", tokenize_udf(F.col("content")).alias("t")
+        "doc_id", tokenize_expr("content").alias("t")
     )
     n = F.size("t")
     idx = F.sequence(F.lit(0), n - _SHINGLE_W)
@@ -458,10 +456,8 @@ _STOPWORDS = ["the", "a", "of", "and", "if", "import"]
 def q_text_quality(spark, sf_dir) -> DataFrame:
     """Quality scoring: token counts, avg token length, digit/stopword ratios."""
     docs = load_docs(spark, sf_dir)
-    from .analyze import tokenize_udf
-
     # docs with zero tokens are absent on both sides (explode drops them)
-    toks = docs.select("doc_id", F.explode(tokenize_udf(F.col("content"))).alias("term"))
+    toks = docs.select("doc_id", F.explode(tokenize_expr("content")).alias("term"))
     return (
         toks.groupBy("doc_id")
         .agg(
@@ -498,11 +494,9 @@ FROM toks GROUP BY doc_id ORDER BY doc_id
 def q_fingerprint(spark, sf_dir) -> DataFrame:
     """Document fingerprint: sha256 over the normalized token stream."""
     docs = load_docs(spark, sf_dir)
-    from .analyze import tokenize_udf
-
     return docs.select(
         "doc_id",
-        F.sha2(F.concat_ws(" ", tokenize_udf(F.col("content"))), 256).alias("fp"),
+        F.sha2(F.concat_ws(" ", tokenize_expr("content")), 256).alias("fp"),
     ).orderBy("doc_id")
 
 
@@ -614,14 +608,13 @@ def q_train_val_split(spark, sf_dir) -> DataFrame:
     document counts and token mass — the corpus-mixing report a training
     pipeline derives before sampling. Bucketing is portable (first 4 sha
     nibbles mod 1000), replayed bit-identically by the oracle."""
-    from .analyze import tokenize_udf
     from .corpus import load_docs
     from .operators.text import train_val_split
 
     docs = load_docs(spark, sf_dir)
     out = train_val_split(docs, val_per_mille=_VAL_PM)
     return (
-        out.select("split", "lang", F.size(tokenize_udf(F.col("content"))).alias("nt"))
+        out.select("split", "lang", F.size(tokenize_expr("content")).alias("nt"))
         .groupBy("split", "lang")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -919,8 +912,6 @@ _DECON_MOD = 17
 
 
 def _decon_bench(spark, sf_dir) -> DataFrame:
-    from .analyze import tokenize_expr
-
     docs = load_docs(spark, sf_dir)
     t = tokenize_expr("content")
     lo, ln = _DECON_SLICE
@@ -1071,10 +1062,8 @@ FROM lab JOIN cs USING (cluster_id) ORDER BY doc_id
 def q_lang_profile(spark, sf_dir) -> DataFrame:
     """Per-language corpus profile (language-ID downstream consumer shape)."""
     docs = load_docs(spark, sf_dir)
-    from .analyze import tokenize_udf
-
     return (
-        docs.select("lang", F.size(tokenize_udf(F.col("content"))).alias("nt"), F.length("content").alias("nc"))
+        docs.select("lang", F.size(tokenize_expr("content")).alias("nt"), F.length("content").alias("nc"))
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2875,7 +2864,7 @@ def q_multifield_bm25(spark, sf_dir) -> DataFrame:
     terms = sorted(set(tokenize_py("doc en merge join")))
     parts = []
     for field, weight in (("content", 1.0), ("path", boost)):
-        tf = term_freqs(docs.select("doc_id", F.col(field).alias("content")), use_udf=True)
+        tf = term_freqs(docs.select("doc_id", F.col(field).alias("content")))
         tf.persist()
         dl = doc_lengths(tf)
         dfreq = doc_freqs(tf)

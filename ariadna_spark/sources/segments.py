@@ -1176,77 +1176,79 @@ def compact(
     tf = tf.drop("bid")
     scratch = spark.conf.get("spark.local.dir", "/tmp")
     tf_ckpt = os.path.join(scratch, f"compact_tf_{uuid.uuid4().hex[:8]}")
-    tf.write.mode("overwrite").parquet(tf_ckpt)
-    tf = spark.read.parquet(tf_ckpt)
+    try:
+        tf.write.mode("overwrite").parquet(tf_ckpt)
+        tf = spark.read.parquet(tf_ckpt)
 
-    docmap = reader.docmap()
-    mf_kw: dict = {}
-    if any("fields" in st for st in reader.build_stats):
-        # multifield store (build_multifield_index): re-derive PER-FIELD
-        # stats from the decoded rows (tombstone-masked above, so the
-        # merged stats are exact) and re-encode with per-field avgdl —
-        # a scalar-avgdl rebuild would corrupt secondary fields' block-max
-        # bounds and statistics.
-        prim_name = reader.build_stats[-1].get("primary")
-        if not all(
-            "fields" in st and st.get("primary") == prim_name
-            for st in reader.build_stats
-        ):
-            raise ValueError(
-                "cannot compact a mix of multifield and single-field builds "
-                f"(live={live}) — compact per store layout"
+        docmap = reader.docmap()
+        mf_kw: dict = {}
+        if any("fields" in st for st in reader.build_stats):
+            # multifield store (build_multifield_index): re-derive PER-FIELD
+            # stats from the decoded rows (tombstone-masked above, so the
+            # merged stats are exact) and re-encode with per-field avgdl —
+            # a scalar-avgdl rebuild would corrupt secondary fields' block-max
+            # bounds and statistics.
+            prim_name = reader.build_stats[-1].get("primary")
+            if not all(
+                "fields" in st and st.get("primary") == prim_name
+                for st in reader.build_stats
+            ):
+                raise ValueError(
+                    "cannot compact a mix of multifield and single-field builds "
+                    f"(live={live}) — compact per store layout"
+                )
+            fld = F.when(
+                F.col("term").contains(FIELD_SEP),
+                F.substring_index("term", FIELD_SEP, 1),
+            ).otherwise(F.lit(prim_name))
+            frows = (
+                tf.groupBy(fld.alias("f"), "doc_id")
+                .agg(F.max("doc_len").alias("doc_len"))
+                .groupBy("f")
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.avg("doc_len").alias("avgdl"),
+                    F.sum("doc_len").alias("tot"),
+                )
+                .collect()
             )
-        fld = F.when(
-            F.col("term").contains(FIELD_SEP),
-            F.substring_index("term", FIELD_SEP, 1),
-        ).otherwise(F.lit(prim_name))
-        frows = (
-            tf.groupBy(fld.alias("f"), "doc_id")
-            .agg(F.max("doc_len").alias("doc_len"))
-            .groupBy("f")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg("doc_len").alias("avgdl"),
-                F.sum("doc_len").alias("tot"),
-            )
-            .collect()
-        )
-        field_stats = {
-            r["f"]: {
-                "N": int(r["n"]),
-                "avgdl": float(r["avgdl"]),
-                "total_tokens": int(r["tot"]),
+            field_stats = {
+                r["f"]: {
+                    "N": int(r["n"]),
+                    "avgdl": float(r["avgdl"]),
+                    "total_tokens": int(r["tot"]),
+                }
+                for r in frows
             }
-            for r in frows
-        }
-        prim = field_stats[prim_name]
-        avgdl_map = {"": prim["avgdl"]}
-        avgdl_map.update(
-            {f: s["avgdl"] for f, s in field_stats.items() if f != prim_name}
+            prim = field_stats[prim_name]
+            avgdl_map = {"": prim["avgdl"]}
+            avgdl_map.update(
+                {f: s["avgdl"] for f, s in field_stats.items() if f != prim_name}
+            )
+            mf_kw = dict(
+                scalars=(prim["N"], prim["avgdl"], prim["total_tokens"]),
+                avgdl_map=avgdl_map,
+                ngram_filter=~F.col("term").contains(FIELD_SEP),
+                extra_stats={"fields": field_stats, "primary": prim_name},
+            )
+        ckpt_bytes = _dir_bytes(tf_ckpt)
+        manifest = _build_from_tf(
+            spark,
+            tf,
+            docmap,
+            out_dir,
+            build_id=build_id,
+            n_buckets=n_buckets,
+            shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
+            ckpt_bytes=ckpt_bytes,
+            **mf_kw,
         )
-        mf_kw = dict(
-            scalars=(prim["N"], prim["avgdl"], prim["total_tokens"]),
-            avgdl_map=avgdl_map,
-            ngram_filter=~F.col("term").contains(FIELD_SEP),
-            extra_stats={"fields": field_stats, "primary": prim_name},
-        )
-    ckpt_bytes = _dir_bytes(tf_ckpt)
-    manifest = _build_from_tf(
-        spark,
-        tf,
-        docmap,
-        out_dir,
-        build_id=build_id,
-        n_buckets=n_buckets,
-        shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
-        ckpt_bytes=ckpt_bytes,
-        **mf_kw,
-    )
-    store.publish_many([build_id])
-    if gc:
-        store.gc()
-    shutil.rmtree(tf_ckpt, ignore_errors=True)
-    return manifest
+        store.publish_many([build_id])
+        if gc:
+            store.gc()
+        return manifest
+    finally:
+        shutil.rmtree(tf_ckpt, ignore_errors=True)
 
 
 def _copy_build(src_dir: str, tgt_dir: str) -> bool:

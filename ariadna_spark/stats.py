@@ -10,9 +10,9 @@ engine's analogous aggregates are the BM25 statistics:
     N, avgdl       — corpus-level scalars
     df(term)       — posting-list length per term
 
-All pure DataFrame ops: explode -> groupBy; Catalyst does map-side partial
-aggregation for the counts, so the shuffle carries (doc_id, term) partial
-counts, not raw tokens.
+tf and doc_len come from one Arrow kernel per input partition, so no raw
+token ever shuffles; df and the corpus scalars are DataFrame aggregations
+over the tf rows.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._pickle import register_by_value
-from .analyze import CAMEL_1, CAMEL_2, NON_ASCII, TOKEN_SPLIT, tokenize_expr
+from .analyze import tokenize_arrow
 
 
 def _tf_arrow_kernel(batches, with_dl: bool, with_positions: bool = False):
@@ -42,8 +42,8 @@ def _tf_arrow_kernel(batches, with_dl: bool, with_positions: bool = False):
       32 workers share one node's bandwidth. The Arrow kernel's token
       stream never materializes as python objects at all.
 
-    The regex sequence is the canonical analyzer spec (analyze.py) —
-    identical token streams are asserted against tokenize_py in tests.
+    Tokens come from analyze.tokenize_arrow, the analyzer's one Arrow
+    implementation (imported at module top: this module pickles by value).
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -55,17 +55,7 @@ def _tf_arrow_kernel(batches, with_dl: bool, with_positions: bool = False):
             continue
         tbl = pa.Table.from_batches([rb])
         doc_ids = tbl["doc_id"].combine_chunks()
-        c = tbl["content"].combine_chunks()
-        c = pc.replace_substring_regex(c, NON_ASCII, " ")
-        c = pc.replace_substring_regex(c, CAMEL_1, r"\1 \2")
-        c = pc.replace_substring_regex(c, CAMEL_2, r"\1 \2")
-        c = pc.utf8_lower(c)
-        toks = pc.split_pattern_regex(c, TOKEN_SPLIT)
-        flat = pc.list_flatten(toks)
-        parents = pc.list_parent_indices(toks)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        parents = parents.filter(keep)
+        flat, parents = tokenize_arrow(tbl["content"].combine_chunks())
         if with_positions:
             # token position within its doc's filtered token stream (the
             # tokenize_py index): rank within each parent run. Arrow's
@@ -108,23 +98,12 @@ def _tf_arrow_kernel(batches, with_dl: bool, with_positions: bool = False):
         yield from pa.table(cols).to_batches()
 
 
-def term_freqs(docs: DataFrame, use_udf: bool = True) -> DataFrame:
-    """docs -> (doc_id, term, tf). One row per distinct (doc, term).
-
-    use_udf=True: shuffle-free Arrow kernel via mapInArrow (production).
-    use_udf=False: pure-Catalyst explode + groupBy using the native
-    tokenizer expression — the reference implementation parity tests
-    compare against.
-    """
-    if use_udf:
-        return docs.select("doc_id", "content").mapInArrow(
-            lambda it: _tf_arrow_kernel(it, with_dl=False),
-            "doc_id long, term string, tf int",
-        )
-    return (
-        docs.select("doc_id", F.explode(tokenize_expr("content")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
+def term_freqs(docs: DataFrame) -> DataFrame:
+    """docs -> (doc_id, term, tf). One row per distinct (doc, term), from
+    the shuffle-free Arrow kernel via mapInArrow."""
+    return docs.select("doc_id", "content").mapInArrow(
+        lambda it: _tf_arrow_kernel(it, with_dl=False),
+        "doc_id long, term string, tf int",
     )
 
 

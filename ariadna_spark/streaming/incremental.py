@@ -20,8 +20,9 @@ Exactly-once: Structured Streaming's checkpoint guarantees each batch_id
 is delivered once; if a batch is retried after a crash, the deterministic
 build_id plus the per-bucket idempotent commits make the re-run converge
 on the same segment (same property as the batch resume test). Compaction
-(merging many small segments into one) is a normal build over the union
-of their docmaps followed by a publish_many swap.
+(merging many small segments into one) decodes the live segments' posting
+blocks back into tf rows, drops tombstoned versions, re-encodes them as
+one build and swaps it in with publish_many (segments.compact).
 """
 
 from __future__ import annotations

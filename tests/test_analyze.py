@@ -1,18 +1,18 @@
-"""Tokenizer golden cases + three-way parity (Spark expr / pandas UDF /
+"""Tokenizer golden cases + three-way parity (Spark expr / Arrow core /
 DuckDB SQL) — the property the driver's oracle comparison depends on."""
 
 import duckdb
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from ariadna_spark.analyze import (
     duckdb_edge_ngrams_sql,
     duckdb_tokenize_sql,
     edge_ngrams_expr,
     edge_ngrams_py,
+    tokenize_arrow,
     tokenize_expr,
     tokenize_py,
-    tokenize_udf,
 )
 
 GOLDEN = [
@@ -32,6 +32,15 @@ GOLDEN = [
 ]
 
 
+def _arrow_rows(texts):
+    """tokenize_arrow over the whole array, split back into rows by parents."""
+    toks, parents = tokenize_arrow(pa.array(texts, type=pa.string()))
+    rows = [[] for _ in texts]
+    for t, p in zip(toks.to_pylist(), parents.to_pylist()):
+        rows[p].append(t)
+    return rows
+
+
 @pytest.mark.parametrize("text,expected", GOLDEN)
 def test_tokenize_py_golden(text, expected):
     assert tokenize_py(text) == expected
@@ -45,14 +54,15 @@ def test_three_way_parity(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, content string")
     expr_rows = df.select("id", tokenize_expr("content").alias("toks")).orderBy("id").collect()
-    udf_rows = df.select("id", tokenize_udf(F.col("content")).alias("toks")).orderBy("id").collect()
+    arrow_rows = _arrow_rows(texts)
     con = duckdb.connect()
     duck = con.execute(
         f"SELECT {duckdb_tokenize_sql('t')} FROM (SELECT unnest(?) AS t)",
         [[t or "" for t in texts]],
     ).fetchall()
-    for i, (e, u, d) in enumerate(zip(expr_rows, udf_rows, duck)):
-        assert list(e["toks"]) == list(u["toks"]), f"expr vs udf mismatch row {i}"
+    assert len(arrow_rows) == len(expr_rows) == len(duck)
+    for i, (e, a, d) in enumerate(zip(expr_rows, arrow_rows, duck)):
+        assert list(e["toks"]) == a, f"expr vs arrow mismatch row {i}"
         assert list(e["toks"]) == list(d[0]), f"spark vs duckdb mismatch row {i}"
 
 
@@ -82,15 +92,15 @@ from hypothesis import given, settings, strategies as st
 @given(st.lists(st.text(max_size=40), min_size=1, max_size=8))
 @settings(max_examples=30, deadline=None)
 def test_three_way_parity_property(spark_global, texts):
-    """Random unicode strings: Catalyst expr == pandas UDF == DuckDB SQL
-    == pure python. (spark fixture injected via module global set in
+    """Random unicode strings: Catalyst expr == Arrow core == DuckDB SQL
+    == tokenize_py. (spark fixture injected via module global set in
     test_three_way_parity run; falls back to building rows directly.)"""
     import duckdb
 
     spark = spark_global
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, content string")
     expr_rows = df.select("id", tokenize_expr("content").alias("t")).orderBy("id").collect()
-    udf_rows = df.select("id", tokenize_udf(F.col("content")).alias("t")).orderBy("id").collect()
+    arrow_rows = _arrow_rows(texts)
     con = duckdb.connect()
     duck = con.execute(
         f"SELECT {duckdb_tokenize_sql('t')} FROM (SELECT unnest(?) AS t)", [texts]
@@ -98,7 +108,7 @@ def test_three_way_parity_property(spark_global, texts):
     for i, t in enumerate(texts):
         py = tokenize_py(t)
         assert list(expr_rows[i]["t"]) == py
-        assert list(udf_rows[i]["t"]) == py
+        assert arrow_rows[i] == py
         assert list(duck[i][0]) == py
 
 

@@ -666,3 +666,28 @@ def test_delete_by_query_everything(spark, overwrite_corpus, tmp_path):
     assert reader.topk("shared", 5).collect() == []
     assert reader.match_count("shared").collect()[0]["n_docs"] == 0
     assert reader.docmap().count() == 0
+
+
+def test_compact_failure_removes_its_checkpoint(spark, overwrite_corpus, tmp_path, monkeypatch):
+    """A compaction that fails after writing its tf checkpoint raises, leaves
+    no compact_tf_* dir behind in the scratch dir and publishes nothing."""
+    import glob
+
+    from ariadna_spark.sources import segments
+
+    base, _, _ = overwrite_corpus
+    out = str(tmp_path / "cfail")
+    build_index(spark, base, out, build_id="base", n_buckets=2)
+    store = SegmentStore(out)
+    live = store.live_builds()
+    pattern = os.path.join(spark.conf.get("spark.local.dir", "/tmp"), "compact_tf_*")
+    before = set(glob.glob(pattern))
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected build failure")
+
+    monkeypatch.setattr(segments, "_build_from_tf", boom)
+    with pytest.raises(RuntimeError, match="injected build failure"):
+        segments.compact(spark, out, build_id="merged", n_buckets=2)
+    assert set(glob.glob(pattern)) <= before
+    assert store.live_builds() == live
