@@ -12,31 +12,66 @@ The registry covers SURVEY.md §2 groups:
   BM25 top-k, edge-ngram prefix, posting intersection), plus the
   training-data-pipeline operators (dedup, minhash, jaccard, text quality,
   fingerprints, embedding similarity).
+
+Gate fixtures come from one memoized base store per sf, a full-corpus
+8-bucket build_index run once per process. Fixtures that mutate a store
+copy it first with segments.snapshot_index. All fixtures live in one memo,
+under one per-process gate root that is removed at exit.
 """
 
 from __future__ import annotations
 
+import atexit as _atexit
+import os as _os
+import shutil as _shutil
+import tempfile as _tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-import os as _os
-import tempfile as _tempfile
-
 from .analyze import duckdb_tokenize_sql, edge_ngrams_expr, tokenize_expr, tokenize_py
-
-
-def _gate_tmp(prefix: str) -> str:
-    """Driver-gate scratch dirs on tmpfs when available: the sandbox's
-    ext4 virtual disk serializes concurrent writers (see session._local_dir);
-    these caches live for the process only."""
-    base = "/dev/shm" if _os.path.isdir("/dev/shm") else None
-    return _tempfile.mkdtemp(prefix=prefix, dir=base)
 from .corpus import load_docs
 from .functions.bm25 import bm25_expr, duckdb_bm25_sql, idf_expr
 from .operators.topk import bm25_topk_from_stats
 from .stats import corpus_scalars, doc_freqs, doc_lengths, term_freqs
+
+_GATE: dict[tuple[str, str], object] = {}
+_GATE_ROOT: str | None = None
+
+
+def _gate_memo(name: str, sf_dir: str, make: Callable[[], object]):
+    """The gate fixture `name` for sf_dir (a store dir, fitted centroids
+    or generated oracle SQL), made on first use in this process."""
+    key = (name, sf_dir)
+    if key not in _GATE:
+        _GATE[key] = make()
+    return _GATE[key]
+
+
+def _gate_dir(prefix: str) -> str:
+    """A fresh dir under the per-process gate root, which sits on tmpfs
+    when available (see session._local_dir) and is removed at exit."""
+    global _GATE_ROOT
+    if _GATE_ROOT is None:
+        base = "/dev/shm" if _os.path.isdir("/dev/shm") else None
+        _GATE_ROOT = _tempfile.mkdtemp(prefix="ariadna_gate_", dir=base)
+        _atexit.register(_shutil.rmtree, _GATE_ROOT, ignore_errors=True)
+    return _tempfile.mkdtemp(prefix=prefix, dir=_GATE_ROOT)
+
+
+def _gate_base(spark: SparkSession, sf_dir: str) -> str:
+    """The full-corpus 8-bucket store, built once per sf. Content-field
+    gate fixtures read it, or copy it before they mutate a store."""
+    from .sources.segments import build_index
+
+    def make() -> str:
+        out = _gate_dir("base_")
+        build_index(spark, load_docs(spark, sf_dir), out, build_id="base", n_buckets=8)
+        return out
+
+    return _gate_memo("base", sf_dir, make)
+
 
 # The reference query set (FIXTURES.md §3): single term, multi-term,
 # camelCase (code-aware analysis), stop-word-heavy, absent term.
@@ -1168,9 +1203,6 @@ FROM r WHERE rank <= {_ANNB_K} ORDER BY qid, rank
 """
 
 
-_ANN_STORE_CACHE: dict[str, str] = {}
-
-
 def q_embedding_ann_incremental(spark, sf_dir) -> DataFrame:
     """Batch ANN across a TWO-BUILD incremental IVF store with overwrites
     (VERDICT r3 #3): build b0 indexes every vector but holds NEGATED
@@ -1186,8 +1218,9 @@ def q_embedding_ann_incremental(spark, sf_dir) -> DataFrame:
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("embedding").cast("array<double>").alias("embedding"),
     )
-    if sf_dir not in _ANN_STORE_CACHE:
-        store = _gate_tmp("ivf_store_")
+
+    def make() -> str:
+        store = _gate_dir("ivf_store_")
         stale = F.when(
             F.col("vec_id") % 5 == 0,
             F.transform("embedding", lambda x: -x),
@@ -1197,8 +1230,9 @@ def q_embedding_ann_incremental(spark, sf_dir) -> DataFrame:
         ivf_store_append(
             emb.filter(F.col("vec_id") % 5 == 0), store, build_id="b000001"
         )
-        _ANN_STORE_CACHE[sf_dir] = store
-    merged, centroids = ivf_store_read(spark, _ANN_STORE_CACHE[sf_dir])
+        return store
+
+    merged, centroids = ivf_store_read(spark, _gate_memo("ivf_store", sf_dir, make))
     queries = emb.filter(F.col("vec_id").isin(list(_ANNB_QIDS))).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -1353,22 +1387,15 @@ FROM n ORDER BY doc_id
 SQL_QUALITY_METRICS = _sql_quality_metrics()
 
 
-_WAND_CACHE: dict[str, str] = {}
 _WAND_QUERY = "table scan filter group"
 _WAND_K = 10
 
 
 def _wand_gate_reader(spark, sf_dir):
-    """Shared per-sf gate index (built once per process, on tmpfs)."""
+    """A reader over the shared per-sf gate base store."""
     from .operators.wand import IndexReader
-    from .sources.segments import build_index
 
-    if sf_dir not in _WAND_CACHE:
-        out = _gate_tmp("wand_gate_")
-        docs = load_docs(spark, sf_dir)
-        build_index(spark, docs, out, build_id="gate", n_buckets=8)
-        _WAND_CACHE[sf_dir] = out
-    return IndexReader(spark, _WAND_CACHE[sf_dir])
+    return IndexReader(spark, _gate_base(spark, sf_dir))
 
 
 def q_wand_topk(spark, sf_dir) -> DataFrame:
@@ -2670,7 +2697,6 @@ FROM scored ORDER BY s DESC, doc_id ASC LIMIT {_WAND_K}
 SQL_NEAR_TOPK = _sql_near_topk()
 
 
-_OVR_CACHE: dict[str, str] = {}
 _OVR_MOD = 7
 _OVR_SUFFIX = " zebra overwrite telemetry"
 _OVR_QUERY = "merge join zebra telemetry"
@@ -2684,21 +2710,22 @@ def q_overwrite_reindex(spark, sf_dir) -> DataFrame:
     where each doc appears exactly once, in its newest version — so any
     leaked old posting or stats drift breaks the hash match."""
     from .operators.wand import IndexReader
-    from .sources.segments import append_segment, build_index, compact
+    from .sources.segments import append_segment, compact, snapshot_index
 
-    if sf_dir not in _OVR_CACHE:
-        out = _gate_tmp("ovr_gate_")
-        docs = load_docs(spark, sf_dir)
-        build_index(spark, docs, out, build_id="base", n_buckets=8)
+    def make() -> str:
+        out = _gate_dir("ovr_gate_")
+        snapshot_index(_gate_base(spark, sf_dir), out)
         updated = (
-            docs.filter(F.col("doc_id") % _OVR_MOD == 0)
+            load_docs(spark, sf_dir)
+            .filter(F.col("doc_id") % _OVR_MOD == 0)
             .withColumn("content", F.concat(F.col("content"), F.lit(_OVR_SUFFIX)))
             .withColumn("content_sha", F.sha2(F.col("content"), 256))
         )
         append_segment(spark, updated, out, build_id="upd", n_buckets=8)
         compact(spark, out, build_id="final", n_buckets=8)
-        _OVR_CACHE[sf_dir] = out
-    reader = IndexReader(spark, _OVR_CACHE[sf_dir])
+        return out
+
+    reader = IndexReader(spark, _gate_memo("overwrite_reindex", sf_dir, make))
     out = reader.topk(_OVR_QUERY, _WAND_K)
     return out.select("doc_id", F.round("score", 4).alias("score_r"))
 
@@ -2734,7 +2761,39 @@ FROM scored ORDER BY s DESC, doc_id ASC LIMIT {_WAND_K}
 SQL_OVERWRITE_REINDEX = _sql_overwrite_reindex()
 
 
-_DEL_CACHE: dict[str, tuple] = {}
+def _masked_then_compacted(
+    spark, sf_dir, name: str, mutate: Callable[[str], None], query: str
+) -> DataFrame:
+    """Top-k of `query` over a copy of the gate base store in both
+    lifecycle phases: 'masked' is merge-on-read after mutate(store),
+    collected before compaction; 'compacted' is read after compact()
+    physically drops the shadowed versions. The compacted store and the
+    masked rows are memoized under `name`."""
+    from .operators.wand import IndexReader
+    from .sources.segments import compact, snapshot_index
+
+    def topk(out: str) -> DataFrame:
+        return (
+            IndexReader(spark, out)
+            .topk(query, _WAND_K)
+            .select("doc_id", F.round("score", 4).alias("score_r"))
+        )
+
+    def make() -> tuple[str, list]:
+        out = _gate_dir(f"{name}_")
+        snapshot_index(_gate_base(spark, sf_dir), out)
+        mutate(out)
+        masked = [(r["doc_id"], r["score_r"]) for r in topk(out).collect()]
+        compact(spark, out, build_id="final", n_buckets=8)
+        return out, masked
+
+    out, masked = _gate_memo(name, sf_dir, make)
+    pre = spark.createDataFrame(masked, "doc_id long, score_r double").withColumn(
+        "phase", F.lit("masked")
+    )
+    return pre.unionByName(topk(out).withColumn("phase", F.lit("compacted")))
+
+
 _DEL_MOD = 7
 _DEL_MATCH = "merge"
 _DEL_QUERY = "merge join window"
@@ -2758,14 +2817,9 @@ def q_delete_by_query(spark, sf_dir) -> DataFrame:
 
     A leaked posting, a stats mis-subtraction, or a drift mismatch in
     either phase breaks the hash."""
-    from .operators.wand import IndexReader
-    from .sources.segments import build_index, compact, delete_by_query
+    from .sources.segments import delete_by_query
 
-    cols = ("doc_id", "score_r")
-    if sf_dir not in _DEL_CACHE:
-        out = _gate_tmp("del_gate_")
-        docs = load_docs(spark, sf_dir)
-        build_index(spark, docs, out, build_id="base", n_buckets=8)
+    def mutate(out: str) -> None:
         delete_by_query(
             spark,
             out,
@@ -2773,26 +2827,8 @@ def q_delete_by_query(spark, sf_dir) -> DataFrame:
             query=_DEL_MATCH,
             build_id="del",
         )
-        masked = [
-            (r["doc_id"], r["score_r"])
-            for r in IndexReader(spark, out)
-            .topk(_DEL_QUERY, _WAND_K)
-            .select("doc_id", F.round("score", 4).alias("score_r"))
-            .collect()
-        ]
-        compact(spark, out, build_id="final", n_buckets=8)
-        _DEL_CACHE[sf_dir] = (out, masked)
-    out, masked = _DEL_CACHE[sf_dir]
-    pre = spark.createDataFrame(masked, "doc_id long, score_r double").withColumn(
-        "phase", F.lit("masked")
-    )
-    post = (
-        IndexReader(spark, out)
-        .topk(_DEL_QUERY, _WAND_K)
-        .select("doc_id", F.round("score", 4).alias("score_r"))
-        .withColumn("phase", F.lit("compacted"))
-    )
-    return pre.unionByName(post)
+
+    return _masked_then_compacted(spark, sf_dir, "delete_by_query", mutate, _DEL_QUERY)
 
 
 def _sql_delete_by_query() -> str:
@@ -2929,23 +2965,22 @@ ORDER BY sum(s) DESC, doc_id ASC LIMIT 10
 SQL_MULTIFIELD_BM25 = _sql_multifield()
 
 
-_MF_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _mf_store(spark, sf_dir: str, field: str) -> str:
     """One physical segment store per searchable field (Lucene's
-    per-field inverted-index model), cached per (sf_dir, field)."""
+    per-field inverted-index model), cached per (sf_dir, field); the
+    content field is the gate base store itself."""
     from .sources.segments import build_index
 
-    key = (sf_dir, field)
-    if key not in _MF_CACHE:
-        out = _gate_tmp(f"mf_{field}_")
-        docs = load_docs(spark, sf_dir)
-        if field != "content":
-            docs = docs.withColumn("content", F.col(field))
+    if field == "content":
+        return _gate_base(spark, sf_dir)
+
+    def make() -> str:
+        out = _gate_dir(f"mf_{field}_")
+        docs = load_docs(spark, sf_dir).withColumn("content", F.col(field))
         build_index(spark, docs, out, build_id=field[0], n_buckets=8)
-        _MF_CACHE[key] = out
-    return _MF_CACHE[key]
+        return out
+
+    return _gate_memo(f"mf_{field}", sf_dir, make)
 
 
 def q_multifield_indexed(spark, sf_dir) -> DataFrame:
@@ -3028,9 +3063,6 @@ SQL_MULTIFIELD3 = _sql_multifield_n(
 )
 
 
-_MF_SINGLE_CACHE: dict[str, str] = {}
-
-
 def q_multifield_onepass(spark, sf_dir) -> DataFrame:
     """E8, single-store layout (r6): ALL three fields built into ONE
     segment store in ONE corpus pass + ONE posting shuffle
@@ -3043,20 +3075,20 @@ def q_multifield_onepass(spark, sf_dir) -> DataFrame:
     from .operators.wand import IndexReader, multifield_topk_single
     from .sources.segments import build_multifield_index
 
-    if sf_dir not in _MF_SINGLE_CACHE:
-        out = _gate_tmp("mf_single_")
+    def make() -> str:
+        out = _gate_dir("mf_single_")
         docs = load_docs(spark, sf_dir)
         build_multifield_index(
             spark, docs, out, fields=("content", "path", "repo"),
             build_id="mf", n_buckets=8,
         )
-        _MF_SINGLE_CACHE[sf_dir] = out
-    reader = IndexReader(spark, _MF_SINGLE_CACHE[sf_dir])
+        return out
+
+    reader = IndexReader(spark, _gate_memo("mf_single", sf_dir, make))
     out = multifield_topk_single(reader, list(_MF3_FIELDS), _MF3_QUERY, 10)
     return out.select("doc_id", F.round("score", 4).alias("score_r"))
 
 
-_UPD_CACHE: dict[str, tuple] = {}
 _UPD_MOD = 9
 _UPD_REM = 4
 _UPD_SUFFIX = " flume retrofit merge"
@@ -3082,42 +3114,20 @@ def q_update_by_query(spark, sf_dir) -> DataFrame:
 
     A stale old-version posting, a missing new posting, or a drift
     mismatch in either phase breaks the hash."""
-    from .operators.wand import IndexReader
-    from .sources.segments import build_index, compact, update_by_query
+    from .sources.segments import update_by_query
 
-    if sf_dir not in _UPD_CACHE:
-        out = _gate_tmp("upd_gate_")
-        docs = load_docs(spark, sf_dir)
-        build_index(spark, docs, out, build_id="base", n_buckets=8)
+    def mutate(out: str) -> None:
         update_by_query(
             spark,
             out,
-            docs,
+            load_docs(spark, sf_dir),
             flt=(F.col("doc_id") % _UPD_MOD == _UPD_REM),
             set_cols={"content": F.concat(F.col("content"), F.lit(_UPD_SUFFIX))},
             build_id="upd",
             n_buckets=8,
         )
-        masked = [
-            (r["doc_id"], r["score_r"])
-            for r in IndexReader(spark, out)
-            .topk(_UPD_QUERY, _WAND_K)
-            .select("doc_id", F.round("score", 4).alias("score_r"))
-            .collect()
-        ]
-        compact(spark, out, build_id="final", n_buckets=8)
-        _UPD_CACHE[sf_dir] = (out, masked)
-    out, masked = _UPD_CACHE[sf_dir]
-    pre = spark.createDataFrame(masked, "doc_id long, score_r double").withColumn(
-        "phase", F.lit("masked")
-    )
-    post = (
-        IndexReader(spark, out)
-        .topk(_UPD_QUERY, _WAND_K)
-        .select("doc_id", F.round("score", 4).alias("score_r"))
-        .withColumn("phase", F.lit("compacted"))
-    )
-    return pre.unionByName(post)
+
+    return _masked_then_compacted(spark, sf_dir, "update_by_query", mutate, _UPD_QUERY)
 
 
 def _sql_update_by_query() -> str:
@@ -3190,7 +3200,6 @@ SELECT * FROM (
 SQL_UPDATE_BY_QUERY = _sql_update_by_query()
 
 
-_SNAP_CACHE: dict[str, str] = {}
 _SNAP_MOD = 5
 _SNAP_MATCH = "window"
 _SNAP_QUERY = "window scan stream"
@@ -3206,19 +3215,13 @@ def q_snapshot_restore(spark, sf_dir) -> DataFrame:
     build, restores a stale live list, or corrupts a segment breaks the
     hash."""
     from .operators.wand import IndexReader
-    from .sources.segments import (
-        build_index,
-        delete_by_query,
-        restore_index,
-        snapshot_index,
-    )
+    from .sources.segments import delete_by_query, restore_index, snapshot_index
 
-    if sf_dir not in _SNAP_CACHE:
-        out = _gate_tmp("snap_src_")
-        snap = _gate_tmp("snap_repo_")
-        restored = _gate_tmp("snap_dst_")
-        docs = load_docs(spark, sf_dir)
-        build_index(spark, docs, out, build_id="base", n_buckets=8)
+    def make() -> str:
+        out = _gate_dir("snap_src_")
+        snap = _gate_dir("snap_repo_")
+        restored = _gate_dir("snap_dst_")
+        snapshot_index(_gate_base(spark, sf_dir), out)
         delete_by_query(
             spark,
             out,
@@ -3228,8 +3231,9 @@ def q_snapshot_restore(spark, sf_dir) -> DataFrame:
         )
         snapshot_index(out, snap)
         restore_index(snap, restored)
-        _SNAP_CACHE[sf_dir] = restored
-    reader = IndexReader(spark, _SNAP_CACHE[sf_dir])
+        return restored
+
+    reader = IndexReader(spark, _gate_memo("snapshot_restore", sf_dir, make))
     out = reader.topk(_SNAP_QUERY, _WAND_K)
     return out.select("doc_id", F.round("score", 4).alias("score_r"))
 
@@ -3270,7 +3274,6 @@ FROM scored ORDER BY s DESC, doc_id ASC LIMIT {_WAND_K}
 SQL_SNAPSHOT_RESTORE = _sql_snapshot_restore()
 
 
-_ATT_CACHE: dict[str, str] = {}
 _ATT_QUERY = "sort stream table"
 
 
@@ -3287,9 +3290,9 @@ def q_attach_index(spark, sf_dir) -> DataFrame:
     from .operators.wand import IndexReader
     from .sources.segments import attach_index, build_index
 
-    if sf_dir not in _ATT_CACHE:
-        dir_a = _gate_tmp("att_a_")
-        dir_b = _gate_tmp("att_b_")
+    def make() -> str:
+        dir_a = _gate_dir("att_a_")
+        dir_b = _gate_dir("att_b_")
         docs = load_docs(spark, sf_dir)
         lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
         mid = (int(lo) + int(hi)) // 2
@@ -3300,8 +3303,9 @@ def q_attach_index(spark, sf_dir) -> DataFrame:
             spark, docs.filter(F.col("doc_id") > mid), dir_b, build_id="shard_b", n_buckets=8
         )
         attach_index(spark, dir_b, dir_a)
-        _ATT_CACHE[sf_dir] = dir_a
-    reader = IndexReader(spark, _ATT_CACHE[sf_dir])
+        return dir_a
+
+    reader = IndexReader(spark, _gate_memo("attach_index", sf_dir, make))
     out = reader.topk(_ATT_QUERY, _WAND_K)
     return out.select("doc_id", F.round("score", 4).alias("score_r"))
 
@@ -3323,17 +3327,17 @@ def q_alias_rotation(spark, sf_dir) -> DataFrame:
     v1 store removed) so a rotation that silently keeps serving the old
     index fails the gate rather than passing on lucky scores."""
     from .sources.aliases import AliasRegistry
-    from .sources.segments import build_index
+    from .sources.segments import build_index, snapshot_index
 
-    root = _gate_tmp("alias_gate_")
+    root = _gate_dir("alias_gate_")
     reg = AliasRegistry(root)
-    docs = load_docs(spark, sf_dir)
     idx1 = _os.path.join(root, "idx-1")
-    build_index(spark, docs, idx1, build_id="v1", n_buckets=8)
+    snapshot_index(_gate_base(spark, sf_dir), idx1)
     reg.put_alias("serving", idx1)
     p1 = reg.reader(spark, "serving").topk(_WAND_QUERY, _WAND_K).collect()
 
     idx2 = _os.path.join(root, "idx-2")
+    docs = load_docs(spark, sf_dir)
     build_index(
         spark, docs.filter(F.col("doc_id") % 2 == 0), idx2, build_id="v2", n_buckets=8
     )
@@ -3604,7 +3608,6 @@ FROM cand WHERE bit_count(xor(sa, sb)) <= {_SIMHASH_MAXH} ORDER BY da, db"""
 SQL_SIMHASH_PAIRS = _sql_simhash_pairs()
 
 
-_ANN_CACHE: dict[str, str] = {}
 _LSH_QVEC = 3
 _LSH_PLANES = 8
 _LSH_TABLES = 4
@@ -3619,11 +3622,13 @@ def q_embedding_lsh(spark, sf_dir) -> DataFrame:
     from .operators.similarity import lsh_index_read, lsh_index_write, lsh_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    if sf_dir not in _ANN_CACHE:
-        out = _gate_tmp("ann_lsh_")
+
+    def make() -> str:
+        out = _gate_dir("ann_lsh_")
         lsh_index_write(emb, out, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES)
-        _ANN_CACHE[sf_dir] = out
-    indexed, tables = lsh_index_read(spark, _ANN_CACHE[sf_dir])
+        return out
+
+    indexed, tables = lsh_index_read(spark, _gate_memo("ann_lsh", sf_dir, make))
     q = list(emb.filter(F.col("vec_id") == _LSH_QVEC).select("embedding").first()[0])
     return lsh_topk(indexed, tables, q, k=10, probe_hamming=1).select(
         "vec_id", F.round("cos", 4).alias("cos_r")
@@ -3693,13 +3698,9 @@ SQL_EMBEDDING_LSH = _sql_embedding_lsh()
 _EMB_DUP_T = 0.45  # random 64-dim embeddings: top pair similarities ~0.5
 
 
-_IVF_CACHE: dict[str, str] = {}
-
-
 _IVF_QVEC = 11
 _IVF_NPROBE = 4
 _IVF_K = 16
-_IVF_CENT_CACHE: dict[str, "object"] = {}
 
 
 def _ivf_gate_data(sf_dir: str):
@@ -3723,10 +3724,11 @@ def _ivf_gate_centroids(sf_dir: str):
     bytes, so the oracle can re-fit identically (VERDICT r4 #6)."""
     from .operators.similarity import kmeans_fit_numpy
 
-    if sf_dir not in _IVF_CENT_CACHE:
+    def make():
         X, _ = _ivf_gate_data(sf_dir)
-        _IVF_CENT_CACHE[sf_dir] = kmeans_fit_numpy(X[:100_000], _IVF_K, seed=42)
-    return _IVF_CENT_CACHE[sf_dir]
+        return kmeans_fit_numpy(X[:100_000], _IVF_K, seed=42)
+
+    return _gate_memo("ivf_centroids", sf_dir, make)
 
 
 def q_embedding_ivf(spark, sf_dir) -> DataFrame:
@@ -3740,18 +3742,17 @@ def q_embedding_ivf(spark, sf_dir) -> DataFrame:
     from .operators.similarity import ivf_index_read, ivf_index_write, ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    if sf_dir not in _IVF_CACHE:
-        out = _gate_tmp("ann_ivf_")
+
+    def make() -> str:
+        out = _gate_dir("ann_ivf_")
         ivf_index_write(emb, out, centroids=_ivf_gate_centroids(sf_dir))
-        _IVF_CACHE[sf_dir] = out
-    indexed, centroids = ivf_index_read(spark, _IVF_CACHE[sf_dir])
+        return out
+
+    indexed, centroids = ivf_index_read(spark, _gate_memo("ann_ivf", sf_dir, make))
     q = list(emb.filter(F.col("vec_id") == _IVF_QVEC).select("embedding").first()[0])
     return ivf_topk(indexed, centroids, q, k=10, n_probe=_IVF_NPROBE).select(
         "vec_id", F.round("cos", 4).alias("cos_r")
     )
-
-
-_IVF_SQL_CACHE: dict[str, str] = {}
 
 
 def sql_embedding_ivf(sf_dir: str | None = None) -> str:
@@ -3763,8 +3764,6 @@ def sql_embedding_ivf(sf_dir: str | None = None) -> str:
     over the inlined centroid literals (same (d2, centroid) tie-break as
     ivf_centroid_expr) -> probe filter with the SAME probe ids
     (ivf_probe_ids on the same fit) -> exact cosine top-k."""
-    import os as _os
-
     import numpy as np
 
     from .operators.similarity import ivf_probe_ids
@@ -3773,20 +3772,20 @@ def sql_embedding_ivf(sf_dir: str | None = None) -> str:
         sf_dir = _os.environ.get(
             "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01"
         )
-    if sf_dir in _IVF_SQL_CACHE:
-        return _IVF_SQL_CACHE[sf_dir]
-    cents = np.asarray(_ivf_gate_centroids(sf_dir))
-    X, vec_ids = _ivf_gate_data(sf_dir)
-    qv = X[vec_ids.index(_IVF_QVEC)]
-    probes = ivf_probe_ids(cents, qv, _IVF_NPROBE)
 
-    def vec_lit(c) -> str:
-        return "[" + ", ".join(repr(float(x)) for x in c) + "]::DOUBLE[]"
+    def make() -> str:
+        cents = np.asarray(_ivf_gate_centroids(sf_dir))
+        X, vec_ids = _ivf_gate_data(sf_dir)
+        qv = X[vec_ids.index(_IVF_QVEC)]
+        probes = ivf_probe_ids(cents, qv, _IVF_NPROBE)
 
-    cent_rows = ",\n  ".join(
-        f"({i}, {vec_lit(c)})" for i, c in enumerate(cents)
-    )
-    sql = f"""
+        def vec_lit(c) -> str:
+            return "[" + ", ".join(repr(float(x)) for x in c) + "]::DOUBLE[]"
+
+        cent_rows = ",\n  ".join(
+            f"({i}, {vec_lit(c)})" for i, c in enumerate(cents)
+        )
+        return f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 cent(cid, cv) AS (VALUES
   {cent_rows}
@@ -3810,8 +3809,8 @@ scored AS (
 )
 SELECT vec_id, round(cos, 4) AS cos_r FROM scored ORDER BY cos DESC, vec_id ASC LIMIT 10
 """
-    _IVF_SQL_CACHE[sf_dir] = sql
-    return sql
+
+    return _gate_memo("ivf_sql", sf_dir, make)
 
 
 def q_embedding_near_dup(spark, sf_dir) -> DataFrame:

@@ -34,6 +34,7 @@ import shutil
 import time
 import uuid
 import zlib
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -177,6 +178,27 @@ def _dir_bytes(path: str) -> int:
         return 0
 
 
+@contextmanager
+def _tf_checkpoint(spark: SparkSession, tf: DataFrame, prefix: str):
+    """Write tf to a parquet checkpoint in Spark's local scratch dir and
+    yield (the re-read DataFrame, the checkpoint's on-disk bytes). The dir
+    is removed on exit, also when the write or the caller's build fails.
+
+    tf is reused by several downstream passes (scalars, dfreq, postings).
+    It is checkpointed to parquet on fast local storage instead of the
+    JVM block-manager cache: tens of millions of cached rows turn into
+    GC pressure that showed up as random multi-10s pauses; a columnar
+    file re-read is cheap and keeps the heap small. At cluster scale the
+    same role is played by a scratch dataset on local NVMe / HDFS."""
+    scratch = spark.conf.get("spark.local.dir", "/tmp")
+    path = os.path.join(scratch, f"{prefix}_{uuid.uuid4().hex[:8]}")
+    try:
+        tf.write.mode("overwrite").parquet(path)
+        yield spark.read.parquet(path), _dir_bytes(path)
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def _postings_shuffle_parts(spark: SparkSession, ckpt_bytes: int) -> int:
     """Posting-shuffle partition count from the tf checkpoint's on-disk
     size (guide §2.2: size partitions to the data, not to a constant):
@@ -228,24 +250,14 @@ def build_index(
     parallelism = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < parallelism * 2:
         docs = docs.repartition(parallelism * 2)
-    # tf is reused by three downstream passes (scalars, dfreq, postings).
-    # It is checkpointed to parquet on fast local storage instead of the
-    # JVM block-manager cache: tens of millions of cached rows turn into
-    # GC pressure that showed up as random multi-10s pauses; a columnar
-    # file re-read is cheap and keeps the heap small. At cluster scale the
-    # same role is played by a scratch dataset on local NVMe / HDFS.
     t0 = time.monotonic()
-    scratch = spark.conf.get("spark.local.dir", "/tmp")
-    tf_ckpt = os.path.join(scratch, f"tf_ckpt_{build_id}_{uuid.uuid4().hex[:8]}")
-    term_freqs_dl(docs, with_positions=with_positions).write.mode("overwrite").parquet(tf_ckpt)
-    tf = spark.read.parquet(tf_ckpt)
-    ckpt_bytes = _dir_bytes(tf_ckpt)
-    _trace("tf+scalars", t0)
-    dl = doc_lengths(tf)
-    docmap_df = docs.join(dl, "doc_id").select(
-        "doc_id", "repo", "path", "commit", "lang", "doc_len", "content_sha"
-    )
-    try:
+    tf_df = term_freqs_dl(docs, with_positions=with_positions)
+    with _tf_checkpoint(spark, tf_df, f"tf_ckpt_{build_id}") as (tf, ckpt_bytes):
+        _trace("tf+scalars", t0)
+        dl = doc_lengths(tf)
+        docmap_df = docs.join(dl, "doc_id").select(
+            "doc_id", "repo", "path", "commit", "lang", "doc_len", "content_sha"
+        )
         return _build_from_tf(
             spark,
             tf,
@@ -261,8 +273,6 @@ def build_index(
             shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
             ckpt_bytes=ckpt_bytes,
         )
-    finally:
-        shutil.rmtree(tf_ckpt, ignore_errors=True)
 
 
 FIELD_SEP = ":"
@@ -327,16 +337,10 @@ def build_multifield_index(
         docs = docs.repartition(parallelism * 2)
 
     t0 = time.monotonic()
-    scratch = spark.conf.get("spark.local.dir", "/tmp")
-    tf_ckpt = os.path.join(scratch, f"tf_ckpt_{build_id}_{uuid.uuid4().hex[:8]}")
-    term_freqs_dl_fields(docs, list(fields), with_positions=with_positions).write.mode(
-        "overwrite"
-    ).parquet(tf_ckpt)
-    tf_f = spark.read.parquet(tf_ckpt)
-    ckpt_bytes = _dir_bytes(tf_ckpt)
-    _trace("tf_fields", t0)
+    tf_df = term_freqs_dl_fields(docs, list(fields), with_positions=with_positions)
+    with _tf_checkpoint(spark, tf_df, f"tf_ckpt_{build_id}") as (tf_f, ckpt_bytes):
+        _trace("tf_fields", t0)
 
-    try:
         # per-field scalars in ONE aggregation (map-side combinable)
         t0 = time.monotonic()
         frows = (
@@ -401,8 +405,6 @@ def build_multifield_index(
             shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
             ckpt_bytes=ckpt_bytes,
         )
-    finally:
-        shutil.rmtree(tf_ckpt, ignore_errors=True)
 
 
 def _build_from_tf(
@@ -1174,12 +1176,7 @@ def compact(
             tomb.select(F.col("dead_build").alias("bid"), "doc_id"), ["bid", "doc_id"], "left_anti"
         )
     tf = tf.drop("bid")
-    scratch = spark.conf.get("spark.local.dir", "/tmp")
-    tf_ckpt = os.path.join(scratch, f"compact_tf_{uuid.uuid4().hex[:8]}")
-    try:
-        tf.write.mode("overwrite").parquet(tf_ckpt)
-        tf = spark.read.parquet(tf_ckpt)
-
+    with _tf_checkpoint(spark, tf, "compact_tf") as (tf, ckpt_bytes):
         docmap = reader.docmap()
         mf_kw: dict = {}
         if any("fields" in st for st in reader.build_stats):
@@ -1231,7 +1228,6 @@ def compact(
                 ngram_filter=~F.col("term").contains(FIELD_SEP),
                 extra_stats={"fields": field_stats, "primary": prim_name},
             )
-        ckpt_bytes = _dir_bytes(tf_ckpt)
         manifest = _build_from_tf(
             spark,
             tf,
@@ -1247,8 +1243,6 @@ def compact(
         if gc:
             store.gc()
         return manifest
-    finally:
-        shutil.rmtree(tf_ckpt, ignore_errors=True)
 
 
 def _copy_build(src_dir: str, tgt_dir: str) -> bool:

@@ -668,26 +668,60 @@ def test_delete_by_query_everything(spark, overwrite_corpus, tmp_path):
     assert reader.docmap().count() == 0
 
 
-def test_compact_failure_removes_its_checkpoint(spark, overwrite_corpus, tmp_path, monkeypatch):
-    """A compaction that fails after writing its tf checkpoint raises, leaves
-    no compact_tf_* dir behind in the scratch dir and publishes nothing."""
+@pytest.mark.parametrize("entry", ["build_index", "build_multifield_index", "compact"])
+@pytest.mark.parametrize("fail_at", ["build", "write"])
+def test_compact_failure_removes_its_checkpoint(
+    spark, overwrite_corpus, tmp_path, monkeypatch, entry, fail_at
+):
+    """A build or compaction that fails, either in the job that writes its
+    tf checkpoint (fail_at='write') or after the checkpoint was written
+    (fail_at='build'), raises, leaves no tf_ckpt_* / compact_tf_* dir
+    behind in the scratch dir and publishes nothing."""
     import glob
+
+    from pyspark.errors import PySparkException
+    from pyspark.sql.readwriter import DataFrameWriter
 
     from ariadna_spark.sources import segments
 
     base, _, _ = overwrite_corpus
     out = str(tmp_path / "cfail")
-    build_index(spark, base, out, build_id="base", n_buckets=2)
+    if entry == "compact":
+        build_index(spark, base, out, build_id="base", n_buckets=2)
     store = SegmentStore(out)
     live = store.live_builds()
-    pattern = os.path.join(spark.conf.get("spark.local.dir", "/tmp"), "compact_tf_*")
+    prefix = "compact_tf" if entry == "compact" else "tf_ckpt"
+    pattern = os.path.join(spark.conf.get("spark.local.dir", "/tmp"), f"{prefix}_*")
     before = set(glob.glob(pattern))
 
-    def boom(*a, **kw):
-        raise RuntimeError("injected build failure")
+    if fail_at == "build":
 
-    monkeypatch.setattr(segments, "_build_from_tf", boom)
-    with pytest.raises(RuntimeError, match="injected build failure"):
-        segments.compact(spark, out, build_id="merged", n_buckets=2)
+        def boom(*a, **kw):
+            raise RuntimeError("injected build failure")
+
+        monkeypatch.setattr(segments, "_build_from_tf", boom)
+        expected = RuntimeError
+    else:
+        orig_parquet = DataFrameWriter.parquet
+
+        def failing_parquet(self, path, *a, **kw):
+            # the write job fails on its first row, after Spark made the dir
+            bad = self._df.filter(
+                F.assert_true(F.col("doc_id") < 0, "injected build failure").isNull()
+            )
+            return orig_parquet(bad.write.mode("overwrite"), path, *a, **kw)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+        expected = PySparkException
+
+    run = {
+        "build_index": lambda: build_index(spark, base, out, build_id="x", n_buckets=2),
+        "build_multifield_index": lambda: segments.build_multifield_index(
+            spark, base, out, build_id="x", n_buckets=2
+        ),
+        "compact": lambda: segments.compact(spark, out, build_id="merged", n_buckets=2),
+    }[entry]
+    with pytest.raises(expected, match="injected build failure"):
+        run()
     assert set(glob.glob(pattern)) <= before
     assert store.live_builds() == live
