@@ -29,7 +29,17 @@ Scale decisions:
 
 Block schema (FIXTURES.md §4):
     term, block_id, n_docs, first_doc_id, last_doc_id,
-    block_max_tf, block_max_tfnorm, doc_ids_varint, tfs_varint, dls_varint
+    block_max_tf, block_max_tfnorm, doc_ids_varint, tfs_varint, dls_varint,
+    pos_varint
+
+This module owns the block codec in both directions: the encoder above and
+`explode_blocks`, the one decoder that turns whole block rows back into
+posting rows (compaction, candidate ids, explain). The WAND kernels keep
+their own lazy per-block decode (wand._RangeBlocks, _two_pass_positions),
+because block-max pruning exists to decode only the blocks that survive;
+verify_index keeps its own, because it counts decode failures instead of
+raising. The dead-version rule and tombstone writes belong to
+sources/segments.py.
 """
 
 from __future__ import annotations
@@ -40,7 +50,12 @@ from pyspark.sql import functions as F
 
 from .. import B, K1
 from .._pickle import register_by_value
-from ..functions.varint import varint_encode_ex
+from ..functions.varint import (
+    delta_decode_ids,
+    positions_decode,
+    varint_decode,
+    varint_encode_ex,
+)
 from ..stats import doc_freqs, doc_lengths
 
 BLOCK_SIZE = 128
@@ -267,6 +282,99 @@ def build_postings(
         return _encode_sorted_partition(batches, avgdl, block_size)
 
     return arranged.mapInArrow(kernel, POSTINGS_SCHEMA)
+
+
+_VARINT_COLS = ("doc_ids_varint", "tfs_varint", "dls_varint", "pos_varint")
+
+
+def _varint_stream(col) -> tuple[np.ndarray, np.ndarray]:
+    """A binary column of per-block LEB128 buffers -> (its bytes
+    concatenated, the number of values in each row's buffer). A value ends
+    at a byte below 0x80, so a row's count is the number of such bytes
+    between its offsets."""
+    import pyarrow as pa
+
+    _, obuf, buf = col.buffers()
+    otype = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offs = np.frombuffer(obuf, dtype=otype)[col.offset : col.offset + len(col) + 1]
+    offs = offs.astype(np.int64)
+    data = np.frombuffer(buf, dtype=np.uint8) if buf is not None else np.empty(0, np.uint8)
+    data = data[offs[0] : offs[-1]]
+    ends = np.concatenate(([0], np.cumsum(data < 0x80)))
+    return data, np.diff(ends[offs - offs[0]])
+
+
+def _per_posting(col, counts: np.ndarray) -> np.ndarray:
+    """A per-posting varint column (tfs, dls) decoded, after checking that
+    every block holds as many values as it holds doc ids."""
+    data, n = _varint_stream(col)
+    if not np.array_equal(n, counts):
+        raise ValueError("a posting block's varint streams disagree on its posting count")
+    return varint_decode(data).astype(np.int64)
+
+
+def _explode_batch(rb):
+    """One Arrow batch of block rows -> its posting rows, decoded a whole
+    column at a time: each stream is one concatenated varint decode, and
+    doc ids restart at every block because a block's first gap is its
+    absolute first id (ids = running sum minus the sum before the block).
+    Positions are per-doc runs whose lengths are the tfs, so they need
+    tfs_varint."""
+    import pyarrow as pa
+
+    cols = dict(zip(rb.schema.names, rb.columns))
+    data, counts = _varint_stream(cols["doc_ids_varint"])
+    c = delta_decode_ids(data)
+    starts = np.cumsum(counts) - counts
+    out = {"doc_id": pa.array(c - np.repeat(np.concatenate(([0], c))[starts], counts))}
+    rows = pa.array(np.repeat(np.arange(rb.num_rows), counts))
+    out.update({k: v.take(rows) for k, v in cols.items() if k not in _VARINT_COLS})
+    if "tfs_varint" in cols:
+        tfs = _per_posting(cols["tfs_varint"], counts)
+        out["tf"] = pa.array(tfs.astype(np.int32))
+    if "dls_varint" in cols:
+        out["doc_len"] = pa.array(_per_posting(cols["dls_varint"], counts))
+    if "pos_varint" in cols:
+        pos = positions_decode(_varint_stream(cols["pos_varint"])[0], tfs)
+        offs = np.concatenate(([0], np.cumsum(tfs)))
+        out["positions"] = pa.ListArray.from_arrays(
+            pa.array(offs.astype(np.int32)), pa.array(pos.astype(np.int32))
+        )
+    return pa.RecordBatch.from_arrays(list(out.values()), list(out))
+
+
+def explode_blocks(blocks: DataFrame) -> DataFrame:
+    """Posting block rows -> posting rows: the block decoder of the
+    merge-on-read layer. Always emits doc_id; tf, doc_len and positions
+    only for the varint columns the caller kept (tfs_varint, dls_varint,
+    pos_varint), so an ids-only scan decodes doc_ids_varint alone and
+    Catalyst prunes the rest from the parquet read. Every other column
+    (bid, term, df, ...) passes through, repeated per posting. Output
+    order: doc_id, the pass-through columns, the decoded columns."""
+    from pyspark.sql.types import ArrayType, IntegerType, LongType, StructField, StructType
+
+    names = blocks.columns
+    decoded = [
+        StructField(name, t)
+        for src, name, t in (
+            ("tfs_varint", "tf", IntegerType()),
+            ("dls_varint", "doc_len", LongType()),
+            ("pos_varint", "positions", ArrayType(IntegerType())),
+        )
+        if src in names
+    ]
+    schema = StructType(
+        [StructField("doc_id", LongType())]
+        + [blocks.schema[c] for c in names if c not in _VARINT_COLS]
+        + decoded
+    )
+
+    def kernel(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield _explode_batch(rb)
+
+    return blocks.mapInArrow(kernel, schema)
 
 
 register_by_value(__name__)

@@ -590,7 +590,6 @@ def decontaminate(
     n: int = 8,
     content_col: str = "content",
     bench_col: str = "text",
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination (the canonical pre-training hygiene step
     alongside dedup and PII scrubbing, VERDICT r3 #2): flag corpus docs
@@ -603,9 +602,7 @@ def decontaminate(
     Scale shape: eval benchmarks are tiny next to a pre-training corpus
     (~10^4-10^6 prompts vs 10^12 docs), so the benchmark's distinct n-gram
     set is BROADCAST — the corpus-side n-gram explode is map-side, never
-    shuffled, and the per-doc count is a partial aggregation. Set
-    broadcast_bench=False for a shuffle join on pathologically large
-    benchmark tables. Both sides shingle with the SAME analyzer, so
+    shuffled, and the per-doc count is a partial aggregation. Both sides shingle with the SAME analyzer, so
     whitespace/punctuation/camelCase variations cannot hide contamination."""
     bg = (
         bench.select(tokenize_expr(bench_col).alias("t"))
@@ -613,15 +610,13 @@ def decontaminate(
         .select(F.explode(_token_ngrams(F.col("t"), n)).alias("ngram"))
         .distinct()
     )
-    if broadcast_bench:
-        bg = F.broadcast(bg)
     dg = (
         docs.select("doc_id", tokenize_expr(content_col).alias("t"))
         .filter(F.size("t") >= n)
         .select("doc_id", F.explode(_token_ngrams(F.col("t"), n)).alias("ngram"))
         .distinct()
     )
-    return dg.join(bg, "ngram").groupBy("doc_id").agg(
+    return dg.join(F.broadcast(bg), "ngram").groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_overlap"),
         F.min("ngram").alias("sample_ngram"),
     )
@@ -632,7 +627,6 @@ def duplicate_spans(
     n: int = 8,
     min_docs: int = 2,
     content_col: str = "content",
-    exact_keys: bool = False,
 ) -> DataFrame:
     """Cross-document duplicated-span detection — the exact-substring
     dedup signal (Lee et al. 2022, "Deduplicating Training Data Makes
@@ -666,18 +660,12 @@ def duplicate_spans(
 
     A 64-bit collision falsely marks ONE window duplicated with
     probability ~(windows^2)/2^65 — ~1e-4 corpus-wide at 55M windows,
-    zero observed effect on any gate; pass exact_keys=True to key on
-    the raw strings (heavier shuffles + a string-keyed checkpoint) when
-    auditable exactness matters more than bytes."""
-    key = (
-        F.col("ngram") if exact_keys else F.xxhash64("ngram")
-    )
-
+    zero observed effect on any gate."""
     pairs = (
         docs.select("doc_id", tokenize_expr(content_col).alias("t"))
         .filter(F.size("t") >= n)
         .select("doc_id", F.explode(_token_ngrams(F.col("t"), n)).alias("ngram"))
-        .select("doc_id", key.alias("k"))
+        .select("doc_id", F.xxhash64("ngram").alias("k"))
         .groupBy("doc_id", "k")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint(eager=True)

@@ -44,6 +44,7 @@ from .. import B, K1
 from .._pickle import register_by_value
 from ..analyze import NGRAM_MAX, NGRAM_MIN, tokenize_expr, tokenize_py
 from ..functions.varint import delta_decode_ids, positions_decode, varint_decode
+from .postings import explode_blocks
 
 RANGE_SIZE_DEFAULT = 8192  # doc_ids per WAND partition at test scale
 STRIDE = 1024  # doc_ids per pruning stride inside a range
@@ -1037,7 +1038,7 @@ class IndexReader:
             )
 
     def docmap(self) -> DataFrame:
-        from ..sources.segments import BID_PATTERN, SegmentStore, docmap_dirs
+        from ..sources.segments import SegmentStore, bid_col, docmap_dirs, drop_dead_versions
 
         # kb=<b> leaf dirs enumerated driver-side (one multi-root read of
         # partitioned dirs is rejected by Spark's partition discovery)
@@ -1047,12 +1048,7 @@ class IndexReader:
         t = self._tombstones_df()
         if t is None:
             return dm
-        dm = dm.withColumn(
-            "bid", F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1)
-        )
-        return dm.join(
-            t.select(F.col("dead_build").alias("bid"), "doc_id"), ["bid", "doc_id"], "left_anti"
-        ).drop("bid")
+        return drop_dead_versions(dm.withColumn("bid", bid_col()), t).drop("bid")
 
     def mget(self, doc_ids: list[int]) -> DataFrame:
         """ES `_mget`: fetch live documents by id in one request (the
@@ -1142,16 +1138,15 @@ class IndexReader:
             bid: max(1.0, avgdl_q / st["avgdl"]) if st["avgdl"] > 0 else 1.0
             for bid, st in zip(self.build_ids, self.build_stats)
         }
-        from ..sources.segments import BID_PATTERN
+        from ..sources.segments import bid_col
 
         mapping = F.create_map(
             *[F.lit(x) for kv in scale_by_build.items() for x in kv]
         )
-        bid = F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1)
         blocks = (
             self._read_parquet(dirs, "blocks")
             .filter(F.col("term").isin(terms))
-            .withColumn("bid", bid)
+            .withColumn("bid", bid_col())
             .withColumn("scale", F.element_at(mapping, F.col("bid")))
         )
         if not with_positions:
@@ -1682,10 +1677,12 @@ class IndexReader:
         query's blocks, the GLOBAL df window rides the pruned rows
         (_blocks_for_terms), then a pushed first/last_doc_id range filter
         keeps only blocks COVERING the doc (parquet min/max stats skip the
-        rest), and the Arrow kernel decodes just those few blocks to
-        locate the doc. Tombstoned versions: like every decode path, an
-        overwritten doc explains as absent only after compaction drops its
-        blocks; the live-version numbers are correct throughout."""
+        rest); explode_blocks decodes just those few blocks and the doc's
+        rows are kept. Tombstoned versions are dropped by the shared
+        dead-version rule, so an overwritten doc explains its live
+        version only."""
+        from ..sources.segments import drop_dead_versions
+
         terms = sorted(set(tokenize_py(query)))
         out_schema = (
             "term string, tf long, doc_len long, df long, "
@@ -1699,39 +1696,15 @@ class IndexReader:
             return empty
         covering = blocks.filter(
             (F.col("first_doc_id") <= doc_id) & (F.col("last_doc_id") >= doc_id)
-        ).select("term", "df", "doc_ids_varint", "tfs_varint", "dls_varint")
-
-        def kernel(batches):
-            import pyarrow as pa
-
-            for rb in batches:
-                t_out, tf_out, dl_out, df_out = [], [], [], []
-                cols = {n: rb.column(i) for i, n in enumerate(rb.schema.names)}
-                for i in range(rb.num_rows):
-                    ids = delta_decode_ids(cols["doc_ids_varint"][i].as_py())
-                    j = np.searchsorted(ids, doc_id)
-                    if j < len(ids) and ids[j] == doc_id:
-                        tfs = varint_decode(cols["tfs_varint"][i].as_py())
-                        dls = varint_decode(cols["dls_varint"][i].as_py())
-                        t_out.append(cols["term"][i].as_py())
-                        tf_out.append(int(tfs[j]))
-                        dl_out.append(int(dls[j]))
-                        df_out.append(int(cols["df"][i].as_py()))
-                if t_out:
-                    yield pa.record_batch(
-                        [
-                            pa.array(t_out, pa.string()),
-                            pa.array(tf_out, pa.int64()),
-                            pa.array(dl_out, pa.int64()),
-                            pa.array(df_out, pa.int64()),
-                        ],
-                        ["term", "tf", "doc_len", "df"],
-                    )
+        ).select("bid", "term", "df", "doc_ids_varint", "tfs_varint", "dls_varint")
+        rows = explode_blocks(covering).filter(F.col("doc_id") == doc_id)
+        hit = drop_dead_versions(rows, self._tombstones_df()).select(
+            "term", F.col("tf").cast("long").alias("tf"), "doc_len", "df"
+        )
 
         from ..functions.bm25 import idf_expr, tf_norm_expr
 
         n, avgdl = self.stats["N"], self.stats["avgdl"]
-        hit = covering.mapInArrow(kernel, "term string, tf long, doc_len long, df long")
         return (
             hit.withColumn("idf", idf_expr(F.col("df"), n))
             .withColumn("tf_norm", tf_norm_expr(F.col("tf"), F.col("doc_len"), avgdl))
@@ -1836,57 +1809,13 @@ class IndexReader:
         dirs = self._bucket_dirs(terms)
         if not dirs:
             return empty
+        from ..sources.segments import bid_col, drop_dead_versions
+
         blocks = self._read_parquet(dirs, "blocks").filter(F.col("term").isin(terms))
         tomb = self._tombstones_df()
-        if tomb is None:
-            blocks = blocks.select("doc_ids_varint")
-
-            def ids_kernel(batches):
-                import pyarrow as pa
-
-                for rb in batches:
-                    parts = [delta_decode_ids(v.as_py()) for v in rb.column(0)]
-                    if parts:
-                        u = np.unique(np.concatenate(parts))
-                        yield pa.record_batch([pa.array(u, type=pa.int64())], ["doc_id"])
-
-            return blocks.mapInArrow(ids_kernel, "doc_id long").distinct()
-
-        from ..sources.segments import BID_PATTERN
-
-        blocks = blocks.select(
-            F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1).alias("bid"),
-            "doc_ids_varint",
-        )
-
-        def ids_bid_kernel(batches):
-            import pyarrow as pa
-
-            for rb in batches:
-                bids, ids = [], []
-                for b, v in zip(rb.column(0), rb.column(1)):
-                    d = delta_decode_ids(v.as_py())
-                    ids.append(d)
-                    bids.extend([b.as_py()] * len(d))
-                if ids:
-                    yield pa.record_batch(
-                        [
-                            pa.array(bids, pa.string()),
-                            pa.array(np.concatenate(ids), pa.int64()),
-                        ],
-                        ["bid", "doc_id"],
-                    )
-
-        cands = blocks.mapInArrow(ids_bid_kernel, "bid string, doc_id long")
-        return (
-            cands.join(
-                tomb.select(F.col("dead_build").alias("bid"), "doc_id"),
-                ["bid", "doc_id"],
-                "left_anti",
-            )
-            .select("doc_id")
-            .distinct()
-        )
+        tag = [] if tomb is None else [bid_col().alias("bid")]
+        rows = explode_blocks(blocks.select(*tag, "doc_ids_varint"))
+        return drop_dead_versions(rows, tomb).select("doc_id").distinct()
 
     def sorted_topk(
         self,

@@ -24,6 +24,15 @@ prune bucket directories without a JVM round-trip. At query time only the
 buckets of the query's terms are read at all (partition pruning by
 construction), and parquet predicate pushdown on `term` prunes row groups
 within them.
+
+Merge-on-read ownership: this module owns the dead-version rule and the
+tombstone writes. `bid_col` is the one place a row learns the build it was
+read from; `drop_dead_versions` is the one anti-join of rows carrying
+(bid, doc_id) against the tombstone union, used by every reader path
+(docmap, candidate ids, explain) and by compaction; `_write_tombstones` is
+the one writer, shared by the overwrite path (write_tombstones) and
+delete_by_query. Decoding posting blocks back into rows belongs to
+operators/postings.py (explode_blocks).
 """
 
 from __future__ import annotations
@@ -41,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..analyze import NGRAM_MAX, NGRAM_MIN, edge_ngrams_expr
 from ..corpus import DOCS_COLUMNS
-from ..operators.postings import BLOCK_SIZE, build_postings, hot_terms
+from ..operators.postings import BLOCK_SIZE, build_postings, explode_blocks, hot_terms
 from ..stats import (
     corpus_scalars_full,
     doc_freqs,
@@ -53,12 +62,18 @@ from ..stats import (
 DEFAULT_BUCKETS = 16
 DOCMAP_BUCKETS = 8  # key-hash buckets for the docmap (and tombstones)
 
-# Build-id extraction from _metadata.file_path: the GREEDY leading .* anchors
+# Build-id extraction from a file path (bid_col): the GREEDY leading .* anchors
 # the match to the LAST '/builds/' component, so a store rooted under a path
 # that itself contains 'builds' (e.g. /data/builds/2026/idx) still maps every
 # file to its own build dir (ADVICE r2: a first-match regex mis-bucketed all
 # files in that layout, silently defeating the tombstone anti-joins).
 BID_PATTERN = "^.*/builds/([^/]+)/"
+
+
+def bid_col():
+    """The build id of each row, taken from the path of the file it was
+    read from; the (bid, doc_id) pair names one version of a doc."""
+    return F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1)
 
 
 def term_bucket_py(term: str, n_buckets: int) -> int:
@@ -341,40 +356,13 @@ def build_multifield_index(
     with _tf_checkpoint(spark, tf_df, f"tf_ckpt_{build_id}") as (tf_f, ckpt_bytes):
         _trace("tf_fields", t0)
 
-        # per-field scalars in ONE aggregation (map-side combinable)
-        t0 = time.monotonic()
-        frows = (
-            tf_f.groupBy("field", "doc_id")
-            .agg(F.max("doc_len").alias("doc_len"))
-            .groupBy("field")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg("doc_len").alias("avgdl"),
-                F.sum("doc_len").alias("tot"),
-            )
-            .collect()
-        )
-        field_stats = {
-            fields[int(r["field"])]: {
-                "N": int(r["n"]),
-                "avgdl": float(r["avgdl"]),
-                "total_tokens": int(r["tot"]),
-            }
-            for r in frows
-        }
-        missing_f = [f for f in fields if f not in field_stats]
-        if missing_f:
-            raise ValueError(f"fields analyzed to zero tokens corpus-wide: {missing_f}")
-        prim = field_stats[fields[0]]
-        avgdl_map = {"": prim["avgdl"]}
-        avgdl_map.update(
-            {f: field_stats[f]["avgdl"] for f in fields[1:]}
-        )
-        _trace("field_scalars", t0)
-
         fname = F.element_at(
             F.array(*[F.lit(f) for f in fields]), F.col("field") + 1
         )
+        t0 = time.monotonic()
+        mf_kw = _multifield_kw(tf_f, fname, fields)
+        _trace("field_scalars", t0)
+
         term2 = F.when(F.col("field") == 0, F.col("term")).otherwise(
             F.concat(fname, F.lit(FIELD_SEP), F.col("term"))
         )
@@ -398,13 +386,48 @@ def build_multifield_index(
             n_salts=n_salts,
             bucket_batch=bucket_batch,
             publish=publish,
-            scalars=(prim["N"], prim["avgdl"], prim["total_tokens"]),
-            avgdl_map=avgdl_map,
-            ngram_filter=~F.col("term").contains(FIELD_SEP),
-            extra_stats={"fields": field_stats, "primary": fields[0]},
             shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
             ckpt_bytes=ckpt_bytes,
+            **mf_kw,
         )
+
+
+def _multifield_kw(tf: DataFrame, field, fields) -> dict:
+    """Per-field statistics of multifield tf rows, as the _build_from_tf
+    keyword arguments of a multifield build. `field` gives each row's
+    field name; `fields` names the fields that must hold tokens, the
+    primary first. One aggregation (map-side combinable) yields N, avgdl
+    and token mass per field: the primary's become the top-level scalars,
+    each field's avgdl feeds the encoder's per-field block-max bounds, and
+    the whole map lands in stats.json under "fields"."""
+    frows = (
+        tf.groupBy(field.alias("f"), "doc_id")
+        .agg(F.max("doc_len").alias("doc_len"))
+        .groupBy("f")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.avg("doc_len").alias("avgdl"),
+            F.sum("doc_len").alias("tot"),
+        )
+        .collect()
+    )
+    field_stats = {
+        r["f"]: {"N": int(r["n"]), "avgdl": float(r["avgdl"]), "total_tokens": int(r["tot"])}
+        for r in frows
+    }
+    missing = [f for f in fields if f not in field_stats]
+    if missing:
+        raise ValueError(f"fields analyzed to zero tokens corpus-wide: {missing}")
+    primary = fields[0]
+    prim = field_stats[primary]
+    avgdl_map = {"": prim["avgdl"]}
+    avgdl_map.update({f: st["avgdl"] for f, st in field_stats.items() if f != primary})
+    return dict(
+        scalars=(prim["N"], prim["avgdl"], prim["total_tokens"]),
+        avgdl_map=avgdl_map,
+        ngram_filter=~F.col("term").contains(FIELD_SEP),
+        extra_stats={"fields": field_stats, "primary": primary},
+    )
 
 
 def _build_from_tf(
@@ -716,12 +739,12 @@ def _build_from_tf(
 TOMB_SCHEMA = "dead_build string, doc_id long, doc_len long"
 
 
-def tombstone_dirs(store: SegmentStore, builds: list[str], buckets: list[int] | None = None) -> list[str]:
-    """Tombstone kb=<b> leaf dirs across builds; `buckets` prunes to the
-    key-hash buckets of interest (None = all present)."""
+def _kb_dirs(store: SegmentStore, builds: list[str], sub: str, buckets: list[int] | None) -> list[str]:
+    """The kb=<b> leaf dirs of <build>/<sub> across builds; `buckets`
+    prunes to the key-hash buckets of interest (None = all present)."""
     dirs = []
     for b in builds:
-        root = os.path.join(store.build_dir(b), "tombstones")
+        root = os.path.join(store.build_dir(b), sub)
         if not os.path.isdir(root):
             continue
         kbs = sorted(d for d in os.listdir(root) if d.startswith("kb="))
@@ -730,23 +753,18 @@ def tombstone_dirs(store: SegmentStore, builds: list[str], buckets: list[int] | 
             kbs = [d for d in kbs if d in want]
         dirs += [os.path.join(root, d) for d in kbs]
     return dirs
+
+
+def tombstone_dirs(store: SegmentStore, builds: list[str], buckets: list[int] | None = None) -> list[str]:
+    """Tombstone kb=<b> leaf dirs across builds, pruned to `buckets`."""
+    return _kb_dirs(store, builds, "tombstones", buckets)
 
 
 def docmap_dirs(store: SegmentStore, builds: list[str], buckets: list[int] | None = None) -> list[str]:
     """Docmap kb=<b> leaf dirs across builds, pruned to `buckets` — the
     read set of the tombstone join (batch-key buckets only, never the
     whole corpus docmap)."""
-    dirs = []
-    for b in builds:
-        root = os.path.join(store.build_dir(b), "docmap")
-        if not os.path.isdir(root):
-            continue
-        kbs = sorted(d for d in os.listdir(root) if d.startswith("kb="))
-        if buckets is not None:
-            want = {f"kb={kb}" for kb in buckets}
-            kbs = [d for d in kbs if d in want]
-        dirs += [os.path.join(root, d) for d in kbs]
-    return dirs
+    return _kb_dirs(store, builds, "docmap", buckets)
 
 
 def _tombstones_union(
@@ -759,6 +777,59 @@ def _tombstones_union(
     if not dirs:
         return None
     return spark.read.schema(TOMB_SCHEMA).parquet(*dirs)
+
+
+def drop_dead_versions(rows: DataFrame, tomb: DataFrame | None) -> DataFrame:
+    """The dead-version rule: `rows` carrying (bid, doc_id) minus the
+    versions the tombstone union `tomb` marks dead. A tombstone names one
+    (build, doc) version, so a doc re-ingested in a newer build keeps its
+    live version. No tombstones (None) leaves the plan untouched."""
+    if tomb is None:
+        return rows
+    return rows.join(
+        tomb.select(F.col("dead_build").alias("bid"), "doc_id"), ["bid", "doc_id"], "left_anti"
+    )
+
+
+def _write_tombstones(
+    spark: SparkSession,
+    store: SegmentStore,
+    build_id: str,
+    live: list[str],
+    pick,
+    buckets: list[int] | None = None,
+) -> dict:
+    """The one tombstone writer. Reads the docmap rows of the `live`
+    builds (pruned to key `buckets`), tagged with their build; `pick`
+    narrows them to the victims; versions already dead are dropped, so a
+    doc is never subtracted from the stats twice. The rest land as
+    (dead_build, doc_id, doc_len) rows under <build_id>/tombstones/kb=<b>;
+    their count and token mass go to the _tombstones.json marker that
+    readers correct N and avgdl from."""
+    bdir = store.build_dir(build_id)
+    n, dl_sum = 0, 0
+    dm_dirs = docmap_dirs(store, live, buckets)
+    if dm_dirs:
+        victims = pick(spark.read.parquet(*dm_dirs).withColumn("bid", bid_col())).select(
+            "bid", "doc_id", "doc_len", key_bucket_expr().alias("kb")
+        )
+        dead = drop_dead_versions(victims, _tombstones_union(spark, store, live, buckets))
+        (
+            dead.withColumnRenamed("bid", "dead_build")
+            .write.partitionBy("kb")
+            .mode("overwrite")
+            .parquet(os.path.join(bdir, "tombstones"))
+        )
+        written = _tombstones_union(spark, store, [build_id])
+        if written is not None:
+            agg = written.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
+            ).collect()[0]
+            n, dl_sum = int(agg["n"]), int(agg["dl"])
+    meta = {"n": n, "doc_len_sum": dl_sum}
+    _atomic_write_json(os.path.join(bdir, "_tombstones.json"), meta)
+    return meta
 
 
 def write_tombstones(spark: SparkSession, out_dir: str, build_id: str, new_docs: DataFrame) -> dict:
@@ -784,20 +855,16 @@ def write_tombstones(spark: SparkSession, out_dir: str, build_id: str, new_docs:
     distinct-collect over the batch keys (<= DOCMAP_BUCKETS ints).
     """
     store = SegmentStore(out_dir)
-    bdir = store.build_dir(build_id)
-    marker = os.path.join(bdir, "_tombstones.json")
+    marker = os.path.join(store.build_dir(build_id), "_tombstones.json")
     if os.path.exists(marker):
         with open(marker) as f:
             return json.load(f)
     live = [b for b in store.live_builds() if b != build_id]
-    tdir = os.path.join(bdir, "tombstones")
-    n, dl_sum = 0, 0
     keys = new_docs.select("repo", "path").distinct()
     batch_buckets = sorted(
         int(r["kb"]) for r in keys.select(key_bucket_expr().alias("kb")).distinct().collect()
     )
-    dm_dirs = docmap_dirs(store, live, batch_buckets)
-    if not dm_dirs and live and not docmap_dirs(store, live):
+    if live and not docmap_dirs(store, live):
         # pruned dirs may legitimately be empty (no live bucket overlaps
         # the batch keys) — but live builds with NO kb=<b> docmap buckets
         # AT ALL are a pre-bucketed-layout store, and writing no
@@ -807,30 +874,14 @@ def write_tombstones(spark: SparkSession, out_dir: str, build_id: str, new_docs:
             f"buckets — store predates the bucketed docmap layout. "
             f"Re-run compact() (or rebuild) before streaming overwrites."
         )
-    if dm_dirs:
-        bid = F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1)
-        dead = (
-            spark.read.parquet(*dm_dirs)
-            .withColumn("dead_build", bid)
-            .join(keys, ["repo", "path"])
-            .select("dead_build", "doc_id", "doc_len", key_bucket_expr().alias("kb"))
-        )
-        prior = _tombstones_union(spark, store, live, buckets=batch_buckets)
-        if prior is not None:
-            dead = dead.join(
-                prior.select("dead_build", "doc_id"), ["dead_build", "doc_id"], "left_anti"
-            )
-        dead.write.partitionBy("kb").mode("overwrite").parquet(tdir)
-        written = _tombstones_union(spark, store, [build_id])
-        if written is not None:
-            agg = written.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
-            ).collect()[0]
-            n, dl_sum = int(agg["n"]), int(agg["dl"])
-    meta = {"n": n, "doc_len_sum": dl_sum}
-    _atomic_write_json(marker, meta)
-    return meta
+    return _write_tombstones(
+        spark,
+        store,
+        build_id,
+        live,
+        lambda dm: dm.join(keys, ["repo", "path"]),
+        buckets=batch_buckets,
+    )
 
 
 def append_segment(
@@ -909,37 +960,23 @@ def delete_by_query(
         store.append_live(build_id)
         return {"build_id": build_id, "deleted": meta["n"], "doc_len_sum": meta["doc_len_sum"]}
 
-    dm_dirs = docmap_dirs(store, live)
-    if not dm_dirs:
+    if not docmap_dirs(store, live):
         raise RuntimeError(f"live builds {live} in {out_dir} have no kb=<b> docmap buckets")
-    bid = F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1)
-    dm = spark.read.parquet(*dm_dirs).withColumn("dead_build", bid)
-    prior = _tombstones_union(spark, store, live)
-    if prior is not None:
-        dm = dm.join(
-            prior.select("dead_build", "doc_id"), ["dead_build", "doc_id"], "left_anti"
-        )
-    if flt is not None:
-        dm = dm.filter(flt)
+    cand = None
     if query is not None:
         from ..analyze import tokenize_py
         from ..operators.wand import IndexReader
 
         terms = sorted(set(tokenize_py(query)))
         cand = IndexReader(spark, out_dir).candidate_doc_ids(terms)
-        dm = dm.join(cand, "doc_id", "left_semi")
-    dead = dm.select("dead_build", "doc_id", "doc_len", key_bucket_expr().alias("kb"))
 
-    os.makedirs(bdir, exist_ok=True)
-    dead.write.partitionBy("kb").mode("overwrite").parquet(os.path.join(bdir, "tombstones"))
-    written = _tombstones_union(spark, store, [build_id])
-    n, dl_sum = 0, 0
-    if written is not None:
-        agg = written.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl"),
-        ).collect()[0]
-        n, dl_sum = int(agg["n"]), int(agg["dl"])
+    def pick(dm: DataFrame) -> DataFrame:
+        if flt is not None:
+            dm = dm.filter(flt)
+        if cand is not None:
+            dm = dm.join(cand, "doc_id", "left_semi")
+        return dm
+
     live_stats = []
     for b in live:
         with open(os.path.join(store.build_dir(b), "stats.json")) as f:
@@ -964,10 +1001,12 @@ def delete_by_query(
             for f in live_stats[-1]["fields"]
         }
         del_stats["primary"] = live_stats[-1].get("primary")
+    # stats.json first: a replay trusts the marker the writer leaves last
+    os.makedirs(bdir, exist_ok=True)
     _atomic_write_json(os.path.join(bdir, "stats.json"), del_stats)
-    _atomic_write_json(marker, {"n": n, "doc_len_sum": dl_sum})
+    meta = _write_tombstones(spark, store, build_id, live, pick)
     store.append_live(build_id)
-    return {"build_id": build_id, "deleted": n, "doc_len_sum": dl_sum}
+    return {"build_id": build_id, "deleted": meta["n"], "doc_len_sum": meta["doc_len_sum"]}
 
 
 def update_by_query(
@@ -1074,9 +1113,6 @@ def compact(
     postings are lossless. Publishes the merged build as the single live
     segment, then GCs the inputs.
     """
-    import pyarrow as pa
-
-    from ..functions.varint import delta_decode_ids, positions_decode, varint_decode
     from ..operators.wand import IndexReader
 
     store = SegmentStore(out_dir)
@@ -1086,95 +1122,27 @@ def compact(
     build_id = build_id or f"compact_{int(len(live))}_{live[-1]}"
     reader = IndexReader(spark, out_dir)
 
-    # all blocks of all live segments in ONE read -> posting rows (Arrow
-    # kernel); the originating segment rides along so tombstoned versions
-    # can be dropped before the rebuild
-    all_dirs = []
-    for d in reader.bdirs:
-        with open(os.path.join(d, "stats.json")) as f:
-            nb = json.load(f)["n_buckets"]
-        all_dirs += [
-            os.path.join(d, f"bucket={b}")
-            for b in range(nb)
-            if os.path.exists(os.path.join(d, f"bucket={b}"))
-        ]
-    # positions survive compaction iff every live segment indexed them
-    has_pos = all(st.get("positions") for st in reader.build_stats)
-    block_cols = ["bid", "term", "doc_ids_varint", "tfs_varint", "dls_varint"] + (
-        ["pos_varint"] if has_pos else []
-    )
-    blocks = None
-    if all_dirs:
-        blocks = (
-            spark.read.parquet(*all_dirs)
-            .withColumn(
-                "bid", F.regexp_extract(F.col("_metadata.file_path"), BID_PATTERN, 1)
-            )
-            .select(*block_cols)
-        )
-
-    def explode_blocks(batches):
-        import numpy as np
-
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            ids_l, tfs_l, dls_l, reps = [], [], [], []
-            pos_vals_l = []
-            t_col = tbl["term"].to_pylist()
-            b_col = tbl["bid"].to_pylist()
-            for i in range(tbl.num_rows):
-                ids = delta_decode_ids(tbl["doc_ids_varint"][i].as_py())
-                tfs = varint_decode(tbl["tfs_varint"][i].as_py())
-                dls = varint_decode(tbl["dls_varint"][i].as_py())
-                ids_l.append(ids)
-                tfs_l.append(tfs.astype("int64"))
-                dls_l.append(dls.astype("int64"))
-                reps.append(len(ids))
-                if has_pos:
-                    pos_vals_l.append(
-                        positions_decode(
-                            tbl["pos_varint"][i].as_py(), tfs.astype("int64")
-                        )
-                    )
-            tfs_flat = (
-                np.concatenate(tfs_l) if tfs_l else np.array([], dtype="int64")
-            )
-            cols = {
-                "bid": pa.array(np.repeat(np.array(b_col, dtype=object), reps)),
-                "doc_id": pa.array(np.concatenate(ids_l) if ids_l else [], type=pa.int64()),
-                "term": pa.array(np.repeat(np.array(t_col, dtype=object), reps)),
-                "tf": pa.array(tfs_flat.astype("int32")),
-                "doc_len": pa.array(np.concatenate(dls_l) if dls_l else [], type=pa.int64()),
-            }
-            if has_pos:
-                vals = (
-                    np.concatenate(pos_vals_l)
-                    if pos_vals_l
-                    else np.array([], dtype="int64")
-                )
-                offs = np.concatenate(([0], np.cumsum(tfs_flat))).astype(np.int32)
-                cols["positions"] = pa.ListArray.from_arrays(
-                    pa.array(offs, type=pa.int32()),
-                    pa.array(vals.astype("int32"), type=pa.int32()),
-                )
-            yield from pa.table(cols).to_batches()
-
-    if blocks is None:
+    # all blocks of all live segments in ONE read -> posting rows; the
+    # originating segment rides along so tombstoned versions can be
+    # dropped before the rebuild
+    all_dirs = [
+        os.path.join(d, f"bucket={b}")
+        for d, st in zip(reader.bdirs, reader.build_stats)
+        for b in range(st["n_buckets"])
+        if os.path.exists(os.path.join(d, f"bucket={b}"))
+    ]
+    if not all_dirs:
         raise FileNotFoundError(
             f"compact: no posting buckets found in any live segment of {out_dir} "
             f"(live={live}) — nothing to merge"
         )
-    tf_schema = "bid string, doc_id long, term string, tf int, doc_len long"
-    if has_pos:
-        tf_schema += ", positions array<int>"
-    tf = blocks.mapInArrow(explode_blocks, tf_schema)
-    tomb = _tombstones_union(spark, store, live)
-    if tomb is not None:
-        # drop shadowed versions physically — the merged segment carries
-        # exact stats (N, avgdl, df) and no tombstones
-        tf = tf.join(
-            tomb.select(F.col("dead_build").alias("bid"), "doc_id"), ["bid", "doc_id"], "left_anti"
-        )
+    # positions survive compaction iff every live segment indexed them
+    has_pos = all(st.get("positions") for st in reader.build_stats)
+    streams = ["doc_ids_varint", "tfs_varint", "dls_varint"] + (["pos_varint"] if has_pos else [])
+    blocks = spark.read.parquet(*all_dirs).select(bid_col().alias("bid"), "term", *streams)
+    # drop shadowed versions physically — the merged segment carries
+    # exact stats (N, avgdl, df) and no tombstones
+    tf = drop_dead_versions(explode_blocks(blocks), _tombstones_union(spark, store, live))
     tf = tf.drop("bid")
     with _tf_checkpoint(spark, tf, "compact_tf") as (tf, ckpt_bytes):
         docmap = reader.docmap()
@@ -1198,36 +1166,7 @@ def compact(
                 F.col("term").contains(FIELD_SEP),
                 F.substring_index("term", FIELD_SEP, 1),
             ).otherwise(F.lit(prim_name))
-            frows = (
-                tf.groupBy(fld.alias("f"), "doc_id")
-                .agg(F.max("doc_len").alias("doc_len"))
-                .groupBy("f")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.avg("doc_len").alias("avgdl"),
-                    F.sum("doc_len").alias("tot"),
-                )
-                .collect()
-            )
-            field_stats = {
-                r["f"]: {
-                    "N": int(r["n"]),
-                    "avgdl": float(r["avgdl"]),
-                    "total_tokens": int(r["tot"]),
-                }
-                for r in frows
-            }
-            prim = field_stats[prim_name]
-            avgdl_map = {"": prim["avgdl"]}
-            avgdl_map.update(
-                {f: s["avgdl"] for f, s in field_stats.items() if f != prim_name}
-            )
-            mf_kw = dict(
-                scalars=(prim["N"], prim["avgdl"], prim["total_tokens"]),
-                avgdl_map=avgdl_map,
-                ngram_filter=~F.col("term").contains(FIELD_SEP),
-                extra_stats={"fields": field_stats, "primary": prim_name},
-            )
+            mf_kw = _multifield_kw(tf, fld, (prim_name,))
         manifest = _build_from_tf(
             spark,
             tf,
@@ -1587,10 +1526,7 @@ def verify_index(spark: SparkSession, out_dir: str) -> dict:
             dm_all = docmap_dirs(store, live)
             if dm_all:
                 dm = spark.read.parquet(*dm_all).select(
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"), BID_PATTERN, 1
-                    ).alias("dead_build"),
-                    "doc_id",
+                    bid_col().alias("dead_build"), "doc_id"
                 )
                 orphan = (
                     t.select("dead_build", "doc_id")

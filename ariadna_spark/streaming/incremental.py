@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..corpus import DOCS_COLUMNS
-from ..sources.segments import SegmentStore, build_index, maybe_compact, write_tombstones
+from ..sources.segments import SegmentStore, append_segment, maybe_compact, write_tombstones
 
 DOCS_DDL = (
     "doc_id long, repo string, path string, commit string, lang string, "
@@ -117,20 +117,9 @@ def start_incremental_index(
         os.makedirs(bdir, exist_ok=True)
         with open(fp_path, "w") as f:
             json.dump(fp, f)
-        build_index(
-            batch_df.sparkSession,
-            batch_df.select(*DOCS_COLUMNS),
-            out_dir,
-            build_id=build_id,
-            n_buckets=n_buckets,
-            publish=False,
-        )
         # per-doc overwrite: a re-delivered (repo, path) key REPLACES the
         # version in any older live segment (the ES _id contract)
-        write_tombstones(
-            batch_df.sparkSession, out_dir, build_id, batch_df.select(*DOCS_COLUMNS)
-        )
-        store.append_live(build_id)
+        append_segment(batch_df.sparkSession, batch_df, out_dir, build_id, n_buckets=n_buckets)
         if auto_compact:
             maybe_compact(
                 batch_df.sparkSession,

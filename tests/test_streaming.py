@@ -119,6 +119,12 @@ def test_overwrite_masks_old_version(spark, overwrite_corpus, tmp_path):
     assert [r["doc_id"] for r in rows if r["query_id"] == 1] == [0]
     assert reader.scores(["oldtoken"]).count() == 0
     assert [r["doc_id"] for r in reader.scores(["newtoken"]).collect()] == [0]
+    # _explain breaks down the live version only: one merge row, no
+    # oldtoken row, and its score is the one topk reports for doc 0
+    ex = reader.explain_score(0, "merge oldtoken").collect()
+    assert [r["term"] for r in ex] == ["merge"]
+    top0 = next(r for r in both if r["doc_id"] == 0)
+    assert ex[0]["score"] == pytest.approx(top0["score"], abs=1e-9)
 
     # every other range verb masks the dead version too: a query only the
     # dead version of doc 0 satisfies finds nothing, the live one finds it

@@ -107,3 +107,52 @@ def test_positions_length_guard():
     buf = varint_encode(np.asarray([1, 2, 3], dtype=np.uint64))
     with pytest.raises(ValueError, match="positions stream length"):
         positions_decode(buf, np.asarray([2], dtype=np.int64))
+
+
+@given(
+    st.lists(st.sets(st.integers(0, 2**40), min_size=1, max_size=40), min_size=1, max_size=8),
+    st.integers(0, 2**32 - 1),
+    st.booleans(),
+)
+@settings(max_examples=100, deadline=None)
+def test_explode_batch_matches_per_block_decode(id_sets, seed, sliced):
+    """explode_blocks decodes a whole Arrow batch of posting blocks with
+    one varint decode per stream; the per-block decode loop it replaced is
+    the reference. Covers a sliced batch (non-zero Arrow offset)."""
+    import pyarrow as pa
+
+    from ariadna_spark.functions.varint import positions_decode
+    from ariadna_spark.operators.postings import _explode_batch
+
+    rng = np.random.default_rng(seed)
+    cols: dict = {k: [] for k in ("term", "doc_ids_varint", "tfs_varint", "dls_varint", "pos_varint")}
+    for b, ids in enumerate(id_sets):
+        ids = np.asarray(sorted(ids), dtype=np.int64)
+        tfs = rng.integers(1, 5, ids.size).astype(np.uint64)
+        gaps = [
+            np.diff(np.sort(rng.choice(500, int(t), replace=False)), prepend=0) for t in tfs
+        ]
+        cols["term"].append(f"t{b}")
+        cols["doc_ids_varint"].append(delta_encode_ids(ids))
+        cols["tfs_varint"].append(varint_encode(tfs))
+        cols["dls_varint"].append(varint_encode(rng.integers(0, 2**40, ids.size).astype(np.uint64)))
+        cols["pos_varint"].append(varint_encode(np.concatenate(gaps).astype(np.uint64)))
+    rb = pa.RecordBatch.from_pydict(cols)
+    if sliced and rb.num_rows > 1:
+        rb = rb.slice(1)
+    got = _explode_batch(rb)
+
+    want: dict = {k: [] for k in ("doc_id", "term", "tf", "doc_len", "positions")}
+    for i in range(rb.num_rows):
+        ids = delta_decode_ids(rb.column("doc_ids_varint")[i].as_py())
+        tfs = varint_decode(rb.column("tfs_varint")[i].as_py()).astype(np.int64)
+        pos = positions_decode(rb.column("pos_varint")[i].as_py(), tfs)
+        want["doc_id"] += ids.tolist()
+        want["term"] += [rb.column("term")[i].as_py()] * ids.size
+        want["tf"] += tfs.tolist()
+        want["doc_len"] += varint_decode(rb.column("dls_varint")[i].as_py()).tolist()
+        want["positions"] += [p.tolist() for p in np.split(pos, np.cumsum(tfs)[:-1])]
+    assert got.to_pydict() == want
+    ids_only = _explode_batch(rb.select(["doc_ids_varint"]))
+    assert ids_only.schema.names == ["doc_id"]
+    assert ids_only.column(0).to_pylist() == want["doc_id"]
