@@ -1155,15 +1155,6 @@ class IndexReader:
             "df", F.sum("n_docs").over(Window.partitionBy("term")).cast("long")
         )
 
-    def idf_for_terms(self, terms: list[str]) -> dict[str, float]:
-        """Driver-side idf lookup (kept for diagnostics/tests; the query
-        path no longer calls this — df rides along with the blocks)."""
-        n_docs = self.stats["N"]
-        dfs = self._df_for_terms(terms)
-        if dfs is None:
-            return {}
-        return {r["term"]: _idf(int(r["df"]), n_docs) for r in dfs.collect()}
-
     def _prefix_terms_df(self, prefix: str, max_terms: int = 256) -> DataFrame | None:
         """Edge-ngram prefix expansion AS A PLAN: ngram-bucket read with a
         pushed-down `ng =` predicate, per-term df summed across segments,
@@ -1634,8 +1625,6 @@ class IndexReader:
         vocabulary rows."""
         from collections import Counter
 
-        from ..functions.bm25 import idf_py
-
         empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
         row = (
             docs.filter(F.col("doc_id") == doc_id).select("content").collect()
@@ -1646,18 +1635,11 @@ class IndexReader:
         if not tf:
             return empty
         terms = sorted(tf)
-        dirs = self._terms_dirs()
-        df_rows = (
-            self._read_parquet(dirs, "terms")
-            .filter(F.col("term").isin(terms))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .collect()
-        )
+        dfs = self._df_for_terms(terms)
         n = self.stats["N"]
-        dfm = {r["term"]: int(r["df"]) for r in df_rows}
+        dfm = {r["term"]: int(r["df"]) for r in dfs.collect()} if dfs is not None else {}
         ranked = sorted(
-            ((tf[t] * idf_py(dfm[t], n), t) for t in terms if t in dfm),
+            ((tf[t] * _idf(dfm[t], n), t) for t in terms if t in dfm),
             key=lambda st_: (-st_[0], st_[1]),
         )
         selected = sorted(t for _, t in ranked[:max_query_terms])
@@ -1680,7 +1662,8 @@ class IndexReader:
         rest); explode_blocks decodes just those few blocks and the doc's
         rows are kept. Tombstoned versions are dropped by the shared
         dead-version rule, so an overwritten doc explains its live
-        version only."""
+        version only, and idf clamps df to the live N exactly as the
+        kernels' _idf does, so the scores sum to the doc's top-k score."""
         from ..sources.segments import drop_dead_versions
 
         terms = sorted(set(tokenize_py(query)))
@@ -1706,7 +1689,7 @@ class IndexReader:
 
         n, avgdl = self.stats["N"], self.stats["avgdl"]
         return (
-            hit.withColumn("idf", idf_expr(F.col("df"), n))
+            hit.withColumn("idf", idf_expr(F.least(F.col("df"), F.lit(n)), n))
             .withColumn("tf_norm", tf_norm_expr(F.col("tf"), F.col("doc_len"), avgdl))
             .withColumn("score", F.col("idf") * F.col("tf_norm"))
             .orderBy("term")

@@ -1212,7 +1212,7 @@ def q_embedding_ann_incremental(spark, sf_dir) -> DataFrame:
     CLEAN embeddings table — if merge-on-read failed to mask a single
     overwritten version, its stale row (or its duplicate vec_id) would
     surface in some query's top-k and break the hash."""
-    from .operators.similarity import ivf_store_append, ivf_store_read, ivf_store_write, ivf_topk_many
+    from .operators.similarity import ivf_store_read, ivf_store_write, ivf_topk_many, vector_store_append
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         F.col("vec_id").cast("long").alias("vec_id"),
@@ -1227,7 +1227,7 @@ def q_embedding_ann_incremental(spark, sf_dir) -> DataFrame:
         ).otherwise(F.col("embedding"))
         b0 = emb.select("vec_id", stale.alias("embedding"))
         ivf_store_write(b0, store, build_id="b000000", n_centroids=_ANNB_CENTROIDS)
-        ivf_store_append(
+        vector_store_append(
             emb.filter(F.col("vec_id") % 5 == 0), store, build_id="b000001"
         )
         return store
@@ -3619,16 +3619,16 @@ def q_embedding_lsh(spark, sf_dir) -> DataFrame:
     paired: the hyperplanes are deterministic constants (splitmix64), so
     the oracle SQL inlines them and replays the exact bucket assignment,
     multi-probe candidate generation, and cosine re-score."""
-    from .operators.similarity import lsh_index_read, lsh_index_write, lsh_topk
+    from .operators.similarity import lsh_store_read, lsh_store_write, lsh_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
     def make() -> str:
         out = _gate_dir("ann_lsh_")
-        lsh_index_write(emb, out, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES)
+        lsh_store_write(emb, out, n_planes=_LSH_PLANES, n_tables=_LSH_TABLES)
         return out
 
-    indexed, tables = lsh_index_read(spark, _gate_memo("ann_lsh", sf_dir, make))
+    indexed, tables = lsh_store_read(spark, _gate_memo("ann_lsh", sf_dir, make))
     q = list(emb.filter(F.col("vec_id") == _LSH_QVEC).select("embedding").first()[0])
     return lsh_topk(indexed, tables, q, k=10, probe_hamming=1).select(
         "vec_id", F.round("cos", 4).alias("cos_r")
@@ -3739,16 +3739,16 @@ def q_embedding_ivf(spark, sf_dir) -> DataFrame:
     as SQL literals, exactly as the LSH planes are inlined. Store
     assignment is the map-side ivf_centroid_expr; the n_probe candidate
     fetch partition-prunes against the store layout."""
-    from .operators.similarity import ivf_index_read, ivf_index_write, ivf_topk
+    from .operators.similarity import ivf_store_read, ivf_store_write, ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
     def make() -> str:
         out = _gate_dir("ann_ivf_")
-        ivf_index_write(emb, out, centroids=_ivf_gate_centroids(sf_dir))
+        ivf_store_write(emb, out, centroids=_ivf_gate_centroids(sf_dir))
         return out
 
-    indexed, centroids = ivf_index_read(spark, _gate_memo("ann_ivf", sf_dir, make))
+    indexed, centroids = ivf_store_read(spark, _gate_memo("ann_ivf", sf_dir, make))
     q = list(emb.filter(F.col("vec_id") == _IVF_QVEC).select("embedding").first()[0])
     return ivf_topk(indexed, centroids, q, k=10, n_probe=_IVF_NPROBE).select(
         "vec_id", F.round("cos", 4).alias("cos_r")

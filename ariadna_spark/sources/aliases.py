@@ -26,14 +26,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import uuid
 
-
-def _atomic_write_json(path: str, obj) -> None:
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+from .segments import _atomic_write_json
 
 
 class AliasRegistry:

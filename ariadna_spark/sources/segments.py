@@ -61,6 +61,7 @@ from ..stats import (
 
 DEFAULT_BUCKETS = 16
 DOCMAP_BUCKETS = 8  # key-hash buckets for the docmap (and tombstones)
+BUCKET_BATCH = 16  # term buckets whose postings one Spark job writes
 
 # Build-id extraction from a file path (bid_col): the GREEDY leading .* anchors
 # the match to the LAST '/builds/' component, so a store rooted under a path
@@ -232,7 +233,6 @@ def build_index(
     n_buckets: int = DEFAULT_BUCKETS,
     block_size: int = BLOCK_SIZE,
     n_salts: int = 16,
-    bucket_batch: int = 16,
     publish: bool = True,
     fail_after_buckets: int | None = None,
     with_positions: bool = True,
@@ -282,7 +282,6 @@ def build_index(
             n_buckets=n_buckets,
             block_size=block_size,
             n_salts=n_salts,
-            bucket_batch=bucket_batch,
             publish=publish,
             fail_after_buckets=fail_after_buckets,
             shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
@@ -302,7 +301,6 @@ def build_multifield_index(
     n_buckets: int = DEFAULT_BUCKETS,
     block_size: int = BLOCK_SIZE,
     n_salts: int = 16,
-    bucket_batch: int = 16,
     publish: bool = True,
     with_positions: bool = True,
 ) -> dict:
@@ -384,7 +382,6 @@ def build_multifield_index(
             n_buckets=n_buckets,
             block_size=block_size,
             n_salts=n_salts,
-            bucket_batch=bucket_batch,
             publish=publish,
             shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
             ckpt_bytes=ckpt_bytes,
@@ -439,7 +436,6 @@ def _build_from_tf(
     n_buckets: int = DEFAULT_BUCKETS,
     block_size: int = BLOCK_SIZE,
     n_salts: int = 16,
-    bucket_batch: int = 16,
     publish: bool = False,
     fail_after_buckets: int | None = None,
     scalars: tuple[int, float, int] | None = None,
@@ -602,8 +598,8 @@ def _build_from_tf(
             n_buckets, min(shuffle_parts or 64, int(ckpt_bytes) // (8 << 20))
         )
         sub = max(1, write_parts // n_buckets)
-        for i in range(0, len(missing), bucket_batch):
-            batch = missing[i : i + bucket_batch]
+        for i in range(0, len(missing), BUCKET_BATCH):
+            batch = missing[i : i + BUCKET_BATCH]
             t0 = time.monotonic()
             staging = os.path.join(bdir, f"_staging_{uuid.uuid4().hex[:8]}")
             (

@@ -103,15 +103,9 @@ class SearchService:
         self._geo_cell = geo_cell_deg
         self._ann = None
         if ann_dir:
-            from ariadna_spark.operators.similarity import (
-                ivf_index_read,
-                ivf_store_read,
-            )
+            from ariadna_spark.operators.similarity import ivf_store_read
 
-            if os.path.exists(os.path.join(ann_dir, "MANIFEST.json")):
-                self._ann = ivf_store_read(spark, ann_dir)  # incremental store
-            else:
-                self._ann = ivf_index_read(spark, ann_dir)  # flat ivf_index_write
+            self._ann = ivf_store_read(spark, ann_dir)
 
     def run(self, plan) -> list[dict]:
         """Build and collect one plan under the serving lock -> row dicts.
@@ -983,7 +977,7 @@ def main() -> None:
     ap.add_argument("--geo-cell-deg", type=float, default=20.0)
     ap.add_argument(
         "--ann-index", default=None,
-        help="ivf_store_write / ivf_index_write store for POST /api/ann:batch",
+        help="ivf_store_write store for POST /api/ann:batch",
     )
     ap.add_argument(
         "--docs", default=None,

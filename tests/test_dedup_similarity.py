@@ -113,15 +113,22 @@ def test_lsh_topk_recall(spark, emb):
 
 
 def test_lsh_store_partition_pruned(spark, emb, tmp_path):
-    """The written LSH index is physically partitioned by (table, bucket);
+    """The written LSH store is physically partitioned by (table, bucket);
     a probe query's predicate must prune at the directory level AND return
-    exactly the in-memory index's results."""
-    from ariadna_spark.operators.similarity import lsh_index_read, lsh_index_write
+    exactly the in-memory index's results. The store publishes through the
+    segment MANIFEST, and a directory without one is not a store."""
+    import os as _os
+
+    from ariadna_spark.operators.similarity import lsh_store_read, lsh_store_write
     from ariadna_spark.plans import assert_partition_pruned
 
     path = str(tmp_path / "lsh_store")
-    lsh_index_write(emb, path, n_planes=8, n_tables=4)
-    stored, tables = lsh_index_read(spark, path)
+    lsh_store_write(emb, path, n_planes=8, n_tables=4)
+    assert _os.path.isfile(_os.path.join(path, "MANIFEST"))
+    assert not _os.path.exists(_os.path.join(path, "MANIFEST.json"))
+    with pytest.raises(FileNotFoundError):
+        lsh_store_read(spark, str(tmp_path))
+    stored, tables = lsh_store_read(spark, path)
     pdf = emb.toPandas()
     q = list(pdf[pdf.vec_id == 7].embedding.iloc[0])
 
@@ -140,15 +147,15 @@ def test_lsh_store_partition_pruned(spark, emb, tmp_path):
 def test_ivf_store_partition_pruned(spark, emb, tmp_path):
     from ariadna_spark.operators.similarity import (
         ivf_index,
-        ivf_index_read,
-        ivf_index_write,
+        ivf_store_read,
+        ivf_store_write,
         ivf_topk,
     )
     from ariadna_spark.plans import assert_partition_pruned
 
     path = str(tmp_path / "ivf_store")
-    ivf_index_write(emb, path, n_centroids=8)
-    stored, centroids = ivf_index_read(spark, path)
+    ivf_store_write(emb, path, n_centroids=8)
+    stored, centroids = ivf_store_read(spark, path)
     assert centroids.shape[0] == 8
     probe = stored.filter(F.col("centroid").isin([0, 1]))
     assert_partition_pruned(probe, "centroid")
@@ -285,15 +292,15 @@ def test_ivf_topk_many_stored_pruned(spark, emb, tmp_path):
     partition-prune to the probed centroid dirs, and answers must equal
     the unpruned batch exactly."""
     from ariadna_spark.operators.similarity import (
-        ivf_index_read,
-        ivf_index_write,
+        ivf_store_read,
+        ivf_store_write,
         ivf_topk_many,
     )
     from ariadna_spark.plans import assert_partition_pruned
 
     path = str(tmp_path / "ivf_b")
-    ivf_index_write(emb, path, n_centroids=8)
-    stored, centroids = ivf_index_read(spark, path)
+    ivf_store_write(emb, path, n_centroids=8)
+    stored, centroids = ivf_store_read(spark, path)
     pdf = emb.toPandas()
     qdf = spark.createDataFrame(
         [(int(q), [float(x) for x in pdf[pdf.vec_id == q].embedding.iloc[0]]) for q in (3, 27)],
@@ -313,15 +320,15 @@ def test_lsh_topk_many_stored_pruned(spark, emb, tmp_path):
     """Batch LSH with prune=True against the written store: partition
     pruning on the probed (table, bucket) dirs, answers identical."""
     from ariadna_spark.operators.similarity import (
-        lsh_index_read,
-        lsh_index_write,
+        lsh_store_read,
+        lsh_store_write,
         lsh_topk_many,
     )
     from ariadna_spark.plans import assert_partition_pruned
 
     path = str(tmp_path / "lsh_b")
-    lsh_index_write(emb, path, n_planes=8, n_tables=4)
-    stored, tables = lsh_index_read(spark, path)
+    lsh_store_write(emb, path, n_planes=8, n_tables=4)
+    stored, tables = lsh_store_read(spark, path)
     pdf = emb.toPandas()
     qdf = spark.createDataFrame(
         [(int(q), [float(x) for x in pdf[pdf.vec_id == q].embedding.iloc[0]]) for q in (7, 19)],
@@ -354,10 +361,10 @@ def test_lsh_store_append_overwrite_compact(spark, emb, tmp_path):
     brute force over the LOGICAL current vector set, before and after
     compaction; stale (negated) versions never surface."""
     from ariadna_spark.operators.similarity import (
-        lsh_store_append,
         lsh_store_read,
         lsh_store_write,
         lsh_topk,
+        vector_store_append,
         vector_store_compact,
     )
 
@@ -379,7 +386,7 @@ def test_lsh_store_append_overwrite_compact(spark, emb, tmp_path):
     fixes = base.filter(F.col("vec_id") % 4 == 0)
     # auto_compact=False: this test verifies the PRE-compaction merge-on-read
     # state explicitly, then compacts by hand below
-    lsh_store_append(fixes.unionByName(newbies), store, build_id="b000001", auto_compact=False)
+    vector_store_append(fixes.unionByName(newbies), store, build_id="b000001", auto_compact=False)
 
     logical = base.unionByName(newbies).toPandas()
     merged, tables = lsh_store_read(spark, store)
@@ -417,10 +424,10 @@ def test_ivf_store_incremental_probe_all_exact(spark, emb, tmp_path):
     """IVF store: append with frozen centroids; probe-all batch equals
     brute force over the logical set (double overwrite of one id too)."""
     from ariadna_spark.operators.similarity import (
-        ivf_store_append,
         ivf_store_read,
         ivf_store_write,
         ivf_topk_many,
+        vector_store_append,
     )
 
     store = str(tmp_path / "ivfstore")
@@ -432,9 +439,9 @@ def test_ivf_store_incremental_probe_all_exact(spark, emb, tmp_path):
         F.col("vec_id") % 5 == 0, F.transform("embedding", lambda x: -x)
     ).otherwise(F.col("embedding"))
     ivf_store_write(base.select("vec_id", stale.alias("embedding")), store, n_centroids=4)
-    ivf_store_append(base.filter(F.col("vec_id") % 5 == 0), store, build_id="b000001")
+    vector_store_append(base.filter(F.col("vec_id") % 5 == 0), store, build_id="b000001")
     # double overwrite: id 0 re-embedded AGAIN in a third build
-    ivf_store_append(base.filter(F.col("vec_id") == 0), store, build_id="b000002")
+    vector_store_append(base.filter(F.col("vec_id") == 0), store, build_id="b000002")
 
     merged, centroids = ivf_store_read(spark, store)
     logical = base.toPandas()
@@ -460,9 +467,9 @@ def test_vector_store_pruning_plan(spark, emb, tmp_path):
     """Partition pruning must survive merge-on-read: a centroid filter on
     the merged store shows PartitionFilters on every build's scan."""
     from ariadna_spark.operators.similarity import (
-        ivf_store_append,
         ivf_store_read,
         ivf_store_write,
+        vector_store_append,
     )
     from ariadna_spark.plans import physical_plan
 
@@ -474,7 +481,7 @@ def test_vector_store_pruning_plan(spark, emb, tmp_path):
     ivf_store_write(base.filter(F.col("vec_id") < 60), store, n_centroids=4)
     # auto_compact=False: the 25% overwrite ratio would trigger the policy,
     # and this test needs the multi-build merge-on-read plan shape
-    ivf_store_append(base.filter(F.col("vec_id") >= 60), store, build_id="b000001", auto_compact=False)
+    vector_store_append(base.filter(F.col("vec_id") >= 60), store, build_id="b000001", auto_compact=False)
     merged, _ = ivf_store_read(spark, store)
     plan = physical_plan(merged.filter(F.col("centroid") == 2))
     import re
@@ -583,14 +590,14 @@ def test_vector_store_auto_compaction_bounds_builds(spark, emb, tmp_path):
     import os as _os
 
     from ariadna_spark.operators.similarity import (
-        _store_read_manifest,
-        ivf_store_append,
         ivf_store_read,
         ivf_store_write,
         ivf_topk_many,
+        vector_store_append,
         vector_store_compaction_due,
     )
     from ariadna_spark.plans import physical_plan
+    from ariadna_spark.sources.segments import SegmentStore
 
     store = str(tmp_path / "ivfsoak")
     base = emb.select(
@@ -600,11 +607,11 @@ def test_vector_store_auto_compaction_bounds_builds(spark, emb, tmp_path):
     ivf_store_write(base, store, n_centroids=4)
     max_live = 1
     for i in range(1, 11):  # 10 overwrite appends of the same 12 ids
-        ivf_store_append(
+        vector_store_append(
             base.filter(F.col("vec_id") % 5 == 0), store, build_id=f"b{i:06d}"
         )
-        max_live = max(max_live, len(_store_read_manifest(store)))
-    live = _store_read_manifest(store)
+        max_live = max(max_live, len(SegmentStore(store).live_builds()))
+    live = SegmentStore(store).live_builds()
     assert max_live <= 8, max_live  # policy fired before the cap
     assert len(live) < 8
     assert vector_store_compaction_due(store, max_builds=8) is None

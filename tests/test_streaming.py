@@ -426,7 +426,13 @@ def test_delete_by_query(spark, overwrite_corpus, tmp_path):
     reader = IndexReader(spark, out)
     assert reader.stats["N"] == 1
     assert reader.topk("beta", 5).count() == 0
-    assert [r["doc_id"] for r in reader.topk("shared", 5).collect()] == [0]
+    top = reader.topk("shared", 5).collect()
+    assert [r["doc_id"] for r in top] == [0]
+    # "shared" still has df 3 against N = 1: explain clamps df to N as the
+    # kernels do, so idf stays positive and the terms sum to the top-k score
+    ex = reader.explain_score(0, "shared").collect()
+    assert ex and all(r["idf"] > 0 for r in ex)
+    assert abs(sum(r["score"] for r in ex) - top[0]["score"]) < 1e-12
 
     rep = verify_index(spark, out)
     assert rep["ok"], rep["errors"]
