@@ -16,6 +16,12 @@ Scale decisions:
   terms, so a broadcast of dfreq is impossible and a shuffle join would
   double the big shuffle.
 
+* dl and avgdl are the term's FIELD's: the encoder always takes a map
+  from field prefix to avgdl ("" for the primary field's bare terms,
+  "<field>" for a "<field>:<term>" term, segments.FIELD_SEP) and resolves
+  each (term, salt) group's entry in one vectorized pass, so a one-field
+  build pays one lookup per partition, not one per term.
+
 * Skew handling (north rule "explicit skew splitting"): only the Zipf
   *head* needs df before the shuffle — and the head is by definition tiny,
   so hot terms are found with one light aggregate and broadcast as a set.
@@ -71,7 +77,7 @@ def tfnorm_np(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
     return (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
 
 
-def _encode_sorted_partition(batches, avgdl: float, block_size: int):
+def _encode_sorted_partition(batches, avgdl: dict, block_size: int, sep: str):
     """One shuffle partition, pre-sorted by (term, salt, doc_id) -> block
     rows. Sort-based grouping in a single Arrow pass: group boundaries and
     per-block maxima are vectorized (np.flatnonzero / reduceat); the only
@@ -84,6 +90,7 @@ def _encode_sorted_partition(batches, avgdl: float, block_size: int):
     while partitions are sized correctly.
     """
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     batch_list = list(batches)
     if not batch_list:
@@ -102,21 +109,25 @@ def _encode_sorted_partition(batches, avgdl: float, block_size: int):
     g_starts = np.concatenate(([0], change))
     g_ends = np.concatenate((change, [n]))
 
-    if isinstance(avgdl, dict):
-        # multifield build: block_max_tfnorm must use the TERM'S FIELD'S
-        # avgdl or the WAND bound goes unsound (tfnorm grows with avgdl —
-        # a too-small stored bound would prune true winners). Terms are
-        # "<field>:<bare>" for secondary fields, bare for the primary
-        # (key ""). Resolved per sorted GROUP, never per posting row.
-        def _avg_of(t: str) -> float:
-            f, sep, _ = t.partition(":")
-            return avgdl[f if sep else ""]
-
-        g_avg = np.asarray([_avg_of(t) for t in terms[g_starts]], dtype=np.float64)
-        avg_row = np.repeat(g_avg, g_ends - g_starts)
-        tfn = tfnorm_np(tfs.astype(np.float64), dls.astype(np.float64), avg_row)
-    else:
-        tfn = tfnorm_np(tfs.astype(np.float64), dls.astype(np.float64), avgdl)
+    # block_max_tfnorm must use the TERM'S FIELD'S avgdl or the WAND bound
+    # goes unsound (tfnorm grows with avgdl — a too-small stored bound
+    # would prune true winners). A term's field is its "<field><sep>"
+    # prefix, "" for the primary field's bare terms; it is resolved per
+    # sorted GROUP in one vectorized pass, never per posting row.
+    g_terms = tbl["term"].combine_chunks().take(pa.array(g_starts))
+    parts = pc.split_pattern(g_terms, pattern=sep, max_splits=1)
+    prefix = pc.if_else(
+        pc.equal(pc.list_value_length(parts), 2), pc.list_element(parts, 0), ""
+    )
+    keys = list(avgdl)
+    slot = pc.index_in(prefix, value_set=pa.array(keys, type=prefix.type))
+    if slot.null_count:
+        raise ValueError(f"posting terms of fields outside the avgdl map {keys}")
+    g_avg = np.asarray([avgdl[k] for k in keys], dtype=np.float64)[
+        slot.to_numpy(zero_copy_only=False)
+    ]
+    avg_row = np.repeat(g_avg, g_ends - g_starts)
+    tfn = tfnorm_np(tfs.astype(np.float64), dls.astype(np.float64), avg_row)
 
     b_starts_l, b_seq_l = [], []
     for gs, ge in zip(g_starts, g_ends):  # loop over groups in this partition
@@ -224,7 +235,7 @@ def hot_terms(dfreq: DataFrame, threshold: int) -> list[str]:
 def build_postings(
     tf: DataFrame,
     n_docs: int,
-    avgdl: float,
+    avgdl: dict,
     block_size: int = BLOCK_SIZE,
     hot: list[str] | None = None,
     hot_df_threshold: int | None = None,
@@ -232,6 +243,10 @@ def build_postings(
     shuffle_parts: int | None = None,
 ) -> DataFrame:
     """(doc_id, term, tf[, doc_len]) -> compressed posting blocks.
+
+    avgdl: field prefix -> that field's avgdl, the key "" for the primary
+    field's bare terms and "<field>" for a "<field>:<term>" term
+    (segments.FIELD_SEP); every field present in tf needs an entry.
 
     hot: explicit hot-term list; if None it is computed from tf with
     hot_df_threshold (default N/8 — a term in >12.5% of docs would
@@ -278,8 +293,10 @@ def build_postings(
         tid, "term", "salt", "doc_id"
     )
 
+    from ..sources.segments import FIELD_SEP
+
     def kernel(batches):
-        return _encode_sorted_partition(batches, avgdl, block_size)
+        return _encode_sorted_partition(batches, avgdl, block_size, FIELD_SEP)
 
     return arranged.mapInArrow(kernel, POSTINGS_SCHEMA)
 

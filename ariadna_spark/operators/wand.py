@@ -44,6 +44,7 @@ from .. import B, K1
 from .._pickle import register_by_value
 from ..analyze import NGRAM_MAX, NGRAM_MIN, tokenize_expr, tokenize_py
 from ..functions.varint import delta_decode_ids, positions_decode, varint_decode
+from ..sources.segments import FIELD_SEP, primary_term, term_field
 from .postings import explode_blocks
 
 RANGE_SIZE_DEFAULT = 8192  # doc_ids per WAND partition at test scale
@@ -842,7 +843,7 @@ class IndexReader:
         build_id: str | None = None,
         build_ids: list[str] | None = None,
     ):
-        from ..sources.segments import SegmentStore, term_bucket_py
+        from ..sources.segments import SegmentStore, load_stats, store_fields, term_bucket_py
 
         self._term_bucket_py = term_bucket_py
         self.spark = spark
@@ -856,10 +857,7 @@ class IndexReader:
         self.build_id = build_ids[-1]
         self.bdirs = [store.build_dir(b) for b in build_ids]
         self.bdir = self.bdirs[-1]
-        self.build_stats = []
-        for d in self.bdirs:
-            with open(os.path.join(d, "stats.json")) as f:
-                self.build_stats.append(json.load(f))
+        self.build_stats = load_stats(store, build_ids)
         # query-time GLOBAL stats across the live segment set: the segments
         # were built independently (each with its own N/avgdl), but BM25
         # must score against the whole corpus — df summed per term, N
@@ -885,28 +883,22 @@ class IndexReader:
         # positive avgdl keeps the kernels' arithmetic finite (no live
         # doc can score regardless)
         self.stats["avgdl"] = (tok_total - tok_dead) / max(n_total - n_dead, 1) or 1.0
-        # multifield store (build_multifield_index): merge PER-FIELD stats
-        # across live builds the same way — N and token mass summed, avgdl
-        # from the totals (single build: the stored avgdl, bit-identical
-        # to build time). None when any live build is single-field.
-        self.field_stats: dict | None = None
-        self.primary_field: str | None = None
-        if self.build_stats and all("fields" in st for st in self.build_stats):
-            prim = self.build_stats[-1].get("primary")
-            if all(st.get("primary") == prim for st in self.build_stats):
-                merged: dict[str, dict] = {}
-                for st in self.build_stats:
-                    for fname, s in st["fields"].items():
-                        m = merged.setdefault(fname, {"N": 0, "total_tokens": 0})
-                        m["N"] += int(s["N"])
-                        m["total_tokens"] += int(s["total_tokens"])
-                for fname, m in merged.items():
-                    if len(self.build_stats) == 1:
-                        m["avgdl"] = float(self.build_stats[0]["fields"][fname]["avgdl"])
-                    else:
-                        m["avgdl"] = m["total_tokens"] / max(m["N"], 1) or 1.0
-                self.field_stats = merged
-                self.primary_field = prim
+        # PER-FIELD stats merge across live builds the same way — N and
+        # token mass summed, avgdl from the totals (single build: the
+        # stored avgdl, bit-identical to build time). Builds must agree
+        # on the fields and the primary (store_fields raises otherwise).
+        fields = store_fields(self.build_stats)
+        self.primary_field: str = fields[0]
+        self.field_stats: dict = {}
+        for fname in fields:
+            per = [st["fields"][fname] for st in self.build_stats]
+            m = {"N": sum(int(s["N"]) for s in per),
+                 "total_tokens": sum(int(s["total_tokens"]) for s in per)}
+            if len(per) == 1:
+                m["avgdl"] = float(per[0]["avgdl"])
+            else:
+                m["avgdl"] = m["total_tokens"] / max(m["N"], 1) or 1.0
+            self.field_stats[fname] = m
         # Artifact schemas are fixed by the writer (segments._build_from_tf),
         # so prefill the per-kind schema cache with static DDL instead of
         # sniffing parquet footers: a bare spark.read.parquet costs a
@@ -1193,16 +1185,13 @@ class IndexReader:
 
     def _vocab(self, terms_df: DataFrame) -> DataFrame:
         """Restrict a terms-table scan to the PRIMARY field's vocabulary.
-        On a multifield store secondary fields' terms are namespaced
-        "<field>:<term>" (analyzed tokens are alnum-only, so ':' can
+        Secondary fields' terms are namespaced "<field>:<term>"
+        (FIELD_SEP; analyzed tokens are alnum-only, so the separator can
         never appear in a bare term); every vocabulary-expansion verb
         (wildcard/grep expansion, fuzzy, suggest fallback) must exclude
         them or a pattern could silently match another field's tokens —
-        with the wrong df/avgdl pairing to boot. No-op on single-field
-        stores."""
-        if self.field_stats is None:
-            return terms_df
-        return terms_df.filter(~F.col("term").contains(":"))
+        with the wrong df/avgdl pairing to boot."""
+        return terms_df.filter(primary_term())
 
     def terms_containing(self, needle: str, max_terms: int = 4096) -> list[str] | None:
         """ALL index terms containing `needle` as a substring, across every
@@ -2406,7 +2395,7 @@ def multifield_topk_single(
     k: int = 10,
     range_size: int = RANGE_SIZE_DEFAULT,
 ) -> DataFrame:
-    """BM25F over a SINGLE multifield store (build_multifield_index) —
+    """BM25F over the fields of ONE store (build_index(fields=...)) —
     rank/score-identical to multifield_topk over one store per field, but
     the build paid ONE corpus pass and ONE shuffle for all fields, and the
     query is ONE pruned block fetch (bucket dirs pruned once for the union
@@ -2423,11 +2412,6 @@ def multifield_topk_single(
     statistics do not track tombstones, so a store with pending deletes
     must compact first (compact() recomputes exact per-field stats)."""
     fstats = reader.field_stats
-    if fstats is None:
-        raise ValueError(
-            "not a multifield store (every live build needs stats.json "
-            "'fields'; build with build_multifield_index)"
-        )
     if reader.has_tombstones:
         raise NotImplementedError(
             "BM25F over a store with pending deletions — compact() first "
@@ -2443,9 +2427,8 @@ def multifield_topk_single(
     terms = sorted(set(tokenize_py(query)))
     if not terms or not fields:
         return empty
-    sep = ":"  # segments.FIELD_SEP; analyzed tokens are alnum-only
     all_terms = sorted(
-        {t if n == prim else f"{n}{sep}{t}" for n in names for t in terms}
+        {t if n == prim else f"{n}{FIELD_SEP}{t}" for n in names for t in terms}
     )
     blocks = reader._blocks_for_terms(all_terms)
     if blocks is None:
@@ -2454,16 +2437,13 @@ def multifield_topk_single(
         fi: (fstats[n]["N"], fstats[n]["avgdl"], float(boost))
         for fi, (n, boost) in enumerate(fields)
     }
-    fname = F.when(
-        F.col("term").contains(sep), F.substring_index("term", sep, 1)
-    ).otherwise(F.lit(prim))
+    fname = term_field(prim)
     fidx = F.lit(None).cast("int")
     for fi, n in enumerate(names):
         fidx = F.when(fname == n, F.lit(fi)).otherwise(fidx)
-    bare = F.when(
-        F.col("term").contains(sep),
-        F.expr(f"substring(term, instr(term, '{sep}') + 1)"),
-    ).otherwise(F.col("term"))
+    bare = F.when(primary_term(), F.col("term")).otherwise(
+        F.expr(f"substring(term, instr(term, '{FIELD_SEP}') + 1)")
+    )
     ranged = (
         reader._ranged(blocks, range_size)
         .withColumn("field", fidx)

@@ -3066,19 +3066,19 @@ SQL_MULTIFIELD3 = _sql_multifield_n(
 def q_multifield_onepass(spark, sf_dir) -> DataFrame:
     """E8, single-store layout (r6): ALL three fields built into ONE
     segment store in ONE corpus pass + ONE posting shuffle
-    (build_multifield_index — secondary fields' terms stored
+    (build_index(fields=...) — secondary fields' terms stored
     "<field>:<term>", per-field doc_len/df/avgdl/block-max throughout),
     queried by the same combined-bound BM25F WAND over field-tagged
     blocks (multifield_topk_single). Shares SQL_MULTIFIELD3 — the oracle
     requires rank AND score identity with the one-store-per-field layout,
     so any stats bleed between fields breaks the hash."""
     from .operators.wand import IndexReader, multifield_topk_single
-    from .sources.segments import build_multifield_index
+    from .sources.segments import build_index
 
     def make() -> str:
         out = _gate_dir("mf_single_")
         docs = load_docs(spark, sf_dir)
-        build_multifield_index(
+        build_index(
             spark, docs, out, fields=("content", "path", "repo"),
             build_id="mf", n_buckets=8,
         )

@@ -12,16 +12,16 @@ POST the body they use today.
 Scope (loud errors outside it — never a silent wrong answer):
 
   query:
-    match            {field: text}            -> topk (primary field) or
-                                                single-field BM25F on a
-                                                multifield store
+    match            {field: text}            -> topk (primary field only;
+                                                other fields score through
+                                                multi_match)
     match_all        {}                       -> needs sort (see below)
     match_phrase     {field: text}            -> phrase_topk
     match_phrase_prefix {field: text}         -> phrase_prefix_topk
     prefix           {field: value}           -> prefix_topk
     fuzzy            {field: {value, fuzziness}} -> fuzzy_topk
     multi_match      {query, fields: [f^boost]} -> multifield_topk_single
-                                                  (multifield store) or
+                                                  (the store's fields) or
                                                   per-field readers via
                                                   `extra_readers`
     bool             {must, should, must_not, filter,
@@ -132,7 +132,7 @@ def compile_filter(clauses) -> Column | None:
 def _field_or_primary(reader, field: str, what: str) -> None:
     """Positional/expansion verbs run against the store's primary field;
     a multifield store's secondary fields are BM25F-only for now."""
-    prim = reader.primary_field or "content"
+    prim = reader.primary_field
     if field != prim:
         raise DslError(
             f"{what} on field {field!r}: only the primary field "
@@ -220,7 +220,7 @@ def msearch(
     per-item error envelope is deliberately out of scope for v1."""
     if not isinstance(bodies, list) or not bodies:
         raise DslError("_msearch needs a non-empty list of request bodies")
-    prim = reader.primary_field or "content"
+    prim = reader.primary_field
     batch: list[tuple[int, str, int]] = []
     singles: list[int] = []
     for i, b in enumerate(bodies):
@@ -475,11 +475,13 @@ def compile_search(
 ) -> DataFrame:
     """One ES `_search` request body -> one engine DataFrame.
 
-    `extra_readers` maps field name -> IndexReader for deployments that
-    keep the round-<=5 one-store-per-field layout; on a multifield store
-    (build_multifield_index) multi_match needs nothing extra. `docs` is
-    the source corpus, required only for `highlight` bodies (snippets
-    re-read the k winners' content)."""
+    multi_match scores the fields the store indexes itself: BM25F over
+    the per-field terms of build_index(fields=...). `extra_readers` maps
+    field name -> IndexReader of a one-store-per-field layout, each
+    store's primary field standing for that field; it serves multi_match
+    only when a requested field is not in the store. `docs` is the
+    source corpus, required only for `highlight` bodies (snippets re-read
+    the k winners' content)."""
     if not isinstance(body, dict):
         raise DslError("request body must be an object")
     unknown = set(body) - {
@@ -560,7 +562,7 @@ def compile_search(
     if "highlight" in body:
         if body.get("sort") or body.get("search_after"):
             raise DslError("highlight composes with relevance-ranked queries only")
-        hl, prim = body["highlight"], reader.primary_field or "content"
+        hl, prim = body["highlight"], reader.primary_field
         if not isinstance(hl, dict) or list(hl.get("fields", {})) != [prim]:
             raise DslError(
                 f"highlight.fields must name exactly the primary field ({prim!r})"
@@ -623,20 +625,21 @@ def compile_search(
         fields = _parse_boosted(spec["fields"])
         from .operators.wand import multifield_topk, multifield_topk_single
 
-        if reader.field_stats is not None:
+        unknown = sorted({n for n, _ in fields} - set(reader.field_stats))
+        if not unknown:
             return multifield_topk_single(reader, fields, spec["query"], k)
-        if extra_readers is not None:
-            missing = [n for n, _ in fields if n != "content" and n not in extra_readers]
-            if missing:
-                raise DslError(f"no reader for fields {missing}")
-            pairs = [
-                (reader if n == "content" else extra_readers[n], b) for n, b in fields
-            ]
-            return multifield_topk(pairs, spec["query"], k)
-        raise DslError(
-            "multi_match needs a multifield store (build_multifield_index) "
-            "or per-field extra_readers"
-        )
+        if extra_readers is None:
+            raise DslError(
+                f"multi_match: unknown fields {unknown}; the store indexes "
+                f"{sorted(reader.field_stats)} (build with fields=, or pass "
+                f"per-field extra_readers)"
+            )
+        prim = reader.primary_field
+        missing = [n for n, _ in fields if n != prim and n not in extra_readers]
+        if missing:
+            raise DslError(f"no reader for fields {missing}")
+        pairs = [(reader if n == prim else extra_readers[n], b) for n, b in fields]
+        return multifield_topk(pairs, spec["query"], k)
     if kind == "bool":
         spec = dict(spec)
         flt = compile_filter(spec.pop("filter", None))

@@ -98,6 +98,28 @@ def default_codecs(cores: int) -> tuple[str, str]:
     )
 
 
+def default_driver_memory(meminfo: str) -> str:
+    """spark.driver.memory for a machine whose /proc/meminfo reads
+    `meminfo`: half its MemTotal in whole GiB, at least 1g and at most
+    24g. The JVM grows its heap lazily toward the cap, so a cap above the
+    machine's memory lets one session push the host out of memory before
+    a full GC runs; half leaves room for the Python workers. Without a
+    MemTotal line (not Linux) the cap is 24g."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            kib = int(line.split()[1])
+            return f"{min(24, max(1, kib // (2 << 20)))}g"
+    return "24g"
+
+
+def _meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:  # no procfs: default_driver_memory falls back to 24g
+        return ""
+
+
 def get_spark(
     app_name: str = "ariadna_spark",
     cores: int | None = None,
@@ -141,7 +163,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(_meminfo()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Text pipelines are allocation-heavy in the JVM (parquet string

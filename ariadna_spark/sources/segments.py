@@ -51,13 +51,7 @@ from pyspark.sql import functions as F
 from ..analyze import NGRAM_MAX, NGRAM_MIN, edge_ngrams_expr
 from ..corpus import DOCS_COLUMNS
 from ..operators.postings import BLOCK_SIZE, build_postings, explode_blocks, hot_terms
-from ..stats import (
-    corpus_scalars_full,
-    doc_freqs,
-    doc_lengths,
-    term_freqs_dl,
-    term_freqs_dl_fields,
-)
+from ..stats import corpus_scalars_full, doc_freqs, doc_lengths, term_freqs_dl
 
 DEFAULT_BUCKETS = 16
 DOCMAP_BUCKETS = 8  # key-hash buckets for the docmap (and tombstones)
@@ -107,9 +101,13 @@ def _atomic_write_json(path: str, obj) -> None:
 
 
 class SegmentStore:
+    """A store's pointer and build dirs. Opening one creates nothing on
+    disk: the writers create the dirs they write into (a build its build
+    dir, a publish the store root), so reading a path that is not a store
+    leaves no skeleton behind."""
+
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
-        os.makedirs(os.path.join(out_dir, "builds"), exist_ok=True)
 
     # -- publish / read pointer (A5 analog: alias swap) --
     def live_builds(self) -> list[str]:
@@ -128,13 +126,17 @@ class SegmentStore:
         builds = self.live_builds()
         return builds[-1] if builds else None
 
+    def _write_pointer(self, pointer: dict) -> None:
+        os.makedirs(self.out_dir, exist_ok=True)
+        _atomic_write_json(os.path.join(self.out_dir, "MANIFEST"), pointer)
+
     def publish(self, build_id: str) -> None:
-        _atomic_write_json(os.path.join(self.out_dir, "MANIFEST"), {"build_id": build_id})
+        self._write_pointer({"build_id": build_id})
 
     def publish_many(self, build_ids: list[str]) -> None:
         """Atomic swap of the whole live segment set (incremental commits
         append a segment and re-publish the list)."""
-        _atomic_write_json(os.path.join(self.out_dir, "MANIFEST"), {"build_ids": list(build_ids)})
+        self._write_pointer({"build_ids": list(build_ids)})
 
     def append_live(self, build_id: str) -> list[str]:
         """Read-modify-write of the live list under an exclusive flock:
@@ -160,6 +162,8 @@ class SegmentStore:
         live = set(self.live_builds())
         removed = []
         broot = os.path.join(self.out_dir, "builds")
+        if not os.path.isdir(broot):
+            return removed
         for b in os.listdir(broot):
             if b not in live:
                 shutil.rmtree(os.path.join(broot, b))
@@ -225,6 +229,9 @@ def _postings_shuffle_parts(spark: SparkSession, ckpt_bytes: int) -> int:
     return max(par * 2, min(65536, int(ckpt_bytes * 6) // (256 << 20)))
 
 
+FIELD_SEP = ":"
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -236,8 +243,32 @@ def build_index(
     publish: bool = True,
     fail_after_buckets: int | None = None,
     with_positions: bool = True,
+    fields: tuple[str, ...] = ("content",),
 ) -> dict:
-    """Full index build with per-bucket idempotent commits.
+    """Full index build with per-bucket idempotent commits. Every
+    searchable field lands in ONE segment store, from ONE corpus pass and
+    ONE posting shuffle (the Lucene model, where the term dictionary is
+    per field; at 100 TB the corpus scan + groupBy(term) shuffle IS the
+    build cost, so N fields must not cost N passes).
+
+    Layout contract:
+      * fields[0] is the PRIMARY field. Its terms stay bare, so every
+        verb (match/phrase/prefix/fuzzy/suggest/...) runs against it; a
+        one-field build is exactly the plain (doc, term) index.
+      * other fields' terms are stored as "<field>:<term>" (FIELD_SEP);
+        analyzed tokens are alnum-only, so the separator can never
+        collide with a bare term.
+      * doc_len, positions, df and block-max bounds are all PER FIELD
+        (each field is its own token stream; the posting encoder gets a
+        per-field avgdl map so WAND bounds stay sound).
+      * stats.json carries top-level scalars == the primary field's, plus
+        {"fields": {name: {N, avgdl, total_tokens}}, "primary": ...} for
+        the BM25F query path (wand.multifield_topk_single).
+      * the edge-ngram table indexes only bare (primary) terms, so
+        prefix/suggest stay primary-field semantics.
+
+    Docs whose PRIMARY field analyzes to zero tokens are excluded from
+    the docmap.
 
     fail_after_buckets: test hook — raise after committing that many
     buckets in this invocation (simulates a mid-build kill for the resume
@@ -247,8 +278,13 @@ def build_index(
     dynamic text mapping) — required for phrase queries; turn off to
     shrink the index when phrase search isn't needed.
     """
-    store = SegmentStore(out_dir)
-    bdir = store.build_dir(build_id)
+    fields = tuple(fields)
+    if len(set(fields)) != len(fields) or not fields:
+        raise ValueError(f"fields must be non-empty and distinct, got {fields!r}")
+    for f in fields:
+        if FIELD_SEP in f:
+            raise ValueError(f"field name may not contain {FIELD_SEP!r}: {f!r}")
+    bdir = SegmentStore(out_dir).build_dir(build_id)
     os.makedirs(bdir, exist_ok=True)
 
     from ..session import ensure_workers_warm
@@ -266,10 +302,10 @@ def build_index(
     if docs.rdd.getNumPartitions() < parallelism * 2:
         docs = docs.repartition(parallelism * 2)
     t0 = time.monotonic()
-    tf_df = term_freqs_dl(docs, with_positions=with_positions)
+    tf_df = term_freqs_dl(docs, fields, with_positions=with_positions)
     with _tf_checkpoint(spark, tf_df, f"tf_ckpt_{build_id}") as (tf, ckpt_bytes):
-        _trace("tf+scalars", t0)
-        dl = doc_lengths(tf)
+        _trace("tf", t0)
+        dl = doc_lengths(tf.filter(primary_term()))
         docmap_df = docs.join(dl, "doc_id").select(
             "doc_id", "repo", "path", "commit", "lang", "doc_len", "content_sha"
         )
@@ -279,6 +315,7 @@ def build_index(
             docmap_df,
             out_dir,
             build_id=build_id,
+            fields=fields,
             n_buckets=n_buckets,
             block_size=block_size,
             n_salts=n_salts,
@@ -289,142 +326,53 @@ def build_index(
         )
 
 
-FIELD_SEP = ":"
+def primary_term():
+    """True for a bare `term`, the primary field's."""
+    return ~F.col("term").contains(FIELD_SEP)
 
 
-def build_multifield_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    fields: tuple[str, ...] = ("content", "path"),
-    build_id: str = "b0",
-    n_buckets: int = DEFAULT_BUCKETS,
-    block_size: int = BLOCK_SIZE,
-    n_salts: int = 16,
-    publish: bool = True,
-    with_positions: bool = True,
-) -> dict:
-    """ALL searchable fields in ONE segment store, ONE corpus pass, ONE
-    posting shuffle (E8 at build time — the Lucene model where the term
-    dictionary is per-field, vs round <=5's one-store-per-field layout
-    that re-tokenized and re-shuffled the corpus once PER FIELD; at 100 TB
-    the corpus scan + groupBy(term) shuffle IS the build cost, so N
-    fields must not cost N passes).
-
-    Layout contract:
-      * fields[0] is the PRIMARY field — its terms stay bare, so this
-        store is a drop-in superset of a build_index store: every
-        existing verb (match/phrase/prefix/fuzzy/suggest/...) works on
-        it unchanged, against the primary field.
-      * secondary fields' terms are stored as "<field>:<term>"; analyzed
-        tokens are alnum-only so the separator can never collide with a
-        bare term.
-      * doc_len, positions, df, and block-max bounds are all PER FIELD
-        (each field is its own token stream; the posting encoder gets a
-        per-field avgdl map so WAND bounds stay sound).
-      * stats.json carries top-level scalars == the primary field's,
-        plus {"fields": {name: {N, avgdl, total_tokens}}, "primary": ...}
-        for the BM25F query path (wand.multifield_topk_single).
-      * the edge-ngram table indexes only bare (primary) terms, so
-        prefix/suggest stay primary-field semantics.
-
-    Docs whose PRIMARY field analyzes to zero tokens are excluded from
-    the docmap (exactly build_index's behavior for empty content).
-    """
-    if len(set(fields)) != len(fields) or not fields:
-        raise ValueError(f"fields must be non-empty and distinct, got {fields!r}")
-    for f in fields:
-        if FIELD_SEP in f:
-            raise ValueError(f"field name may not contain {FIELD_SEP!r}: {f!r}")
-    store = SegmentStore(out_dir)
-    bdir = store.build_dir(build_id)
-    os.makedirs(bdir, exist_ok=True)
-
-    from ..session import ensure_workers_warm
-
-    ensure_workers_warm(spark)
-
-    docs = docs.select(*DOCS_COLUMNS)
-    parallelism = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism * 2:
-        docs = docs.repartition(parallelism * 2)
-
-    t0 = time.monotonic()
-    tf_df = term_freqs_dl_fields(docs, list(fields), with_positions=with_positions)
-    with _tf_checkpoint(spark, tf_df, f"tf_ckpt_{build_id}") as (tf_f, ckpt_bytes):
-        _trace("tf_fields", t0)
-
-        fname = F.element_at(
-            F.array(*[F.lit(f) for f in fields]), F.col("field") + 1
-        )
-        t0 = time.monotonic()
-        mf_kw = _multifield_kw(tf_f, fname, fields)
-        _trace("field_scalars", t0)
-
-        term2 = F.when(F.col("field") == 0, F.col("term")).otherwise(
-            F.concat(fname, F.lit(FIELD_SEP), F.col("term"))
-        )
-        carry = ["tf", "doc_len"] + (["positions"] if with_positions else [])
-        tf = tf_f.select("doc_id", term2.alias("term"), *carry)
-
-        dl0 = tf_f.filter(F.col("field") == 0).groupBy("doc_id").agg(
-            F.max("doc_len").alias("doc_len")
-        )
-        docmap_df = docs.join(dl0, "doc_id").select(
-            "doc_id", "repo", "path", "commit", "lang", "doc_len", "content_sha"
-        )
-        return _build_from_tf(
-            spark,
-            tf,
-            docmap_df,
-            out_dir,
-            build_id=build_id,
-            n_buckets=n_buckets,
-            block_size=block_size,
-            n_salts=n_salts,
-            publish=publish,
-            shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
-            ckpt_bytes=ckpt_bytes,
-            **mf_kw,
-        )
-
-
-def _multifield_kw(tf: DataFrame, field, fields) -> dict:
-    """Per-field statistics of multifield tf rows, as the _build_from_tf
-    keyword arguments of a multifield build. `field` gives each row's
-    field name; `fields` names the fields that must hold tokens, the
-    primary first. One aggregation (map-side combinable) yields N, avgdl
-    and token mass per field: the primary's become the top-level scalars,
-    each field's avgdl feeds the encoder's per-field block-max bounds, and
-    the whole map lands in stats.json under "fields"."""
-    frows = (
-        tf.groupBy(field.alias("f"), "doc_id")
-        .agg(F.max("doc_len").alias("doc_len"))
-        .groupBy("f")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("doc_len").alias("avgdl"),
-            F.sum("doc_len").alias("tot"),
-        )
-        .collect()
+def term_field(primary: str):
+    """The field a `term` column value belongs to: its "<field>:" prefix,
+    or `primary` for a bare term."""
+    return F.when(primary_term(), F.lit(primary)).otherwise(
+        F.substring_index("term", FIELD_SEP, 1)
     )
-    field_stats = {
-        r["f"]: {"N": int(r["n"]), "avgdl": float(r["avgdl"]), "total_tokens": int(r["tot"])}
-        for r in frows
+
+
+def _field_stats(tf: DataFrame, fields: tuple[str, ...]) -> dict:
+    """{field: {N, avgdl, total_tokens}} of tf rows, each row's field read
+    off its term prefix (bare terms are the primary's, fields[0]); a field
+    with no tokens gets zeros. The primary must hold tokens: its N and
+    avgdl are the build's scalars."""
+    dl = tf.groupBy(term_field(fields[0]).alias("field"), "doc_id").agg(
+        F.max("doc_len").alias("doc_len")
+    )
+    stats = {f: {"N": 0, "avgdl": 0.0, "total_tokens": 0} for f in fields}
+    stats.update(corpus_scalars_full(dl))
+    if not stats[fields[0]]["N"]:
+        raise ValueError(f"primary field {fields[0]!r} analyzed to zero tokens corpus-wide")
+    return stats
+
+
+def store_fields(build_stats: list[dict]) -> tuple[str, ...]:
+    """The fields, primary first, that the given builds' stats.json all
+    record; a ValueError when they disagree (their per-field statistics
+    could not be merged)."""
+    layouts = {
+        (st["primary"], *sorted(set(st["fields"]) - {st["primary"]})) for st in build_stats
     }
-    missing = [f for f in fields if f not in field_stats]
-    if missing:
-        raise ValueError(f"fields analyzed to zero tokens corpus-wide: {missing}")
-    primary = fields[0]
-    prim = field_stats[primary]
-    avgdl_map = {"": prim["avgdl"]}
-    avgdl_map.update({f: st["avgdl"] for f, st in field_stats.items() if f != primary})
-    return dict(
-        scalars=(prim["N"], prim["avgdl"], prim["total_tokens"]),
-        avgdl_map=avgdl_map,
-        ngram_filter=~F.col("term").contains(FIELD_SEP),
-        extra_stats={"fields": field_stats, "primary": primary},
-    )
+    if len(layouts) != 1:
+        raise ValueError(f"live builds disagree on fields (primary first): {sorted(layouts)}")
+    return layouts.pop()
+
+
+def load_stats(store: SegmentStore, builds: list[str]) -> list[dict]:
+    """The stats.json of each of `builds`, in order."""
+    out = []
+    for b in builds:
+        with open(os.path.join(store.build_dir(b), "stats.json")) as f:
+            out.append(json.load(f))
+    return out
 
 
 def _build_from_tf(
@@ -433,43 +381,31 @@ def _build_from_tf(
     docmap_df: DataFrame,
     out_dir: str,
     build_id: str,
+    fields: tuple[str, ...],
     n_buckets: int = DEFAULT_BUCKETS,
     block_size: int = BLOCK_SIZE,
     n_salts: int = 16,
     publish: bool = False,
     fail_after_buckets: int | None = None,
-    scalars: tuple[int, float, int] | None = None,
-    avgdl_map: dict | None = None,
-    ngram_filter=None,
-    extra_stats: dict | None = None,
     shuffle_parts: int | None = None,
     ckpt_bytes: int = 0,
 ) -> dict:
-    """Shared lower half of the build: (doc_id, term, tf, doc_len) rows +
-    a docmap -> terms/ngrams/docmap/postings artifacts + manifest. Used by
-    the normal corpus build AND by segment compaction (whose tf rows come
-    from decoding existing segments, not from tokenization).
-
-    Multifield hooks (build_multifield_index): `scalars` overrides the
-    (N, avgdl, total_tokens) scalars with the PRIMARY field's (the tf
-    union mixes per-field doc_lens, so deriving them here would be
-    wrong); `avgdl_map` gives the posting encoder each field's avgdl for
-    sound per-field block-max bounds; `ngram_filter` restricts the
-    edge-ngram table to the primary field's bare terms; `extra_stats`
-    merges extra keys (per-field statistics) into stats.json."""
+    """Shared lower half of the build: (doc_id, term, tf, doc_len) rows of
+    `fields` (primary first, build_index's term layout) + a docmap ->
+    terms/ngrams/docmap/postings artifacts + manifest. Used by the normal
+    corpus build AND by segment compaction (whose tf rows come from
+    decoding existing segments, not from tokenization)."""
     store = SegmentStore(out_dir)
     bdir = store.build_dir(build_id)
     os.makedirs(bdir, exist_ok=True)
 
-    # Corpus scalars are one more full-pass job over tf; run it INSIDE the
-    # thread pool (below) so the dictionary/docmap writes don't serialize
-    # behind it — phases that need (N, avgdl) block on this future, the
-    # others start immediately.
+    # Per-field corpus scalars are one more full-pass job over tf; run it
+    # INSIDE the thread pool (below) so the dictionary/docmap writes don't
+    # serialize behind it — phases that need (N, avgdl) block on this
+    # future, the others start immediately.
     def _scalars():
-        if scalars is not None:
-            return scalars
         t0 = time.monotonic()
-        out = corpus_scalars_full(doc_lengths(tf))
+        out = _field_stats(tf, fields)
         _trace("scalars", t0)
         return out
 
@@ -509,9 +445,9 @@ def _build_from_tf(
         if os.path.exists(os.path.join(bdir, "_ngrams.json")):
             return
         t0 = time.monotonic()
-        ng_src = dfreq if ngram_filter is None else dfreq.filter(ngram_filter)
         (
-            ng_src.select(
+            dfreq.filter(primary_term())
+            .select(
                 F.explode(edge_ngrams_expr("term", NGRAM_MIN, NGRAM_MAX)).alias("ng"),
                 "term",
                 "df",
@@ -537,7 +473,7 @@ def _build_from_tf(
         docmap_dir = os.path.join(bdir, "docmap")
         if os.path.exists(os.path.join(bdir, "_docmap.json")):
             return
-        n_docs = scalars_fut.result()[0]
+        n_docs = scalars_fut.result()[fields[0]]["N"]
         t0 = time.monotonic()
         files_per_bucket = max(1, min(n_docs // 250_000 + 1, 64))
         (
@@ -563,14 +499,17 @@ def _build_from_tf(
         ]
         if not missing:
             return
-        n_docs, avgdl, _ = scalars_fut.result()
+        fstats = scalars_fut.result()
+        n_docs = fstats[fields[0]]["N"]
         t0 = time.monotonic()
         hot = hot_terms(dfreq, max(block_size * 4, n_docs // 8))
         _trace("hot_terms", t0)
+        # encoder keys: "" for the primary's bare terms, else the field name
+        avgdl = {("" if f == fields[0] else f): st["avgdl"] for f, st in fstats.items()}
         postings = build_postings(
             tf,
             n_docs,
-            avgdl_map or avgdl,
+            avgdl,
             block_size=block_size,
             hot=hot,
             n_salts=n_salts,
@@ -697,19 +636,18 @@ def _build_from_tf(
                 raise next(iter(errs.values()))
             if errs:
                 raise ExceptionGroup(f"{len(errs)} build phases failed", list(errs.values()))
-            n_docs, avgdl, total_tokens = scalars_fut.result()
+            fstats = scalars_fut.result()
     finally:
         dfreq.unpersist()
 
     stats = {
-        "N": n_docs,
-        "avgdl": avgdl,
-        "total_tokens": total_tokens,
+        **fstats[fields[0]],
         "build_id": build_id,
         "n_buckets": n_buckets,
         "block_size": block_size,
         "positions": "positions" in tf.columns,
-        **(extra_stats or {}),
+        "fields": fstats,
+        "primary": fields[0],
     }
     _atomic_write_json(os.path.join(bdir, "stats.json"), stats)
 
@@ -891,13 +829,19 @@ def append_segment(
     """Incremental append with per-doc overwrite semantics: build the
     segment, tombstone overwritten (repo, path) keys in older live
     segments, then atomically append to the live list. The batch is
-    assumed key-unique (one version per (repo, path) within a batch)."""
+    assumed key-unique (one version per (repo, path) within a batch).
+    The segment indexes the fields the live builds record, so its
+    per-field statistics merge with theirs."""
+    store = SegmentStore(out_dir)
+    live = [b for b in store.live_builds() if b != build_id]
+    if live:
+        kw["fields"] = store_fields(load_stats(store, live))
     docs = docs.select(*DOCS_COLUMNS)
     manifest = build_index(
         spark, docs, out_dir, build_id=build_id, n_buckets=n_buckets, publish=False, **kw
     )
     write_tombstones(spark, out_dir, build_id, docs)
-    SegmentStore(out_dir).append_live(build_id)
+    store.append_live(build_id)
     return manifest
 
 
@@ -973,30 +917,22 @@ def delete_by_query(
             dm = dm.join(cand, "doc_id", "left_semi")
         return dm
 
-    live_stats = []
-    for b in live:
-        with open(os.path.join(store.build_dir(b), "stats.json")) as f:
-            live_stats.append(json.load(f))
+    live_stats = load_stats(store, live)
+    fields = store_fields(live_stats)
+    zero = {"N": 0, "avgdl": 0.0, "total_tokens": 0}
     del_stats = {
-        "N": 0,
-        "avgdl": 0.0,
-        "total_tokens": 0,
+        **zero,
         "build_id": build_id,
         "n_buckets": 1,  # no posting buckets exist; 1 keeps hash math valid
         "block_size": live_stats[-1].get("block_size"),
         # a tombstone-only build contributes no blocks, so it must not
         # flip the live set's positions capability either way
         "positions": all(st.get("positions") for st in live_stats),
+        # the live layout with zero token mass, so the build merges with
+        # the others' per-field statistics
+        "fields": {f: dict(zero) for f in fields},
+        "primary": fields[0],
     }
-    if all("fields" in st for st in live_stats):
-        # multifield store: carry the layout markers (zero token mass) so
-        # the reader still recognizes the store as multifield and raises
-        # the documented compact-first error instead of "not multifield"
-        del_stats["fields"] = {
-            f: {"N": 0, "avgdl": 0.0, "total_tokens": 0}
-            for f in live_stats[-1]["fields"]
-        }
-        del_stats["primary"] = live_stats[-1].get("primary")
     # stats.json first: a replay trusts the marker the writer leaves last
     os.makedirs(bdir, exist_ok=True)
     _atomic_write_json(os.path.join(bdir, "stats.json"), del_stats)
@@ -1053,12 +989,10 @@ def compaction_due(
     live = store.live_builds()
     if len(live) <= 1:
         return None
-    n_total, n_dead = 0, 0
+    n_total = sum(int(st["N"]) for st in load_stats(store, live))
+    n_dead = 0
     for b in live:
-        bdir = store.build_dir(b)
-        with open(os.path.join(bdir, "stats.json")) as f:
-            n_total += int(json.load(f)["N"])
-        marker = os.path.join(bdir, "_tombstones.json")
+        marker = os.path.join(store.build_dir(b), "_tombstones.json")
         if os.path.exists(marker):
             with open(marker) as f:
                 n_dead += int(json.load(f)["n"])
@@ -1137,42 +1071,20 @@ def compact(
     streams = ["doc_ids_varint", "tfs_varint", "dls_varint"] + (["pos_varint"] if has_pos else [])
     blocks = spark.read.parquet(*all_dirs).select(bid_col().alias("bid"), "term", *streams)
     # drop shadowed versions physically — the merged segment carries
-    # exact stats (N, avgdl, df) and no tombstones
+    # exact stats (N, avgdl, df, each per field) and no tombstones
     tf = drop_dead_versions(explode_blocks(blocks), _tombstones_union(spark, store, live))
     tf = tf.drop("bid")
     with _tf_checkpoint(spark, tf, "compact_tf") as (tf, ckpt_bytes):
-        docmap = reader.docmap()
-        mf_kw: dict = {}
-        if any("fields" in st for st in reader.build_stats):
-            # multifield store (build_multifield_index): re-derive PER-FIELD
-            # stats from the decoded rows (tombstone-masked above, so the
-            # merged stats are exact) and re-encode with per-field avgdl —
-            # a scalar-avgdl rebuild would corrupt secondary fields' block-max
-            # bounds and statistics.
-            prim_name = reader.build_stats[-1].get("primary")
-            if not all(
-                "fields" in st and st.get("primary") == prim_name
-                for st in reader.build_stats
-            ):
-                raise ValueError(
-                    "cannot compact a mix of multifield and single-field builds "
-                    f"(live={live}) — compact per store layout"
-                )
-            fld = F.when(
-                F.col("term").contains(FIELD_SEP),
-                F.substring_index("term", FIELD_SEP, 1),
-            ).otherwise(F.lit(prim_name))
-            mf_kw = _multifield_kw(tf, fld, (prim_name,))
         manifest = _build_from_tf(
             spark,
             tf,
-            docmap,
+            reader.docmap(),
             out_dir,
             build_id=build_id,
+            fields=store_fields(reader.build_stats),
             n_buckets=n_buckets,
             shuffle_parts=_postings_shuffle_parts(spark, ckpt_bytes),
             ckpt_bytes=ckpt_bytes,
-            **mf_kw,
         )
         store.publish_many([build_id])
         if gc:
@@ -1221,7 +1133,7 @@ def snapshot_index(out_dir: str, dest: str) -> dict:
     copied, skipped = [], []
     for b in live:
         (copied if _copy_build(store.build_dir(b), snap.build_dir(b)) else skipped).append(b)
-    _atomic_write_json(os.path.join(dest, "MANIFEST"), {"build_ids": live})
+    snap.publish_many(live)
     return {"builds": live, "copied": copied, "skipped": skipped}
 
 

@@ -726,7 +726,7 @@ def _count(svc, a):
 
 def _multifield(svc, a):
     """GET /api/multifield?q=&fields=content:1,path:2: BM25F over the
-    per-field terms of a build_multifield_index store."""
+    per-field terms of a build_index(fields=...) store."""
     q, k = a.need("q"), a.get("k", 10, int)
     try:
         fields = [

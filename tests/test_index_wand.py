@@ -189,7 +189,7 @@ def test_salting_splits_hot_terms(spark, synth_docs):
     tf = term_freqs(synth_docs)
     dl = doc_lengths(tf)
     n, avgdl = corpus_scalars(dl)
-    posts = build_postings(tf, n, avgdl, block_size=16, hot_df_threshold=30, n_salts=4)
+    posts = build_postings(tf, n, {"": avgdl}, block_size=16, hot_df_threshold=30, n_salts=4)
     pdf = posts.toPandas()
     hot_list = [
         r["term"] for r in doc_freqs(tf).filter("df > 30").collect()
@@ -983,10 +983,8 @@ def test_bool_topk_search_after(spark, index_dir):
 def mf_store(spark, docs, tmp_path_factory):
     """One multifield store over (content, path, repo) — r6's single-pass
     per-field-term layout."""
-    from ariadna_spark.sources.segments import build_multifield_index
-
     out = str(tmp_path_factory.mktemp("mf_single"))
-    build_multifield_index(
+    build_index(
         spark, docs, out, fields=("content", "path", "repo"), build_id="mf", n_buckets=8
     )
     return out
@@ -1044,7 +1042,7 @@ def test_multifield_single_store_matches_per_field_stores(
     assert sub and all(r["score"] > 0 for r in sub)
     with pytest.raises(ValueError, match="unknown fields"):
         multifield_topk_single(mf, [("nope", 1.0)], "doc", 5)
-    with pytest.raises(ValueError, match="not a multifield store"):
+    with pytest.raises(ValueError, match=r"unknown fields \['path', 'repo'\]"):
         multifield_topk_single(stores["content"], weights, "doc", 5)
 
 
@@ -1086,3 +1084,54 @@ def test_multifield_store_compaction(spark, docs, tmp_path_factory, mf_store):
     got = multifield_topk_single(r3, weights, "doc en merge", 10).collect()
     assert got and not ({r["doc_id"] for r in got} & victims)
     assert r3.field_stats["content"]["N"] == r1.field_stats["content"]["N"] - len(victims)
+
+
+@pytest.mark.parametrize("how", ["append_segment", "update_by_query"])
+def test_multifield_store_append_then_compact(spark, docs, tmp_path, how):
+    """A segment appended to a (content, path) store indexes the store's
+    fields: BM25F returns the appended docs, compact() merges the builds,
+    and BM25F rows and scores are the same before and after compaction.
+    The appended docs carry fresh doc ids and (repo, path) keys, so no
+    tombstones stand in BM25F's way."""
+    from ariadna_spark.operators.wand import multifield_topk_single
+    from ariadna_spark.sources.segments import append_segment, compact, update_by_query
+
+    out = str(tmp_path / "mf_append")
+    build_index(spark, docs, out, fields=("content", "path"), build_id="b0", n_buckets=4)
+    pick = F.col("doc_id") % 7 == 3
+    fresh = {
+        "doc_id": F.col("doc_id") + 1_000_000,
+        "path": F.concat(F.lit("appended/"), F.col("path")),
+    }
+    if how == "append_segment":
+        batch = docs.filter(pick).withColumns(fresh)
+        append_segment(spark, batch, out, build_id="a1", n_buckets=4)
+    else:
+        update_by_query(spark, out, docs, pick, set_cols=fresh, build_id="a1", n_buckets=4)
+    new_ids = {r["doc_id"] + 1_000_000 for r in docs.filter(pick).select("doc_id").collect()}
+
+    weights = [("content", 1.0), ("path", 2.0)]
+    r0 = IndexReader(spark, out)
+    assert r0.build_ids == ["b0", "a1"] and not r0.has_tombstones
+    hits = multifield_topk_single(r0, [("path", 1.0)], "appended", 10).collect()
+    assert len(hits) == min(10, len(new_ids)) and {r["doc_id"] for r in hits} <= new_ids
+    before = [tuple(r) for r in multifield_topk_single(r0, weights, "appended merge join", 10).collect()]
+    assert {r[0] for r in before} & new_ids
+
+    compact(spark, out, build_id="c1", n_buckets=4)
+    r1 = IndexReader(spark, out)
+    assert r1.build_ids == ["c1"] and r1.field_stats == r0.field_stats
+    after = [tuple(r) for r in multifield_topk_single(r1, weights, "appended merge join", 10).collect()]
+    assert after == before
+
+
+def test_read_paths_create_nothing(spark, tmp_path):
+    """Opening a path that is not a store fails or reads empty, and
+    leaves nothing behind on disk."""
+    typo = tmp_path / "typo"
+    with pytest.raises(FileNotFoundError):
+        IndexReader(spark, str(typo))
+    store = SegmentStore(str(typo))
+    assert store.live_builds() == []
+    assert store.gc() == []
+    assert not typo.exists()

@@ -18,7 +18,7 @@ sys.path.insert(
 
 from ariadna_spark.operators.wand import IndexReader, multifield_topk_single
 from ariadna_spark.query_dsl import DslError, compile_filter, compile_search
-from ariadna_spark.sources.segments import build_index, build_multifield_index
+from ariadna_spark.sources.segments import build_index
 
 
 @pytest.fixture(scope="module")
@@ -31,7 +31,7 @@ def reader(spark, docs, tmp_path_factory):
 @pytest.fixture(scope="module")
 def mf_reader(spark, docs, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("dsl_mf"))
-    build_multifield_index(
+    build_index(
         spark, docs, out, fields=("content", "path"), build_id="m1", n_buckets=4
     )
     return IndexReader(spark, out)
@@ -102,8 +102,8 @@ def test_dsl_multi_match(spark, reader, mf_reader):
     want = rows(multifield_topk_single(
         mf_reader, [("content", 1.0), ("path", 2.0)], "doc en merge", 5))
     assert got == want
-    # single-field stores need extra_readers; without them: loud error
-    with pytest.raises(DslError, match="multifield store"):
+    # a content-only store needs extra_readers for path; without them: loud error
+    with pytest.raises(DslError, match=r"unknown fields \['path'\]"):
         compile_search(reader, body)
     # per-field layout through extra_readers works too
     got2 = rows(compile_search(reader, body, extra_readers={"path": mf_reader}))

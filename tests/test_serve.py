@@ -629,15 +629,15 @@ def test_http_analyze(service):
 
 def test_multifield_endpoint(spark, docs, tmp_path_factory):
     """GET /api/multifield serves BM25F off a single multifield store and
-    matches the operator; a plain store answers 400 (not a multifield
-    store) while its other endpoints keep working."""
+    matches the operator; a malformed fields list answers 400 while the
+    primary-field verbs keep working on the same store."""
     from serve import SearchService, serve as mk_server
 
     from ariadna_spark.operators.wand import IndexReader, multifield_topk_single
-    from ariadna_spark.sources.segments import build_multifield_index
+    from ariadna_spark.sources.segments import build_index
 
     out = str(tmp_path_factory.mktemp("serve_mf"))
-    build_multifield_index(
+    build_index(
         spark, docs, out, fields=("content", "path"), build_id="mf", n_buckets=4
     )
     svc = SearchService(spark, out)

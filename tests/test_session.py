@@ -28,6 +28,20 @@ def test_codec_env_overrides_and_empty_counts_as_unset(monkeypatch):
     assert S.default_codecs(8) == ("zstd", "zstd")
 
 
+@pytest.mark.parametrize(
+    "mem_total_kib, want",
+    [(16_456_384, "7g"), (128 * 2**20, "24g"), (1_500_000, "1g")],
+)
+def test_driver_memory_default_follows_the_machine(mem_total_kib, want):
+    """Half of MemTotal in whole GiB, between 1g and 24g."""
+    meminfo = f"MemTotal:       {mem_total_kib} kB\nMemFree:        1024 kB\n"
+    assert S.default_driver_memory(meminfo) == want
+
+
+def test_driver_memory_default_without_meminfo():
+    assert S.default_driver_memory("") == "24g"
+
+
 def test_concurrent_warmup_calls_start_one_job(monkeypatch):
     """Racing callers on a fresh session start exactly one warm-up."""
 

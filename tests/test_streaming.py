@@ -728,8 +728,9 @@ def test_compact_failure_removes_its_checkpoint(
 
     run = {
         "build_index": lambda: build_index(spark, base, out, build_id="x", n_buckets=2),
-        "build_multifield_index": lambda: segments.build_multifield_index(
-            spark, base, out, build_id="x", n_buckets=2
+        # the multi-field build (the id predates build_index(fields=))
+        "build_multifield_index": lambda: build_index(
+            spark, base, out, build_id="x", n_buckets=2, fields=("content", "path")
         ),
         "compact": lambda: segments.compact(spark, out, build_id="merged", n_buckets=2),
     }[entry]
