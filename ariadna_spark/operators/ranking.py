@@ -28,12 +28,11 @@ Plan shapes (all built on IndexReader's pruned block machinery):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..analyze import tokenize_py
-from .wand import RANGE_SIZE_DEFAULT, multiquery_kernel
+from .wand import RANGE_SIZE_DEFAULT
 
 
 def collapse_topk(
@@ -93,34 +92,17 @@ def _clause_scores(
     range_size: int = RANGE_SIZE_DEFAULT,
     rid_filter: list[int] | None = None,
 ) -> DataFrame | None:
-    """Per-clause exhaustive BM25 scores in ONE pass: the union of all
-    clauses' terms is fetched and rid-shuffled once, and the multiquery
-    Arrow kernel emits (query_id=clause index, doc_id, score) with k =
+    """Per-clause exhaustive BM25 scores in ONE pass (the batch path
+    topk_many takes, IndexReader._multiquery): the union of all clauses'
+    terms is fetched and rid-shuffled once, and the multiquery Arrow
+    kernel emits (query_id=clause index, doc_id, score) with k =
     range_size so nothing is cut before the caller's combine. A block
     shared by clauses is read once. Returns None when no clause has any
     known term. `rid_filter` restricts decoding to the given rid ranges
     (the rescore window shape: only blocks overlapping the window's doc
     ranges are decoded)."""
     per_q = {i: sorted(set(tokenize_py(c))) for i, c in enumerate(clauses)}
-    k_by_q = {i: range_size for i in per_q}
-    all_terms = sorted({t for ts in per_q.values() for t in ts})
-    if not all_terms:
-        return None
-    blocks = reader._blocks_for_terms(all_terms)
-    if blocks is None:
-        return None
-    n_docs = reader.stats["N"]
-    avgdl = reader.stats["avgdl"]
-    ranged = reader._ranged(blocks, range_size)
-    if rid_filter is not None:
-        ranged = ranged.filter(F.col("rid").isin([int(r) for r in rid_filter]))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multiquery_kernel(pdf, per_q, k_by_q, n_docs, avgdl, range_size)
-
-    return ranged.groupBy("rid").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
+    return reader._multiquery(per_q, {i: range_size for i in per_q}, range_size, rid_filter)
 
 
 def dis_max_topk(

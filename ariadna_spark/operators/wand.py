@@ -12,15 +12,23 @@ query, /root/reference/osm/osm.go:181, /root/reference/elastic contract):
     (parquet row-group pruning on the sorted term column),
  4. partition the matched blocks by doc_id range (each block is assigned
     to every range it overlaps; decoded ids are masked to the range so a
-    doc is scored exactly once),
- 5. inside each range partition, an Arrow kernel runs *stride-level
-    block-max WAND*: strides are scored in descending upper-bound order
-    (UB = sum over terms of the max block_max_score overlapping the
-    stride) and the kernel stops as soon as UB <= current local top-k
-    threshold theta — blocks in never-visited strides are never decoded,
+    doc is scored exactly once). Steps 2-4 are ONE planner for every
+    verb (IndexReader._wand): its input is a list of (store, field,
+    boost) sources — a single-field query is BM25F with one source — the
+    query terms, a per-range kernel and the output shape,
+ 5. inside each range partition, the one Spark executor
+    (IndexReader._execute) builds the range's _RangeBlocks (idf, block-max
+    bounds and a memoized decoder under each source's field statistics)
+    and hands it to the verb's Arrow kernel. The scoring kernels run
+    *stride-level block-max WAND*: strides are scored in descending
+    upper-bound order (UB = sum over (field, term) keys of the max
+    block_max_score overlapping the stride) and the kernel stops as soon
+    as UB < current local top-k threshold theta — blocks in never-visited
+    strides are never decoded,
  6. per-range top-k rows are merged globally by
     orderBy(score desc, doc_id asc).limit(k) — a TakeOrdered merge of
-    tiny per-partition heaps, not a full sort.
+    tiny per-partition heaps, not a full sort — or, for the batch and
+    exhaustive verbs, returned per range for the caller's own combine.
 
 Scale notes: nothing per-doc ever reaches the driver; the only data
 movement is (matched blocks -> range shuffle) and (k rows per range ->
@@ -86,7 +94,7 @@ def _bmw_range_topk(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Stride-level block-max WAND over ONE doc_id range, restricted to the
     posting-block rows indexed by `sub` — the one scoring loop of every
-    non-positional kernel (wand, bool, multiquery, multifield), reached
+    non-positional kernel (wand_topk, bool, multiquery), reached
     through _RangeBlocks.topk. The batch path reuses it per query over a
     SHARED decode cache, so a stop-word block is decoded once for the
     whole batch while every query still gets its own block-max pruning.
@@ -200,7 +208,7 @@ def _split_pseudo_rows(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray | No
     return (block_rows, allow, dead). `allow` (sorted int64 ids, or None
     when no filter context) comes from is_filt rows — the ES bool-filter
     allow-list; `dead` maps (field, build id) -> dead doc_ids from is_tomb
-    rows — the per-segment overwrite tombstones. Single-field stores carry
+    rows — the per-segment overwrite tombstones. One-source queries carry
     no `field` column; their tombstones key as field 0. Called only by
     _RangeBlocks, the setup every range kernel starts from."""
     allow: np.ndarray | None = None
@@ -229,18 +237,19 @@ class _RangeBlocks:
     rows, the filter allow-list and the dead versions, plus the idf per
     accumulation key, the block-max bounds and a memoized decoder.
 
-    `fields` maps field index -> (N, avgdl, boost): single-field kernels
-    pass {0: (N, avgdl, 1.0)}, BM25F one entry per field, its rows tagged
-    by a `field` column. Every field keeps its OWN statistics (the Lucene
+    `fields` maps source index -> (N, avgdl, boost), one entry per
+    planner source (IndexReader._wand): a single-field query passes
+    {0: (N, avgdl, 1.0)}, BM25F one entry per source, its rows tagged by
+    a `field` column. Every field keeps its OWN statistics (the Lucene
     per-field model). The accumulation key is the term for one field and
     "field|term" otherwise: the same term in two fields contributes twice
     to a doc's combined score, so a stride bound must sum per pair. idf
     is per key, with df clamped to the field's N (_idf). A block's bound
     is boost x idf x its stored idf-free tfnorm max x `scale` (1.0 for a
     single-build index; for merge-on-read, max(1, avgdl_global /
-    avgdl_segment) keeps the stored per-build max a valid upper bound
-    under the global avgdl). `empty` is set when the range holds no
-    block or the filter context allows no doc."""
+    avgdl_segment) of the block's own field keeps the stored per-build
+    max a valid upper bound under the global avgdl). `empty` is set when
+    the range holds no block or the filter context allows no doc."""
 
     def __init__(self, pdf: pd.DataFrame, fields: dict, range_size: int):
         rid = int(pdf["rid"].iloc[0])
@@ -358,7 +367,10 @@ def wand_kernel(
     prune_stats: dict | None = None,
     after: tuple[float, int] | None = None,
 ) -> pd.DataFrame:
-    """Blocks of all query terms for ONE doc_id range -> local top-k.
+    """Blocks of all query terms for ONE doc_id range -> local top-k: the
+    one-field wand_topk over a raw rid group (the kernel-level probe of
+    the scoring loop; queries reach wand_topk through
+    IndexReader._execute).
 
     Vectorized: per-stride upper bounds come from block metadata only;
     blocks are decoded lazily, at most once, and only when their stride is
@@ -367,12 +379,28 @@ def wand_kernel(
     driver-side stats round-trip per query.
     """
     rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
-    return _wand_topk(rng, k, stride, prune_stats, after)
+    return wand_topk(rng, k, stride, prune_stats, after)
 
 
-def _wand_topk(rng: _RangeBlocks, k, stride, prune_stats, after=None) -> pd.DataFrame:
-    """Block-max WAND over every block row of the range (wand_kernel and
-    multifield_kernel differ only in their field statistics)."""
+def wand_topk(
+    rng: _RangeBlocks,
+    k: int,
+    stride: int = STRIDE,
+    prune_stats: dict | None = None,
+    after: tuple[float, int] | None = None,
+) -> pd.DataFrame:
+    """Block-max WAND over every block row of the range: the match query
+    over one field and BM25F over several are the same loop, differing
+    only in the range's field statistics (_RangeBlocks.fields).
+
+    For BM25F the stride upper bound is the sum over (field, term) pairs
+    of boost_f x idf_{f,t} x the pair's block-max tfnorm — a valid bound
+    on the combined score because a doc scores each field independently —
+    so _bmw_range_topk prunes soundly over the combined bound with
+    "field|term" as the accumulation key. Survivor blocks decode lazily
+    with their field's avgdl and boost applied at score time; docs never
+    double-count because doc_id ranges align across fields (one shared
+    doc_id space)."""
     if rng.empty:
         return _topk_frame([], [])
     d_out, s_out = rng.topk(np.arange(len(rng.pdf)), k, stride, after=after)
@@ -381,11 +409,8 @@ def _wand_topk(rng: _RangeBlocks, k, stride, prune_stats, after=None) -> pd.Data
 
 
 def bool_kernel(
-    pdf: pd.DataFrame,
-    n_docs: int,
-    avgdl: float,
+    rng: _RangeBlocks,
     k: int,
-    range_size: int,
     must_terms: list[str],
     should_terms: list[str],
     not_terms: list[str],
@@ -410,7 +435,6 @@ def bool_kernel(
     as its per-stride `keep` predicate.
 
     Clause term sets must be disjoint (asserted in bool_topk)."""
-    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     must_s, not_s = set(must_terms), set(not_terms)
     # a must term with no block in this range -> nothing here qualifies
     # (and if the term is absent from the whole index, EVERY range hits
@@ -420,7 +444,7 @@ def bool_kernel(
     row_term, fd, ld, lo = rng.row_term, rng.fd, rng.ld, rng.lo
     is_not = np.asarray([t in not_s for t in row_term], dtype=bool)
     is_must = np.asarray([t in must_s for t in row_term], dtype=bool)
-    n_strides = (range_size + stride - 1) // stride
+    n_strides = (rng.range_size + stride - 1) // stride
     s_lo = np.maximum((fd - lo) // stride, 0).astype(np.int64)
     s_hi = np.minimum((ld - lo) // stride, n_strides - 1).astype(np.int64)
     # conjunctive coverage: strides missing any must term's blocks
@@ -625,14 +649,7 @@ def _local_topk(matched: np.ndarray, acc: np.ndarray, k: int) -> pd.DataFrame:
     return _topk_frame(matched[order], acc[order])
 
 
-def phrase_kernel(
-    pdf: pd.DataFrame,
-    terms_ordered: list[str],
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    range_size: int,
-) -> pd.DataFrame:
+def phrase_kernel(rng: _RangeBlocks, terms_ordered: list[str], k: int) -> pd.DataFrame:
     """Blocks (with positions) of one doc_id range -> local top-k docs
     containing the EXACT phrase (the match_phrase half of the delegated ES
     contract, /root/reference/elastic/elastic.go:37-44 — ES's dynamic text
@@ -645,7 +662,6 @@ def phrase_kernel(
     it exactly). All set ops are vectorized (np.intersect1d on packed
     (doc << 32 | start) keys).
     """
-    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     uniq_terms = sorted(set(terms_ordered))
     per_term, _ = _two_pass_positions(rng, uniq_terms)
     if per_term is None:
@@ -658,13 +674,7 @@ def phrase_kernel(
 
 
 def phrase_prefix_kernel(
-    pdf: pd.DataFrame,
-    fixed_ordered: list[str],
-    exp_terms: list[str],
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    range_size: int,
+    rng: _RangeBlocks, fixed_ordered: list[str], exp_terms: list[str], k: int
 ) -> pd.DataFrame:
     """Blocks (with positions) of one doc_id range -> local top-k docs
     matching the phrase `fixed_ordered + <any exp_term>` — the ES
@@ -675,7 +685,6 @@ def phrase_prefix_kernel(
     expansion's BM25 (the per-doc max over expansions that actually
     complete the phrase there) — deterministic and replayed exactly by
     the DuckDB oracle."""
-    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     uniq_fixed = sorted(set(fixed_ordered))
     uniq_exp = sorted(set(exp_terms))
     per_term, _ = _two_pass_positions(rng, uniq_fixed, or_terms=uniq_exp)
@@ -738,15 +747,7 @@ def _min_cover_mask(
     return np.logical_or.reduceat(ok_row, starts)
 
 
-def near_kernel(
-    pdf: pd.DataFrame,
-    terms: list[str],
-    window: int,
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    range_size: int,
-) -> pd.DataFrame:
+def near_kernel(rng: _RangeBlocks, terms: list[str], window: int, k: int) -> pd.DataFrame:
     """Blocks (with positions) of one doc_id range -> local top-k docs
     whose analyzed token stream contains ALL query terms within a WINDOW
     of `window` consecutive positions (any order) — proximity search, the
@@ -757,7 +758,6 @@ def near_kernel(
     contain every term). Matched docs score as the summed BM25 of the
     distinct query terms (same rank semantics as phrase_topk; the DuckDB
     oracle mirrors the window test with list slices)."""
-    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     uniq_terms = sorted(set(terms))
     m = len(uniq_terms)
     per_term, cand = _two_pass_positions(rng, uniq_terms)
@@ -782,12 +782,9 @@ def near_kernel(
 
 
 def multiquery_kernel(
-    pdf: pd.DataFrame,
+    rng: _RangeBlocks,
     per_q: dict[int, list[str]],
     k_by_q: dict[int, int],
-    n_docs: int,
-    avgdl: float,
-    range_size: int,
     stride: int = STRIDE,
 ) -> pd.DataFrame:
     """Blocks for the UNION of all batch-query terms in ONE doc_id range ->
@@ -809,7 +806,6 @@ def multiquery_kernel(
     empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
         {"query_id": "int64", "doc_id": "int64", "score": "float64"}
     )
-    rng = _RangeBlocks(pdf, {0: (n_docs, avgdl, 1.0)}, range_size)
     if rng.empty:
         return empty
     term_rows = {t: np.flatnonzero(rng.key == t) for t in np.unique(rng.key)}
@@ -831,6 +827,20 @@ def multiquery_kernel(
     return pd.concat(frames, ignore_index=True).astype(
         {"query_id": "int64", "doc_id": "int64", "score": "float64"}
     )
+
+
+def _field_tags(by_field: dict[str, list[int]], primary: str):
+    """Array column of the planner source indices that a ranged row of
+    one store feeds: the sources of the field its term belongs to
+    (term_field); pseudo-rows (no term: tombstones, filter ids) feed
+    every source of the store."""
+    every = F.array(*[F.lit(fi) for fis in by_field.values() for fi in fis])
+    if len(by_field) == 1:
+        return every
+    tags = every
+    for f, fis in by_field.items():
+        tags = F.when(term_field(primary) == f, F.array(*[F.lit(fi) for fi in fis])).otherwise(tags)
+    return tags
 
 
 class IndexReader:
@@ -858,13 +868,6 @@ class IndexReader:
         self.bdirs = [store.build_dir(b) for b in build_ids]
         self.bdir = self.bdirs[-1]
         self.build_stats = load_stats(store, build_ids)
-        # query-time GLOBAL stats across the live segment set: the segments
-        # were built independently (each with its own N/avgdl), but BM25
-        # must score against the whole corpus — df summed per term, N
-        # summed, avgdl from total token mass. This is the merge-on-read
-        # half of the "distributed multi-way posting merge".
-        n_total = sum(st["N"] for st in self.build_stats)
-        tok_total = sum(st.get("total_tokens", int(round(st["N"] * st["avgdl"]))) for st in self.build_stats)
         # per-doc overwrite (tombstones): dead versions leave N/avgdl
         # immediately (markers written at ingest); per-term df stays
         # overcounted until compaction — Lucene's deleted-docs semantics.
@@ -877,28 +880,30 @@ class IndexReader:
                 n_dead += tm["n"]
                 tok_dead += tm["doc_len_sum"]
         self.has_tombstones = n_dead > 0
-        self.stats = dict(self.build_stats[-1])
-        self.stats["N"] = n_total - n_dead
-        # `or 1.0`: a fully-deleted store has zero live tokens; any
-        # positive avgdl keeps the kernels' arithmetic finite (no live
-        # doc can score regardless)
-        self.stats["avgdl"] = (tok_total - tok_dead) / max(n_total - n_dead, 1) or 1.0
-        # PER-FIELD stats merge across live builds the same way — N and
-        # token mass summed, avgdl from the totals (single build: the
-        # stored avgdl, bit-identical to build time). Builds must agree
-        # on the fields and the primary (store_fields raises otherwise).
+        # query-time GLOBAL stats per field across the live segment set,
+        # merged once here: the segments were built independently (each
+        # with its own N/avgdl), but BM25 must score against the whole
+        # corpus — df summed per term (the kernels' df window), N and
+        # token mass summed, avgdl from the totals (the merge-on-read half
+        # of the "distributed multi-way posting merge"). The markers count
+        # dead versions' PRIMARY tokens only, so only the primary entry is
+        # tombstone-corrected (the planner refuses secondary fields of a
+        # store with pending deletes). Builds must agree on the fields and
+        # the primary (store_fields raises otherwise).
         fields = store_fields(self.build_stats)
         self.primary_field: str = fields[0]
         self.field_stats: dict = {}
         for fname in fields:
             per = [st["fields"][fname] for st in self.build_stats]
-            m = {"N": sum(int(s["N"]) for s in per),
-                 "total_tokens": sum(int(s["total_tokens"]) for s in per)}
-            if len(per) == 1:
-                m["avgdl"] = float(per[0]["avgdl"])
-            else:
-                m["avgdl"] = m["total_tokens"] / max(m["N"], 1) or 1.0
-            self.field_stats[fname] = m
+            dead_n, dead_tok = (n_dead, tok_dead) if fname == fields[0] else (0, 0)
+            n = sum(int(s["N"]) for s in per) - dead_n
+            tok = sum(int(s["total_tokens"]) for s in per) - dead_tok
+            # `or 1.0`: a fully-deleted store (or a field no doc has
+            # tokens in) has zero live tokens; any positive avgdl keeps
+            # the kernels' arithmetic finite (no live doc can score)
+            self.field_stats[fname] = {"N": n, "total_tokens": tok, "avgdl": tok / max(n, 1) or 1.0}
+        prim = self.field_stats[self.primary_field]
+        self.stats = {**self.build_stats[-1], "N": prim["N"], "avgdl": prim["avgdl"]}
         # Artifact schemas are fixed by the writer (segments._build_from_tf),
         # so prefill the per-kind schema cache with static DDL instead of
         # sniffing parquet footers: a bare spark.read.parquet costs a
@@ -1011,17 +1016,130 @@ class IndexReader:
             )
         return ranged
 
-    def _take(self, ranged: DataFrame, kernel, k: int, with_docmap: bool = False) -> DataFrame:
-        """Per-range kernel over the ranged union, then the global
+    def _wand(
+        self,
+        sources: list[tuple["IndexReader", str, float]],
+        terms: list[str],
+        kernel,
+        k: int | None = None,
+        range_size: int = RANGE_SIZE_DEFAULT,
+        with_positions: bool = False,
+        flt=None,
+        rid_filter: list[int] | None = None,
+        with_docmap: bool = False,
+        schema: str = WAND_OUT_SCHEMA,
+    ) -> DataFrame | None:
+        """The one planner of every WAND-family query: a single-field
+        query is BM25F over [(self, primary, 1.0)].
+
+        `sources` are (store, field, boost) triples; source i scores with
+        field index i. Per distinct store (same dir and live builds) the
+        query terms expand to each requested field's stored spelling and
+        ONE pruned block read fetches them all (positions only when
+        asked), ranged with the store's tombstones and `flt` (_ranged).
+        With more than one source every row is tagged with the source
+        indices it feeds (`field`, exploded: a store queried under two
+        boosts replicates its rows, pseudo-rows feed every source of
+        their store); a secondary field's "<field>:" prefix is stripped,
+        so kernels see bare terms. `rid_filter` keeps only those doc_id
+        ranges. The kernel gets each range's _RangeBlocks under the
+        sources' per-field (N, avgdl, boost) and returns `schema` rows.
+
+        k set: the global TakeOrdered top-k (an empty (doc_id, score)
+        frame when no store holds a block of the terms); k None: the
+        per-range frame (None when nothing matches).
+
+        Field statistics of a store with pending deletes are
+        tombstone-corrected for its primary field only, so a secondary
+        field of such a store is refused (compact() first)."""
+        stores: dict[tuple, tuple["IndexReader", dict[str, list[int]]]] = {}
+        metas: dict[int, tuple[int, float, float]] = {}
+        for fi, (reader, field, boost) in enumerate(sources):
+            if reader.has_tombstones and field != reader.primary_field:
+                raise NotImplementedError(
+                    f"BM25F over secondary field {field!r} of a store with pending "
+                    "deletions — compact() first (its statistics do not track tombstones)"
+                )
+            fs = reader.field_stats[field]
+            metas[fi] = (fs["N"], fs["avgdl"], float(boost))
+            key = (reader.out_dir, tuple(reader.build_ids))
+            stores.setdefault(key, (reader, {}))[1].setdefault(field, []).append(fi)
+        parts = []
+        for reader, by_field in stores.values():
+            prim = reader.primary_field
+            stored = sorted(
+                {t if f == prim else f"{f}{FIELD_SEP}{t}" for f in by_field for t in terms}
+            )
+            blocks = reader._blocks_for_terms(stored, with_positions)
+            if blocks is None:
+                continue
+            ranged = reader._ranged(blocks, range_size, flt)
+            if len(sources) > 1:
+                ranged = ranged.withColumn("field", F.explode(_field_tags(by_field, prim)))
+            if set(by_field) != {prim}:
+                ranged = ranged.withColumn("term", F.substring_index("term", FIELD_SEP, -1))
+            parts.append(ranged)
+        if not parts:
+            return None if k is None else self.spark.createDataFrame([], WAND_OUT_SCHEMA)
+        ranged = parts[0]
+        for p in parts[1:]:
+            ranged = ranged.unionByName(p, allowMissingColumns=True)
+        if rid_filter is not None:
+            ranged = ranged.filter(F.col("rid").isin([int(r) for r in rid_filter]))
+        return self._execute(ranged, metas, kernel, range_size, schema, k, with_docmap)
+
+    def _execute(
+        self,
+        ranged: DataFrame,
+        metas: dict,
+        kernel,
+        range_size: int,
+        schema: str,
+        k: int | None,
+        with_docmap: bool,
+    ) -> DataFrame:
+        """The Spark executor: the kernel runs per rid group of the ranged
+        union on that range's _RangeBlocks; with k set, the global
         TakeOrdered merge of the tiny per-range heaps by (score desc,
-        doc_id asc); `with_docmap` joins the k winners' (repo, path)."""
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
+        doc_id asc) follows, and `with_docmap` joins the k winners'
+        (repo, path)."""
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            return kernel(_RangeBlocks(pdf, metas, range_size))
+
+        local = ranged.groupBy("rid").applyInPandas(run, schema)
+        if k is None:
+            return local
         out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if with_docmap:
             out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
                 F.desc("score"), F.asc("doc_id")
             )
         return out
+
+    def _one_field(self) -> list[tuple["IndexReader", str, float]]:
+        """The planner sources of a single-field verb."""
+        return [(self, self.primary_field, 1.0)]
+
+    def _multiquery(
+        self,
+        per_q: dict[int, list[str]],
+        k_by_q: dict[int, int],
+        range_size: int = RANGE_SIZE_DEFAULT,
+        rid_filter: list[int] | None = None,
+    ) -> DataFrame | None:
+        """Per-range (query_id, doc_id, score) rows of a query batch in ONE
+        pass (multiquery_kernel): the union of all queries' terms is
+        fetched and rid-shuffled once. topk_many and the clause verbs
+        (ranking._clause_scores) share it; None when no term has a block."""
+        return self._wand(
+            self._one_field(),
+            sorted({t for ts in per_q.values() for t in ts}),
+            lambda rng: multiquery_kernel(rng, per_q, k_by_q),
+            range_size=range_size,
+            rid_filter=rid_filter,
+            schema="query_id long, doc_id long, score double",
+        )
 
     def _require_positions(self, verb: str) -> None:
         if not all(st.get("positions") for st in self.build_stats):
@@ -1119,27 +1237,39 @@ class IndexReader:
 
         with_positions=False drops the pos_varint column BEFORE the range
         shuffle (and Catalyst prunes it from the parquet scan), so plain
-        BM25 queries never pay for the positions stream."""
-        avgdl_q = self.stats["avgdl"]
+        BM25 queries never pay for the positions stream.
+
+        `scale` is per (build, field): a block's stored max is exact under
+        its build's avgdl_f, and max(1, merged avgdl_f / build avgdl_f)
+        keeps it an upper bound under the merged avgdl_f (a field whose
+        avgdl grew across appends more than the primary's needs the larger
+        factor, or WAND prunes that field's true winner). Terms name their
+        field ("<field>:<term>", bare for the primary)."""
         dirs = self._bucket_dirs(terms)
         if not dirs:
             return None
-        # tombstone-only builds (delete_by_query) have avgdl == 0 and no
-        # blocks — their scale is never consulted, any finite value works
-        scale_by_build = {
-            bid: max(1.0, avgdl_q / st["avgdl"]) if st["avgdl"] > 0 else 1.0
-            for bid, st in zip(self.build_ids, self.build_stats)
-        }
         from ..sources.segments import bid_col
 
-        mapping = F.create_map(
-            *[F.lit(x) for kv in scale_by_build.items() for x in kv]
-        )
+        prim = self.primary_field
+        scale = None
+        for f in sorted({t.split(FIELD_SEP)[0] if FIELD_SEP in t else prim for t in terms}):
+            avgdl_q = self.field_stats[f]["avgdl"]
+            # tombstone-only builds (delete_by_query) have avgdl == 0 and
+            # no blocks — their scale is never consulted, any finite value
+            # works
+            by_build = {}
+            for bid, st in zip(self.build_ids, self.build_stats):
+                b_avgdl = st["fields"][f]["avgdl"]
+                by_build[bid] = max(1.0, avgdl_q / b_avgdl) if b_avgdl > 0 else 1.0
+            s = F.element_at(
+                F.create_map(*[F.lit(x) for kv in by_build.items() for x in kv]), F.col("bid")
+            )
+            scale = s if scale is None else F.when(term_field(prim) == f, s).otherwise(scale)
         blocks = (
             self._read_parquet(dirs, "blocks")
             .filter(F.col("term").isin(terms))
             .withColumn("bid", bid_col())
-            .withColumn("scale", F.element_at(mapping, F.col("bid")))
+            .withColumn("scale", scale)
         )
         if not with_positions:
             blocks = blocks.drop("pos_varint")
@@ -2062,22 +2192,14 @@ class IndexReader:
         overlap = (set(m_terms) & set(s_terms)) | (set(m_terms) | set(s_terms)) & set(n_terms)
         if overlap:
             raise ValueError(f"bool clauses must be disjoint, got {sorted(overlap)} twice")
-        empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
         if not (m_terms or s_terms):
-            return empty
-        blocks = self._blocks_for_terms(sorted(set(m_terms + s_terms + n_terms)))
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return bool_kernel(
-                pdf, n_docs, avgdl, k, range_size, m_terms, s_terms, n_terms, msm,
-                after=after,
-            )
-
-        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
+            return self.spark.createDataFrame([], WAND_OUT_SCHEMA)
+        return self._wand(
+            self._one_field(),
+            sorted(set(m_terms + s_terms + n_terms)),
+            lambda rng: bool_kernel(rng, k, m_terms, s_terms, n_terms, msm, after=after),
+            k, range_size, flt=flt, with_docmap=with_docmap,
+        )
 
     def phrase_topk(
         self,
@@ -2095,24 +2217,15 @@ class IndexReader:
 
         A one-token phrase degenerates to a plain match query."""
         terms = list(tokenize_py(phrase))
-        empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
-        if not terms:
-            return empty
-        if len(terms) == 1:
+        if len(terms) < 2:
             return self._topk_terms(
                 terms, k, range_size=range_size, with_docmap=with_docmap, flt=flt
             )
         self._require_positions("phrase")
-        blocks = self._blocks_for_terms(sorted(set(terms)), with_positions=True)
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return phrase_kernel(pdf, terms, n_docs, avgdl, k, range_size)
-
-        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
+        return self._wand(
+            self._one_field(), sorted(set(terms)), lambda rng: phrase_kernel(rng, terms, k),
+            k, range_size, with_positions=True, flt=flt, with_docmap=with_docmap,
+        )
 
     def phrase_prefix_topk(
         self,
@@ -2145,18 +2258,12 @@ class IndexReader:
         exp = [r["term"] for r in self.suggest_terms(last, size=max_expansions).collect()]
         if not exp:
             return empty
-        blocks = self._blocks_for_terms(
-            sorted(set(fixed) | set(exp)), with_positions=True
+        return self._wand(
+            self._one_field(),
+            sorted(set(fixed) | set(exp)),
+            lambda rng: phrase_prefix_kernel(rng, fixed, exp, k),
+            k, range_size, with_positions=True, flt=flt, with_docmap=with_docmap,
         )
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return phrase_prefix_kernel(pdf, fixed, exp, n_docs, avgdl, k, range_size)
-
-        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
 
     def near_topk(
         self,
@@ -2173,24 +2280,15 @@ class IndexReader:
         phrase_topk; window == len(terms) makes it an unordered phrase).
         Requires positions (the index default)."""
         terms = sorted(set(tokenize_py(query)))
-        empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
-        if not terms:
-            return empty
-        if len(terms) == 1:
+        if len(terms) < 2:
             return self._topk_terms(
                 terms, k, range_size=range_size, with_docmap=with_docmap, flt=flt
             )
         self._require_positions("proximity")
-        blocks = self._blocks_for_terms(terms, with_positions=True)
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return near_kernel(pdf, terms, window, n_docs, avgdl, k, range_size)
-
-        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
+        return self._wand(
+            self._one_field(), terms, lambda rng: near_kernel(rng, terms, window, k),
+            k, range_size, with_positions=True, flt=flt, with_docmap=with_docmap,
+        )
 
     def topk_many(
         self,
@@ -2211,24 +2309,11 @@ class IndexReader:
         """
         per_q = {qid: sorted(set(tokenize_py(q))) for qid, q, k in queries}
         k_by_q = {qid: k for qid, _, k in queries}
-        all_terms = sorted({t for ts in per_q.values() for t in ts})
-        empty = self.spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double"
-        )
-        if not all_terms:
-            return empty
-        blocks = self._blocks_for_terms(all_terms)
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return multiquery_kernel(pdf, per_q, k_by_q, n_docs, avgdl, range_size)
-
-        local = self._ranged(blocks, range_size).groupBy("rid").applyInPandas(
-            kernel, "query_id long, doc_id long, score double"
-        )
+        local = self._multiquery(per_q, k_by_q, range_size)
+        if local is None:
+            return self.spark.createDataFrame(
+                [], "query_id long, rank int, doc_id long, score double"
+            )
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         ranked = local.withColumn("rank", F.row_number().over(w))
         cond = None
@@ -2243,21 +2328,10 @@ class IndexReader:
         for cross-field composition where the global cut can only happen
         AFTER field scores merge. Same kernel as topk with k = range_size:
         a range holds at most range_size docs, so nothing is cut."""
-        empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
-        if not terms:
-            return empty
-        blocks = self._blocks_for_terms(terms)
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return wand_kernel(pdf, n_docs, avgdl, range_size, range_size)
-
-        return self._ranged(blocks, range_size).groupBy("rid").applyInPandas(
-            kernel, WAND_OUT_SCHEMA
+        local = self._wand(
+            self._one_field(), terms, lambda rng: wand_topk(rng, range_size), range_size=range_size
         )
+        return self.spark.createDataFrame([], WAND_OUT_SCHEMA) if local is None else local
 
     def _topk_terms(
         self,
@@ -2268,45 +2342,10 @@ class IndexReader:
         after: tuple[float, int] | None = None,
         flt=None,
     ) -> DataFrame:
-        empty = self.spark.createDataFrame([], WAND_OUT_SCHEMA)
-        if not terms:
-            return empty
-        blocks = self._blocks_for_terms(terms)
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return wand_kernel(pdf, n_docs, avgdl, k, range_size, after=after)
-
-        return self._take(self._ranged(blocks, range_size, flt), kernel, k, with_docmap)
-
-
-def multifield_kernel(
-    pdf: pd.DataFrame,
-    metas: dict[int, tuple[int, float, float]],
-    k: int,
-    range_size: int,
-    stride: int = STRIDE,
-    prune_stats: dict | None = None,
-) -> pd.DataFrame:
-    """Blocks of ALL fields' query terms for ONE doc_id range -> combined
-    BM25F local top-k (VERDICT r4 #1 — the pruned replacement for the
-    exhaustive per-field scores() union).
-
-    metas: field index -> (n_docs, avgdl, boost) — every field keeps its
-    OWN statistics (the Lucene per-field model). The stride upper bound is
-    the sum over (field, term) pairs of boost_f x idf_{f,t} x the pair's
-    block-max tfnorm — a valid bound on the combined score because a doc
-    scores each field independently — so the existing _bmw_range_topk
-    loop prunes soundly over the combined bound with (field|term) as the
-    accumulation key (_RangeBlocks). Survivor blocks decode lazily with
-    their field's avgdl and boost applied at score time; docs never
-    double-count because doc_id ranges align across fields (one shared
-    doc_id space).
-    """
-    return _wand_topk(_RangeBlocks(pdf, metas, range_size), k, stride, prune_stats)
+        return self._wand(
+            self._one_field(), terms, lambda rng: wand_topk(rng, k, after=after),
+            k, range_size, flt=flt, with_docmap=with_docmap,
+        )
 
 
 def multifield_topk(
@@ -2321,12 +2360,14 @@ def multifield_topk(
     own df/dl/avgdl statistics), score = sum over fields of
     boost_f * BM25_f(doc).
 
-    pruned=True (VERDICT r4 #1): ONE combined BM25F-style WAND — every
-    field's blocks are fetched tagged by field, ranged into the SHARED
-    doc_id partitioning, and multifield_kernel prunes strides against the
-    summed per-(field,term) block-max bound, decoding only survivor
-    blocks. pruned=False keeps the former exhaustive shape (per-field
-    scores() with k = range_size, boost-weighted union, global cut) — the
+    pruned=True (VERDICT r4 #1): ONE combined BM25F-style WAND — the
+    planner (IndexReader._wand) fetches every store's blocks, tagged by
+    source, into the SHARED doc_id partitioning, and wand_topk prunes
+    strides against the summed per-(field,term) block-max bound, decoding
+    only survivor blocks. Each store scores its primary field; a store
+    with pending deletes serves it with tombstone-corrected statistics.
+    pruned=False keeps the former exhaustive shape (per-field scores()
+    with k = range_size, boost-weighted union, global cut) — the
     reference both paths must match; the exhaustive cut is still correct
     because a doc's combined rank isn't knowable from any single field's
     top-k, but it decodes every posting of every term in every field."""
@@ -2347,45 +2388,8 @@ def multifield_topk(
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-
-    spark = fields[0][0].spark
-    metas: dict[int, tuple[int, float, float]] = {}
-    # Fields bound to the SAME physical store (same out_dir + live builds —
-    # e.g. one index queried under several boosts) share ONE block scan:
-    # the pruned parquet read, the df window and the tomb union are
-    # identical per store, so replicate the rows with an exploded field-tag
-    # array instead of unioning N identical subtrees (N-1 fewer scans; the
-    # kernel sees exactly the rows the per-field unions produced).
-    groups: dict[tuple, tuple] = {}
-    order: list[tuple] = []
-    for fi, (reader, boost) in enumerate(fields):
-        metas[fi] = (reader.stats["N"], reader.stats["avgdl"], float(boost))
-        key = (reader.out_dir, tuple(reader.build_ids))
-        if key not in groups:
-            groups[key] = (reader, [])
-            order.append(key)
-        groups[key][1].append(fi)
-    parts = []
-    for key in order:
-        reader, fis = groups[key]
-        blocks = reader._blocks_for_terms(terms)
-        if blocks is None:
-            continue
-        parts.append(
-            reader._ranged(blocks, range_size).withColumn(
-                "field", F.explode(F.array(*[F.lit(fi) for fi in fis]))
-            )
-        )
-    if not parts:
-        return spark.createDataFrame([], WAND_OUT_SCHEMA)
-    ranged = parts[0]
-    for p in parts[1:]:
-        ranged = ranged.unionByName(p, allowMissingColumns=True)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multifield_kernel(pdf, metas, k, range_size)
-
-    return fields[0][0]._take(ranged, kernel, k)
+    sources = [(reader, reader.primary_field, float(boost)) for reader, boost in fields]
+    return fields[0][0]._wand(sources, terms, lambda rng: wand_topk(rng, k), k, range_size)
 
 
 def multifield_topk_single(
@@ -2404,56 +2408,20 @@ def multifield_topk_single(
     fields: [(field_name, boost)] — names from the build's `fields`; the
     primary field's terms are stored bare, secondary fields' prefixed
     "<field>:<term>". Statistics (N, avgdl, df, block-max bounds) are all
-    per-field by construction, so multifield_kernel's combined-bound
-    pruning applies unchanged: the blocks are simply tagged with their
-    field index derived from the stored term's prefix.
+    per-field by construction; the planner tags each block with its
+    source from the stored term's prefix.
 
-    Deletion interplay is deliberately out of scope for now: per-field
-    statistics do not track tombstones, so a store with pending deletes
-    must compact first (compact() recomputes exact per-field stats)."""
-    fstats = reader.field_stats
-    if reader.has_tombstones:
-        raise NotImplementedError(
-            "BM25F over a store with pending deletions — compact() first "
-            "(per-field statistics do not track tombstones)"
-        )
-    prim = reader.primary_field
-    names = [n for n, _ in fields]
-    unknown = sorted(set(names) - set(fstats))
+    Deletion interplay: the primary field is served over pending deletes
+    (its statistics are tombstone-corrected, as for multifield_topk);
+    per-field statistics of the other fields do not track tombstones, so
+    naming one of them on a store with pending deletes raises
+    NotImplementedError until compact() recomputes them."""
+    unknown = sorted({n for n, _ in fields} - set(reader.field_stats))
     if unknown:
-        raise ValueError(f"unknown fields {unknown}; store has {sorted(fstats)}")
-    spark = reader.spark
-    empty = spark.createDataFrame([], WAND_OUT_SCHEMA)
+        raise ValueError(f"unknown fields {unknown}; store has {sorted(reader.field_stats)}")
+    sources = [(reader, name, float(boost)) for name, boost in fields]
     terms = sorted(set(tokenize_py(query)))
-    if not terms or not fields:
-        return empty
-    all_terms = sorted(
-        {t if n == prim else f"{n}{FIELD_SEP}{t}" for n in names for t in terms}
-    )
-    blocks = reader._blocks_for_terms(all_terms)
-    if blocks is None:
-        return empty
-    metas = {
-        fi: (fstats[n]["N"], fstats[n]["avgdl"], float(boost))
-        for fi, (n, boost) in enumerate(fields)
-    }
-    fname = term_field(prim)
-    fidx = F.lit(None).cast("int")
-    for fi, n in enumerate(names):
-        fidx = F.when(fname == n, F.lit(fi)).otherwise(fidx)
-    bare = F.when(primary_term(), F.col("term")).otherwise(
-        F.expr(f"substring(term, instr(term, '{FIELD_SEP}') + 1)")
-    )
-    ranged = (
-        reader._ranged(blocks, range_size)
-        .withColumn("field", fidx)
-        .withColumn("term", bare)
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multifield_kernel(pdf, metas, k, range_size)
-
-    return reader._take(ranged, kernel, k)
+    return reader._wand(sources, terms, lambda rng: wand_topk(rng, k), k, range_size)
 
 
 register_by_value(__name__)

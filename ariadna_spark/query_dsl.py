@@ -21,9 +21,7 @@ Scope (loud errors outside it — never a silent wrong answer):
     prefix           {field: value}           -> prefix_topk
     fuzzy            {field: {value, fuzziness}} -> fuzzy_topk
     multi_match      {query, fields: [f^boost]} -> multifield_topk_single
-                                                  (the store's fields) or
-                                                  per-field readers via
-                                                  `extra_readers`
+                                                  (the store's own fields)
     bool             {must, should, must_not, filter,
                       minimum_should_match}   -> bool_topk / filtered paths
   filter clauses (bool.filter, non-scoring):
@@ -205,7 +203,6 @@ def _parse_boosted(fields: list) -> list[tuple[str, float]]:
 def msearch(
     reader,
     bodies: list[dict],
-    extra_readers: dict | None = None,
     docs: DataFrame | None = None,
 ) -> list[list[dict]]:
     """ES `_msearch`: N request bodies -> N result row-lists, in order.
@@ -234,7 +231,7 @@ def msearch(
                     continue
         singles.append(i)
     # validate every single body BEFORE running anything (loud, no partial work)
-    compiled = {i: compile_search(reader, bodies[i], extra_readers, docs) for i in singles}
+    compiled = {i: compile_search(reader, bodies[i], docs) for i in singles}
     results: list[list[dict]] = [[] for _ in bodies]
     if batch:
         got = reader.topk_many(batch)
@@ -470,18 +467,16 @@ def compile_aggs(reader, body: dict) -> DataFrame:
 def compile_search(
     reader,
     body: dict,
-    extra_readers: dict | None = None,
     docs: DataFrame | None = None,
 ) -> DataFrame:
     """One ES `_search` request body -> one engine DataFrame.
 
     multi_match scores the fields the store indexes itself: BM25F over
-    the per-field terms of build_index(fields=...). `extra_readers` maps
-    field name -> IndexReader of a one-store-per-field layout, each
-    store's primary field standing for that field; it serves multi_match
-    only when a requested field is not in the store. `docs` is the
-    source corpus, required only for `highlight` bodies (snippets re-read
-    the k winners' content)."""
+    the per-field terms of build_index(fields=...), through the same
+    planner as every other query; a field the store does not index is a
+    DslError ("unknown fields"). `docs` is the source corpus, required
+    only for `highlight` bodies (snippets re-read the k winners'
+    content)."""
     if not isinstance(body, dict):
         raise DslError("request body must be an object")
     unknown = set(body) - {
@@ -521,7 +516,7 @@ def compile_search(
         if "aggs" in body or "collapse" in body or body.get("sort"):
             raise DslError("min_score composes with relevance-ranked queries only")
         sub = {kk: vv for kk, vv in body.items() if kk != "min_score"}
-        out = compile_search(reader, sub, extra_readers, docs)
+        out = compile_search(reader, sub, docs)
         # scores sort desc, so filter-after-topk == ES semantics: docs
         # below min_score are a suffix of the ranking (no backfill exists)
         return out.filter(F.col("score") >= float(body["min_score"]))
@@ -623,23 +618,15 @@ def compile_search(
         if not isinstance(spec, dict) or "query" not in spec or "fields" not in spec:
             raise DslError("multi_match needs {query, fields}")
         fields = _parse_boosted(spec["fields"])
-        from .operators.wand import multifield_topk, multifield_topk_single
+        from .operators.wand import multifield_topk_single
 
         unknown = sorted({n for n, _ in fields} - set(reader.field_stats))
-        if not unknown:
-            return multifield_topk_single(reader, fields, spec["query"], k)
-        if extra_readers is None:
+        if unknown:
             raise DslError(
                 f"multi_match: unknown fields {unknown}; the store indexes "
-                f"{sorted(reader.field_stats)} (build with fields=, or pass "
-                f"per-field extra_readers)"
+                f"{sorted(reader.field_stats)} (build with fields=)"
             )
-        prim = reader.primary_field
-        missing = [n for n, _ in fields if n != prim and n not in extra_readers]
-        if missing:
-            raise DslError(f"no reader for fields {missing}")
-        pairs = [(reader if n == prim else extra_readers[n], b) for n, b in fields]
-        return multifield_topk(pairs, spec["query"], k)
+        return multifield_topk_single(reader, fields, spec["query"], k)
     if kind == "bool":
         spec = dict(spec)
         flt = compile_filter(spec.pop("filter", None))

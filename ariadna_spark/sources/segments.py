@@ -1129,12 +1129,7 @@ def snapshot_index(out_dir: str, dest: str) -> dict:
     live = store.live_builds()
     if not live:
         raise FileNotFoundError(f"no live build in {out_dir}")
-    snap = SegmentStore(dest)
-    copied, skipped = [], []
-    for b in live:
-        (copied if _copy_build(store.build_dir(b), snap.build_dir(b)) else skipped).append(b)
-    snap.publish_many(live)
-    return {"builds": live, "copied": copied, "skipped": skipped}
+    return _copy_live(store, SegmentStore(dest), live)
 
 
 def restore_index(snapshot: str, out_dir: str) -> dict:
@@ -1148,11 +1143,17 @@ def restore_index(snapshot: str, out_dir: str) -> dict:
     live = snap.live_builds()
     if not live:
         raise FileNotFoundError(f"no snapshot MANIFEST in {snapshot}")
-    store = SegmentStore(out_dir)
+    return _copy_live(snap, SegmentStore(out_dir), live)
+
+
+def _copy_live(src: SegmentStore, dst: SegmentStore, live: list[str]) -> dict:
+    """The copy snapshot_index and restore_index share: each of `live`
+    copies from src into dst (_copy_build skips a build dst already
+    holds), then dst publishes `live` as its live list in one swap."""
     copied, skipped = [], []
     for b in live:
-        (copied if _copy_build(snap.build_dir(b), store.build_dir(b)) else skipped).append(b)
-    store.publish_many(live)
+        (copied if _copy_build(src.build_dir(b), dst.build_dir(b)) else skipped).append(b)
+    dst.publish_many(live)
     return {"builds": live, "copied": copied, "skipped": skipped}
 
 

@@ -300,7 +300,7 @@ def test_multifield_kernel_prunes_blocks():
         delta_encode_ids,
         varint_encode,
     )
-    from ariadna_spark.operators.wand import multifield_kernel
+    from ariadna_spark.operators.wand import _RangeBlocks, wand_topk
 
     rng = np.random.default_rng(3)
     rows = []
@@ -335,8 +335,8 @@ def test_multifield_kernel_prunes_blocks():
     pdf = pd.DataFrame(rows)
     metas = {0: (64000, 100.0, 1.0), 1: (64000, 100.0, 2.0)}
     stats = {}
-    out = multifield_kernel(
-        pdf, metas, k=1, range_size=64000, stride=1024, prune_stats=stats
+    out = wand_topk(
+        _RangeBlocks(pdf, metas, range_size=64000), k=1, stride=1024, prune_stats=stats
     )
     assert len(out) == 1
     assert out["doc_id"].iloc[0] == (54 % 50) * 128  # the high-tf doc
@@ -696,7 +696,7 @@ def test_bool_kernel_conjunctive_prune():
     """A rare must term confines visits to its strides: blocks of the
     common term outside those strides never decode."""
     from ariadna_spark.functions.varint import delta_encode_ids, varint_encode
-    from ariadna_spark.operators.wand import bool_kernel
+    from ariadna_spark.operators.wand import _RangeBlocks, bool_kernel
 
     n_docs, avgdl = 100_000, 100.0
     rows = []
@@ -739,11 +739,8 @@ def test_bool_kernel_conjunctive_prune():
     )
     stats = {}
     out = bool_kernel(
-        pd.DataFrame(rows),
-        n_docs,
-        avgdl,
+        _RangeBlocks(pd.DataFrame(rows), {0: (n_docs, avgdl, 1.0)}, range_size=64000),
         k=10,
-        range_size=64000,
         must_terms=["rare", "common"],
         should_terms=[],
         not_terms=[],
@@ -1135,3 +1132,107 @@ def test_read_paths_create_nothing(spark, tmp_path):
     assert store.live_builds() == []
     assert store.gc() == []
     assert not typo.exists()
+
+
+def _keyed_docs(spark, rows):
+    """(doc_id, path, content) triples -> a docs frame whose (repo, path)
+    keys are unique per doc (repo = r<doc_id>), so appends overwrite
+    nothing."""
+    return spark.createDataFrame(
+        [(i, f"r{i}", path, "c", "en", content) for i, path, content in rows],
+        "doc_id long, repo string, path string, commit string, lang string, content string",
+    ).withColumn("content_sha", F.sha2("content", 256))
+
+
+def test_bm25f_bounds_scale_per_field(spark, tmp_path):
+    """Across builds, a secondary field's block-max bounds scale by that
+    field's own avgdl growth. Here path avgdl goes from 1.01 (b0) to 51.0
+    merged while content's stays 4, so a bound scaled by the primary's
+    ratio would be ~50x too low and WAND would prune doc 1500, the one
+    doc whose path repeats the query term: BM25F top-1 before compaction
+    must equal top-1 after it (one build, exact bounds)."""
+    from ariadna_spark.operators.wand import multifield_topk_single
+    from ariadna_spark.sources.segments import append_segment, compact
+
+    out = str(tmp_path / "scale")
+    content = "alpha beta gamma delta"
+    filler = " ".join(f"w{j}" for j in range(20))
+    base = [(i, ("zeta " * 10 + filler) if i == 1500 else "zeta", content) for i in range(2048)]
+    long_path = " ".join(f"p{j}" for j in range(101))
+    more = [(i, long_path, content) for i in range(4096, 6144)]
+    build_index(spark, _keyed_docs(spark, base), out, fields=("content", "path"),
+                build_id="b0", n_buckets=4)
+    append_segment(spark, _keyed_docs(spark, more), out, build_id="a1", n_buckets=4)
+    r0 = IndexReader(spark, out)
+    assert [st["fields"]["path"]["avgdl"] for st in r0.build_stats] == [1.01416015625, 101.0]
+    before = [tuple(r) for r in multifield_topk_single(r0, [("path", 1.0)], "zeta", 1).collect()]
+    compact(spark, out, build_id="c1", n_buckets=4)
+    r1 = IndexReader(spark, out)
+    assert r1.field_stats == r0.field_stats
+    after = [tuple(r) for r in multifield_topk_single(r1, [("path", 1.0)], "zeta", 1).collect()]
+    assert after[0][0] == 1500
+    assert before == after
+
+
+def test_bm25f_primary_field_over_pending_deletes(spark, docs, tmp_path):
+    """BM25F refuses only a SECONDARY field of a store with pending
+    deletes: the primary field's statistics are tombstone-corrected, so
+    BM25F over it equals the match query (one field, boost 1), for both
+    wrappers."""
+    from ariadna_spark.operators.wand import multifield_topk, multifield_topk_single
+    from ariadna_spark.sources.segments import delete_by_query
+
+    out = str(tmp_path / "mf_del")
+    build_index(spark, docs, out, fields=("content", "path"), build_id="b0", n_buckets=4)
+    r0 = IndexReader(spark, out)
+    victims = [r["doc_id"] for r in r0.topk("merge join", 3).collect()]
+    delete_by_query(spark, out, flt=F.col("doc_id").isin(victims), build_id="d1")
+    r = IndexReader(spark, out)
+    assert r.has_tombstones and r.field_stats["content"]["N"] == r.stats["N"]
+    want = [tuple(x) for x in r.topk("merge join", 10).collect()]
+    assert want and not ({x[0] for x in want} & set(victims))
+    single = multifield_topk_single(r, [("content", 1.0)], "merge join", 10).collect()
+    assert [tuple(x) for x in single] == want
+    assert [tuple(x) for x in multifield_topk([(r, 1.0)], "merge join", 10).collect()] == want
+    with pytest.raises(NotImplementedError, match="secondary field 'path'"):
+        multifield_topk_single(r, [("content", 1.0), ("path", 2.0)], "merge join", 10)
+
+
+def test_build_is_byte_deterministic(spark, docs, tmp_path):
+    """Two builds of the same docs in one session write byte-identical
+    parquet files (named alike once the per-job uuid is dropped from the
+    part names) and JSON markers that are equal once their wall-clock
+    `wall_ms` fields are dropped: the build leaves no file-order or
+    row-order nondeterminism of its own."""
+    import re
+
+    uuid = re.compile(r"-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}")
+
+    def files(out):
+        got = {}
+        for dp, _, fns in os.walk(out):
+            for fn in fns:
+                p = os.path.join(dp, fn)
+                with open(p, "rb") as f:
+                    got[uuid.sub("", os.path.relpath(p, out))] = f.read()
+        return got
+
+    def timeless(x):
+        if isinstance(x, dict):
+            return {k: timeless(v) for k, v in x.items() if k != "wall_ms"}
+        if isinstance(x, list):
+            return [timeless(v) for v in x]
+        return x
+
+    runs = []
+    for name in ("a", "b"):
+        out = str(tmp_path / name)
+        build_index(spark, docs, out, build_id="d", n_buckets=4)
+        runs.append(files(out))
+    a, b = runs
+    assert a.keys() == b.keys()
+    parquet = [p for p in a if p.endswith(".parquet")]
+    markers = [p for p in a if p.endswith(".json")]
+    assert parquet and markers
+    assert [p for p in parquet if a[p] != b[p]] == []
+    assert [p for p in markers if timeless(json.loads(a[p])) != timeless(json.loads(b[p]))] == []

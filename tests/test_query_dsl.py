@@ -102,12 +102,9 @@ def test_dsl_multi_match(spark, reader, mf_reader):
     want = rows(multifield_topk_single(
         mf_reader, [("content", 1.0), ("path", 2.0)], "doc en merge", 5))
     assert got == want
-    # a content-only store needs extra_readers for path; without them: loud error
+    # a content-only store does not index path: loud error
     with pytest.raises(DslError, match=r"unknown fields \['path'\]"):
         compile_search(reader, body)
-    # per-field layout through extra_readers works too
-    got2 = rows(compile_search(reader, body, extra_readers={"path": mf_reader}))
-    assert len(got2) == 5
 
 
 def test_dsl_aggs(spark, reader):
