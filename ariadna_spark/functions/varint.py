@@ -51,19 +51,26 @@ def varint_encode(values: np.ndarray) -> bytes:
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
-    """LEB128 bytes -> uint64 array."""
+    """LEB128 bytes -> uint64 array. Every value's first byte is read in
+    one gather; only the values still running revisit the next byte slot,
+    so a stream of mostly one-byte values (doc id gaps, tfs, position
+    gaps) costs a few whole-stream passes, not one per byte slot."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
+    ends = np.flatnonzero(b < 0x80)
+    if ends.size == b.size:  # every value is one byte (or the stream is empty)
+        return b.astype(np.uint64)
+    if ends.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    ends = np.flatnonzero(is_last)
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    out = np.zeros(ends.shape, dtype=np.uint64)
-    for j in range(_MAX_BYTES):
-        mask = (starts + j) <= ends
-        if not mask.any():
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    out = (b[starts] & 0x7F).astype(np.uint64)
+    run = np.flatnonzero(ends > starts)
+    for j in range(1, _MAX_BYTES):
+        if run.size == 0:
             break
-        out[mask] |= (b[starts[mask] + j].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * j)
+        out[run] |= (b[starts[run] + j] & 0x7F).astype(np.uint64) << np.uint64(7 * j)
+        run = run[ends[run] > starts[run] + j]
     return out
 
 
@@ -83,8 +90,7 @@ def delta_encode_ids(sorted_ids: np.ndarray) -> bytes:
 
 
 def delta_decode_ids(buf: bytes) -> np.ndarray:
-    gaps = varint_decode(buf)
-    return np.cumsum(gaps.astype(np.int64))
+    return np.cumsum(varint_decode(buf).view(np.int64))
 
 
 def positions_decode(buf: bytes, tfs: np.ndarray) -> np.ndarray:
@@ -96,7 +102,7 @@ def positions_decode(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     within doc k starting at element s_k, pos[j] = C[j] - C[s_k - 1] where
     C is the global cumsum (C[-1] = 0).
     """
-    g = varint_decode(buf).astype(np.int64)
+    g = varint_decode(buf).view(np.int64)
     if g.size == 0:
         return g
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)
@@ -104,8 +110,8 @@ def positions_decode(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     if int(cs[-1]) != g.size:
         raise ValueError(f"positions stream length {g.size} != sum(tf) {int(cs[-1])}")
     c = np.cumsum(g)
-    base = np.repeat(np.concatenate(([0], c[cs[1:-1] - 1])), tfs)
-    return c - base
+    c -= np.repeat(np.concatenate(([0], c[cs[1:-1] - 1])), tfs)
+    return c
 
 
 # Referenced from inside worker-side kernels; must pickle by value (see

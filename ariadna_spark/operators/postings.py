@@ -39,13 +39,15 @@ Block schema (FIXTURES.md §4):
     pos_varint
 
 This module owns the block codec in both directions: the encoder above and
-`explode_blocks`, the one decoder that turns whole block rows back into
-posting rows (compaction, candidate ids, explain). The WAND kernels keep
-their own lazy per-block decode (wand._RangeBlocks, _two_pass_positions),
-because block-max pruning exists to decode only the blocks that survive;
-verify_index keeps its own, because it counts decode failures instead of
-raising. The dead-version rule and tombstone writes belong to
-sources/segments.py.
+`decode_blocks`, the one decoder that turns block rows back into
+postings. `explode_blocks` maps it over Spark batches (compaction,
+candidate ids, explain); the WAND kernels call it on just the blocks they
+visit (wand._RangeBlocks: every not-yet-decoded block of a visited stride
+in one batch, one batch per term for the positional kernels), so
+block-max pruning still decodes only the blocks that survive.
+verify_index keeps its own decode, because it counts decode failures
+instead of raising and a checker should not share the decoder it checks.
+The dead-version rule and tombstone writes belong to sources/segments.py.
 """
 
 from __future__ import annotations
@@ -321,41 +323,62 @@ def _varint_stream(col) -> tuple[np.ndarray, np.ndarray]:
     return data, np.diff(ends[offs - offs[0]])
 
 
-def _per_posting(col, counts: np.ndarray) -> np.ndarray:
-    """A per-posting varint column (tfs, dls) decoded, after checking that
-    every block holds as many values as it holds doc ids."""
-    data, n = _varint_stream(col)
-    if not np.array_equal(n, counts):
-        raise ValueError("a posting block's varint streams disagree on its posting count")
-    return varint_decode(data).astype(np.int64)
+def decode_blocks(cols: dict) -> tuple[np.ndarray, dict[str, np.ndarray]]:
+    """The one block decoder: the varint columns of a batch of block rows
+    (Arrow binary arrays keyed by column name, doc_ids_varint always among
+    them) -> (postings per block, the decoded postings as numpy arrays:
+    doc_id, plus tf, doc_len and positions for the columns given).
 
+    Decoded a whole column at a time: each stream is one concatenated
+    varint decode, and doc ids restart at every block because a block's
+    first gap is its absolute first id (ids = running sum minus the sum
+    before the block). Positions are per-doc runs whose lengths are the
+    tfs, so they need tfs_varint; they come out flat, tf per posting.
+    _explode_batch wraps the result as Arrow posting rows for Spark; the
+    WAND kernels (wand._RangeBlocks.explode) call it on the blocks of one
+    stride or one term at a time.
 
-def _explode_batch(rb):
-    """One Arrow batch of block rows -> its posting rows, decoded a whole
-    column at a time: each stream is one concatenated varint decode, and
-    doc ids restart at every block because a block's first gap is its
-    absolute first id (ids = running sum minus the sum before the block).
-    Positions are per-doc runs whose lengths are the tfs, so they need
-    tfs_varint."""
-    import pyarrow as pa
+    A block whose tfs or dls stream holds a different number of values
+    than its doc id stream raises ValueError, never a silently
+    misaligned posting."""
 
-    cols = dict(zip(rb.schema.names, rb.columns))
+    def per_posting(col) -> np.ndarray:
+        data, n = _varint_stream(col)
+        if not np.array_equal(n, counts):
+            raise ValueError("a posting block's varint streams disagree on its posting count")
+        return varint_decode(data).astype(np.int64)
+
     data, counts = _varint_stream(cols["doc_ids_varint"])
     c = delta_decode_ids(data)
     starts = np.cumsum(counts) - counts
-    out = {"doc_id": pa.array(c - np.repeat(np.concatenate(([0], c))[starts], counts))}
+    out = {"doc_id": c - np.repeat(np.concatenate(([0], c))[starts], counts)}
+    if "tfs_varint" in cols:
+        out["tf"] = per_posting(cols["tfs_varint"])
+    if "dls_varint" in cols:
+        out["doc_len"] = per_posting(cols["dls_varint"])
+    if "pos_varint" in cols:
+        out["positions"] = positions_decode(_varint_stream(cols["pos_varint"])[0], out["tf"])
+    return counts, out
+
+
+def _explode_batch(rb):
+    """One Arrow batch of block rows -> its posting rows (decode_blocks):
+    every non-varint column passes through, repeated per posting."""
+    import pyarrow as pa
+
+    cols = dict(zip(rb.schema.names, rb.columns))
+    counts, dec = decode_blocks({k: v for k, v in cols.items() if k in _VARINT_COLS})
+    out = {"doc_id": pa.array(dec["doc_id"])}
     rows = pa.array(np.repeat(np.arange(rb.num_rows), counts))
     out.update({k: v.take(rows) for k, v in cols.items() if k not in _VARINT_COLS})
-    if "tfs_varint" in cols:
-        tfs = _per_posting(cols["tfs_varint"], counts)
-        out["tf"] = pa.array(tfs.astype(np.int32))
-    if "dls_varint" in cols:
-        out["doc_len"] = pa.array(_per_posting(cols["dls_varint"], counts))
-    if "pos_varint" in cols:
-        pos = positions_decode(_varint_stream(cols["pos_varint"])[0], tfs)
-        offs = np.concatenate(([0], np.cumsum(tfs)))
+    if "tf" in dec:
+        out["tf"] = pa.array(dec["tf"].astype(np.int32))
+    if "doc_len" in dec:
+        out["doc_len"] = pa.array(dec["doc_len"])
+    if "positions" in dec:
+        offs = np.concatenate(([0], np.cumsum(dec["tf"])))
         out["positions"] = pa.ListArray.from_arrays(
-            pa.array(offs.astype(np.int32)), pa.array(pos.astype(np.int32))
+            pa.array(offs.astype(np.int32)), pa.array(dec["positions"].astype(np.int32))
         )
     return pa.RecordBatch.from_arrays(list(out.values()), list(out))
 

@@ -51,9 +51,8 @@ from pyspark.sql import functions as F
 from .. import B, K1
 from .._pickle import register_by_value
 from ..analyze import NGRAM_MAX, NGRAM_MIN, tokenize_expr, tokenize_py
-from ..functions.varint import delta_decode_ids, positions_decode, varint_decode
 from ..sources.segments import FIELD_SEP, primary_term, term_field
-from .postings import explode_blocks
+from .postings import decode_blocks, explode_blocks
 
 RANGE_SIZE_DEFAULT = 8192  # doc_ids per WAND partition at test scale
 STRIDE = 1024  # doc_ids per pruning stride inside a range
@@ -101,12 +100,15 @@ def _bmw_range_topk(
 
     `row_term` is the accumulation key per row (the term, or "field|term"
     for BM25F): a stride's upper bound sums, per key, the max block bound
-    overlapping it. `decode(i)` returns the (ids, scores) of global row i,
-    masked to this range, tombstone- and filter-masked; callers memoize
-    it. Strides are visited in descending upper-bound order and the loop
-    stops as soon as UB < the current k-th score (strict <, preserving
-    doc_id tie-break rank-identity). Returns (doc_ids, scores) sorted by
-    (-score, doc_id), at most k entries.
+    overlapping it. A visited stride hands every block row overlapping it
+    to `decode(rows)` at once, which returns their postings concatenated
+    in `rows` order as (ids, scores, block row of each posting), masked
+    to this range, tombstone- and filter-masked (_RangeBlocks.decode_rows:
+    memoized per block, the not-yet-decoded ones decoded together in one
+    postings.decode_blocks call). Strides are visited in descending
+    upper-bound order and the loop stops as soon as UB < the current k-th
+    score (strict <, preserving doc_id tie-break rank-identity). Returns
+    (doc_ids, scores) sorted by (-score, doc_id), at most k entries.
 
     `after=(score, doc_id)` is the search_after cursor (ES deep-pagination
     semantics): only docs strictly AFTER the cursor in (score desc, doc_id
@@ -159,27 +161,15 @@ def _bmw_range_topk(
         if len(heap) >= k and ub[si] < theta:
             break  # block-max pruning: no doc in this stride can enter top-k
         st_lo, st_hi = lo + si * stride, lo + (si + 1) * stride
-        cand_ids: list[np.ndarray] = []
-        cand_sc: list[np.ndarray] = []
-        cand_src: list[np.ndarray] = []
-        overlap = np.flatnonzero((sub_fd < st_hi) & (sub_ld >= st_lo))
-        for j in overlap:
-            ids, sc = decode(int(sub[j]))
-            m = (ids >= st_lo) & (ids < st_hi)
-            if m.any():
-                cand_ids.append(ids[m])
-                cand_sc.append(sc[m])
-                if keep is not None:
-                    cand_src.append(np.full(int(m.sum()), sub[j]))
-        if not cand_ids:
+        ids, sc, src = decode(sub[(sub_fd < st_hi) & (sub_ld >= st_lo)])
+        m = (ids >= st_lo) & (ids < st_hi)
+        if not m.any():
             continue
-        all_ids = np.concatenate(cand_ids)
-        all_sc = np.concatenate(cand_sc)
-        uniq, inv = np.unique(all_ids, return_inverse=True)
+        uniq, inv = np.unique(ids[m], return_inverse=True)
         sums = np.zeros(uniq.shape, dtype=np.float64)
-        np.add.at(sums, inv, all_sc)
+        np.add.at(sums, inv, sc[m])
         if keep is not None:
-            ok = keep(st_lo, st_hi, np.concatenate(cand_src), uniq, inv)
+            ok = keep(st_lo, st_hi, src[m], uniq, inv)
             uniq, sums = uniq[ok], sums[ok]
         if after is not None:
             a_s, a_d = after
@@ -286,37 +276,67 @@ class _RangeBlocks:
             for kk, i in zip(keys.tolist(), first)
         }
         self.row_idf = pd.Series(self.key).map(self.idf).to_numpy()
-        boost = np.asarray([fields[f][2] for f in range(len(fields))])[self.row_field]
+        self.f_avgdl = np.asarray([fields[f][1] for f in range(len(fields))], dtype=np.float64)
+        self.f_boost = np.asarray([fields[f][2] for f in range(len(fields))], dtype=np.float64)
         scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-        self.bms = pdf["block_max_tfnorm"].to_numpy() * self.row_idf * scale * boost
+        self.bms = (
+            pdf["block_max_tfnorm"].to_numpy() * self.row_idf * scale * self.f_boost[self.row_field]
+        )
 
-    def live(self, i: int, ids: np.ndarray) -> np.ndarray:
-        """Mask of block row i's ids inside this range whose version in
-        the row's build is not dead (overwritten versions never match)."""
+    def live(self, row: np.ndarray, ids: np.ndarray) -> np.ndarray:
+        """Mask of the postings (block `row`, `ids`) inside this range
+        whose version in the row's build is not dead (overwritten versions
+        never match)."""
         m = (ids >= self.lo) & (ids < self.hi)
         if self.dead and self.row_bid is not None:
-            dd = self.dead.get((int(self.row_field[i]), self.row_bid[i]))
-            if dd is not None and dd.size:
-                m &= ~np.isin(ids, dd)
+            f, b = self.row_field[row], self.row_bid[row]
+            for (fk, bk), dd in self.dead.items():
+                sel = (f == fk) & (b == bk)
+                if dd.size and sel.any():
+                    m[sel] &= ~np.isin(ids[sel], dd)
         return m
 
-    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        """(ids, scores) of block row i: live ids only, filter-context
-        exclusions applied, scores BM25 under the row's field statistics.
-        Memoized — a block decodes at most once per kernel invocation; the
-        memo dict doubles as the decode counter for prune_stats."""
-        hit = self.decoded.get(i)
-        if hit is None:
-            _, avgdl, boost = self.fields[int(self.row_field[i])]
-            ids = delta_decode_ids(self.pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(self.pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(self.pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, self.row_idf[i], avgdl) * boost
-            m = self.live(i, ids)
+    def explode(self, rows: np.ndarray, cols: tuple[str, ...]):
+        """Block rows `rows` decoded in ONE postings.decode_blocks call over
+        the varint columns `cols` -> (the block row of each posting, its
+        doc id, its live mask, the decoded columns by name). Postings come
+        out in `rows` order."""
+        import pyarrow as pa
+
+        counts, dec = decode_blocks(
+            {c: pa.array(self.pdf[c].to_numpy()[rows], pa.binary()) for c in cols}
+        )
+        row = np.repeat(rows, counts)
+        return row, dec["doc_id"], self.live(row, dec["doc_id"]), dec
+
+    def decode_rows(self, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(ids, scores, block row of each posting) of block rows `rows`,
+        concatenated in `rows` order: live ids only, filter-context
+        exclusions applied, scores BM25 under each row's field statistics.
+        Memoized per block: the rows not decoded yet decode together in
+        one batch (explode), so a block decodes at most once per kernel
+        invocation; the memo dict doubles as the decode counter for
+        prune_stats."""
+        miss = np.unique([i for i in rows.tolist() if i not in self.decoded]).astype(np.int64)
+        if miss.size:
+            row, ids, m, dec = self.explode(miss, ("doc_ids_varint", "tfs_varint", "dls_varint"))
+            f = self.row_field[row]
+            tfs, dls = dec["tf"].astype(np.float64), dec["doc_len"].astype(np.float64)
+            sc = _score_block(tfs, dls, self.row_idf[row], self.f_avgdl[f]) * self.f_boost[f]
             if self.allow is not None:
                 m &= np.isin(ids, self.allow)  # filter context: allowed docs only
-            hit = self.decoded[i] = (ids[m], sc[m])
-        return hit
+            ids, sc, row = ids[m], sc[m], row[m]
+            bounds = np.searchsorted(row, np.append(miss, miss[-1] + 1))
+            for i, a, b in zip(miss.tolist(), bounds[:-1], bounds[1:]):
+                self.decoded[i] = (ids[a:b], sc[a:b])
+        parts = [self.decoded[i] for i in rows.tolist()]
+        if not parts:
+            return np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.int64)
+        return (
+            np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] for p in parts]),
+            np.repeat(rows, [p[0].size for p in parts]),
+        )
 
     def topk(self, sub, k, stride, after=None, stride_mask=None, keep=None):
         """_bmw_range_topk over block rows `sub`. Strides holding no
@@ -327,7 +347,7 @@ class _RangeBlocks:
             allowed[np.unique((self.allow - self.lo) // stride)] = True
             stride_mask = allowed if stride_mask is None else stride_mask & allowed
         return _bmw_range_topk(
-            sub, self.key, self.fd, self.ld, self.bms, self.decode, k, self.lo,
+            sub, self.key, self.fd, self.ld, self.bms, self.decode_rows, k, self.lo,
             self.range_size, stride, after=after, stride_mask=stride_mask, keep=keep,
         )
 
@@ -463,9 +483,8 @@ def bool_kernel(
         ok = (np.bincount(inv[must], minlength=uniq.size) == len(must_s)) & (
             np.bincount(inv[~must], minlength=uniq.size) >= msm
         )
-        for j in not_rows[(fd[not_rows] < st_hi) & (ld[not_rows] >= st_lo)]:
-            ok &= ~np.isin(uniq, rng.decode(int(j))[0])
-        return ok
+        here = not_rows[(fd[not_rows] < st_hi) & (ld[not_rows] >= st_lo)]
+        return ok & ~np.isin(uniq, rng.decode_rows(here)[0])
 
     d_out, s_out = rng.topk(
         np.flatnonzero(~is_not), k, stride, after=after, stride_mask=covered, keep=keep
@@ -481,12 +500,14 @@ def _two_pass_positions(
 ) -> tuple[dict | None, np.ndarray | None]:
     """Shared two-pass decode for the positional kernels (VERDICT r3 #5).
     Only the range's live ids (rng.live) in its filter allow-list count.
+    Both passes decode through rng.explode, one batch per term.
 
-    PASS 1 decodes ONLY doc_ids (+tf lengths) per block and intersects the
-    terms' posting lists into the candidate doc set — the positions stream
-    is never touched. PASS 2 decodes positions exclusively for blocks that
-    actually contain a candidate, and restricts the occurrence arrays to
-    candidate docs before the per-occurrence np.repeat materializes.
+    PASS 1 decodes ONLY doc_ids (+tf lengths) of each term's blocks and
+    intersects the terms' posting lists into the candidate doc set — the
+    positions stream is never touched. PASS 2 decodes dls and positions
+    exclusively for blocks that actually contain a candidate, and
+    restricts the occurrence arrays to candidate docs before the
+    per-occurrence np.repeat materializes.
 
     Bounds the stop-word-phrase cost: a stop-word term's (large) positions
     stream is decoded only where the rare terms left a survivor, so a
@@ -505,26 +526,20 @@ def _two_pass_positions(
     or the intersection is empty."""
     if rng.empty:
         return None, None
-    pdf, row_term, allow = rng.pdf, rng.row_term, rng.allow
-    term_rows: dict[str, np.ndarray] = {}
-    raw: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+    row_term, allow = rng.row_term, rng.allow
+    # term -> its pass-1 postings: (block row, doc id, live mask)
+    raw: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     cand_docs = None
 
     def decode_ids(t: str, rows: np.ndarray) -> np.ndarray:
-        parts = []
-        for i in rows:
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.int64)
-            msk = rng.live(i, ids)
-            raw[i] = (ids, tfs, msk)
-            parts.append(ids[msk])
-        return np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
+        row, ids, msk, _ = rng.explode(rows, ("doc_ids_varint", "tfs_varint"))
+        raw[t] = (row, ids, msk)
+        return np.unique(ids[msk])
 
     for t in uniq_terms:
         rows = np.flatnonzero(row_term == t)
         if not rows.size:
             return None, None  # a required term absent in this range -> no match
-        term_rows[t] = rows
         u = decode_ids(t, rows)
         cand_docs = u if cand_docs is None else np.intersect1d(
             cand_docs, u, assume_unique=True
@@ -542,12 +557,11 @@ def _two_pass_positions(
     if or_terms:
         u_any = None
         for t in or_terms:
-            if t in term_rows:
+            if t in raw:
                 continue  # already a required term; its docs qualify
             rows = np.flatnonzero(row_term == t)
             if not rows.size:
                 continue
-            term_rows[t] = rows
             u = decode_ids(t, rows)
             u_any = u if u_any is None else np.union1d(u_any, u)
         if not any(t in uniq_terms for t in or_terms):
@@ -569,32 +583,19 @@ def _two_pass_positions(
         # an or_term that is ALSO required makes the disjunction a
         # tautology over the required intersection — no extra narrowing
     per_term: dict = {}
-    for t, t_rows in term_rows.items():
-        ids_parts, tf_parts, dl_parts, occ_doc, occ_pos = [], [], [], [], []
-        for i in t_rows:
-            ids, tfs, msk = raw[i]
-            cm = msk & np.isin(ids, cand_docs)
-            if not cm.any():
-                continue  # block holds no survivor: its positions never decode
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            pos = positions_decode(pdf["pos_varint"].iloc[i], tfs)
-            em = np.repeat(cm, tfs)
-            ids_parts.append(ids[cm])
-            tf_parts.append(tfs[cm])
-            dl_parts.append(dls[cm])
-            occ_doc.append(np.repeat(ids, tfs)[em])
-            occ_pos.append(pos[em])
-        if not ids_parts:
+    for t, (row, ids, msk) in raw.items():
+        # blocks holding no survivor: their positions never decode
+        hit = np.unique(row[msk & np.isin(ids, cand_docs)])
+        if not hit.size:
             if t in uniq_terms:  # unreachable while cand ⊆ required docs
                 return None, None
             continue  # an or_term with no surviving docs just drops out
-        per_term[t] = (
-            np.concatenate(ids_parts),
-            np.concatenate(tf_parts),
-            np.concatenate(dl_parts),
-            np.concatenate(occ_doc),
-            np.concatenate(occ_pos),
-        )
+        cols = ("doc_ids_varint", "tfs_varint", "dls_varint", "pos_varint")
+        _, ids, msk, dec = rng.explode(hit, cols)  # survivor blocks, with positions
+        tfs, dls = dec["tf"], dec["doc_len"].astype(np.float64)
+        cm = msk & np.isin(ids, cand_docs)
+        em = np.repeat(cm, tfs)
+        per_term[t] = (ids[cm], tfs[cm], dls[cm], np.repeat(ids, tfs)[em], dec["positions"][em])
     return per_term, cand_docs
 
 

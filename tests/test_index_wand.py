@@ -127,6 +127,41 @@ def test_wand_kernel_prunes_blocks():
     assert stats["n_blocks_decoded"] < stats["n_blocks_total"] / 2, stats
 
 
+@pytest.mark.parametrize("kernel", ["wand", "phrase"])
+def test_corrupt_block_fails_loudly(kernel):
+    """A block whose tfs stream is shorter than its doc id stream (128 ids,
+    one tf) is refused by every kernel, never scored by broadcasting the
+    one tf over all postings."""
+    from ariadna_spark.functions.varint import delta_encode_ids, varint_encode
+    from ariadna_spark.operators.wand import _RangeBlocks, phrase_kernel
+
+    ids = np.arange(100, 228, dtype=np.int64)
+    pdf = pd.DataFrame(
+        [
+            {
+                "rid": 0,
+                "term": "x",
+                "df": 128,
+                "block_id": 0,
+                "n_docs": 128,
+                "first_doc_id": 100,
+                "last_doc_id": 227,
+                "block_max_tf": 3,
+                "block_max_tfnorm": 3 * 2.2 / (3 + 1.2),
+                "doc_ids_varint": delta_encode_ids(ids),
+                "tfs_varint": varint_encode(np.asarray([3], dtype=np.uint64)),
+                "dls_varint": varint_encode(np.full(128, 50, dtype=np.uint64)),
+                "pos_varint": varint_encode(np.asarray([0, 1, 1], dtype=np.uint64)),
+            }
+        ]
+    )
+    with pytest.raises(ValueError, match="varint streams disagree"):
+        if kernel == "wand":
+            wand_kernel(pdf, 1000, 50.0, 3, 8192)
+        else:
+            phrase_kernel(_RangeBlocks(pdf, {0: (1000, 50.0, 1.0)}, 8192), ["x"], 3)
+
+
 def test_resume_after_injected_failure(spark, docs, tmp_path):
     """Kill mid-build, re-run, manifest + query results identical to a
     clean build (SURVEY.md §5.4)."""

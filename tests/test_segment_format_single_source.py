@@ -1,8 +1,11 @@
 """The merge-on-read layer has one owner per decision: the build id of a
-row comes from segments.bid_col only, and whole posting blocks decode in
-postings.explode_blocks only. The WAND kernels' lazy per-block decode and
-verify_index's failure-counting decode are the other allowed callers of
-delta_decode_ids. Fast source scan, no Spark."""
+row comes from segments.bid_col only, and posting blocks decode in
+postings.decode_blocks only — explode_blocks maps it over Spark batches
+and the WAND kernels call it per visited stride or per term. Besides the
+codec module itself (functions/varint.py), verify_index's
+failure-counting decode is the one other allowed caller of the codec's
+decode functions (delta_decode_ids, varint_decode, positions_decode).
+Fast source scan, no Spark."""
 
 import ast
 import pathlib
@@ -12,9 +15,8 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "ariadna_spark"
 # (module, enclosing def/class chain prefix) pairs allowed to hold the site
 BID_OWNERS = {("sources/segments.py", ("bid_col",))}
 DECODE_OWNERS = {
-    ("operators/postings.py", ("_explode_batch",)),
-    ("operators/wand.py", ("_RangeBlocks", "decode")),
-    ("operators/wand.py", ("_two_pass_positions",)),
+    ("functions/varint.py", ()),
+    ("operators/postings.py", ("decode_blocks",)),
     ("sources/segments.py", ("verify_index",)),
 }
 
@@ -57,7 +59,7 @@ def _is_decode_call(node) -> bool:
         return False
     f = node.func
     name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-    return name == "delta_decode_ids"
+    return name in ("delta_decode_ids", "varint_decode", "positions_decode")
 
 
 def _scan(hit, owners):
@@ -81,5 +83,5 @@ def test_build_id_column_has_one_owner():
 
 def test_block_decode_has_one_owner_per_access_pattern():
     used, stray = _scan(_is_decode_call, DECODE_OWNERS)
-    assert not stray, f"delta_decode_ids called outside the block decoders: {stray}"
+    assert not stray, f"posting codec decode called outside the block decoders: {stray}"
     assert used == DECODE_OWNERS  # the scan is not vacuous

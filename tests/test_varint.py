@@ -156,3 +156,151 @@ def test_explode_batch_matches_per_block_decode(id_sets, seed, sliced):
     ids_only = _explode_batch(rb.select(["doc_ids_varint"]))
     assert ids_only.schema.names == ["doc_id"]
     assert ids_only.column(0).to_pylist() == want["doc_id"]
+
+
+def _range_fixture(blocks, seed, with_allow, range_size):
+    """Block rows of rid 1 for two fields with their own statistics, plus
+    is_tomb rows killing some of build b1's ids and, optionally, is_filt
+    allow rows -> (frame, {(field, build): dead ids}, allow ids or None)."""
+    import pandas as pd
+
+    from ariadna_spark.functions.varint import varint_encode_ex
+
+    rng = np.random.default_rng(seed)
+    lo = range_size
+    rows, all_ids = [], []
+    for f, term, bid, off, n, gap in blocks:
+        ids = max(0, lo + off) + np.cumsum(rng.integers(1, 2 * gap + 1, n)) - 1
+        tfs = rng.integers(1, 5, n).astype(np.uint64)
+        gaps = [np.diff(np.sort(rng.choice(300, int(t), replace=False)), prepend=0) for t in tfs]
+        tfn = tfs * 2.2 / (tfs + 1.2)
+        rows.append(
+            {
+                "rid": 1, "field": f, "term": term, "bid": bid, "df": 5 + 7 * f + ord(term),
+                "first_doc_id": int(ids[0]), "last_doc_id": int(ids[-1]),
+                "block_max_tfnorm": float(tfn.max()),
+                "doc_ids_varint": delta_encode_ids(ids),
+                "tfs_varint": varint_encode(tfs),
+                "dls_varint": varint_encode(rng.integers(1, 200, n).astype(np.uint64)),
+                "pos_varint": varint_encode_ex(np.concatenate(gaps).astype(np.uint64))[0],
+                "is_tomb": False, "is_filt": False,
+            }
+        )
+        all_ids.append(ids)
+    all_ids = np.unique(np.concatenate(all_ids))
+    dead_ids = np.sort(rng.choice(all_ids, all_ids.size // 4, replace=False))
+    dead = {(f, "b1"): dead_ids for f in (0, 1)}
+    rows += [
+        {"rid": 1, "field": f, "bid": "b1", "first_doc_id": int(d), "last_doc_id": int(d),
+         "is_tomb": True, "is_filt": False}
+        for f in (0, 1) for d in dead_ids
+    ]
+    if not with_allow:  # no filter context: the planner adds no is_filt column
+        return pd.DataFrame(rows).drop(columns="is_filt"), dead, None
+    allow = np.union1d(rng.choice(all_ids, all_ids.size // 2 + 1), [lo])
+    rows += [
+        {"rid": 1, "field": 0, "first_doc_id": int(d), "is_tomb": False, "is_filt": True}
+        for d in allow
+    ]
+    return pd.DataFrame(rows), dead, allow
+
+
+_BLOCKS = st.lists(
+    st.tuples(
+        st.integers(0, 1),  # field
+        st.sampled_from("ab"),  # term
+        st.sampled_from(["b1", "b2"]),  # build
+        st.integers(-300, 1023 + 300),  # first id, relative to the range start
+        st.integers(1, 60),  # postings
+        st.integers(1, 40),  # mean doc id gap: up to ~4 strides per block
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+@given(_BLOCKS, st.integers(0, 2**32 - 1), st.booleans())
+@settings(max_examples=60, deadline=None)
+def test_range_blocks_batched_decode_matches_per_block_decode(blocks, seed, with_allow):
+    """_RangeBlocks decodes every not-yet-decoded block of a visited
+    stride in one postings.decode_blocks call and scores the batch
+    vectorized; decoding each block on its own with functions.varint and
+    scoring it with _score_block under its field's statistics is the
+    reference: equal ids, bit-equal scores, the same live (tombstone) and
+    allow-list masks. The positional kernels' two passes, one batch per
+    term, equal the per-block positions_decode reference too."""
+    from ariadna_spark.functions.varint import positions_decode
+    from ariadna_spark.operators.wand import _idf, _RangeBlocks, _score_block, _two_pass_positions
+
+    range_size, stride = 1024, 64
+    fields = {0: (1000, 37.5, 1.0), 1: (800, 12.25, 2.5)}
+    pdf, dead, allow = _range_fixture(blocks, seed, with_allow, range_size)
+    lo, hi = range_size, 2 * range_size
+
+    def live(row, ids, field=None):
+        m = (ids >= lo) & (ids < hi)
+        dd = dead.get((int(row["field"]) if field is None else field, row["bid"]))
+        return m if dd is None else m & ~np.isin(ids, dd)
+
+    rb = _RangeBlocks(pdf, fields, range_size)
+    want = []
+    for _, row in rb.pdf.iterrows():
+        ids = delta_decode_ids(row["doc_ids_varint"])
+        tfs = varint_decode(row["tfs_varint"]).astype(np.float64)
+        dls = varint_decode(row["dls_varint"]).astype(np.float64)
+        n_docs, avgdl, boost = fields[int(row["field"])]
+        sc = _score_block(tfs, dls, _idf(int(row["df"]), n_docs), avgdl) * boost
+        m = live(row, ids)
+        if allow is not None:
+            m &= np.isin(ids, allow)
+        want.append((ids[m], sc[m]))
+    # stride by stride, as _bmw_range_topk visits them: blocks spanning
+    # several strides decode in the first batch that reaches them
+    for s in range(range_size // stride):
+        st_lo, st_hi = lo + s * stride, lo + (s + 1) * stride
+        rows = np.flatnonzero((rb.fd < st_hi) & (rb.ld >= st_lo))
+        ids, sc, src = rb.decode_rows(rows)
+        assert np.array_equal(ids, np.concatenate([want[i][0] for i in rows] + [[]]))
+        assert np.array_equal(sc, np.concatenate([want[i][1] for i in rows] + [[]]))
+        assert np.array_equal(src, np.repeat(rows, [want[i][0].size for i in rows]))
+    for i, (ids, sc) in enumerate(want):  # memo hits, or one-row batches
+        got_ids, got_sc, _ = rb.decode_rows(np.asarray([i]))
+        assert got_ids.dtype == np.int64 and np.array_equal(got_ids, ids)
+        assert np.array_equal(got_sc, sc)  # bit-equal
+    assert len(rb.decoded) == len(want)
+
+    # positional passes over the primary field's blocks
+    one = pdf[pdf["field"] == 0].drop(columns="field")
+    terms = sorted(set(one["term"].dropna()))
+    if not terms:
+        return
+    rb1 = _RangeBlocks(one, {0: fields[0]}, range_size)
+    per_term, cand = _two_pass_positions(rb1, terms)
+    blocks1 = [row for _, row in rb1.pdf.iterrows()]
+    want_cand = None
+    for t in terms:
+        t_blocks = [r for r in blocks1 if r["term"] == t]
+        ids = [delta_decode_ids(r["doc_ids_varint"]) for r in t_blocks]
+        u = np.unique(np.concatenate([i[live(r, i, 0)] for r, i in zip(t_blocks, ids)]))
+        want_cand = u if want_cand is None else np.intersect1d(want_cand, u)
+    if allow is not None:
+        want_cand = np.intersect1d(want_cand, allow)
+    if want_cand.size == 0:
+        assert per_term is None and cand is None
+        return
+    assert np.array_equal(cand, want_cand)
+    for t in terms:
+        parts = []
+        for r in blocks1:
+            if r["term"] != t:
+                continue
+            ids = delta_decode_ids(r["doc_ids_varint"])
+            tfs = varint_decode(r["tfs_varint"]).astype(np.int64)
+            pos = positions_decode(r["pos_varint"], tfs)
+            cm = live(r, ids, 0) & np.isin(ids, want_cand)
+            dls = varint_decode(r["dls_varint"]).astype(np.float64)
+            em = np.repeat(cm, tfs)
+            parts.append((ids[cm], tfs[cm], dls[cm], np.repeat(ids, tfs)[em], pos[em]))
+        for got, ref in zip(per_term[t], zip(*parts)):
+            ref = np.concatenate(ref)
+            assert got.dtype == ref.dtype and np.array_equal(got, ref)
